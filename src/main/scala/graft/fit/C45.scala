@@ -1,11 +1,14 @@
 package graft.fit
 
+import graft.functions.TreeLeaf
 import graft.meta.C45Schema
 import graft.model.{CatEq, NumGT, NumLE, Rule, Split}
 import graft.stats.InfoStats
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+import scala.reflect.runtime.universe.TypeTag
 
 /** Tuning knobs for [[C45.fit]]. `minDataRatio` is the reference's 10%
   * both-sides guard on numeric boundaries (MyReducer.java:34,188-190);
@@ -68,15 +71,14 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * reaching no leaf (an attribute value unseen in training, or a null
     * along the path) fall back to the global majority class.
     *
-    * Two plans, mirroring the fit's frontier routing (C45.fit): up to
-    * `routeThreshold` leaves, one flat first-match CASE WHEN over the
-    * full root-to-leaf conjunctions — codegen-friendly while short. A
-    * WIDER model would blow past whole-stage-codegen limits (the same
-    * wall that routes deep fit frontiers through a join) and re-test
-    * depth-long conjunction prefixes once per rule, so it instead walks
-    * the tree level by level: `depth` chained broadcast hash joins
-    * against tiny per-level route tables, constant expression size per
-    * level, zero shuffles, one final broadcast label lookup. Falls back
+    * Two plans. Up to `routeThreshold` leaves, one flat first-match
+    * CASE WHEN over the full root-to-leaf conjunctions — codegen-
+    * friendly while short. A WIDER model would blow past whole-stage-
+    * codegen limits and re-test depth-long conjunction prefixes once
+    * per rule, so it instead walks the tree inside one
+    * [[graft.functions.TreeLeaf]] expression (a constant-size loop over
+    * the flattened node arrays: no join, no shuffle, no extra job) and
+    * looks the label up in a literal array by leaf index. Falls back
     * to the CASE WHEN when the leaf set has no tree form (rule sets
     * generalized by [[C45RuleSimplify]] overlap, and first-match order
     * is then semantic). */
@@ -99,81 +101,59 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     df.withColumn(outputCol, pred)
   }
 
-  /** Level-walk scoring (the wide-model path): reconstructs the tree
-    * from the leaf rules' condition prefixes, then routes every row
-    * down one level per broadcast join exactly as the fit's deep-
-    * frontier routing does (raw column comparisons, so semantics match
-    * [[graft.model.Rule.toPredicate]]: a null or unseen value routes
-    * nowhere → majority). Leaves self-loop through later levels, so the
-    * plan is one linear chain — no per-level unions, nothing persisted.
-    * Returns None when the leaves don't form a proper tree partition
+  /** Tree-walk scoring (the wide-model path): the label of the leaf
+    * [[treeLeafColumn]] routes each row to, majority for −1. Returns
+    * None when the leaves don't form a proper tree partition
     * (overlapping generalized rules, a lone child, mixed sibling
     * splits) — the caller then keeps the order-aware CASE WHEN. */
-  private[fit] def routedTransform(df: DataFrame, outputCol: String): Option[DataFrame] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    routedNid(df).map { case (cur, nid) =>
-      val labelDf = leaves.map(r => (nid(r.conditions), r.label.get))
-        .toDF("__lnid", "__label")
-      cur.join(broadcast(labelDf), cur("__nid") === labelDf("__lnid"), "left")
-        .withColumn(outputCol, coalesce(col("__label"), lit(majority)))
-        .drop("__nid", "__lnid", "__label")
-    }
-  }
+  private[fit] def routedTransform(df: DataFrame, outputCol: String): Option[DataFrame] =
+    treeLeafColumn.map(leaf =>
+      df.withColumn(outputCol, byLeaf(leaf, majority, leaves.map(_.label.get))))
 
-  /** The level-walk itself: route every row to its leaf's node id (or
-    * null for null/unseen values along the path) — the shared core of
-    * [[routedTransform]] and the wide-model [[transformProba]] path.
-    * Returns the routed frame (input columns + `__nid`) and the node-id
-    * map, or None when the leaves have no tree form. */
-  private[fit] def routedNid(df: DataFrame)
-      : Option[(DataFrame, scala.collection.Map[Vector[(Int, Split)], Int])] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val structure = treeStructure()
-    if (structure.isEmpty) return None
-    val (nid, levels) = structure.get
-    var cur = df.withColumn("__nid", lit(nid(Vector.empty)))
-    levels.foreach { routes =>
-      val routeDf = routes.toDF(
-        "__prid", "__kind", "__aid", "__boundary", "__lrid", "__rrid", "__children")
-      val routeAids = routes.filter(_.kind != "leaf").map(_.aid).toSet
-      val routeNum = schema.numericAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-      val routeCat = schema.categoricalAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-      val numBranch =
-        if (routeNum.isEmpty) None
-        else {
-          val numv = map(routeNum.flatMap(a =>
-            Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("double"))): _*)
-          Some(when(col("__kind") === "num",
-            when(element_at(numv, col("__aid")) <= col("__boundary"), col("__lrid"))
-              .when(element_at(numv, col("__aid")) > col("__boundary"), col("__rrid"))))
+  /** `values(leaf)`, or `fallback` where the leaf index is −1: one
+    * lookup in a literal array, whatever the number of leaves. */
+  private def byLeaf[T: TypeTag](leaf: Column, fallback: T, values: Seq[T]): Column =
+    element_at(typedLit(fallback +: values), leaf + 2)
+
+  /** The leaf index each row reaches through the tree (−1 for a null
+    * or unseen value along its path), as one [[graft.functions.TreeLeaf]]
+    * expression: numeric split attributes cast to double, categorical
+    * ones to string, so the walk compares exactly as
+    * [[graft.model.Rule.toPredicate]] does. None when the leaves have
+    * no tree form. */
+  private[fit] def treeLeafColumn: Option[Column] = treeStructure().map {
+    case (nid, levels) =>
+      val size = nid.size
+      val kind = Array.fill(size)(TreeLeaf.Leaf)
+      val slot = new Array[Int](size)
+      val boundary = new Array[Double](size)
+      val left = new Array[Int](size)
+      val right = new Array[Int](size)
+      val cats = new Array[java.util.HashMap[UTF8String, Integer]](size)
+      val leaf = Array.fill(size)(-1)
+      // one input per (attribute, split kind), in first-use order
+      val slots = scala.collection.mutable.LinkedHashMap.empty[(Int, Boolean), Int]
+      levels.flatten.filter(_.kind != "leaf").foreach { r =>
+        val numeric = r.kind == "num"
+        slot(r.prid) = slots.getOrElseUpdate((r.aid, numeric), slots.size)
+        if (numeric) {
+          kind(r.prid) = TreeLeaf.Num
+          boundary(r.prid) = r.boundary
+          left(r.prid) = r.lrid
+          right(r.prid) = r.rrid
+        } else {
+          kind(r.prid) = TreeLeaf.Cat
+          val m = new java.util.HashMap[UTF8String, Integer]()
+          r.children.foreach { case (v, c) => m.put(UTF8String.fromString(v), c) }
+          cats(r.prid) = m
         }
-      val catBranchOf: Column => Column = prev => {
-        val catv = map(routeCat.flatMap(a =>
-          Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))): _*)
-        val hit = element_at(col("__children"), element_at(catv, col("__aid")))
-        if (prev == null) when(col("__kind") === "cat", hit)
-        else prev.when(col("__kind") === "cat", hit)
       }
-      val core = (numBranch, routeCat.isEmpty) match {
-        case (Some(nb), true)  => nb
-        case (Some(nb), false) => catBranchOf(nb)
-        case (None, false)     => catBranchOf(null)
-        case (None, true)      => null // leaf-only level: cannot occur below maxD
-      }
-      val routedRid =
-        if (core == null) when(col("__kind") === "leaf", col("__prid"))
-        else core.when(col("__kind") === "leaf", col("__prid"))
-      // LEFT join: a row whose nid went null (null/unseen value at an
-      // earlier level) rides through unrouted and lands on majority
-      cur = cur.join(broadcast(routeDf), cur("__nid") === routeDf("__prid"), "left")
-        .withColumn("__nidN", routedRid)
-        .drop("__nid", "__prid", "__kind", "__aid", "__boundary",
-          "__lrid", "__rrid", "__children")
-        .withColumnRenamed("__nidN", "__nid")
-    }
-    Some((cur, nid))
+      leaves.zipWithIndex.foreach { case (r, i) => leaf(nid(r.conditions)) = i }
+      val names = schema.attrNames
+      val attrs = slots.keys.toSeq.map { case (aid, numeric) =>
+        col(names(aid)).cast(if (numeric) "double" else "string") }
+      TreeLeaf.column(attrs,
+        new TreeLeaf.Nodes(kind, slot, boundary, left, right, cats, leaf))
   }
 
   /** The class set [[transformProba]] emits columns for, in its column
@@ -193,10 +173,12 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * unseen value on the path) and zero-mass leaves take the majority
     * class at 10⁶. Output: `outputCol` (the [[transform]] label) plus
     * one `<probPrefix><class>` micros column per class label, classes
-    * sorted. Same two plans as transform: flat CASE WHEN to a leaf
-    * index while the model is narrow, broadcast level-walk past
-    * `routeThreshold` leaves (generalized rule sets have no tree form
-    * and always take the order-aware flat path). Fit-produced, pruned,
+    * sorted. The leaf index comes from the same two plans as
+    * transform — a flat first-match CASE WHEN while the model is
+    * narrow, the [[treeLeafColumn]] tree walk past `routeThreshold`
+    * leaves (generalized rule sets have no tree form and always take
+    * the order-aware flat path) — and the label and every class's
+    * micros are literal-array lookups on it. Fit-produced, pruned,
     * simplified ([[C45RuleSimplify]], first-match distributions), and
     * sidecar-loaded ([[C45Model.load]]) models carry the
     * distributions; only rule-text-only loads ([[C45Model.loadRules]])
@@ -221,48 +203,17 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     val leafMicros: Vector[Seq[Long]] =
       leaves.zip(leafDist).map { case (r, d) => microsOf(d, r.label.get) }
     val majorityMicros = classes.map(c => if (c == majority) 1000000L else 0L)
-    val names = schema.attrNames
-    val routed =
-      if (leaves.size <= routeThreshold) None
-      else routedNid(df).map { case (cur, nid) =>
-        val spark = df.sparkSession
-        import spark.implicits._
-        val distDf = leaves.zip(leafMicros).map { case (r, m) =>
-          (nid(r.conditions), r.label.get, m) }
-          .toDF("__lnid", "__label", "__micros")
-        cur.join(broadcast(distDf), cur("__nid") === col("__lnid"), "left")
-          .withColumn(outputCol, coalesce(col("__label"), lit(majority)))
-          .select((df.columns.map(col) :+ col(outputCol)) ++
-            classes.zipWithIndex.map { case (c, i) =>
-              coalesce(element_at(col("__micros"), i + 1),
-                lit(majorityMicros(i))).as(s"$probPrefix$c") }: _*)
-      }
-    routed.getOrElse {
-      // flat path: one CASE WHEN to the leaf index, then per-class
-      // literal lookups — first-match order preserved (required for
-      // overlapping generalized rule sets)
-      val leafIdx = leaves.headOption match {
-        case None => lit(-1)
-        case Some(h) =>
-          leaves.zipWithIndex.tail.foldLeft(
-            when(h.toPredicate(names), lit(0))) { case (acc, (r, i)) =>
-            acc.when(r.toPredicate(names), lit(i))
-          }.otherwise(lit(-1))
-      }
-      val withIdx = df.withColumn("__leaf", leafIdx)
-      val labelOf = leaves.zipWithIndex.foldLeft(lit(majority)) {
-        case (acc, (r, i)) =>
-          when(col("__leaf") === i, lit(r.label.get)).otherwise(acc)
-      }
-      val probCols = classes.zipWithIndex.map { case (c, ci) =>
-        leafMicros.zipWithIndex.foldLeft(lit(majorityMicros(ci))) {
-          case (acc, (m, li)) =>
-            when(col("__leaf") === li, lit(m(ci))).otherwise(acc)
-        }.as(s"$probPrefix$c")
-      }
-      withIdx.select((df.columns.map(col) :+ labelOf.as(outputCol)) ++
-        probCols: _*)
-    }
+    // first-match order preserved on the flat path (required for
+    // overlapping generalized rule sets)
+    val leafIdx = (if (leaves.size > routeThreshold) treeLeafColumn else None)
+      .getOrElse(C45.flatRidColumn(leaves, schema.attrNames))
+    val leaf = col("__leaf")
+    df.withColumn("__leaf", leafIdx)
+      .select((df.columns.toSeq.map(col) :+
+        byLeaf(leaf, majority, leaves.map(_.label.get)).as(outputCol)) ++
+        classes.zipWithIndex.map { case (c, ci) =>
+          byLeaf(leaf, majorityMicros(ci), leafMicros.map(_(ci))).as(s"$probPrefix$c")
+        }: _*)
   }
 
   /** A generalized ([[C45RuleSimplify]]) rule set: more than one leaf
@@ -277,7 +228,8 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * node ids for every distinct path prefix (assigned level-wise in
     * first-appearance order — deterministic, leaves is an ordered
     * Vector) plus one Route row set per level (internal splits + leaf
-    * self-loops, so a level-walk is one linear join chain). None when
+    * self-loops, so the fractional level-walk is one linear join
+    * chain; [[treeLeafColumn]] flattens the same rows). None when
     * the leaf set has no tree form: a single root leaf, duplicate
     * leaves, a leaf prefix extended further (overlapping generalized
     * rules), or a node whose children mix attributes/boundaries. */
@@ -451,8 +403,8 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
       .drop(prefixes.map(colOf): _*)
   }
 
-  /** Wide-model fractional scoring: the level-walk of
-    * [[routedTransform]] with the fit's fractional fan-out — one
+  /** Wide-model fractional scoring: a level-walk with the fit's
+    * fractional fan-out — one
     * broadcast edge join per level where a null split value multiplies
     * the row into every child at `floor(w·frac + 0.5)` micros, leaves
     * self-loop at full weight, and a known-but-unseen value drops the

@@ -194,8 +194,8 @@ class C45Classifier(override val uid: String)
 }
 
 /** The fitted `spark.ml` Model: delegates scoring to
-  * [[C45Model.transform]] (flat CASE WHEN narrow, broadcast level-walk
-  * wide) and casts the predicted label back to the fit-time label
+  * [[C45Model.transform]] (flat CASE WHEN narrow, one-expression tree
+  * walk wide) and casts the predicted label back to the fit-time label
   * dtype. */
 class C45ClassificationModel private[fit](
     override val uid: String,

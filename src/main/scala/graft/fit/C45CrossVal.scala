@@ -93,7 +93,7 @@ object C45CrossVal {
       val models: Seq[C45Model] = tick("fits")(
         C45.fitFolds(stamped, "__fold", k, schema, params, dc, fractional))
       // fused evaluation: k prediction columns (each a map-only CASE
-      // WHEN / broadcast level-walk), ONE aggregation over the cache
+      // WHEN / one-expression tree walk), ONE aggregation over the cache
       // with per-fold filtered counters — identical counts to scoring
       // each held-out fold separately
       val scored = models.zipWithIndex.foldLeft(stamped) {

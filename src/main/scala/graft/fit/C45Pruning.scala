@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   * against held-out data ([[prune]]) routes rows to their leaf in ONE
   * job and aggregates to per-(leaf, class) counts, O(#leaves ×
   * #classes) rows to the driver — through the flat disjoint-predicate
-  * CASE WHEN while the model is narrow, and through the same
-  * broadcast level-walk transform/fit use past `routeThreshold`
-  * leaves (a thousands-of-leaves CASE WHEN blows whole-stage-codegen
-  * limits). The pruning pass itself is a driver-side fold over the
+  * CASE WHEN while the model is narrow, and through the same tree-walk
+  * expression transform uses past `routeThreshold` leaves (a
+  * thousands-of-leaves CASE WHEN blows whole-stage-codegen limits).
+  * The pruning pass itself is a driver-side fold over the
   * leaf trie: O(model), no further jobs, deterministic (ties
   * collapse, and majority ties pick the lexicographically smallest
   * label). */
@@ -361,42 +361,26 @@ object C45Pruning {
 
   /** One job: route every row to its (disjoint) leaf, count classes.
     * Narrow models use the flat first-match CASE WHEN; past
-    * `routeThreshold` leaves the broadcast level-walk (shared with
-    * transform/fit) routes instead — constant expression size per
-    * level, codegen-safe at any width. Both paths produce identical
+    * `routeThreshold` leaves the tree-walk expression transform uses
+    * ([[C45Model.treeLeafColumn]]) routes instead — constant expression
+    * size, codegen-safe at any width, no join. Both produce identical
     * counts (leaves partition the space, so first-match ≡ only-match
-    * whenever the level-walk's tree form exists). */
+    * whenever the tree form exists). */
   private def scanCounts(model: C45Model, df: DataFrame,
                          routeThreshold: Int): Map[Int, Map[String, Long]] = {
-    val names = model.schema.attrNames
     val leaves = model.leaves
-    val clsCol = col(model.schema.classCol).cast("string").as("cls")
+    // narrow models route through the SAME flat expression the fit
+    // uses — shared so a change to rid assignment can never leave
+    // pruning behind
+    val rid = (if (leaves.size > routeThreshold) model.treeLeafColumn else None)
+      .getOrElse(C45.flatRidColumn(leaves, model.schema.attrNames))
     val sc = df.sparkSession.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription("graft.prune scan counts")
     try {
-    val routed: Option[Map[Int, Map[String, Long]]] =
-      if (leaves.size <= routeThreshold) None
-      else model.routedNid(df).map { case (cur, nid) =>
-        val leafIdx: Map[Int, Int] = leaves.zipWithIndex
-          .map { case (r, i) => nid(r.conditions) -> i }.toMap
-        // null class labels (rejected by the fit, but held-out frames
-        // are caller-supplied) have no class to count — dropped
-        cur.filter(col("__nid").isNotNull &&
-            col(model.schema.classCol).isNotNull)
-          .groupBy(col("__nid"), clsCol)
-          .agg(count(lit(1)).as("n"))
-          .collect()
-          .groupBy(r => leafIdx(r.getInt(0)))
-          .map { case (k, rows) =>
-            k -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap
-          }
-      }
-    routed.getOrElse {
-      // the SAME flat routing expression the fit uses — shared so a
-      // change to rid assignment can never leave pruning behind
-      val rid = C45.flatRidColumn(leaves, names)
-      df.select(rid.as("rid"), clsCol)
+      // null class labels (rejected by the fit, but held-out frames
+      // are caller-supplied) have no class to count — dropped
+      df.select(rid.as("rid"), col(model.schema.classCol).cast("string").as("cls"))
         .filter(col("rid") >= 0 && col("cls").isNotNull)
         .groupBy("rid", "cls").agg(count(lit(1)).as("n"))
         .collect()
@@ -404,7 +388,6 @@ object C45Pruning {
         .map { case (k, rows) =>
           k -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap
         }
-    }
     } finally sc.setJobDescription(prevDesc)
   }
 

@@ -13,7 +13,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * array, codegen'd: O(log maxBins) compares per row instead of the
   * O(maxBins) per-row lambda filter a higher-order-function
   * formulation would cost. Snapping preserves split semantics exactly:
-  * snap(v) <= e ⟺ v <= e for every edge e. */
+  * snap(v) <= e ⟺ v <= e for every edge e, under Spark's ordering —
+  * NaN is greater than every number, so it snaps to +∞ like a value
+  * above every edge, and the fit counts NaN rows on the `>` side
+  * where serving routes them. */
 case class SortedCeilSnap(child: Expression, edges: Array[Double])
   extends UnaryExpression {
 
@@ -23,7 +26,7 @@ case class SortedCeilSnap(child: Expression, edges: Array[Double])
   override def prettyName: String = "graft_snap"
 
   private def snap(v: Double): Double = {
-    var lo = 0
+    var lo = if (v.isNaN) edges.length else 0 // NaN: above every edge
     var hi = edges.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
@@ -41,7 +44,7 @@ case class SortedCeilSnap(child: Expression, edges: Array[Double])
       val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
       val mid = ctx.freshName("mid")
       s"""
-         |int $lo = 0; int $hi = $e.length;
+         |int $lo = Double.isNaN($v) ? $e.length : 0; int $hi = $e.length;
          |while ($lo < $hi) {
          |  int $mid = ($lo + $hi) >>> 1;
          |  if ($e[$mid] < $v) { $lo = $mid + 1; } else { $hi = $mid; }

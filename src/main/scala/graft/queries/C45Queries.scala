@@ -1027,7 +1027,7 @@ object C45Queries {
   //      simplify in one routing job) served through transformProba —
   //      gate-checks that generalized, OVERLAPPING rule sets carry
   //      exact-micros distributions through the order-aware flat path
-  //      (the level-walk has no tree to walk here). Same summary shape
+  //      (the tree walk has no tree to walk here). Same summary shape
   //      as q_predict_proba; oracle = VALUES pin of the committed
   //      golden, sweep.py golden-compares the higher tiers (sf1 counts
   //      are 10× sf0.1's; the micros are replication-invariant). ----

@@ -2,6 +2,8 @@ package graft.fit
 
 import graft.SparkTestSession
 import graft.meta.{AttrMeta, C45Schema}
+import org.apache.spark.JobCount
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,33 +43,18 @@ class DeriveFinalSpec extends AnyFunSuite {
     val df = trainDf().persist()
     try {
       df.count() // materialize outside the counted window
-      val groupId = s"derive-final-${System.nanoTime()}"
-      val groupJobs = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (s.properties != null &&
-              groupId == s.properties.getProperty("spark.jobGroup.id"))
-            groupJobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      spark.sparkContext.setJobGroup(groupId, "elided final level under test")
       val aqe = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val model =
-        try C45.fit(df, schema, C45Params(maxDepth = 2, maxBins = 0))
-        finally {
-          spark.conf.set("spark.sql.adaptive.enabled", aqe)
-          spark.sparkContext.clearJobGroup()
-          spark.sparkContext.removeSparkListener(l)
-        }
+      val (model, jobs) =
+        try JobCount.of(spark.sparkContext)(
+          C45.fit(df, schema, C45Params(maxDepth = 2, maxBins = 0)))
+        finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
       // the frontier must actually reach maxDepth for the claim to bite
       assert(model.leaves.exists(_.depth == 2), model.leaves.map(_.encode))
       // probe + level-0 histogram + level-1 histogram; level 2 derives
       // with NO job (pre-elision this fit ran 4)
-      assert(groupJobs.get == 3,
-        s"expected exactly 3 jobs (probe + 2 level histograms), " +
-          s"saw ${groupJobs.get}")
+      assert(jobs == 3,
+        s"expected exactly 3 jobs (probe + 2 level histograms), saw $jobs")
       // independent witness: recorded leafDist == a local recount of
       // the training rows each leaf's conjunction accepts
       val local = df.collect().map(r =>
@@ -86,5 +73,34 @@ class DeriveFinalSpec extends AnyFunSuite {
           s"leaf ${leaf.encode}: ${model.leafDist(i)} != $expected")
       }
     } finally df.unpersist()
+  }
+
+  test("NaN snaps above every bin edge, so the recorded leaf " +
+      "distributions equal a recount under serve routing") {
+    val spark0 = spark
+    import spark0.implicits._
+    // 400 clean rows split at size 9 (a below, b above), plus 40 rows of
+    // class b whose size is NaN, which Spark orders above every number
+    val clean = (0 until 400).map { i =>
+      val size = (i % 20).toDouble
+      ("red", size, if (size <= 9) "a" else "b")
+    }
+    val df = (clean ++ Seq.fill(40)(("red", Double.NaN, "b")))
+      .toDF("color", "size", "cls")
+    val model = C45.fit(df, schema,
+      C45Params(maxDepth = 1, maxBins = 4, missingMode = "drop"))
+    assert(model.leaves.map(_.encode).toSet == Set("1,<=9.0:a", "1,>9.0:b"))
+    def recount(rid: Column): Vector[Map[String, Long]] = {
+      val got = df.select(rid.as("rid"), col("cls"))
+        .filter(col("rid") >= 0)
+        .groupBy("rid", "cls").count().collect()
+        .groupBy(_.getInt(0))
+        .map { case (k, rs) => k -> rs.map(r => r.getString(1) -> r.getLong(2) * 1000000L).toMap }
+      model.leaves.indices.toVector.map(i => got.getOrElse(i, Map.empty[String, Long]))
+    }
+    val flat = recount(C45.flatRidColumn(model.leaves, schema.attrNames))
+    assert(model.leafDist == flat)
+    assert(recount(model.treeLeafColumn.get) == flat)
+    assert(flat == Vector(Map("a" -> 200000000L), Map("b" -> 240000000L)))
   }
 }

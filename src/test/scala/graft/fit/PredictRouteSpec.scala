@@ -3,10 +3,12 @@ package graft.fit
 import graft.SparkTestSession
 import graft.meta.C45Schema
 import graft.model.{CatEq, NumGT, NumLE, Rule}
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The wide-model prediction path (level-walk broadcast routing) must be
+/** The wide-model prediction path (the one-expression tree walk) must be
   * observationally identical to the flat first-match CASE WHEN on every
   * proper tree — the [[DeepFrontierSpec]] contract, applied to
   * `C45Model.transform` instead of the fit. */
@@ -59,20 +61,43 @@ class PredictRouteSpec extends AnyFunSuite {
     assert(acc == df.count())
   }
 
-  test("routed predict plans broadcast hash joins and no shuffle") {
+  /** The wide corpus written to parquet: LocalRelation inputs
+    * constant-fold through plan and job assertions. */
+  private def wideParquet(tag: String) = {
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    wideCorpus.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("routed predict plans one tree-walk expression: no join, no exchange") {
     val df = wideCorpus
     val schema = C45Schema.fromDataFrame(df, "cls")
     val m = C45.fit(df, schema, C45Params(routeJoinThreshold = 4))
-    // parquet-backed input: LocalRelation inputs constant-fold through
-    // plan assertions
-    val dir = java.nio.file.Files.createTempDirectory("predict_route").toString
-    df.write.mode("overwrite").parquet(dir)
-    val scored = m.transform(spark.read.parquet(dir), "pred", routeThreshold = 1)
-    val plan = scored.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin") &&
-      !plan.contains("Exchange hashpartitioning"),
-      s"routed predict must not shuffle:\n$plan")
+    val input = wideParquet("predict_route")
+    for (scored <- Seq(m.transform(input, "pred", routeThreshold = 1),
+                       m.transformProba(input, "pred", routeThreshold = 1))) {
+      val plan = scored.queryExecution.executedPlan.toString
+      assert(plan.contains("graft_tree_leaf"), plan)
+      assert(!plan.contains("Join") && !plan.contains("Exchange"),
+        s"routed predict must neither join nor shuffle:\n$plan")
+    }
+  }
+
+  test("routed predict adds no job to an aggregate over its output") {
+    val df = wideCorpus
+    val schema = C45Schema.fromDataFrame(df, "cls")
+    val m = C45.fit(df, schema, C45Params(routeJoinThreshold = 4))
+    assert(m.leaves.size > 64)
+    val input = wideParquet("predict_jobs")
+    val sc = spark.sparkContext
+    def agg(d: DataFrame) =
+      d.agg(count(lit(1)), bit_xor(xxhash64(d.columns.map(col): _*))).collect()
+    val (_, bare) = JobCount.of(sc)(agg(input))
+    val (_, scored) = JobCount.of(sc)(agg(m.transform(input, "pred")))
+    val (_, proba) = JobCount.of(sc)(agg(m.transformProba(input, "pred")))
+    assert(bare > 0)
+    assert(scored == bare && proba == bare,
+      s"bare aggregate ran $bare jobs, over transform $scored, over transformProba $proba")
   }
 
   test("overlapping (simplified) rule sets refuse the tree walk") {

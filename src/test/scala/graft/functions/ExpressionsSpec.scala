@@ -173,4 +173,22 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(r.getDouble(0) == 11.0)
     assert(r.getLong(1) == 1L)
   }
+
+  test("SortedCeilSnap snaps NaN above every edge, interpreted and generated") {
+    val s = spark
+    import s.implicits._
+    val edges = Array(1.0, 5.0, 9.0)
+    val inf = Double.PositiveInfinity
+    val vals = Seq(Double.NaN, Double.NegativeInfinity, 0.5, 5.0, 7.0, 9.5, inf)
+    // a local relation evaluates the projection interpreted; a range
+    // input keeps it in generated code
+    val local = vals.toDF("v")
+    val generated = spark.range(vals.size)
+      .select(element_at(typedLit(vals), col("id").cast("int") + 1).as("v"))
+    for (df <- Seq(local, generated)) {
+      val got = df.select(SortedCeilSnap.snapTo(edges, col("v"))).collect()
+        .map(_.getDouble(0)).toSeq
+      assert(got == Seq(inf, 1.0, 1.0, 5.0, 9.0, inf, inf))
+    }
+  }
 }
