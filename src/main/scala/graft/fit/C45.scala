@@ -29,19 +29,14 @@ import scala.reflect.runtime.universe.TypeTag
   * once their path splits on the null attribute — the closest a
   * no-NPE engine gets to the reference, which crashes). Corpora with
   * no nulls take a byte-identical code path either way. */
-/** `routeJoinThreshold`: frontiers wider than this route rows through
-  * a broadcast rule-table join instead of one flat CASE WHEN. The two
-  * paths produce identical trees (spec-pinned); the trade is
-  * whole-stage-codegen compile time of an O(rules × depth) expression
-  * (grows every level, compiled fresh each level) against a join +
-  * routed-base persist (constant-size expression, one compiled shape
-  * reused). Measured at sf0.1: a 22-rule flat level costs ~2.3s vs
-  * ~1.4s join-routed while ≤12-rule levels favor flat — the crossover
-  * sits under 20 rules, hence 16. */
+/** Routing is not a knob: every level of the single-tree fit walks
+  * the tree grown so far inside one [[graft.functions.TreeLeaf]]
+  * expression over the training cache (see [[C45.frontierRidColumn]]).
+  * The walk's generated code does not depend on the tree, so all
+  * levels share one compiled class and no level joins or persists. */
 case class C45Params(minDataRatio: Double = InfoStats.DefaultMinDataRatio,
                      maxDepth: Int = 30,
                      maxBins: Int = 256,
-                     routeJoinThreshold: Int = 16,
                      missingMode: String = "fractional") {
   require(missingMode == "fractional" || missingMode == "drop",
     s"missingMode must be fractional|drop: $missingMode")
@@ -121,39 +116,14 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * ones to string, so the walk compares exactly as
     * [[graft.model.Rule.toPredicate]] does. None when the leaves have
     * no tree form. */
-  private[fit] def treeLeafColumn: Option[Column] = treeStructure().map {
-    case (nid, levels) =>
-      val size = nid.size
-      val kind = Array.fill(size)(TreeLeaf.Leaf)
-      val slot = new Array[Int](size)
-      val boundary = new Array[Double](size)
-      val left = new Array[Int](size)
-      val right = new Array[Int](size)
-      val cats = new Array[java.util.HashMap[UTF8String, Integer]](size)
-      val leaf = Array.fill(size)(-1)
-      // one input per (attribute, split kind), in first-use order
-      val slots = scala.collection.mutable.LinkedHashMap.empty[(Int, Boolean), Int]
-      levels.flatten.filter(_.kind != "leaf").foreach { r =>
-        val numeric = r.kind == "num"
-        slot(r.prid) = slots.getOrElseUpdate((r.aid, numeric), slots.size)
-        if (numeric) {
-          kind(r.prid) = TreeLeaf.Num
-          boundary(r.prid) = r.boundary
-          left(r.prid) = r.lrid
-          right(r.prid) = r.rrid
-        } else {
-          kind(r.prid) = TreeLeaf.Cat
-          val m = new java.util.HashMap[UTF8String, Integer]()
-          r.children.foreach { case (v, c) => m.put(UTF8String.fromString(v), c) }
-          cats(r.prid) = m
-        }
-      }
-      leaves.zipWithIndex.foreach { case (r, i) => leaf(nid(r.conditions)) = i }
-      val names = schema.attrNames
-      val attrs = slots.keys.toSeq.map { case (aid, numeric) =>
-        col(names(aid)).cast(if (numeric) "double" else "string") }
-      TreeLeaf.column(attrs,
-        new TreeLeaf.Nodes(kind, slot, boundary, left, right, cats, leaf))
+  private[fit] def treeLeafColumn: Option[Column] = treeStructure().map { _ =>
+    // one input per (attribute, split kind), in first-use order
+    val slots = scala.collection.mutable.LinkedHashMap.empty[(Int, Boolean), Int]
+    val tree = C45.treeNodes(leaves.map(_.conditions), (aid, split) =>
+      slots.getOrElseUpdate((aid, !split.isInstanceOf[CatEq]), slots.size))
+    val names = schema.attrNames
+    TreeLeaf.column(slots.keys.toSeq.map { case (aid, numeric) =>
+      col(names(aid)).cast(if (numeric) "double" else "string") }, tree)
   }
 
   /** The class set [[transformProba]] emits columns for, in its column
@@ -606,9 +576,9 @@ object C45Model {
 /** Level-wise C4.5 fit (SURVEY.md O4): the reference's one-MapReduce-job-
   * per-tree-level driver loop (Main.java:59-123) over a persisted
   * DataFrame. Per level, ALL open rules are scored simultaneously: rules
-  * at one level have mutually disjoint predicates, so a single flat
-  * CASE WHEN assigns each row its rule id, and one shuffled aggregation
-  * per attribute kind scores every (rule, attribute) pair — replacing
+  * at one level have mutually disjoint predicates, so one walk of the
+  * tree grown so far assigns each row its rule id, and one shuffled
+  * aggregation scores every (rule, attribute) pair — replacing
   * the reference's rule-queue HDFS files, distributed-cache side input
   * and combiner-less raw-pair shuffle (SURVEY.md §3.4, §4).
   *
@@ -623,14 +593,17 @@ object C45Model {
   *  #6 the ε=1e-5 splitInfo==0 case never wins (a zero-gain "split"
   *     replays the same node), so such rules close as majority leaves.
   */
-/** One row of the broadcast routing table for deep frontiers: how a
-  * PARENT rule (by its rid at the previous level) routes its rows to
-  * child rids at this level. `kind` = "num" (boundary + left/right
-  * child) or "cat" (value → child map); closed parents simply have no
-  * row, so their rows drop out of the inner join — the same fate the
-  * flat CASE WHEN gives them via the `-1` → filter. (Top-level, not
-  * nested in the object: a private nested case class defeats the
-  * encoder's generated code and forces interpreted fallback.) */
+/** One split a level decided: how a PARENT rule (by its rid at the
+  * previous level) routes its rows to child rids at this level. `kind`
+  * = "num" (boundary + left/right child) or "cat" (value → child map).
+  * [[C45.deriveFinalCounts]] derives a final level's class marginals
+  * from these; the fused fold fit and the forest broadcast-join them
+  * to route deep frontiers, where a closed parent has no row and its
+  * rows drop out of the inner join — the fate the flat CASE WHEN's
+  * `-1` gives them. (The single-tree fit routes through
+  * [[C45.frontierRidColumn]] instead.) Top-level, not nested in the
+  * object: a private nested case class defeats the encoder's
+  * generated code and forces interpreted fallback. */
 private[fit] case class Route(prid: Int, kind: String, aid: Int,
                               boundary: Double, lrid: Int, rrid: Int,
                               children: Map[String, Int])
@@ -676,9 +649,9 @@ object C45 {
 
   /** What one level's driver-side decision pass produced: rules closed
     * this level (with their exact-micros mass and class distribution),
-    * the next frontier, the routing rows the next level's deep-frontier
-    * join would need, gain-importance increments, and the (possibly
-    * newly fixed) global majority. */
+    * the next frontier, the level's splits as routing rows,
+    * gain-importance increments, and the (possibly newly fixed)
+    * global majority. */
   private[fit] case class LevelDecision(
       closedAdd: Vector[(Rule, Long, Map[String, Long])],
       nextOpen: Vector[Rule],
@@ -688,14 +661,73 @@ object C45 {
 
   /** The flat frontier-routing expression: first-match CASE WHEN over
     * the open rules' root-to-leaf conjunctions, -1 = no rule (row
-    * leaves the fit). Shared by [[fit]]'s small-frontier path and the
-    * fused fold fit so rid assignment is identical by construction. */
+    * leaves the fit). The fused fold fit, the forest and boost route
+    * with it; on a tree's open rules it assigns exactly the rid
+    * [[frontierRidColumn]] does. */
   private[fit] def flatRidColumn(open: Vector[Rule], names: Seq[String]): Column = {
     val first = when(open.head.toPredicate(names), 0)
     open.zipWithIndex.tail.foldLeft(first) { case (acc, (r, i)) =>
       acc.when(r.toPredicate(names), lit(i))
     }.otherwise(lit(-1))
   }
+
+  /** Flatten root-to-node paths into [[TreeLeaf.Nodes]]: the node a
+    * path ends at outputs the path's index, and a node no path ends at
+    * outputs −1 — so is the unreached side of a numeric split, and a
+    * category no path takes misses the node's map, which the walk also
+    * answers with −1. `slotOf` gives a split's walk input position.
+    * The paths must form a tree: siblings split on one attribute (and
+    * one boundary), as every fitted rule set's paths do. */
+  private[fit] def treeNodes(paths: Seq[Vector[(Int, Split)]],
+                             slotOf: (Int, Split) => Int): TreeLeaf.Nodes = {
+    final class Node {
+      var kind: Byte = TreeLeaf.Leaf
+      var slot, left, right, leaf = -1
+      var boundary = 0.0
+      var cats: java.util.HashMap[UTF8String, Integer] = null
+    }
+    val nodes = scala.collection.mutable.ArrayBuffer(new Node)
+    def fresh(): Int = { nodes += new Node; nodes.size - 1 }
+    def numeric(n: Node, b: Double): Node = {
+      if (n.kind == TreeLeaf.Leaf) {
+        n.kind = TreeLeaf.Num; n.boundary = b; n.left = fresh(); n.right = fresh()
+      }
+      n
+    }
+    paths.zipWithIndex.foreach { case (path, out) =>
+      var at = 0
+      path.foreach { case (aid, split) =>
+        val n = nodes(at)
+        n.slot = slotOf(aid, split)
+        at = split match {
+          case NumLE(b) => numeric(n, b).left
+          case NumGT(b) => numeric(n, b).right
+          case CatEq(v) =>
+            if (n.kind == TreeLeaf.Leaf) { n.kind = TreeLeaf.Cat; n.cats = new java.util.HashMap }
+            n.cats.computeIfAbsent(UTF8String.fromString(v), _ => fresh())
+        }
+      }
+      nodes(at).leaf = out
+    }
+    new TreeLeaf.Nodes(nodes.map(_.kind).toArray, nodes.map(_.slot).toArray,
+      nodes.map(_.boundary).toArray, nodes.map(_.left).toArray,
+      nodes.map(_.right).toArray, nodes.map(_.cats).toArray, nodes.map(_.leaf).toArray)
+  }
+
+  /** The fit's frontier router: the index in `open` of the rule each
+    * row reaches, walking the tree grown so far in one
+    * [[graft.functions.TreeLeaf]] expression; −1 (the row leaves the
+    * fit) for a closed leaf, a null split value or an unseen category,
+    * exactly where [[flatRidColumn]] matches no rule. Closed leaves
+    * need no nodes: a branch no open path takes walks to −1. Every
+    * attribute is a walk input, in schema order (numeric as double,
+    * categorical as string), and the node arrays are reference
+    * objects, so the generated code is the same whatever the frontier:
+    * every level of a fit hits the codegen cache after the first. */
+  private[fit] def frontierRidColumn(open: Vector[Rule], schema: C45Schema): Column =
+    TreeLeaf.column(
+      schema.attrs.map(a => col(a.name).cast(if (a.isNumeric) "double" else "string")),
+      treeNodes(open.map(_.conditions), (aid, _) => aid))
 
   /** The fractional route-weight expression over a RouteX join's
     * output columns (__w, __frac, __kind, __aid, __boundary, __side,
@@ -893,10 +925,9 @@ object C45 {
   }
 
   /** Driver-side per-rule decision (O3/O4): tiny tables only. The
-    * same pass records each split as a Route row so the next level
-    * can broadcast-join its way to child rids if its frontier is
-    * deep (child rid = position in nextOpen, by construction the
-    * index the flat CASE WHEN would assign too). */
+    * same pass records each split as a Route row (child rid = position
+    * in nextOpen, by construction the index the flat CASE WHEN and the
+    * tree walk assign too). */
   private[fit] def decideLevel(open: Vector[Rule], level: Int, st: LevelStats,
       schema: C45Schema, params: C45Params, classLabels: Seq[String],
       fractional: Boolean, unit: Double,
@@ -971,24 +1002,16 @@ object C45 {
       routesX.result(), imp.result(), globalMajority)
   }
 
-  /** Test hook: with -Dgraft.fit.capturePlans=1, every join-routed
-    * level's physical plan is recorded here (pre-execution, so the
-    * broadcast hint's join choice is visible) — lets specs pin the
-    * "one broadcast hash join, no shuffle" routing claim without
-    * exposing the loop's internals. */
-  private[graft] val capturedRoutePlans =
-    new scala.collection.mutable.ArrayBuffer[String]
-
   def fit(df: DataFrame, schema: C45Schema,
           params: C45Params = C45Params()): C45Model =
     fitWithImportance(df, schema, params)._1
 
-  /** Persist WITHOUT columnar compression — for the level loop's
-    * transient routed bases, which live for exactly one level and are
-    * scanned exactly twice (this level's histogram, the next level's
-    * route join). Dictionary/RLE encoding buys memory at CPU cost on
+  /** Persist WITHOUT columnar compression — for the fold, forest and
+    * boost level loops' transient routed bases, which live for exactly
+    * one level and are scanned exactly twice (this level's histogram,
+    * the next level's route join). Dictionary/RLE encoding buys memory at CPU cost on
     * both the build and every scan; for a frame that short-lived it is
-    * a net loss (~25% of a join-routed fit at 600k rows). Memory stays
+    * a net loss (~25% of a join-routed level at 600k rows). Memory stays
     * bounded: at most one level's base is cached at a time, and
     * MEMORY_AND_DISK spills rather than evicts under pressure. The
     * conf is snapshotted by the InMemoryRelation at persist time, so
@@ -1030,7 +1053,6 @@ object C45 {
     * from the map. */
   def fitWithImportance(df: DataFrame, schema: C45Schema,
                         params: C45Params = C45Params()): (C45Model, Map[Int, Double]) = {
-    val spark = df.sparkSession
     val names = schema.attrNames
     val clsCol = schema.classCol
     val catAttrs = schema.categoricalAttrs
@@ -1172,23 +1194,12 @@ object C45 {
     // GRAFT_FIT_PROFILE=1 through a forked runner, as fitFolds accepts)
     val profile = sys.props.get("graft.fit.profile").contains("1") ||
       sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-    // deep-frontier routing state: the previous level's routed base,
-    // the routes its decisions produced, and the persisted handle to
-    // free once the next level has materialized on top of it
-    var prevBase: DataFrame = null
+    // the previous level's split routes and collected cells: at
+    // level == maxDepth every open rule closes on its class marginal
+    // alone, which these derive exactly (deriveFinalCounts) — the final
+    // histogram job is skipped outright
     var pendingRoutes: Seq[Route] = Nil
-    // the previous level's collected cells: at level == maxDepth every
-    // open rule closes on its class marginal alone, which these cells
-    // derive exactly (deriveFinalCounts) — the final histogram job is
-    // skipped outright
     var prevCells: Array[(Int, Int, String, String, Long)] = null
-    var prevPersisted: Option[DataFrame] = None
-    // every join-routed base ever persisted; unpersist is idempotent,
-    // so the finally can sweep the whole list even though each level
-    // already frees its predecessor eagerly — this covers the level
-    // whose stat jobs threw before it became prevPersisted
-    val routedPersists = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
 
     while (open.nonEmpty && level <= params.maxDepth) {
       if (level == params.maxDepth && level > 0 && prevCells != null) {
@@ -1206,105 +1217,30 @@ object C45 {
         open = d.nextOpen
         level += 1
       } else {
-      // Routing each row to its (disjoint) open rule. Two plans:
-      //  - small frontier: one flat CASE WHEN over the full root-to-leaf
-      //    conjunctions — no extra shuffle/persist, and the expression
-      //    stays codegen-friendly while it is short;
-      //  - deep frontier (open.size > routeJoinThreshold): the CASE
-      //    WHEN grows linearly with open leaves (thousands-of-leaves
-      //    trees blow past codegen limits and re-evaluate depth-long
-      //    conjunctions per rule), so instead route INCREMENTALLY: join
-      //    the previous level's routed base against a tiny broadcast
-      //    table mapping (parent rid, one split condition) → child rid.
-      //    Constant expression size per level, one broadcast hash join,
-      //    no shuffle — the Spark analogue of the reference's
-      //    distributed-cache rule queue (Main.java:189).
+      // Routing each row to its (disjoint) open rule: one tree walk
+      // over the tree grown so far (frontierRidColumn), straight over
+      // the training cache. The walk's generated code is the same at
+      // every level — only its node arrays change — so the level's
+      // stage compiles once per fit, not once per frontier, and no
+      // level joins, persists or re-reads a previous level's output:
+      // the Spark analogue of the reference's distributed-cache rule
+      // queue (Main.java:189) is a reference object in the expression.
       // (fractional mode never reaches this loop — it delegated to the
       // fused fold machinery above, whose weighted RouteX chain is the
       // one-row-per-(row, child) fan-out a flat rid cannot express)
-      val useJoin = level > 0 && open.size > params.routeJoinThreshold
+      val base = data.withColumn("__rid", frontierRidColumn(open, schema))
+        .filter(col("__rid") >= 0)
+        .withColumn("__cls", col(clsCol).cast("string"))
       // attributes used on EVERY open path are dead: the once-per-path
-      // rule bars them as candidates for every open rule and therefore
-      // for every future route. Drop them from the routed base's cache
-      // AND the histogram explode — the frontier's shared prefix grows
-      // with depth, so deep trees shed columns (and explode volume) as
-      // they grow. Monotone across levels: a child's usedAttrs is a
-      // superset of its parent's, so a column absent from the previous
-      // level's base is never referenced again.
+      // rule bars them as candidates for every open rule, so they
+      // leave the histogram explode — the frontier's shared prefix
+      // grows with depth, so deep trees shed explode volume as they
+      // grow
       val deadAids: Set[Int] = open.map(_.usedAttrs).reduce(_ intersect _)
       val liveCatAttrs = catAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
       val liveNumAttrs = numAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-      val base =
-        if (!useJoin) {
-          val ridCol = flatRidColumn(open, names)
-          data.withColumn("__rid", ridCol)
-            .filter(col("__rid") >= 0)
-            .withColumn("__cls", col(clsCol).cast("string"))
-        } else {
-          import spark.implicits._
-          val routeDf = pendingRoutes.toDF(
-            "__prid", "__kind", "__aid", "__boundary", "__lrid", "__rrid",
-            "__children")
-          // raw (un-snapped) values: child predicates compare the raw
-          // column exactly as Rule.toPredicate does
-          // null attribute values fall into neither branch (both
-          // comparisons yield null) → routed rid null → filtered, the
-          // same fate the flat CASE WHEN gives them via `-1`. Each
-          // branch exists only when its attribute class does: a
-          // categorical-only schema gets no num subtree at all (not a
-          // dead element_at over a NullType map), and vice versa.
-          // the route maps cover only the attrs the pending routes
-          // actually split on — those were candidates at the previous
-          // level, so they are guaranteed alive in prevBase even after
-          // dead-column slimming (and the expression stays minimal)
-          val routeAids = pendingRoutes.map(_.aid).toSet
-          val routeNum = numAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-          val routeCat = catAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-          val numBranch =
-            if (routeNum.isEmpty) None
-            else {
-              val numvCol = map(routeNum.flatMap(a =>
-                Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("double"))): _*)
-              Some(when(col("__kind") === "num",
-                when(element_at(numvCol, col("__aid")) <= col("__boundary"), col("__lrid"))
-                  .when(element_at(numvCol, col("__aid")) > col("__boundary"), col("__rrid"))))
-            }
-          val catBranchOf: Column => Column = prev => {
-            val catvCol = map(attrPairs(routeCat, "string"): _*)
-            val hit = element_at(col("__children"), element_at(catvCol, col("__aid")))
-            if (prev == null) when(col("__kind") === "cat", hit)
-            else prev.when(col("__kind") === "cat", hit)
-          }
-          val routedRid = (numBranch, routeCat.isEmpty) match {
-            case (Some(nb), true)  => nb
-            case (Some(nb), false) => catBranchOf(nb)
-            case (None, false)     => catBranchOf(null)
-            case (None, true)      => lit(null) // no routes: route nothing
-          }
-          val routed = prevBase
-            .join(broadcast(routeDf), prevBase("__rid") === routeDf("__prid"))
-            .withColumn("__ridNext", routedRid)
-            .filter(col("__ridNext").isNotNull)
-            .drop("__rid", "__prid", "__kind", "__aid", "__boundary",
-              "__lrid", "__rrid", "__children")
-            .withColumnRenamed("__ridNext", "__rid")
-            // dead columns (shared path prefix) leave the cache here;
-            // .drop is lenient about ones the previous level already shed
-            .drop(names.filter(n => deadAids(schema.attrIndex(n))): _*)
-          if (sys.props.get("graft.fit.capturePlans").contains("1"))
-            capturedRoutePlans.synchronized {
-              capturedRoutePlans += s"routes=${pendingRoutes.size}\n" +
-                routed.queryExecution.executedPlan.toString
-            }
-          // the persist exists for the NEXT level's route join; at
-          // level == maxDepth every open rule closes (depth == level),
-          // so there is no next level and caching would be pure cost
-          if (level < params.maxDepth) persistUncompressed(routed)
-          else routed
-        }
-      if (useJoin && level < params.maxDepth) routedPersists += base
 
-      // ONE scan of the routed base produces EVERY per-level statistic
+      // ONE scan of the training cache produces EVERY per-level statistic
       // (the histogram-aggregation shape — executors build bounded
       // contingency histograms, the driver picks the splits; the
       // reference instead streams every raw (rule,attr,val,cls) PAIR
@@ -1320,7 +1256,7 @@ object C45 {
       // deterministic sorted order. This replaced three concurrent
       // Spark stat jobs (categorical stats, numeric window scan, class
       // counts) and their persisted intermediate: one job, one
-      // collect, one scan of base per level (~2.5× faster per level at
+      // collect, one scan of data per level (~2.5× faster per level at
       // 600k rows; identical decisions — golden-pinned).
       // The val-null filter drops null ATTRIBUTE values (unsupported
       // in fit, as in the reference which would NPE on them; such rows
@@ -1367,12 +1303,6 @@ object C45 {
       open = d.nextOpen
       pendingRoutes = d.routes
       prevCells = cells
-      // the next level (if join-routed) chains off THIS level's base;
-      // the previous persisted base is now safe to free — this level's
-      // stat jobs have already materialized on top of it
-      prevPersisted.foreach(_.unpersist())
-      prevPersisted = if (useJoin) Some(base) else None
-      prevBase = base
       level += 1
       }
     }
@@ -1385,9 +1315,8 @@ object C45 {
     (C45Model(schema.copy(classLabels = classLabels), closed,
       globalMajority.getOrElse(classLabels.head), closedMass, closedDist),
       attrImportance.toMap)
-    // the fit is fully eager: failed level jobs must not strand cached
-    // blocks — free the routed-base chain, then the training projection
-    } finally routedPersists.foreach(_.unpersist())
+    // the fit is fully eager: failed level jobs must not strand the
+    // training projection's cached blocks
     } finally { if (!prePersisted) data.unpersist() }
   }
 
@@ -1416,8 +1345,8 @@ object C45 {
     *
     * Frontiers are routed FLAT at any width here (no join-routing) in
     * the unweighted path: rid assignment still matches the sequential
-    * fit exactly (the join-routed rid is pinned to equal the flat rid
-    * by construction — see the Route scaladoc), so results are
+    * fit's tree walk exactly (both give an open rule its position in
+    * the frontier — see [[frontierRidColumn]]), so results are
     * identical; only the expression size grows with very deep
     * frontiers.
     *
@@ -1742,7 +1671,7 @@ object C45 {
             }
           // level 0 reads through the caller's stamped cache (the fan-
           // out recompute is one explode over that cache — same policy
-          // as fit's unpersisted flat level); join-routed levels persist
+          // as fit's walk-routed levels); join-routed levels persist
           // for the NEXT level's route join, freed once it materializes
           val based =
             if (level >= 1 && level < params.maxDepth) {

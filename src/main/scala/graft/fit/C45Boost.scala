@@ -467,13 +467,14 @@ object C45Boost {
         println(f"[boost] $what: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       r
     }
+    // the previous round's cache, freed only after the current round's
+    // first histogram job has materialized `cur` on top of it (lazy
+    // reweight materialization — see below), and by the finally when a
+    // round throws before that
+    var pendingFree: Option[DataFrame] = None
     try {
       var round = 0
       var stop = false
-      // the previous round's cache, freed only after the current
-      // round's first histogram job has materialized `cur` on top of
-      // it (lazy reweight materialization — see below)
-      var pendingFree: Option[DataFrame] = None
       while (round < params.rounds && !stop) {
         val model = tick(s"round $round fit")(fitWeighted(cur))
         pendingFree.foreach(_.unpersist())
@@ -529,8 +530,7 @@ object C45Boost {
         }
         round += 1
       }
-      pendingFree.foreach(_.unpersist())
-    } finally cur.unpersist()
+    } finally { pendingFree.foreach(_.unpersist()); cur.unpersist() }
     val ts = trees.result()
     require(ts.nonEmpty,
       "C45Boost.fit produced no usable tree (first round error >= 0.5)")

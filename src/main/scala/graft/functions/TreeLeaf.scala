@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Walk a decision tree to its leaf in one expression: the leaf index
   * a row reaches, or −1 when a null split value or an unseen category
-  * stops it. `children` are the split attributes — numeric ones as
+  * stops it. `children` are the walk's inputs — numeric attributes as
   * double, categorical ones as string — addressed by the nodes' `slot`.
   *
   * The tree is flattened into primitive node arrays, so the generated
@@ -21,7 +21,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * no shuffle and no per-level job. Numeric splits compare exactly as
   * Spark's `<=` does (NaN is greater than every number, −0.0 equals
   * 0.0), so the walk agrees with a first-match CASE WHEN over the
-  * leaves' conjunctions on every row. */
+  * leaves' conjunctions on every row.
+  *
+  * Two callers. Wide models score through it (`C45Model.transform`,
+  * `transformProba`, `C45Pruning`'s leaf counts). The single-tree fit
+  * routes every level through it (`C45.frontierRidColumn`): there the
+  * leaves are the open rules, every attribute is an input, and the
+  * node arrays are reference objects, so each level generates the
+  * same code and reuses the first level's compiled class. */
 case class TreeLeaf(children: Seq[Expression], tree: TreeLeaf.Nodes)
   extends Expression {
 

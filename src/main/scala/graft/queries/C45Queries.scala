@@ -745,13 +745,12 @@ object C45Queries {
 
   /** Deep-frontier fit under the driver's gate. `q_fit_tree`'s natural
     * label (l_linestatus) is independent of the attributes, so past
-    * sf0.01 its tree is a single root leaf and the incremental
-    * broadcast-join routing path (C45.fit's deep-frontier plan — the
-    * plan a thousand-leaf tree on a 100 TB corpus must take) never
-    * executes under the correctness gate. This query makes that path
-    * gate-checked with routeJoinThreshold=1: every level past the root
-    * routes through the broadcast rule-table join, numeric AND
-    * categorical child maps both exercised (frontier 1 → 2 → 4 → 3).
+    * sf0.01 its tree is a single root leaf and the fit's frontier
+    * router (the [[graft.functions.TreeLeaf]] walk over the tree grown
+    * so far) never descends past the root under the correctness gate.
+    * This query makes a multi-level walk gate-checked: every level past
+    * the root routes through numeric AND categorical splits (frontier
+    * 1 → 2 → 4 → 3).
     *
     * The label is engineered so every split decision wins by a REAL
     * margin, never an ulp. Two traps shape it: (a) a full product
@@ -787,7 +786,7 @@ object C45Queries {
             .otherwise(concat(lit("L"), col("l_returnflag"))))
           .otherwise(
             when(col("l_discount") <= 0.05, lit("Hd0")).otherwise(lit("Hd1"))))
-    C45.fit(df, schema, C45Params(maxDepth = 3, routeJoinThreshold = 1))
+    C45.fit(df, schema, C45Params(maxDepth = 3))
       .toDF(s).orderBy("rule")
   }
   val qFitDeepSql: String = goldenValuesSql("golden/fit_deep_sf001_rules.txt")

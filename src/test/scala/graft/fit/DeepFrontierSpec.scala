@@ -1,107 +1,201 @@
 package graft.fit
 
 import graft.SparkTestSession
-import graft.meta.C45Schema
+import graft.meta.{AttrMeta, C45Schema}
+import org.apache.spark.JobCount
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The deep-frontier routing path (broadcast rule-table join) must be
-  * observationally identical to the flat CASE WHEN path: same rule
-  * sets, level by level, on a tree wide enough to actually cross the
-  * threshold — including both numeric and categorical splits and rows
-  * with null attribute values (which must drop out of routing the same
-  * way in both modes). */
+/** The fit's frontier router — one tree walk of the tree grown so far
+  * ([[C45.frontierRidColumn]]) — on frontiers wider than the model's
+  * serve-time walk threshold (64 leaves). Oracles that do not depend
+  * on how the fit routes: every recorded leaf distribution equals a
+  * recount of the training rows under serve routing (the model's own
+  * tree walk), a hand-derived 160-leaf tree comes out rule for rule,
+  * and every histogram level plans the walk over the training cache
+  * with no join.
+  *
+  * The tests named `join-routed fit …` date from when wide frontiers
+  * routed through a broadcast rule-table join; they now pin the walk
+  * that replaced it against the flat first-match CASE WHEN routing
+  * ([[DeepFrontierSpec.flatFit]]). The one join the fit still plans —
+  * the fractional fit's weighted RouteX chain for null-bearing rows —
+  * keeps its broadcast pin. */
 class DeepFrontierSpec extends AnyFunSuite {
+  import DeepFrontierSpec.flatFit
   lazy val spark = SparkTestSession.spark
 
-  /** Synthetic deep/wide corpus: root splits on the 8-value categorical
+  /** Walk-routed [[C45.fit]] and the flat-routed fit agree exactly:
+    * rules, majority, and the recorded masses and distributions. */
+  private def assertSameAsFlat(df: DataFrame, schema: C45Schema,
+                               params: C45Params = C45Params()): C45Model = {
+    val walked = C45.fit(df, schema, params)
+    val flat = flatFit(df, schema, params)
+    assert(walked.leaves == flat.leaves)
+    assert(walked.majority == flat.majority)
+    assert(walked.leafMass == flat.leafMass)
+    assert(walked.leafDist == flat.leafDist)
+    walked
+  }
+
+  /** Synthetic wide corpus: root splits on the 8-value categorical
     * `a`, every child then splits numeric `x` (class flips at a
     * per-a-value boundary), so the frontier is 1 → 8 → 16. Several
     * copies per cell keep every branch above the minDataRatio guard. */
-  private def wideData = {
+  private def wideData: DataFrame = {
     val s = spark
     import s.implicits._
     val rows = for {
       av <- 0 until 8
       x <- 0 until 10
-      copy <- 0 until 3
-    } yield {
-      val cls = if (x <= (2 + av % 4)) "p" else "n"
-      (s"v$av", x.toDouble, cls, copy)
-    }
-    rows.toDF("a", "x", "cls", "copy").drop("copy")
+      _ <- 0 until 3
+    } yield (s"v$av", x.toDouble, if (x <= (2 + av % 4)) "p" else "n")
+    rows.toDF("a", "x", "cls")
   }
 
-  private def leafSet(m: C45Model) = m.leaves.map(_.encode).toSet
+  /** `m.leafDist` as a recount: each training row goes to the leaf
+    * `leafOf` sends it to (−1: none), counted per class in micros. */
+  private def recount(m: C45Model, df: DataFrame, leafOf: Column): Vector[Map[String, Long]] = {
+    val got = df
+      .select(leafOf.as("leaf"), col(m.schema.classCol).cast("string"))
+      .filter(col("leaf") >= 0)
+      .groupBy("leaf", m.schema.classCol).count().collect()
+      .groupBy(_.getInt(0))
+      .map { case (leaf, rs) => leaf -> rs.map(r => r.getString(1) -> r.getLong(2) * 1000000L).toMap }
+    m.leaves.indices.toVector.map(i => got.getOrElse(i, Map.empty[String, Long]))
+  }
+
+  /** Serve routing is the model's tree walk; the first-match CASE WHEN
+    * over the leaves is a second witness that shares no code with it. */
+  private def assertLeafDistIsServeRecount(m: C45Model, df: DataFrame): Unit = {
+    val expected = recount(m, df, m.treeLeafColumn.get)
+    assert(recount(m, df, C45.flatRidColumn(m.leaves, m.schema.attrNames)) == expected)
+    m.leaves.indices.foreach { i =>
+      assert(m.leafDist(i) == expected(i),
+        s"leaf ${m.leaves(i).encode}: recorded ${m.leafDist(i)}, serve recount ${expected(i)}")
+    }
+  }
+
+  /** `fit`'s result and the executed plans of the queries it ran,
+    * captured as each query finishes. */
+  private def fitPlans(fit: => C45Model): (C45Model, List[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val m =
+      try {
+        val fitted = fit
+        JobCount.drain(spark.sparkContext)
+        fitted
+      } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    (m, plans.asScala.toList)
+  }
+
+  /** How many rules the fit's level `level` routed: the distinct
+    * depth-`level` prefixes of the leaves at least that deep. */
+  private def frontier(m: C45Model, level: Int): Int =
+    m.leaves.filter(_.depth >= level).map(_.conditions.take(level)).distinct.size
+
+  private val edgeX = Seq[java.lang.Double](Double.NegativeInfinity, -1.0, -0.0, 0.0,
+    1.0, 2.5, Double.PositiveInfinity, Double.NaN, null)
+
+  /** A 16-way categorical `a` at the root. Under a0–a7 the label
+    * carries the band of numeric `x` (≤ 0 or not; x takes NaN, ±Inf,
+    * −0.0, 0.0 and null), and under every `a` it carries `b / 2` of
+    * the 8-way categorical `b`. So a0–a7 split on x, a8–a15 on b, and
+    * the x children then split on b: frontier 1 → 16 → 80 → 128.
+    * Rows with a null `a` or `x` leave the tree where their path
+    * splits on it. */
+  private def edgeCorpus: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rows = for {
+      a <- 0 until 16
+      b <- 0 until 8
+      x <- edgeX
+      copy <- 0 until 2
+    } yield {
+      val band = if (x == null || x <= 0.0) 0 else 1 // NaN > 0 in Spark's order
+      val cls = if (a < 8) s"c$a:$band:${b / 2}" else s"c$a:${b / 2}"
+      (if (copy == 1 && b == 7 && x == null) null else s"a$a", s"b$b", x, cls)
+    }
+    rows.toDF("a", "b", "x", "cls")
+  }
+
+  private val edgeSchema = C45Schema(Seq(
+    AttrMeta("a", isNumeric = false), AttrMeta("b", isNumeric = false),
+    AttrMeta("x", isNumeric = true)), "cls", Nil)
+
+  test("wide drop fits over NaN, ±Inf, null and -0.0 record the leaf " +
+      "distributions serve routing recounts") {
+    val df = edgeCorpus
+    for (maxBins <- Seq(0, 4); maxDepth <- Seq(3, 4)) {
+      val m = C45.fit(df, edgeSchema,
+        C45Params(maxDepth = maxDepth, maxBins = maxBins, missingMode = "drop"))
+      withClue(s"maxBins=$maxBins maxDepth=$maxDepth: ") {
+        assert(frontier(m, 2) > 64, "a histogram level must route more than 64 open rules")
+        assert(frontier(m, 3) > 64)
+        assertLeafDistIsServeRecount(m, df)
+      }
+    }
+  }
 
   test("join-routed fit produces exactly the CASE WHEN fit's rule set") {
     val df = wideData
-    val schema = C45Schema.fromDataFrame(df, "cls")
-    val flat = C45.fit(df, schema, C45Params(routeJoinThreshold = 10000))
-    val joined = C45.fit(df, schema, C45Params(routeJoinThreshold = 2))
-    assert(leafSet(joined) == leafSet(flat))
-    assert(joined.majority == flat.majority)
-    assert(flat.leaves.size >= 16, "the tree must actually grow wide")
+    val m = assertSameAsFlat(df, C45Schema.fromDataFrame(df, "cls"))
+    assert(m.leaves.size >= 16, "the tree must actually grow wide")
+    // and past the serve-time walk threshold, with NaN, ±Inf and -0.0
+    for (maxBins <- Seq(0, 4)) withClue(s"maxBins=$maxBins: ") {
+      val wide = assertSameAsFlat(edgeCorpus, edgeSchema,
+        C45Params(maxDepth = 4, maxBins = maxBins, missingMode = "drop"))
+      assert(frontier(wide, 3) > 64)
+    }
   }
 
   test("join-routed fit handles null attribute values like the flat path") {
     val s = spark
     import s.implicits._
-    val base = wideData
-    val withNulls = base.union(
-      Seq((null.asInstanceOf[String], 3.0, "p"), ("v0", 3.0, "p"))
-        .toDF("a", "x", "cls"))
-    val schema = C45Schema.fromDataFrame(base, "cls")
-    val flat = C45.fit(withNulls, schema, C45Params(routeJoinThreshold = 10000))
-    val joined = C45.fit(withNulls, schema, C45Params(routeJoinThreshold = 2))
-    assert(leafSet(joined) == leafSet(flat))
+    val withNulls = wideData.union(
+      Seq[(String, java.lang.Double, String)]((null, 3.0, "p"), ("v0", 3.0, "p"),
+        ("v1", null, "n")).toDF("a", "x", "cls"))
+    val schema = C45Schema(Seq(AttrMeta("a", isNumeric = false),
+      AttrMeta("x", isNumeric = true)), "cls", Nil)
+    assertSameAsFlat(withNulls, schema, C45Params(missingMode = "drop"))
   }
 
   test("join-routed fit works on a categorical-only schema") {
-    // regression: with no numeric attributes the num route branch used
-    // to be built anyway over a NullType map (element_at(lit(null), …))
-    // — it worked via an implicit cast but was one analyzer change away
-    // from breaking; the branch is now constructed only when numeric
-    // attributes exist. This fit must cross the join threshold with a
-    // purely categorical frontier.
     val s = spark
     import s.implicits._
-    val rows = for {
-      av <- 0 until 8
-      bv <- 0 until 4
-      copy <- 0 until 3
-    } yield {
-      // hierarchical labels: each attribute is informative on its own
-      // (XOR-style labels would have zero marginal gain and no tree)
-      val cls = (if (bv < 2) "p" else "x") + (if (av < 4) "0" else "1")
-      (s"a$av", s"b$bv", cls)
-    }
-    val df = rows.toDF("a", "b", "cls")
-    val schema = C45Schema.fromDataFrame(df, "cls")
-    val flat = C45.fit(df, schema, C45Params(routeJoinThreshold = 10000))
-    val joined = C45.fit(df, schema, C45Params(routeJoinThreshold = 2))
-    assert(leafSet(joined) == leafSet(flat))
-    assert(flat.leaves.size >= 8, "the tree must actually grow wide")
+    // hierarchical labels: each attribute is informative on its own
+    // (XOR-style labels would have zero marginal gain and no tree)
+    val df = (for (av <- 0 until 8; bv <- 0 until 4; _ <- 0 until 3)
+      yield (s"a$av", s"b$bv", (if (bv < 2) "p" else "x") + (if (av < 4) "0" else "1")))
+      .toDF("a", "b", "cls")
+    val m = assertSameAsFlat(df, C45Schema.fromDataFrame(df, "cls"))
+    assert(m.leaves.size >= 8, "the tree must actually grow wide")
+    assertLeafDistIsServeRecount(m, df)
   }
 
   test("join-routed fit works on a numeric-only schema") {
     val s = spark
     import s.implicits._
-    val rows = for {
-      x <- 0 until 8
-      y <- 0 until 8
-      copy <- 0 until 3
-    } yield {
-      val cls = (if (x <= 3) "l" else "r") + (if (y <= 3) "d" else "u")
-      (x.toDouble, y.toDouble, cls)
-    }
-    val df = rows.toDF("x", "y", "cls")
-    val schema = C45Schema.fromDataFrame(df, "cls")
-    val flat = C45.fit(df, schema, C45Params(routeJoinThreshold = 10000))
-    val joined = C45.fit(df, schema, C45Params(routeJoinThreshold = 2))
-    assert(leafSet(joined) == leafSet(flat))
+    val df = (for (x <- 0 until 8; y <- 0 until 8; _ <- 0 until 3)
+      yield (x.toDouble, y.toDouble, (if (x <= 3) "l" else "r") + (if (y <= 3) "d" else "u")))
+      .toDF("x", "y", "cls")
+    val m = assertSameAsFlat(df, C45Schema.fromDataFrame(df, "cls"))
+    assert(m.leaves.size >= 4, "the tree must actually grow")
+    assertLeafDistIsServeRecount(m, df)
   }
 
-  test("join-routed fit reproduces a PREDICTED 160-leaf tree exactly") {
+  test("the walk-routed fit reproduces a PREDICTED 160-leaf tree exactly") {
     // A several-hundred-leaf stress with an absolute pin: the label is
     // engineered so the whole tree is derivable by hand, and the spec
     // constructs the EXPECTED rule set from first principles instead
@@ -114,10 +208,9 @@ class DeepFrontierSpec extends AnyFunSuite {
     //    level 1 inside each a-child;
     //  - the x band exists only under b in {0,1} -> x scores 1.0 there
     //    and ~0.25 above.
-    // Frontier 1 -> 16 -> 128 -> 64 with routeJoinThreshold=4: every
-    // level past the root takes the broadcast rule-table join, with
-    // 16- and 8-entry categorical child maps and a numeric boundary
-    // route — widths the lineitem fits never reach.
+    // Frontier 1 -> 16 -> 128 -> 64: 16- and 8-entry categorical child
+    // maps and a numeric boundary in one walk, at widths the lineitem
+    // fits never reach.
     val s = spark
     import s.implicits._
     val rows = for {
@@ -133,7 +226,7 @@ class DeepFrontierSpec extends AnyFunSuite {
     }
     val df = rows.toDF("a", "b", "x", "cls", "copy").drop("copy")
     val schema = C45Schema.fromDataFrame(df, "cls")
-    val m = C45.fit(df, schema, C45Params(routeJoinThreshold = 4))
+    val m = C45.fit(df, schema)
     val expected = (for {
       a <- 0 until 16
       b <- 0 until 8
@@ -143,52 +236,97 @@ class DeepFrontierSpec extends AnyFunSuite {
         s"0,a$a&1,b$b&2,>1.0:c$a:0:x1")
     }).flatten.toSet
     assert(m.leaves.size == 160)
-    assert(leafSet(m) == expected)
+    assert(m.leaves.map(_.encode).toSet == expected)
+  }
+
+  test("every histogram level plans one tree walk over the training " +
+      "cache, with no join") {
+    // The fit's routing claim at the plan level: each level's
+    // histogram reads the training cache through a graft_tree_leaf
+    // projection — no join against a route table, no per-level
+    // persisted base.
+    val (m, plans) = fitPlans(
+      C45.fit(edgeCorpus, edgeSchema, C45Params(maxDepth = 4, missingMode = "drop")))
+    assert(frontier(m, 3) > 64)
+    val histograms = plans.filter(_.contains("__rid"))
+    // levels 0-3 each run one histogram; every level-3 rule is pure
+    assert(histograms.size == 4, histograms.mkString("\n\n"))
+    val widest = histograms.map { p =>
+      assert(p.contains("graft_tree_leaf") && p.contains("InMemoryTableScan"),
+        s"a level must walk the tree over the training cache:\n$p")
+      assert(!p.contains("Join"), s"a level must not join:\n$p")
+      "tree\\((\\d+) nodes\\)".r.findFirstMatchIn(p).get.group(1).toInt
+    }.max
+    assert(widest > 128, s"the widest level walked only $widest nodes")
   }
 
   test("every join-routed level plans a broadcast join and no shuffle") {
-    // The routing claim itself, pinned at the plan level: each routed
-    // level is prevBase ⋈ broadcast(routeDf) — a BroadcastHashJoin
-    // with NO hash-partitioning exchange and no sort-merge join. A
-    // regression that loses the broadcast hint (or grows the route
-    // table past a hint-less planner's threshold) would silently turn
-    // every tree level into a full shuffle of the training data.
-    // One benign degenerate is allowed: when the PREVIOUS frontier was
-    // the single root, __rid constant-folds to a literal, the equi
-    // condition folds away, and the one-row route table joins as a
-    // BroadcastNestedLoopJoin — per-row work identical to inlining
-    // that single route as an expression. With >1 route the equi key
-    // is real and the plan must be a BroadcastHashJoin.
-    val df = wideData
-    val schema = C45Schema.fromDataFrame(df, "cls")
-    sys.props("graft.fit.capturePlans") = "1"
-    try {
-      C45.capturedRoutePlans.clear()
-      C45.fit(df, schema, C45Params(routeJoinThreshold = 1))
-      val plans = C45.capturedRoutePlans.toList
-      assert(plans.size >= 2, s"expected >=2 join-routed levels, got ${plans.size}")
-      assert(plans.exists(_.startsWith("routes=") &&
-        !plans.forall(_.startsWith("routes=1\n"))),
-        "at least one level must carry a multi-route table")
-      plans.foreach { p =>
-        if (!p.startsWith("routes=1\n"))
-          assert(p.contains("BroadcastHashJoin"), s"routing must broadcast-hash-join:\n$p")
-        assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
-          !p.contains("Exchange hashpartitioning"),
-          s"routing must not shuffle:\n$p")
-      }
-    } finally {
-      sys.props.remove("graft.fit.capturePlans")
-      C45.capturedRoutePlans.clear()
+    // The fit's one remaining route join: under missingMode
+    // "fractional" the null-bearing rows ride a weighted RouteX chain,
+    // each level past the root joining the previous level's base
+    // against that level's routing edges. Each such level must be a
+    // BroadcastHashJoin with no shuffle of its own: the histogram
+    // aggregate's exchange is the level's only one. A lost broadcast
+    // hint would turn every level into a full shuffle of the chain;
+    // size-based broadcasting is off so only the hint can plan one.
+    // Adaptive execution is off so each plan prints once.
+    val confs = Map("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (m, plans) =
+      try fitPlans(C45.fit(edgeCorpus, edgeSchema,
+        C45Params(maxDepth = 4, missingMode = "fractional")))
+      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    assert(frontier(m, 1) > 1, "a join-routed level must carry a multi-route table")
+    val routed = plans.filter(_.contains("__prid"))
+    assert(routed.size >= 2, s"expected >=2 join-routed levels, got ${routed.size}")
+    routed.foreach { p =>
+      assert(p.contains("BroadcastHashJoin"), s"routing must broadcast-hash-join:\n$p")
+      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+        s"routing must not shuffle:\n$p")
+      assert("Exchange hashpartitioning".r.findAllMatchIn(p).size == 1,
+        s"only the histogram aggregate may shuffle:\n$p")
     }
   }
 
-  test("join-routed fit leaves no cached blocks behind") {
-    val df = wideData
-    val schema = C45Schema.fromDataFrame(df, "cls")
+  test("each level of a drop fit costs exactly one job") {
+    // one histogram job per level and nothing else: no route-table
+    // broadcast, no persisted routed base. Adaptive execution is off
+    // so an aggregate's shuffle map stage does not count as a job of
+    // its own.
+    val df = edgeCorpus
+    val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val jobs =
+      try (1 to 4).map { d =>
+        JobCount.of(sc)(C45.fit(df, edgeSchema,
+          C45Params(maxDepth = d, maxBins = 0, missingMode = "drop")))._2
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    // probe + class-label discovery + levels 0..d-1; level d derives
+    assert(jobs.head == 3, s"jobs at maxDepth 1..4: $jobs")
+    assert(jobs.sliding(2).forall { case Seq(d, d1) => d1 == d + 1 },
+      s"jobs at maxDepth 1..4: $jobs")
+  }
+
+  test("a wide fit leaves no cached blocks behind") {
+    val df = edgeCorpus
     val before = spark.sparkContext.getPersistentRDDs.size
-    C45.fit(df, schema, C45Params(routeJoinThreshold = 2))
+    C45.fit(df, edgeSchema, C45Params(maxDepth = 4, missingMode = "drop"))
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after <= before, s"persisted RDDs leaked: $before -> $after")
+  }
+}
+
+object DeepFrontierSpec {
+
+  /** The same fit routed by the flat first-match CASE WHEN
+    * ([[C45.flatRidColumn]]): the fused fold fit at k = 1, with every
+    * row stamped into the one fit's training side. */
+  def flatFit(df: DataFrame, schema: C45Schema, params: C45Params): C45Model = {
+    val stamped = df.withColumn("__fold", lit(-1)).persist()
+    try C45.fitFolds(stamped, "__fold", 1, schema, params).head
+    finally stamped.unpersist()
   }
 }

@@ -109,10 +109,11 @@ class FractionalMissingSpec extends AnyFunSuite {
     assert(frac.leaves.size > 4, "the tree must actually grow")
   }
 
-  /** Drop mode through the deep-frontier broadcast-join routing equals
-    * drop mode through the flat CASE WHEN — null rows fall out of both
-    * route forms identically (the join's null comparisons and the CASE
-    * WHEN's unmatched -1 are the same fate). */
+  /** Drop mode through the fit's wide-frontier router (formerly a
+    * broadcast rule-table join, now the tree walk) equals drop mode
+    * through the flat CASE WHEN — null rows fall out of both route
+    * forms identically (the walk's −1 on a null split value and the
+    * CASE WHEN's unmatched −1 are the same fate). */
   test("drop mode: join-routed and flat routing agree on null data") {
     val s = spark
     import s.implicits._
@@ -124,11 +125,10 @@ class FractionalMissingSpec extends AnyFunSuite {
     val schema = C45Schema(
       Seq(AttrMeta("a", isNumeric = false), AttrMeta("x", isNumeric = true)),
       "cls", Nil)
-    val flat = C45.fit(df, schema,
-      C45Params(missingMode = "drop", routeJoinThreshold = 10000))
-    val joined = C45.fit(df, schema,
-      C45Params(missingMode = "drop", routeJoinThreshold = 2))
-    assert(leafSet(flat) == leafSet(joined))
+    val params = C45Params(missingMode = "drop")
+    val walked = C45.fit(df, schema, params)
+    val flat = DeepFrontierSpec.flatFit(df, schema, params)
+    assert(leafSet(flat) == leafSet(walked))
   }
 
   /** Weight conservation at the fit's precision: every level's total

@@ -60,18 +60,16 @@ class GoldenFitSpec extends AnyFunSuite {
     assert(golden.forall { case (rule, _, _) => sql.contains(s"('$rule'") })
   }
 
-  // q_fit_deep: the join-routed fit (routeJoinThreshold=1 forces every
-  // level past the root through the broadcast rule-table join, with
-  // both a categorical child map and numeric boundary routes on the
-  // frontier). The hierarchical label is designed so the tree is
-  // IDENTICAL at every tier — each node's winning attribute scores a
+  // q_fit_deep: a multi-level fit whose frontier router (the tree walk
+  // over the tree grown so far) descends both categorical and numeric
+  // splits past the root. The hierarchical label is designed so the
+  // tree is IDENTICAL at every tier — each node's winning attribute scores a
   // gain ratio of exactly 1.0 while all rivals mix classes and land
   // ≥0.3 below, margins that depend only on count proportions (see
   // C45Queries.qFitDeep). These pins therefore guard BOTH determinism
   // of the routed path and that tier-invariance claim, at the gate's
   // scale, the bench's scale, and the replicated sf1 tier — the
-  // largest local stand-in for the 100 TB regime, where the
-  // incremental routing plan is the one a wide tree must take.
+  // largest local stand-in for the 100 TB regime.
   test("q_fit_deep reproduces the committed sf0.01 rule set exactly") {
     check("sf0.01", "golden/fit_deep_sf001_rules.txt",
       graft.queries.C45Queries.qFitDeep)

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The wide-model prediction path (the one-expression tree walk) must be
   * observationally identical to the flat first-match CASE WHEN on every
-  * proper tree — the [[DeepFrontierSpec]] contract, applied to
-  * `C45Model.transform` instead of the fit. */
+  * proper tree, unseen values and nulls mid-path included. */
 class PredictRouteSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -37,7 +36,7 @@ class PredictRouteSpec extends AnyFunSuite {
   test("routed predictions equal flat predictions on the 160-leaf model") {
     val df = wideCorpus
     val schema = C45Schema.fromDataFrame(df, "cls")
-    val m = C45.fit(df, schema, C45Params(routeJoinThreshold = 4))
+    val m = C45.fit(df, schema)
     assert(m.leaves.size == 160)
     // score a probe set that includes unseen categorical values and a
     // null mid-path — both must land on majority in BOTH modes
@@ -72,7 +71,7 @@ class PredictRouteSpec extends AnyFunSuite {
   test("routed predict plans one tree-walk expression: no join, no exchange") {
     val df = wideCorpus
     val schema = C45Schema.fromDataFrame(df, "cls")
-    val m = C45.fit(df, schema, C45Params(routeJoinThreshold = 4))
+    val m = C45.fit(df, schema)
     val input = wideParquet("predict_route")
     for (scored <- Seq(m.transform(input, "pred", routeThreshold = 1),
                        m.transformProba(input, "pred", routeThreshold = 1))) {
@@ -86,7 +85,7 @@ class PredictRouteSpec extends AnyFunSuite {
   test("routed predict adds no job to an aggregate over its output") {
     val df = wideCorpus
     val schema = C45Schema.fromDataFrame(df, "cls")
-    val m = C45.fit(df, schema, C45Params(routeJoinThreshold = 4))
+    val m = C45.fit(df, schema)
     assert(m.leaves.size > 64)
     val input = wideParquet("predict_jobs")
     val sc = spark.sparkContext
@@ -130,7 +129,7 @@ class PredictRouteSpec extends AnyFunSuite {
     val noisy = df.withColumn("cls",
       when(graft.functions.Hashing.hash60(concat_ws("|", col("a"), col("b"),
         col("x"))) % 7 === 0, lit("c0:1")).otherwise(col("cls")))
-    val m = C45Pruning.prune(C45.fit(noisy, schema, C45Params(routeJoinThreshold = 4)), noisy)
+    val m = C45Pruning.prune(C45.fit(noisy, schema), noisy)
     val routed = m.routedTransform(noisy, "pred")
     assert(routed.isDefined)
     val flat = m.transform(noisy, "pred", routeThreshold = 100000)
