@@ -15,6 +15,11 @@ print `"correct": true`; the script stops at the first that does not.
 For each end-to-end metric it prints the per-seed values of both sides,
 each side's median and quartiles, and how many pairs the change won
 (strictly better in the metric's direction). Raw outputs go to --out.
+
+With --traced-seed N it then makes one traced run (`--trace 1`) per side
+on seed N and prints, for every span that ran a job on either side,
+parent -> change for jobs, tasks, codegen_compiles, driver_s and
+exec_run_s. `--seeds none` skips the timed pairs.
 """
 import argparse
 import json
@@ -26,6 +31,8 @@ import tempfile
 
 
 def seeds_of(spec):
+    if spec == "none":
+        return []
     out = []
     for part in spec.split(","):
         lo, _, hi = part.partition("-")
@@ -33,9 +40,13 @@ def seeds_of(spec):
     return out
 
 
-def run(side_dir, bench, workload, seed, log):
+TRACED = ["jobs", "tasks", "codegen_compiles", "driver_s", "exec_run_s"]
+
+
+def run(side_dir, bench, workload, seed, log, trace=False):
     cmd = bench["command"] + ["--workload", workload, "--seed", str(seed),
-                              "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+                              "--seconds", str(bench["run_seconds"]),
+                              "--trace", "1" if trace else "0"]
     p = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE,
                        stderr=subprocess.STDOUT, text=True)
     with open(log, "w") as f:
@@ -66,7 +77,9 @@ def main():
     ap.add_argument("parent")
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", default="1-10", help="e.g. 1-10 or 1,3,5-7")
+    ap.add_argument("--seeds", default="1-10", help="e.g. 1-10, 1,3,5-7 or none")
+    ap.add_argument("--traced-seed", type=int,
+                    help="after the timed pairs, one traced run per side on this seed")
     ap.add_argument("--out", help="directory for raw run outputs (default: a new temp dir)")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
@@ -78,19 +91,26 @@ def main():
     os.makedirs(out, exist_ok=True)
     seeds = seeds_of(a.seeds)
 
+    if seeds:
+        timed_pairs(sides, bench, a.workload, seeds, out)
+    if a.traced_seed is not None:
+        traced_pair(sides, bench, a.workload, a.traced_seed, out)
+
+
+def timed_pairs(sides, bench, workload, seeds, out):
     for side, d in sides.items():
         print(f"warm-up (untimed) {side} ...", file=sys.stderr, flush=True)
-        run(d, bench, a.workload, seeds[0], os.path.join(out, f"{side}_warmup.out"))
+        run(d, bench, workload, seeds[0], os.path.join(out, f"{side}_warmup.out"))
 
     values = {"parent": {}, "change": {}}
     for i, seed in enumerate(seeds):
         order = ["parent", "change"] if seed % 2 == 1 else ["change", "parent"]
         for side in order:
-            values[side][seed] = run(sides[side], bench, a.workload, seed,
+            values[side][seed] = run(sides[side], bench, workload, seed,
                                      os.path.join(out, f"{side}_{seed}.out"))
         print(f"seed {seed} done ({i + 1}/{len(seeds)})", file=sys.stderr, flush=True)
 
-    print(f"workload {a.workload}, {len(seeds)} pairs, raw outputs in {out}")
+    print(f"workload {workload}, {len(seeds)} pairs, raw outputs in {out}")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         par = [values["parent"][s][name] for s in seeds]
@@ -107,6 +127,23 @@ def main():
         med_p, med_c = statistics.median(par), statistics.median(chg)
         rel = (med_c - med_p) / med_p if med_p else float("nan")
         print(f"  change wins {wins}/{len(seeds)} (ties {ties}); median change {rel:+.1%}")
+
+
+def traced_pair(sides, bench, workload, seed, out):
+    traced = {side: run(d, bench, workload, seed, os.path.join(out, f"{side}_traced_{seed}.out"),
+                        trace=True)
+              for side, d in sides.items()}
+    spans = sorted({k.rsplit(".", 1)[0] for side in traced.values() for k in side
+                    if k.endswith(".jobs")})
+    print(f"\ntraced seed {seed}, parent -> change")
+    print("| span | " + " | ".join(TRACED) + " |")
+    print("|---|" + "---|" * len(TRACED))
+    for span in spans:
+        if not (traced["parent"].get(f"{span}.jobs") or traced["change"].get(f"{span}.jobs")):
+            continue
+        cells = [" -> ".join(fmt(traced[side].get(f"{span}.{m}", 0.0))
+                             for side in ("parent", "change")) for m in TRACED]
+        print(f"| {span} | " + " | ".join(cells) + " |")
 
 
 if __name__ == "__main__":

@@ -6,7 +6,6 @@ import graft.model.{CatEq, NumGT, NumLE, Rule, Split}
 import graft.stats.InfoStats
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import scala.reflect.runtime.universe.TypeTag
 
@@ -29,11 +28,11 @@ import scala.reflect.runtime.universe.TypeTag
   * once their path splits on the null attribute — the closest a
   * no-NPE engine gets to the reference, which crashes). Corpora with
   * no nulls take a byte-identical code path either way. */
-/** Routing is not a knob: every level of the single-tree fit walks
-  * the tree grown so far inside one [[graft.functions.TreeLeaf]]
-  * expression over the training cache (see [[C45.frontierRidColumn]]).
-  * The walk's generated code does not depend on the tree, so all
-  * levels share one compiled class and no level joins or persists. */
+/** Routing is not a knob: every level of every fit walks the tree
+  * grown so far inside one [[graft.functions.TreeLeaf]] expression
+  * over the training cache (see [[LevelLoop]]). The walk's generated
+  * code does not depend on the tree, so all levels share one compiled
+  * class; only null rows that fan out ride a joined chain. */
 case class C45Params(minDataRatio: Double = InfoStats.DefaultMinDataRatio,
                      maxDepth: Int = 30,
                      maxBins: Int = 256,
@@ -54,7 +53,7 @@ case class C45Params(minDataRatio: Double = InfoStats.DefaultMinDataRatio,
   * null-free corpus the two coincide exactly (every weight is exactly
   * 10⁶). The scale is therefore mode-INdependent; absolute-mass
   * consumers can divide by 10⁶ for row units (MassScaleSpec pins
-  * this, incl. through the fused fold fit). `leafMass(i) ==
+  * this, incl. through the k-fold fit). `leafMass(i) ==
   * leafDist(i).values.sum` always; a maxDepth-exhausted leaf carries
   * mass 0 and an empty distribution. */
 case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
@@ -597,13 +596,10 @@ object C45Model {
   * previous level) routes its rows to child rids at this level. `kind`
   * = "num" (boundary + left/right child) or "cat" (value → child map).
   * [[C45.deriveFinalCounts]] derives a final level's class marginals
-  * from these; the fused fold fit and the forest broadcast-join them
-  * to route deep frontiers, where a closed parent has no row and its
-  * rows drop out of the inner join — the fate the flat CASE WHEN's
-  * `-1` gives them. (The single-tree fit routes through
-  * [[C45.frontierRidColumn]] instead.) Top-level, not nested in the
-  * object: a private nested case class defeats the encoder's
-  * generated code and forces interpreted fallback. */
+  * from these (the fit itself routes rows by walking the tree,
+  * [[C45.frontierRidColumn]]). Top-level, not nested in the object: a
+  * private nested case class defeats the encoder's generated code and
+  * forces interpreted fallback. */
 private[fit] case class Route(prid: Int, kind: String, aid: Int,
                               boundary: Double, lrid: Int, rrid: Int,
                               children: Map[String, Int])
@@ -614,10 +610,9 @@ private[fit] case class Route(prid: Int, kind: String, aid: Int,
   * equality on `catval`) and `frac` — the child's share of the
   * parent's KNOWN mass on the split attribute, which is the weight
   * multiplier a null-valued row receives for this child (Quinlan's
-  * C4.5 unknown-value distribution). The join fans each parent row out
-  * to its children and the weight expression keeps exactly one branch
-  * for a known value (full weight) or all branches for a null
-  * (fractional weights). */
+  * C4.5 unknown-value distribution). The [[LevelLoop]]'s fan-out
+  * chain joins on these: a known value keeps exactly one branch at
+  * full weight, a null keeps every branch at fractional weight. */
 private[fit] case class RouteX(prid: Int, kind: String, aid: Int,
                                boundary: Double, side: String,
                                catval: String, crid: Int, frac: Double)
@@ -638,9 +633,8 @@ object C45 {
 
   /** Driver-side statistics of one level, derived from one histogram
     * collect: the per-rule class marginals plus per-(rule, attr) split
-    * candidates. Extracted from the fit loop so the fused k-fold fit
-    * ([[fitFolds]]) replays the exact same math on its per-fold cell
-    * slices — bit-identical decisions by construction. */
+    * candidates. The [[LevelLoop]] replays the same math on each
+    * model's cell slice, so every fitter decides bit-identically. */
   private[fit] case class LevelStats(
       clsCounts: Map[Int, Map[String, Long]],
       cat: Map[(Int, Int), Cand],
@@ -659,11 +653,12 @@ object C45 {
       importanceAdd: Seq[(Int, Double)],
       globalMajority: Option[String])
 
-  /** The flat frontier-routing expression: first-match CASE WHEN over
-    * the open rules' root-to-leaf conjunctions, -1 = no rule (row
-    * leaves the fit). The fused fold fit, the forest and boost route
-    * with it; on a tree's open rules it assigns exactly the rid
-    * [[frontierRidColumn]] does. */
+  /** The flat rule-index expression: first-match CASE WHEN over the
+    * rules' root-to-leaf conjunctions, -1 = no rule. Narrow-model
+    * serving, pruning and rule simplification use it (first-match
+    * order is what overlapping simplified rules need); no fit loop
+    * does. On a tree's open rules it assigns exactly the rid
+    * [[frontierRidColumn]] does, which specs use as a second witness. */
   private[fit] def flatRidColumn(open: Vector[Rule], names: Seq[String]): Column = {
     val first = when(open.head.toPredicate(names), 0)
     open.zipWithIndex.tail.foldLeft(first) { case (acc, (r, i)) =>
@@ -728,47 +723,6 @@ object C45 {
     TreeLeaf.column(
       schema.attrs.map(a => col(a.name).cast(if (a.isNumeric) "double" else "string")),
       treeNodes(open.map(_.conditions), (aid, _) => aid))
-
-  /** The fractional route-weight expression over a RouteX join's
-    * output columns (__w, __frac, __kind, __aid, __boundary, __side,
-    * __catval, plus the row's live attribute values): full weight
-    * where the value selects this child, frac-rounded micros on EVERY
-    * child where the value is NULL, null (row leaves) otherwise. ONE
-    * builder shared by [[fit]]'s sequential fan-out and [[fitFolds]]'
-    * fused fold fan-out, so the rounding/branch semantics can never
-    * diverge between the two paths whose bit-identity CrossValSpec
-    * pins. Rounding to whole micros keeps downstream sums exact
-    * integers; a weight rounding to 0 is dropped by the caller. */
-  private[fit] def routeXWeight(routeNum: Seq[graft.meta.AttrMeta],
-      routeCat: Seq[graft.meta.AttrMeta], schema: C45Schema): Column = {
-    val fracW = floor(col("__w") * col("__frac") + lit(0.5)).cast("long")
-    val numBranch =
-      if (routeNum.isEmpty) None
-      else {
-        val numvCol = map(routeNum.flatMap(a =>
-          Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("double"))): _*)
-        val v = element_at(numvCol, col("__aid"))
-        Some(when(col("__kind") === "num",
-          when(col("__side") === "le" && v <= col("__boundary"), col("__w"))
-            .when(col("__side") === "gt" && v > col("__boundary"), col("__w"))
-            .when(v.isNull, fracW)))
-      }
-    val catBranchOf: Column => Column = prev => {
-      val catvCol = map(routeCat.flatMap(a =>
-        Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))): _*)
-      val cv = element_at(catvCol, col("__aid"))
-      val hit = when(cv === col("__catval"), col("__w"))
-        .when(cv.isNull, fracW)
-      if (prev == null) when(col("__kind") === "cat", hit)
-      else prev.when(col("__kind") === "cat", hit)
-    }
-    (numBranch, routeCat.isEmpty) match {
-      case (Some(nb), true)  => nb
-      case (Some(nb), false) => catBranchOf(nb)
-      case (None, false)     => catBranchOf(null)
-      case (None, true)      => lit(null)
-    }
-  }
 
   /** Driver-side split stats on the collected cells — the same
     * factored identities as InfoStats (A4-A7 and the O2 boundary
@@ -1006,25 +960,6 @@ object C45 {
           params: C45Params = C45Params()): C45Model =
     fitWithImportance(df, schema, params)._1
 
-  /** Persist WITHOUT columnar compression — for the fold, forest and
-    * boost level loops' transient routed bases, which live for exactly
-    * one level and are scanned exactly twice (this level's histogram,
-    * the next level's route join). Dictionary/RLE encoding buys memory at CPU cost on
-    * both the build and every scan; for a frame that short-lived it is
-    * a net loss (~25% of a join-routed level at 600k rows). Memory stays
-    * bounded: at most one level's base is cached at a time, and
-    * MEMORY_AND_DISK spills rather than evicts under pressure. The
-    * conf is snapshotted by the InMemoryRelation at persist time, so
-    * the temporary set/restore cannot leak to caller caches. */
-  private[fit] def persistUncompressed(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.inMemoryColumnarStorage.compressed"
-    val old = s.conf.get(key)
-    s.conf.set(key, "false")
-    try df.persist(StorageLevel.MEMORY_AND_DISK)
-    finally s.conf.set(key, old)
-  }
-
   /** Is the WHOLE input cache-backed — i.e. does the plan root reach an
     * InMemoryRelation through nothing but row-preserving wrappers
     * (Project/Filter/aliases)? An InMemoryRelation merely somewhere in
@@ -1052,702 +987,42 @@ object C45 {
     * histogram in a fixed order. Attributes never chosen are absent
     * from the map. */
   def fitWithImportance(df: DataFrame, schema: C45Schema,
-                        params: C45Params = C45Params()): (C45Model, Map[Int, Double]) = {
-    val names = schema.attrNames
-    val clsCol = schema.classCol
-    val catAttrs = schema.categoricalAttrs
-    val numAttrs = schema.numericAttrs
-    // callers that already persisted the input (cross-validation fits
-    // k models over one stamped cache; prune/simplify re-scan the
-    // training frame after the fit) keep THEIR cache: re-persisting
-    // the projection would materialize the ~same bytes again per fit.
-    // The level loop then reads through the caller's cache — the
-    // projection on top is free at scan time. Detection looks through
-    // plan wrappers (a filter-of-cached reports storageLevel NONE, but
-    // its resolved plan substitutes the InMemoryRelation).
-    val prePersisted = df.storageLevel != StorageLevel.NONE ||
-      inputCacheBacked(df)
-    val data = {
-      val proj = df.select((names :+ clsCol).map(col): _*)
-      // widen a narrow-source projection to the session parallelism
-      // before caching: the level loop re-scans this cache once per
-      // level, and a 1-3-partition cache (one small parquet file)
-      // would run every histogram on 1-3 cores (Widen scaladoc)
-      if (prePersisted) proj
-      else graft.operators.Widen.toParallelism(proj)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    try {
+                        params: C45Params = C45Params()): (C45Model, Map[Int, Double]) =
+    fitRouted(df, schema, params, frontierRidColumn)
 
-    // contract: class labels must be non-null (the reference NPEs on a
-    // null label, Main.java routing; here a null would silently vanish
-    // from the sentinel class-count slice while its row still feeds
-    // per-attribute split stats — an inconsistent n). Fail loudly up
-    // front instead — one limit-1 job against the just-persisted data.
-    // ALL up-front probes in ONE agg job over the just-persisted
-    // projection (the common null-free corpus previously paid two full
-    // scans: a filter().isEmpty probe only short-circuits when nulls
-    // EXIST): the class-label check, whether null attribute values
-    // occur at all — the fractional-weight machinery engages only when
-    // they do, so a null-free corpus takes the original count-based
-    // path byte-for-byte (identical float arithmetic, identical
-    // goldens) and pays nothing for the capability — and the binning
-    // gate's per-numeric-attr approx-distinct sketches (previously a
-    // second full scan; the same fusion fitFolds already does), so
-    // the cache-building scan carries everything the level loop needs
-    // short of the approxQuantile edges themselves.
-    val dcAggs =
-      if (params.maxBins <= 0) Seq.empty
-      else numAttrs.map(a =>
-        approx_count_distinct(col(a.name)).as(s"__dc_${a.name}"))
-    val probeAggs = Seq(
-      count(when(col(clsCol).isNull, 1)).as("cls"),
-      count(when(names.map(col(_).isNull).reduceOption(_ || _)
-        .getOrElse(lit(false)), 1)).as("attr")) ++ dcAggs
-    val nullProbe = data.agg(probeAggs.head, probeAggs.tail: _*).head()
-    require(nullProbe.getLong(0) == 0L,
-      s"C45.fit requires non-null class labels: column '$clsCol' contains NULLs")
-    val fractional = params.missingMode == "fractional" && names.nonEmpty &&
-      nullProbe.getLong(1) > 0L
-    // the level loop below is always UNWEIGHTED (fractional mode
-    // delegates just past the label discovery): histogram cells are
-    // plain row counts and c/unit == c.toDouble
-    val unit = 1.0
-
-    // closed class-label set: declared, else discovered once (the
-    // reference requires the declared set, Main.java:154-158)
-    val classLabels: Seq[String] =
-      if (schema.classLabels.nonEmpty) schema.classLabels
-      else data.select(col(clsCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-
-    // FRACTIONAL mode delegates to the fused fold machinery at k = 1
-    // (fold stamp -1 → every row trains the single fit): decisions are
-    // bit-identical by the shared-math construction CrossValSpec pins
-    // (fitFolds ≡ sequential fractional fits), and the weighted RouteX
-    // chain then carries ONLY null-bearing rows (fitFolds' CLEAN/DIRTY
-    // split) — the sequential all-rows fan-out this replaces persisted
-    // and re-joined rows×1 per join-routed level regardless of the
-    // null rate, where the fused path persists dirty×1 and routes the
-    // null-free majority through the flat rid CASE over this cache.
-    // The probe's approx-distinct sketches ride along so the binning
-    // gate never re-scans.
-    if (fractional) {
-      val imp = Array.fill(1)(
-        scala.collection.mutable.Map.empty[Int, Double].withDefaultValue(0.0))
-      val dc =
-        if (params.maxBins <= 0 || numAttrs.isEmpty) None
-        else Some(numAttrs.map(a =>
-          (0, a.name) -> nullProbe.getAs[Long](s"__dc_${a.name}")).toMap)
-      val models = fitFolds(data.withColumn("__fold", lit(-1)), "__fold", 1,
-        schema.copy(classLabels = classLabels), params, dc,
-        fractional = true, importanceOut = imp)
-      return (models.head, imp(0).toMap)
+  /** [[fitWithImportance]] with the frontier router as an argument:
+    * specs route through [[flatRidColumn]] to compare the two. One
+    * model of the [[LevelLoop]]: multiplicity 1, rows at mass 1, or
+    * micros that fan out when the corpus has null attribute values and
+    * `missingMode` is "fractional". A caller that already cached `df`
+    * keeps its cache ([[LevelLoop.withTrainingFrame]]). */
+  private[fit] def fitRouted(df: DataFrame, schema: C45Schema, params: C45Params,
+                             router: (Vector[Rule], C45Schema) => Column)
+      : (C45Model, Map[Int, Double]) =
+    LevelLoop.withTrainingFrame(df, (schema.attrNames :+ schema.classCol).map(col)) { data =>
+      val probe = LevelLoop.probe(data, schema, params, "C45.fit")
+      LevelLoop.grow(data, schema, params, LevelLoop.Models("fit", probe, _ => lit(1L),
+        probe.mass, micros = probe.fractional), router).head
     }
 
-    // explode(map(aid -> value)) = the F2 candidate emission, one row
-    // per (record, candidate attr), typed per attribute kind
-    def attrPairs(attrs: Seq[graft.meta.AttrMeta], castTo: String): Seq[Column] =
-      attrs.flatMap(a =>
-        Seq(lit(schema.attrIndex(a.name)), col(a.name).cast(castTo)))
-
-    // quantile-bin high-cardinality numeric attributes ONCE (maxBins):
-    // the probe's approx-distinct sketches decide which attrs need it,
-    // one approxQuantile job produces the edges; values then snap to
-    // the smallest edge >= v via a codegen'd binary search, which
-    // preserves split semantics exactly (snap(v) <= e ⟺ v <= e for
-    // any edge e)
-    val binEdges: Map[Int, Array[Double]] =
-      if (params.maxBins <= 0 || numAttrs.isEmpty) Map.empty
-      else {
-        val need = numAttrs.filter(a =>
-          nullProbe.getAs[Long](s"__dc_${a.name}") > params.maxBins)
-        if (need.isEmpty) Map.empty
-        else {
-          val probs = (1 until params.maxBins).map(_.toDouble / params.maxBins).toArray
-          val qs = data.stat.approxQuantile(need.map(_.name).toArray, probs, 1e-4)
-          need.map(_.name).zip(qs).collect {
-            case (nm, edges) if edges.nonEmpty =>
-              schema.attrIndex(nm) -> edges.distinct.sorted
-          }.toMap
-        }
-      }
-    def numValCol(a: graft.meta.AttrMeta): Column = {
-      val raw = col(a.name).cast("double")
-      binEdges.get(schema.attrIndex(a.name))
-        .map(e => graft.functions.SortedCeilSnap.snapTo(e, raw))
-        .getOrElse(raw)
-    }
-    var open = Vector(Rule.root)
-    var closed = Vector.empty[Rule]
-    // per-leaf training mass in exact micros, aligned with `closed` —
-    // the branch-share denominators transformFractional scores with
-    var closedMass = Vector.empty[Long]
-    // per-leaf class distribution in exact micros, aligned with
-    // `closed` — transformProba's per-leaf probability numerators
-    var closedDist = Vector.empty[Map[String, Long]]
-    val attrImportance = scala.collection.mutable.Map.empty[Int, Double]
-      .withDefaultValue(0.0)
-    var globalMajority: Option[String] = None
-    var level = 0
-    // per-level wall-clock diagnostics: -Dgraft.fit.profile=1 (or env
-    // GRAFT_FIT_PROFILE=1 through a forked runner, as fitFolds accepts)
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-    // the previous level's split routes and collected cells: at
-    // level == maxDepth every open rule closes on its class marginal
-    // alone, which these derive exactly (deriveFinalCounts) — the final
-    // histogram job is skipped outright
-    var pendingRoutes: Seq[Route] = Nil
-    var prevCells: Array[(Int, Int, String, String, Long)] = null
-
-    while (open.nonEmpty && level <= params.maxDepth) {
-      if (level == params.maxDepth && level > 0 && prevCells != null) {
-        // final level: every open rule closes on its class marginal,
-        // derived exactly from the parent's cells — no histogram job
-        val st = LevelStats(deriveFinalCounts(prevCells, pendingRoutes),
-          Map.empty, Map.empty, Map.empty)
-        if (profile)
-          println(f"[fit] level=$level rules=${open.size} derived (no job)")
-        val d = decideLevel(open, level, st, schema, params, classLabels,
-          fractional = false, unit, globalMajority)
-        d.closedAdd.foreach { case (r, m, dd) =>
-          closed :+= r; closedMass :+= m; closedDist :+= dd }
-        globalMajority = d.globalMajority
-        open = d.nextOpen
-        level += 1
-      } else {
-      // Routing each row to its (disjoint) open rule: one tree walk
-      // over the tree grown so far (frontierRidColumn), straight over
-      // the training cache. The walk's generated code is the same at
-      // every level — only its node arrays change — so the level's
-      // stage compiles once per fit, not once per frontier, and no
-      // level joins, persists or re-reads a previous level's output:
-      // the Spark analogue of the reference's distributed-cache rule
-      // queue (Main.java:189) is a reference object in the expression.
-      // (fractional mode never reaches this loop — it delegated to the
-      // fused fold machinery above, whose weighted RouteX chain is the
-      // one-row-per-(row, child) fan-out a flat rid cannot express)
-      val base = data.withColumn("__rid", frontierRidColumn(open, schema))
-        .filter(col("__rid") >= 0)
-        .withColumn("__cls", col(clsCol).cast("string"))
-      // attributes used on EVERY open path are dead: the once-per-path
-      // rule bars them as candidates for every open rule, so they
-      // leave the histogram explode — the frontier's shared prefix
-      // grows with depth, so deep trees shed explode volume as they
-      // grow
-      val deadAids: Set[Int] = open.map(_.usedAttrs).reduce(_ intersect _)
-      val liveCatAttrs = catAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-      val liveNumAttrs = numAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-
-      // ONE scan of the training cache produces EVERY per-level statistic
-      // (the histogram-aggregation shape — executors build bounded
-      // contingency histograms, the driver picks the splits; the
-      // reference instead streams every raw (rule,attr,val,cls) PAIR
-      // through one reducer, MyReducer.java:36-206). A single explode
-      // carries a class sentinel (aid = -1), the categorical values as
-      // strings, and the (quantile-snapped) numeric values cast to
-      // string — doubles round-trip exactly through Double.toString —
-      // and ONE partially-aggregated groupBy collapses the data to
-      // (rule, attr, value, class) cells. Cell cardinality is bounded
-      // by #rules × #attrs × #values × #classes with #values ≤ maxBins
-      // by the binning contract — O(model), never O(data) — so the
-      // entropy / gain-ratio / boundary-scan math runs driver-side in
-      // deterministic sorted order. This replaced three concurrent
-      // Spark stat jobs (categorical stats, numeric window scan, class
-      // counts) and their persisted intermediate: one job, one
-      // collect, one scan of data per level (~2.5× faster per level at
-      // 600k rows; identical decisions — golden-pinned).
-      // The val-null filter drops null ATTRIBUTE values (unsupported
-      // in fit, as in the reference which would NPE on them; such rows
-      // still count for every other attribute); the class label is
-      // never null (checked up front), so the aid = -1 slice is the
-      // exact (rid, cls) marginal and majority/pure checks are unskewed.
-      // at the final level only the class marginal (aid = -1) is ever
-      // consumed — every open rule closes on it (decideLevel's depth
-      // gate), so the attribute slices would be exploded, shuffled and
-      // thrown away (reached only when the elision above could not
-      // fire; kept exact either way)
-      val allPairs: Seq[Column] =
-        if (level == params.maxDepth) Seq(lit(-1), col("__cls"))
-        else Seq(lit(-1), col("__cls")) ++ attrPairs(liveCatAttrs, "string") ++
-          liveNumAttrs.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-            numValCol(a).cast("string")))
-      // cell counts are plain row counts — an order-independent
-      // integer agg
-      val tLevel0 = System.nanoTime()
-      val cells: Array[(Int, Int, String, String, Long)] = {
-        val b0 = base.select(col("__rid"), col("__cls").as("cls"),
-          lit(1L).as("__w"),
-          explode(map(allPairs: _*)).as(Seq("aid", "val")))
-        b0.filter(col("val").isNotNull)
-          .groupBy("__rid", "aid", "val", "cls")
-          .agg(sum(col("__w")).as("cnt"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3),
-            r.getLong(4)))
-      }
-
-      val st = levelStats(cells, schema, classLabels, fractional = false,
-        unit, params)
-      if (profile) {
-        val t = (System.nanoTime() - tLevel0) / 1e9
-        println(f"[fit] level=$level rules=${open.size} cells=${cells.length} stats=$t%.2fs")
-      }
-      val d = decideLevel(open, level, st, schema, params, classLabels,
-        fractional = false, unit, globalMajority)
-      d.closedAdd.foreach { case (r, m, dd) =>
-        closed :+= r; closedMass :+= m; closedDist :+= dd }
-      d.importanceAdd.foreach { case (a, v) => attrImportance(a) += v }
-      globalMajority = d.globalMajority
-      open = d.nextOpen
-      pendingRoutes = d.routes
-      prevCells = cells
-      level += 1
-      }
-    }
-    // maxDepth exhaustion: close any survivors as majority leaves (#4)
-    open.foreach { r =>
-      closed :+= r.closed(globalMajority.getOrElse(classLabels.head))
-      closedMass :+= 0L
-      closedDist :+= Map.empty
-    }
-    (C45Model(schema.copy(classLabels = classLabels), closed,
-      globalMajority.getOrElse(classLabels.head), closedMass, closedDist),
-      attrImportance.toMap)
-    // the fit is fully eager: failed level jobs must not strand the
-    // training projection's cached blocks
-    } finally { if (!prePersisted) data.unpersist() }
-  }
-
-  /** Fused k-fold fitting: train k C4.5 models — model f on the rows
-    * whose `foldCol` != f — with ONE histogram job per tree level
-    * shared by ALL k fits, instead of k independent fits each scanning
-    * the base once per level (the round-11 flagged cost: cross-
-    * validation was k × fit = 3k+ scans of base for a depth-d tree).
+  /** k-fold fitting: model f trains on the rows of `stamped` whose
+    * `foldCol` is not f, all k grown by ONE histogram job per level
+    * ([[LevelLoop]], multiplicity `foldCol ≠ f`). Each model is
+    * bit-identical to [[fit]] on its training rows (CrossValSpec), and
+    * records masses on the same 10⁶ scale whatever the mode
+    * (MassScaleSpec).
     *
-    * Mechanics: every row fans out to the (k-1) fits it trains via an
-    * `explode(map(fit → rid))` whose per-fit rid expression is exactly
-    * [[flatRidColumn]] over that fit's frontier (held-out rows get -1
-    * and drop). A second explode emits the per-fit (attr, value) pairs
-    * — per-fit maps selected by a CASE on the fit tag, so each fit
-    * sees its own live attributes and its own quantile-bin snapping —
-    * and one partially-aggregated `groupBy(fit, rid, aid, val, cls)`
-    * collapses everything to O(k × model) cells in a single job. The
-    * driver then replays [[levelStats]] + [[decideLevel]] per fit on
-    * its slice: bit-identical decisions to k independent fits, because
-    * the cell counts and the driver math are identical by construction.
-    * Shuffle volume is pre-aggregated counts (k× a single fit's, the
-    * same total the k separate jobs shuffled); what's saved is (k-1)
-    * scans of base per level plus per-fit job overhead — at 100 TB the
-    * dominant cost. Total explode volume is unchanged vs sequential:
-    * rows × (k-1) × attrs either way.
-    *
-    * Frontiers are routed FLAT at any width here (no join-routing) in
-    * the unweighted path: rid assignment still matches the sequential
-    * fit's tree walk exactly (both give an open rule its position in
-    * the frontier — see [[frontierRidColumn]]), so results are
-    * identical; only the expression size grows with very deep
-    * frontiers.
-    *
-    * With `fractional = true` (null attribute values under
-    * missing-mode "fractional"), a flat rid cannot express membership
-    * — a null-valued row belongs to EVERY child of its rule's split
-    * with fractional weight — so the fused fit instead maintains ONE
-    * `__fit`-tagged weighted routed base across levels, exactly the
-    * sequential fit's RouteX broadcast-join fan-out but with the fit
-    * tag riding in the join key: level 0 fans `stamped` out to the
-    * (k-1) fits each row trains (the same explode volume the flat
-    * path pays), each later level joins the previous base against the
-    * union of all fits' routing edges, and the per-level histogram is
-    * one weighted `groupBy(fit, rid, aid, val, cls)` over that base.
-    * Decisions stay bit-identical to k sequential fractional fits: the
-    * weight expression ([[routeXWeight]], shared with [[fit]]), micro
-    * rounding, and driver math are shared code, and integer weight
-    * sums are order-independent under any partitioning. This replaces
-    * the former fallback of k sequential fits (k scans of base per
-    * level) for null-bearing corpora. Peak cache is capped by a
-    * CLEAN/DIRTY split (round 17): only rows with a null attribute
-    * value can fan out, so only they ride the weighted chain — each
-    * join-routed level persists dirty×(k-1) rows, not rows×(k-1),
-    * while the null-free majority re-routes per fit through the flat
-    * rid CASE over the caller's rows×1 cache (one union, still ONE
-    * aggregation job per level; a clean row's chain contribution was
-    * exactly W1 at its pinned flat rid, so cells are bit-identical).
-    * At a typical few-percent null rate the persisted state is ≈
-    * rows×1; a fully-null corpus degrades to the old rows×(k-1)
-    * shape, MEMORY_AND_DISK, one level at a time.
-    *
-    * Mass-scale caveat (round-16 advice): the fractional decision is
-    * GLOBAL — if any fold carries null attribute values, all k fits
-    * run micro-weighted. This does NOT change the recorded
-    * `leafMass`/`leafDist` scale for a fit whose training complement
-    * happens to be null-free: rows without nulls never fan out, so
-    * every weight is exactly 10⁶ and the recorded micros equal a
-    * direct `C45.fit` on that subset bit-for-bit (drop-mode fits
-    * record counts × 10⁶ — same scale; MassScaleSpec pins all three
-    * corners).
-    *
-    * Contract: `stamped` is persisted by the caller and contains
-    * `foldCol` (int in [0, k)) + the schema's attributes + class
-    * column; class labels are non-null (caller-probed).
-    * `approxDistinct` optionally carries the per-(fit, numeric attr)
-    * approx-distinct counts when the caller already aggregated them
-    * (crossValidate folds them into its null-probe scan); absent, one
-    * batched gating job runs here. */
+    * Contract: `stamped` is persisted by the caller and holds `foldCol`
+    * (int in [0, k)), the schema's attributes and the class column;
+    * `fractional` says whether null rows fan out. */
   private[fit] def fitFolds(stamped: DataFrame, foldCol: String, k: Int,
-      schema: C45Schema, params: C45Params,
-      approxDistinct: Option[Map[(Int, String), Long]] = None,
-      fractional: Boolean = false,
-      importanceOut: Array[scala.collection.mutable.Map[Int, Double]] = null)
-      : Seq[C45Model] = {
-    val names = schema.attrNames
-    val clsCol = schema.classCol
-    val catAttrs = schema.categoricalAttrs
-    val numAttrs = schema.numericAttrs
-    val fits = 0 until k
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
+      schema: C45Schema, params: C45Params, fractional: Boolean = false): Seq[C45Model] =
+    growFolds(stamped, foldCol, schema, params, LevelLoop.probe(stamped, schema, params,
+      "C45.fitFolds", Some((foldCol, k))).copy(fractional = fractional))
 
-    // per-fit class-label sets: declared, else discovered in ONE job
-    // (label → set of folds containing it; fit f trains on folds != f)
-    val classLabelsByFit: Seq[Seq[String]] =
-      if (schema.classLabels.nonEmpty) fits.map(_ => schema.classLabels)
-      else {
-        val rows = stamped.groupBy(col(clsCol).cast("string").as("c"))
-          .agg(collect_set(col(foldCol)).as("fs")).collect()
-        val pairs = rows.map(r => r.getString(0) -> r.getSeq[Int](1).toSet)
-        fits.map(f => pairs.collect {
-          case (c, fs) if fs.exists(_ != f) => c }.sorted.toSeq)
-      }
-
-    // per-fit quantile binning, mirroring fit's maxBins contract: ONE
-    // batched approx-distinct job gates (HLL sketches are set-valued,
-    // so the when()-filtered agg equals the sequential filtered scan),
-    // then per-fit approxQuantile through the SAME API the sequential
-    // fit uses — identical edges, identical snapping
-    val tBins0 = System.nanoTime()
-    val binEdgesByFit: Map[Int, Map[Int, Array[Double]]] =
-      if (params.maxBins <= 0 || numAttrs.isEmpty)
-        fits.map(_ -> Map.empty[Int, Array[Double]]).toMap
-      else {
-        val dc: Map[(Int, String), Long] = approxDistinct.getOrElse {
-          val aggs = for { f <- fits; a <- numAttrs } yield
-            approx_count_distinct(when(col(foldCol) =!= f, col(a.name)))
-              .as(s"dc_${f}_${a.name}")
-          val dcRow = stamped.agg(aggs.head, aggs.tail: _*).collect()(0)
-          (for { f <- fits; a <- numAttrs } yield
-            (f, a.name) -> dcRow.getAs[Long](s"dc_${f}_${a.name}")).toMap
-        }
-        fits.map { f =>
-          val need = numAttrs.filter(a => dc((f, a.name)) > params.maxBins)
-          val edges =
-            if (need.isEmpty) Map.empty[Int, Array[Double]]
-            else {
-              val probs = (1 until params.maxBins)
-                .map(_.toDouble / params.maxBins).toArray
-              val qs = stamped.filter(col(foldCol) =!= f)
-                .stat.approxQuantile(need.map(_.name).toArray, probs, 1e-4)
-              need.map(_.name).zip(qs).collect {
-                case (nm, es) if es.nonEmpty =>
-                  schema.attrIndex(nm) -> es.distinct.sorted
-              }.toMap
-            }
-          f -> edges
-        }.toMap
-      }
-    if (profile && params.maxBins > 0 && numAttrs.nonEmpty)
-      println(f"[fitFolds] binning (gate + per-fit approxQuantile): " +
-        f"${(System.nanoTime() - tBins0) / 1e9}%.2fs")
-
-    def numValColF(f: Int)(a: graft.meta.AttrMeta): Column = {
-      val raw = col(a.name).cast("double")
-      binEdgesByFit(f).get(schema.attrIndex(a.name))
-        .map(e => graft.functions.SortedCeilSnap.snapTo(e, raw))
-        .getOrElse(raw)
-    }
-
-    final class FState {
-      var open: Vector[Rule] = Vector(Rule.root)
-      var closed: Vector[Rule] = Vector.empty
-      var closedMass: Vector[Long] = Vector.empty
-      var closedDist: Vector[Map[String, Long]] = Vector.empty
-      var globalMajority: Option[String] = None
-      var routesX: Seq[RouteX] = Nil
-      // previous level's routes + cells: lets the final level close on
-      // derived class marginals with no histogram job (drop mode only
-      // — see deriveFinalCounts)
-      var routes: Seq[Route] = Nil
-      var cells: Array[(Int, Int, String, String, Long)] = null
-    }
-    val state = Array.fill(k)(new FState)
-    val W1 = 1000000L
-    val unit = if (fractional) 1e6 else 1.0
-    var level = 0
-    // fractional routing state, mirroring fit's: the previous level's
-    // fused routed base and the persisted handles to sweep on failure
-    var prevBase: DataFrame = null
-    var prevPersisted: Option[DataFrame] = None
-    val routedPersists = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-    while (state.exists(_.open.nonEmpty) && level <= params.maxDepth) {
-      val tLevel0 = System.nanoTime()
-      val active = fits.filter(f => state(f).open.nonEmpty)
-      if (!fractional && level == params.maxDepth && level > 0 &&
-          active.forall(f => state(f).cells != null)) {
-        // final level, drop mode: every open rule closes on its class
-        // marginal, derived exactly from the parent's cells — the
-        // widest histogram job of the fused fit is skipped outright
-        active.foreach { f =>
-          val s = state(f)
-          val st = LevelStats(deriveFinalCounts(s.cells, s.routes),
-            Map.empty, Map.empty, Map.empty)
-          val d = decideLevel(s.open, level, st, schema, params,
-            classLabelsByFit(f), fractional, unit, s.globalMajority)
-          d.closedAdd.foreach { case (r, m, dd) =>
-            s.closed :+= r; s.closedMass :+= m; s.closedDist :+= dd }
-          s.globalMajority = d.globalMajority
-          s.open = d.nextOpen
-        }
-        if (profile)
-          println(f"[fitFolds] level=$level fits=${active.size} derived (no job)")
-        level += 1
-      } else {
-      val attrMaps: Seq[(Int, Column)] = active.map { f =>
-        val deadAids = state(f).open.map(_.usedAttrs).reduce(_ intersect _)
-        val liveCat = catAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-        val liveNum = numAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-        // final level: only the class marginal is consumed (every open
-        // rule closes on depth) — skip the attribute slices outright
-        val pairs: Seq[Column] =
-          if (level == params.maxDepth) Seq(lit(-1), col("__cls"))
-          else Seq(lit(-1), col("__cls")) ++
-            liveCat.flatMap(a =>
-              Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))) ++
-            liveNum.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-              numValColF(f)(a).cast("string")))
-        (f, map(pairs: _*))
-      }
-      val mapByFit: Column =
-        if (attrMaps.size == 1) attrMaps.head._2
-        else attrMaps.tail.foldLeft(
-          when(col("__fit") === attrMaps.head._1, attrMaps.head._2)) {
-          case (acc, (f, m)) => acc.when(col("__fit") === f, m)
-        }
-      def groupRows(rows: Array[org.apache.spark.sql.Row]):
-          Map[Int, Array[(Int, Int, String, String, Long)]] =
-        rows.groupBy(_.getInt(0)).view.mapValues(_.map(r =>
-          (r.getInt(1), r.getInt(2), r.getString(3), r.getString(4),
-            r.getLong(5)))).toMap
-      // only rows carrying a null attribute value can ever FAN OUT —
-      // a null-free row holds its full weight down exactly one path of
-      // every fit (each per-condition factor is 0 or 1). So the
-      // weighted RouteX chain carries ONLY the null-bearing ("dirty")
-      // rows; the null-free majority routes per fit with the same flat
-      // rid CASE the unweighted path uses, at constant weight W1, read
-      // straight through the caller's rows×1 cache each level. This
-      // caps the chain's persisted state at dirty×(k-1) instead of
-      // rows×(k-1) per join-routed level (the round-16 peak-cache
-      // flag) while keeping cells bit-identical: in the full fan-out a
-      // clean row contributed exactly W1 at its flat rid (the routed
-      // crid is pinned equal to the flat rid by construction).
-      lazy val dirtyCol: Column = names.map(col(_).isNull)
-        .reduceOption(_ || _).getOrElse(lit(false))
-      // the level-0 fan-out base of the DIRTY rows, shared below: one
-      // row per (dirty row, fit) edge for the (k-1) fits each row
-      // trains, at full weight and root rid. Lazy — only the paths
-      // that scan or chain off it pay.
-      def rootFanout: DataFrame = stamped
-        .filter(dirtyCol)
-        .withColumn("__cls", col(clsCol).cast("string"))
-        .withColumn("__fit",
-          explode(array(fits.map(f => lit(f)): _*)))
-        .filter(col(foldCol) =!= col("__fit"))
-        .withColumn("__rid", flatRidColumn(Vector(Rule.root), names))
-        .filter(col("__rid") >= 0)
-        .withColumn("__w", lit(W1))
-        .select(col("__fit") +: col("__rid") +: col("__w") +:
-          col("__cls") +: names.map(col): _*)
-      // level-0 shortcut shared by both paths: at the root every fit
-      // holds rid 0 at full weight, and with no per-fit quantile
-      // binning every fit's attr map is identical — so each fit's
-      // cells are a driver-side composition of ONE per-fold marginal
-      // (cells(f) = Σ over folds ≠ f of byFold(fold, ·)) and the
-      // (k-1)-way row fan-out never runs for the histogram: the
-      // corpus-sized level aggregates k× less exploded volume. Exact
-      // long sums — bit-identical cells to the fan-out aggregation.
-      val marginal0 = level == 0 && binEdgesByFit.values.forall(_.isEmpty)
-      // one description per LEVEL, set for every job the level's
-      // histogram launches (the collect plus any broadcast builds it
-      // triggers): makes the Spark UI read "which level is running",
-      // and gives CrossValSpec a stable one-query-per-level witness
-      // (distinct descriptions == levels) instead of stage-name
-      // matching
-      val sc = stamped.sparkSession.sparkContext
-      val prevDesc = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft.fitFolds level=$level k=$k histogram")
-      val cellsByFit: Map[Int, Array[(Int, Int, String, String, Long)]] =
-        try {
-        if (marginal0) {
-          // level 1's route join (fractional) chains off the DIRTY
-          // fan-out — expose it lazily; nothing materializes it this
-          // level (clean rows re-enter per level via the flat rid side)
-          if (fractional) prevBase = rootFanout
-          val pairs: Seq[Column] = Seq(lit(-1), col("__cls")) ++
-            catAttrs.flatMap(a =>
-              Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))) ++
-            numAttrs.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-              col(a.name).cast("double").cast("string")))
-          val byFold = stamped
-            .withColumn("__cls", col(clsCol).cast("string"))
-            .select(col(foldCol).as("__fold"), col("__cls").as("cls"),
-              explode(map(pairs: _*)).as(Seq("aid", "val")))
-            .filter(col("val").isNotNull)
-            .groupBy("__fold", "aid", "val", "cls")
-            .agg(sum(lit(1L)).as("cnt"))
-            .collect()
-            .map(r => (r.getInt(0), r.getInt(1), r.getString(2),
-              r.getString(3), r.getLong(4)))
-          val w0 = if (fractional) W1 else 1L
-          active.map { f =>
-            f -> byFold.iterator.filter(_._1 != f).toSeq
-              .groupBy(t => (t._2, t._3, t._4))
-              .map { case ((aid, v, c), g) =>
-                (0, aid, v, c, g.map(_._5).sum * w0) }
-              .toArray
-          }.toMap
-        } else if (!fractional) {
-          val ridPairs: Seq[Column] = active.flatMap { f =>
-            Seq(lit(f), when(col(foldCol) === f, lit(-1))
-              .otherwise(flatRidColumn(state(f).open, names)))
-          }
-          groupRows(stamped
-            .withColumn("__cls", col(clsCol).cast("string"))
-            .select(col("__cls") +: names.map(col) :+
-              explode(map(ridPairs: _*)).as(Seq("__fit", "__rid")): _*)
-            .filter(col("__rid") >= 0)
-            .select(col("__fit"), col("__rid"), col("__cls").as("cls"),
-              explode(mapByFit).as(Seq("aid", "val")))
-            .filter(col("val").isNotNull)
-            .groupBy("__fit", "__rid", "aid", "val", "cls")
-            .agg(sum(lit(1L)).as("cnt"))
-            .collect())
-        } else {
-          val spark = stamped.sparkSession
-          import spark.implicits._
-          val base =
-            if (level == 0) rootFanout
-            else {
-              // one broadcast join against the union of every active
-              // fit's routing edges — the sequential fit's fractional
-              // fan-out with the fit tag riding in the join key. A fit
-              // that finished contributes no edges, so its rows drop
-              // out of the base here.
-              val xr = active.flatMap(f => state(f).routesX.map(x =>
-                (f, x.prid, x.kind, x.aid, x.boundary, x.side, x.catval,
-                  x.crid, x.frac)))
-              val routeDf = xr.toDF("__pfit", "__prid", "__kind", "__aid",
-                "__boundary", "__side", "__catval", "__crid", "__frac")
-              val routeAids = xr.map(_._4).toSet
-              val routeNum = numAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-              val routeCat = catAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-              // attrs used on every open path of EVERY active fit leave
-              // the fused cache (each fit's histogram map already skips
-              // its own dead attrs)
-              val deadAll = active.map(f =>
-                state(f).open.map(_.usedAttrs).reduce(_ intersect _))
-                .reduce(_ intersect _)
-              prevBase
-                .join(broadcast(routeDf),
-                  prevBase("__fit") === routeDf("__pfit") &&
-                    prevBase("__rid") === routeDf("__prid"))
-                .withColumn("__wN", routeXWeight(routeNum, routeCat, schema))
-                .filter(col("__wN").isNotNull && col("__wN") > 0)
-                .drop("__rid", "__w", "__pfit", "__prid", "__kind", "__aid",
-                  "__boundary", "__side", "__catval", "__frac")
-                .withColumnRenamed("__crid", "__rid")
-                .withColumnRenamed("__wN", "__w")
-                .drop(names.filter(n => deadAll(schema.attrIndex(n))): _*)
-            }
-          // level 0 reads through the caller's stamped cache (the fan-
-          // out recompute is one explode over that cache — same policy
-          // as fit's walk-routed levels); join-routed levels persist
-          // for the NEXT level's route join, freed once it materializes
-          val based =
-            if (level >= 1 && level < params.maxDepth) {
-              val p = persistUncompressed(base); routedPersists += p; p
-            } else base
-          // dirty side: the weighted chain's exploded histogram rows;
-          // clean side: flat per-fit rids over the null-free slice of
-          // the caller's cache at weight W1. One union, ONE
-          // aggregation job per level — exact long sums, so the merge
-          // is order-independent and bit-identical to the all-rows
-          // fan-out this replaces.
-          val dirtySide = based
-            .select(col("__fit"), col("__rid"), col("__cls").as("cls"),
-              col("__w"), explode(mapByFit).as(Seq("aid", "val")))
-          val ridPairs: Seq[Column] = active.flatMap { f =>
-            Seq(lit(f), when(col(foldCol) === f, lit(-1))
-              .otherwise(flatRidColumn(state(f).open, names)))
-          }
-          val cleanSide = stamped
-            .filter(!dirtyCol)
-            .withColumn("__cls", col(clsCol).cast("string"))
-            .select(col("__cls") +: names.map(col) :+
-              explode(map(ridPairs: _*)).as(Seq("__fit", "__rid")): _*)
-            .filter(col("__rid") >= 0)
-            .select(col("__fit"), col("__rid"), col("__cls").as("cls"),
-              lit(W1).as("__w"), explode(mapByFit).as(Seq("aid", "val")))
-          val rows = dirtySide.unionByName(cleanSide)
-            .filter(col("val").isNotNull)
-            .groupBy("__fit", "__rid", "aid", "val", "cls")
-            .agg(sum(col("__w")).as("cnt"))
-            .collect()
-          prevPersisted.foreach(_.unpersist())
-          prevPersisted =
-            if (level >= 1 && level < params.maxDepth) Some(based) else None
-          prevBase = based
-          groupRows(rows)
-        }
-        } finally sc.setJobDescription(prevDesc)
-      if (profile) {
-        val t = (System.nanoTime() - tLevel0) / 1e9
-        println(f"[fitFolds] level=$level fits=${active.size} " +
-          f"cells=${cellsByFit.values.map(_.length).sum} hist=$t%.2fs")
-      }
-      active.foreach { f =>
-        val cells: Array[(Int, Int, String, String, Long)] =
-          cellsByFit.getOrElse(f, Array.empty)
-        val s = state(f)
-        val st = levelStats(cells, schema, classLabelsByFit(f),
-          fractional, unit, params)
-        val d = decideLevel(s.open, level, st, schema, params,
-          classLabelsByFit(f), fractional, unit, s.globalMajority)
-        d.closedAdd.foreach { case (r, m, dd) =>
-          s.closed :+= r; s.closedMass :+= m; s.closedDist :+= dd }
-        if (importanceOut != null)
-          d.importanceAdd.foreach { case (a, v) => importanceOut(f)(a) += v }
-        s.globalMajority = d.globalMajority
-        s.open = d.nextOpen
-        s.routesX = d.routesX
-        s.routes = d.routes
-        s.cells = cells
-      }
-      level += 1
-      }
-    }
-    } finally routedPersists.foreach(_.unpersist())
-    fits.map { f =>
-      val s = state(f)
-      val labels = classLabelsByFit(f)
-      // maxDepth exhaustion: close survivors as majority leaves (#4)
-      s.open.foreach { r =>
-        s.closed :+= r.closed(s.globalMajority.getOrElse(labels.head))
-        s.closedMass :+= 0L
-        s.closedDist :+= Map.empty
-      }
-      C45Model(schema.copy(classLabels = labels), s.closed,
-        s.globalMajority.getOrElse(labels.head), s.closedMass, s.closedDist)
-    }
-  }
+  /** [[fitFolds]] from a finished probe. */
+  private[fit] def growFolds(stamped: DataFrame, foldCol: String, schema: C45Schema,
+                             params: C45Params, probe: LevelLoop.Probe): Seq[C45Model] =
+    LevelLoop.grow(stamped, schema, params, LevelLoop.Models("fitFolds", probe,
+      f => (col(foldCol) =!= f).cast("long"), probe.mass, micros = probe.fractional)).map(_._1)
 }

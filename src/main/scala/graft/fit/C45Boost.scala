@@ -1,7 +1,6 @@
 package graft.fit
 
 import graft.meta.C45Schema
-import graft.model.Rule
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -178,13 +177,9 @@ case class C45Boost(trees: Vector[C45Model], alphaMicros: Vector[Long],
   *
   * - **Weights are exact long micros** (1 row starts at 10⁶) and ride
   *   as ONE column on the persisted training projection. Each round's
-  *   weighted histogram is the forest/crossval aggregation shape —
-  *   explode to (rid, attr, value, class), partial-aggregate
-  *   Σ weight map-side — so the per-round shuffle stays O(model);
-  *   split math reuses [[C45.levelStats]]/[[C45.decideLevel]] in
-  *   their exact-micros weighted mode (the fused fractional fold
-  *   fit's path), so a weighted tree is bit-deterministic under any
-  *   partitioning.
+  *   weak learner is a single-model [[LevelLoop]] fit whose starting
+  *   mass is that column, with cells in micros, so a weighted tree is
+  *   bit-deterministic under any partitioning.
   * - **The M1 reweight is the Σ-preserving normalized form** —
   *   wrong rows × W/(2E), right rows × W/(2(W−E)) (E = weighted
   *   error mass, W = total mass) — applied as exact long
@@ -245,210 +240,18 @@ object C45Boost {
 
   def fit(df: DataFrame, schema: C45Schema,
           params: C45BoostParams = C45BoostParams()): C45Boost = {
-    val spark = df.sparkSession
     val names = schema.attrNames
     val clsCol = schema.classCol
-    val catAttrs = schema.categoricalAttrs
-    val numAttrs = schema.numericAttrs
-
-    // probes (one job): non-null labels + binning gate sketches +
-    // (fractional mode) whether any row carries a null attribute value
-    // — a null-free corpus takes the flat drop routing bit-for-bit
-    val dirtyCol: Column = names.map(col(_).isNull)
-      .reduceOption(_ || _).getOrElse(lit(false))
+    // probed over the uncached projection; every round's weak fit
+    // shares its labels and full-data bin edges (the forest's contract)
     val proj0 = df.select((names :+ clsCol).map(col): _*)
-    val dcAggs =
-      if (params.base.maxBins <= 0) Seq.empty
-      else numAttrs.map(a =>
-        approx_count_distinct(col(a.name)).as(s"__dc_${a.name}"))
-    val dirtyAggs =
-      if (params.base.missingMode != "fractional") Seq.empty
-      else Seq(count(when(dirtyCol, 1)).as("__dirty"))
-    val probeAggs =
-      Seq(count(when(col(clsCol).isNull, 1)).as("cls")) ++ dcAggs ++ dirtyAggs
-    val probe = proj0.agg(probeAggs.head, probeAggs.tail: _*).head()
-    require(probe.getLong(0) == 0L,
-      s"C45Boost.fit requires non-null class labels: column '$clsCol' " +
-        "contains NULLs")
-    val fractional = params.base.missingMode == "fractional" &&
-      names.nonEmpty && probe.getAs[Long]("__dirty") > 0L
-    val classLabels: Seq[String] =
-      if (schema.classLabels.nonEmpty) schema.classLabels
-      else proj0.select(col(clsCol).cast("string")).na.drop().distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
+    val probe = LevelLoop.probe(proj0, schema, params.base, "C45Boost.fit")
 
-    // shared full-data quantile edges (the forest's binning contract)
-    val binEdges: Map[Int, Array[Double]] =
-      if (params.base.maxBins <= 0 || numAttrs.isEmpty) Map.empty
-      else {
-        val need = numAttrs.filter(a =>
-          probe.getAs[Long](s"__dc_${a.name}") > params.base.maxBins)
-        if (need.isEmpty) Map.empty
-        else {
-          val probs = (1 until params.base.maxBins)
-            .map(_.toDouble / params.base.maxBins).toArray
-          val qs = proj0.stat.approxQuantile(need.map(_.name).toArray, probs, 1e-4)
-          need.map(_.name).zip(qs).collect {
-            case (nm, es) if es.nonEmpty =>
-              schema.attrIndex(nm) -> es.distinct.sorted
-          }.toMap
-        }
-      }
-    def numValCol(a: graft.meta.AttrMeta): Column = {
-      val raw = col(a.name).cast("double")
-      binEdges.get(schema.attrIndex(a.name))
-        .map(e => graft.functions.SortedCeilSnap.snapTo(e, raw))
-        .getOrElse(raw)
-    }
-
-    /** one weighted C4.5 fit over (attrs, __cls, __w micros). In
-      * fractional mode the null-bearing rows ride a per-round RouteX
-      * broadcast-join chain (the fused fold fit's clean/dirty split,
-      * C45.fitFolds) with the BOOST weight as the chain's starting
-      * mass, so a null-valued row descends every child at
-      * boost-micros × known-share; null-free rows re-route per level
-      * through the flat rid CASE at their full weight. */
-    def fitWeighted(base: DataFrame): C45Model = {
-      var open = Vector(Rule.root)
-      var closed = Vector.empty[Rule]
-      var closedMass = Vector.empty[Long]
-      var closedDist = Vector.empty[Map[String, Long]]
-      var globalMajority: Option[String] = None
-      var routesXPrev: Seq[RouteX] = Nil
-      // previous level's routes + cells (drop mode): the final level
-      // closes on derived class marginals with no histogram job
-      // (C45.deriveFinalCounts; weighted sums derive exactly too)
-      var routesPrev: Seq[Route] = Nil
-      var prevCells: Array[(Int, Int, String, String, Long)] = null
-      var prevBase: DataFrame = null
-      var prevPersisted: Option[DataFrame] = None
-      val routedPersists =
-        scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val spark = base.sparkSession
-      import spark.implicits._
-      var level = 0
-      try {
-      while (open.nonEmpty && level <= params.base.maxDepth) {
-        if (!fractional && level == params.base.maxDepth && level > 0 &&
-            prevCells != null) {
-          // final level, drop mode: every open rule closes on its
-          // weighted class marginal, derived exactly from the parent's
-          // cells — one histogram job per round saved
-          val st = C45.LevelStats(
-            C45.deriveFinalCounts(prevCells, routesPrev),
-            Map.empty, Map.empty, Map.empty)
-          val dec = C45.decideLevel(open, level, st, schema, params.base,
-            classLabels, fractional = true, unit = 1e6, globalMajority)
-          dec.closedAdd.foreach { case (r, m, dd) =>
-            closed :+= r; closedMass :+= m; closedDist :+= dd }
-          globalMajority = dec.globalMajority
-          open = dec.nextOpen
-          level += 1
-        } else {
-        val deadAids = open.map(_.usedAttrs).reduce(_ intersect _)
-        val liveCat = catAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-        val liveNum = numAttrs.filterNot(a => deadAids(schema.attrIndex(a.name)))
-        // final level: only the class marginal is consumed (every open
-        // rule closes on depth) — skip the attribute slices outright
-        val pairs: Seq[Column] =
-          if (level == params.base.maxDepth) Seq(lit(-1), col("__cls"))
-          else Seq(lit(-1), col("__cls")) ++
-            liveCat.flatMap(a =>
-              Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))) ++
-            liveNum.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-              numValCol(a).cast("string")))
-        val cells =
-          if (!fractional) {
-            base
-              .withColumn("__rid", C45.flatRidColumn(open, names))
-              .filter(col("__rid") >= 0)
-              .select(col("__rid"), col("__cls").as("cls"), col("__w"),
-                explode(map(pairs: _*)).as(Seq("aid", "val")))
-              .filter(col("val").isNotNull)
-              .groupBy("__rid", "aid", "val", "cls")
-              .agg(sum(col("__w")).as("cnt"))
-              .collect()
-              .map(r => (r.getInt(0), r.getInt(1), r.getString(2),
-                r.getString(3), r.getLong(4)))
-          } else {
-            val chain =
-              if (level == 0)
-                base.filter(dirtyCol)
-                  .withColumn("__rid", lit(0))
-                  .select(col("__rid") +: col("__w") +: col("__cls") +:
-                    names.map(col): _*)
-              else {
-                val routeDf = routesXPrev.map(x =>
-                  (x.prid, x.kind, x.aid, x.boundary, x.side, x.catval,
-                    x.crid, x.frac))
-                  .toDF("__prid", "__kind", "__aid", "__boundary", "__side",
-                    "__catval", "__crid", "__frac")
-                val routeAids = routesXPrev.map(_.aid).toSet
-                val routeNum = numAttrs.filter(a =>
-                  routeAids(schema.attrIndex(a.name)))
-                val routeCat = catAttrs.filter(a =>
-                  routeAids(schema.attrIndex(a.name)))
-                prevBase
-                  .join(broadcast(routeDf),
-                    prevBase("__rid") === routeDf("__prid"))
-                  .withColumn("__wN",
-                    C45.routeXWeight(routeNum, routeCat, schema))
-                  .filter(col("__wN").isNotNull && col("__wN") > 0)
-                  .drop("__rid", "__w", "__prid", "__kind", "__aid",
-                    "__boundary", "__side", "__catval", "__frac")
-                  .withColumnRenamed("__crid", "__rid")
-                  .withColumnRenamed("__wN", "__w")
-              }
-            val based =
-              if (level >= 1 && level < params.base.maxDepth) {
-                val p = C45.persistUncompressed(chain); routedPersists += p; p
-              } else chain
-            val dirtySide = based
-              .select(col("__rid"), col("__cls").as("cls"), col("__w"),
-                explode(map(pairs: _*)).as(Seq("aid", "val")))
-            val cleanSide = base
-              .filter(!dirtyCol)
-              .withColumn("__rid", C45.flatRidColumn(open, names))
-              .filter(col("__rid") >= 0)
-              .select(col("__rid"), col("__cls").as("cls"), col("__w"),
-                explode(map(pairs: _*)).as(Seq("aid", "val")))
-            val rows = dirtySide.unionByName(cleanSide)
-              .filter(col("val").isNotNull)
-              .groupBy("__rid", "aid", "val", "cls")
-              .agg(sum(col("__w")).as("cnt"))
-              .collect()
-              .map(r => (r.getInt(0), r.getInt(1), r.getString(2),
-                r.getString(3), r.getLong(4)))
-            prevPersisted.foreach(_.unpersist())
-            prevPersisted =
-              if (level >= 1 && level < params.base.maxDepth) Some(based)
-              else None
-            prevBase = based
-            rows
-          }
-        val st = C45.levelStats(cells, schema, classLabels,
-          fractional = true, unit = 1e6, params.base)
-        val dec = C45.decideLevel(open, level, st, schema, params.base,
-          classLabels, fractional = true, unit = 1e6, globalMajority)
-        dec.closedAdd.foreach { case (r, m, dd) =>
-          closed :+= r; closedMass :+= m; closedDist :+= dd }
-        globalMajority = dec.globalMajority
-        open = dec.nextOpen
-        routesXPrev = dec.routesX
-        routesPrev = dec.routes
-        prevCells = cells
-        level += 1
-        }
-      }
-      } finally routedPersists.foreach(_.unpersist())
-      open.foreach { r =>
-        closed :+= r.closed(globalMajority.getOrElse(classLabels.head))
-        closedMass :+= 0L
-        closedDist :+= Map.empty
-      }
-      C45Model(schema.copy(classLabels = classLabels), closed,
-        globalMajority.getOrElse(classLabels.head), closedMass, closedDist)
-    }
+    // one weighted C4.5 fit over (attrs, __cls, __w micros): a
+    // single-model LevelLoop whose starting mass is the boost weight
+    def fitWeighted(base: DataFrame): C45Model =
+      LevelLoop.grow(base, schema, params.base, LevelLoop.Models("fitBoost", probe,
+        _ => lit(1L), col("__w"), micros = true)).head._1
 
     val trees = Vector.newBuilder[C45Model]
     val alphas = Vector.newBuilder[Long]
@@ -457,10 +260,7 @@ object C45Boost {
         proj0.withColumn("__cls", col(clsCol).cast("string"))
           .withColumn("__w", lit(W1)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // phase wall-clock diagnostics: GRAFT_FIT_PROFILE=1, same switch
-    // as C45.fit / fitFolds / crossValidate
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
+    val profile = LevelLoop.profile
     def tick[T](what: String)(body: => T): T = {
       val t0 = System.nanoTime(); val r = body
       if (profile)

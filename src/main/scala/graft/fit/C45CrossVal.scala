@@ -16,20 +16,14 @@ import org.apache.spark.sql.functions._
   * same way the split-assignment operator is — key by a GROUP (e.g. a
   * near-dup cluster id) and the whole group lands in one fold.
   *
-  * Scale shape: ONE pass stamps the fold column (no shuffle), then ALL
-  * k fits grow from ONE fold-keyed histogram job per tree level
-  * ([[C45.fitFolds]]: the per-level `groupBy(fit, rid, aid, val, cls)`
-  * carries the fit tag in its key, so one scan of the cached base
-  * feeds every fold's cells — previously k filtered fits = k scans per
-  * level), and ONE map-side aggregation scores all k held-out folds
-  * (`transform` is a flat CASE WHEN per model; the per-fold hit
-  * counters share a single scan). Total cost ≈ 1 fit-shaped job per
-  * level + 1 eval scan; the collect stays O(k × model). Corpora with
-  * null attribute values under fractional missing-mode take the same
-  * fused path with per-fit row weights (a `__fit`-tagged replay of the
-  * fit's own RouteX fan-out — see [[C45.fitFolds]]); decisions are
-  * bit-identical to k sequential fractional fits. Counts are exact
-  * longs, so the result is bit-stable at every tier. */
+  * Scale shape: ONE pass stamps and caches the fold column (no
+  * shuffle) and carries the probe; then ALL k fits grow from ONE
+  * histogram job per tree level ([[C45.fitFolds]]: k models of the
+  * [[LevelLoop]], multiplicity `fold ≠ f`, null-bearing rows fanning
+  * out when the mode is fractional), and ONE map-side aggregation
+  * scores all k held-out folds. Each fold model is bit-identical to a
+  * sequential fit on its training rows; counts are exact longs, so
+  * the result is bit-stable at every tier. */
 object C45CrossVal {
 
   case class FoldResult(fold: Int, nTest: Long, nCorrect: Long)
@@ -43,17 +37,14 @@ object C45CrossVal {
     val names = schema.attrNames
     val fold = (Hashing.hash60(foldKey, salt) % k).cast("int")
     // ONE materialization serves all k fits and all k eval passes: the
-    // fused fit's per-level histogram and the fallback's per-fit
-    // filters both read through this cache
+    // per-level histograms and the eval scan both read through this
+    // cache
     val stamped = graft.operators.Widen.toParallelism(df
       .withColumn("__fold", fold) // stamp BEFORE projecting the key away
       .select(("__fold" +: names :+ clsCol)
         .map(org.apache.spark.sql.functions.col): _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // phase wall-clock diagnostics: -Dgraft.fit.profile=1 (or env
-    // GRAFT_FIT_PROFILE=1 through a forked runner), same switch as fit
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
+    val profile = LevelLoop.profile
     def tick[T](what: String)(body: => T): T = {
       val t0 = System.nanoTime(); val r = body
       if (profile)
@@ -61,37 +52,12 @@ object C45CrossVal {
       r
     }
     try {
-      // one up-front probe decides the mode (mirrors C45.fit's own):
-      // non-null labels are required either way; null ATTRIBUTE values
-      // + fractional mode engage fitFolds' weighted routed-base path
-      // the cache-building scan carries EVERYTHING the path decision
-      // and the fused fit's binning gate need: null counters plus the
-      // per-(fold-exclusion, numeric attr) approx-distinct sketches
-      // (HLL over a when()-filter equals HLL over the filtered subset
-      // — the sketch only sees the value set), so fitFolds starts
-      // straight into its per-level histogram jobs
-      val numAttrs = schema.numericAttrs
-      val dcAggs =
-        if (params.maxBins <= 0) Seq.empty
-        else for { f <- 0 until k; a <- numAttrs } yield
-          approx_count_distinct(when(col("__fold") =!= f, col(a.name)))
-            .as(s"dc_${f}_${a.name}")
-      val probeAggs = Seq(
-        count(when(col(clsCol).isNull, 1)).as("cls"),
-        count(when(names.map(col(_).isNull).reduceOption(_ || _)
-          .getOrElse(lit(false)), 1)).as("attr")) ++ dcAggs
-      val nullProbe = tick("null probe + cache build")(
-        stamped.agg(probeAggs.head, probeAggs.tail: _*).head())
-      require(nullProbe.getLong(0) == 0L,
-        s"C45.fit requires non-null class labels: column '$clsCol' contains NULLs")
-      val fractional = params.missingMode == "fractional" &&
-        names.nonEmpty && nullProbe.getLong(1) > 0L
-      val dc: Option[Map[(Int, String), Long]] =
-        if (params.maxBins <= 0) None
-        else Some((for { f <- 0 until k; a <- numAttrs } yield
-          (f, a.name) -> nullProbe.getAs[Long](s"dc_${f}_${a.name}")).toMap)
+      // the cache-building scan also carries the null probe and the
+      // per-fold binning sketches (LevelLoop.probe)
+      val probe = tick("probe + cache build")(LevelLoop.probe(stamped, schema, params,
+        "C45CrossVal.crossValidate", Some(("__fold", k))))
       val models: Seq[C45Model] = tick("fits")(
-        C45.fitFolds(stamped, "__fold", k, schema, params, dc, fractional))
+        C45.growFolds(stamped, "__fold", schema, params, probe))
       // fused evaluation: k prediction columns (each a map-only CASE
       // WHEN / one-expression tree walk), ONE aggregation over the cache
       // with per-fold filtered counters — identical counts to scoring

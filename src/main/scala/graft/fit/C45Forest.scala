@@ -1,10 +1,8 @@
 package graft.fit
 
 import graft.meta.C45Schema
-import graft.model.Rule
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Tuning knobs for [[C45Forest.fit]] — bagged C4.5 (Breiman 1996,
   * "Bagging Predictors") with an optional random-subspace restriction
@@ -19,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * "fractional" (canonical C4.5 unknown-value distribution — a
   * null-valued row descends EVERY child of its rule's split with
   * weight bootstrap-multiplicity × known-mass share, exact micros; see
-  * the [[C45Forest.fit]] scaladoc for the fused clean/dirty plan).
+  * the [[LevelLoop]] weight model).
   * `mtry` (0 = off) is Breiman-2001 per-NODE random feature sampling:
   * each open node considers only a deterministic md5-ranked sample of
   * `mtry` of its live attributes ([[C45Forest.mtrySample]]) — sampling
@@ -175,11 +173,13 @@ case class C45Forest(trees: Vector[C45Model], seed: Int) {
   }
 }
 
-/** Bagged C4.5, fit FUSED: all `nTrees` bootstrap replicates train from
-  * ONE bounded histogram job per level — the same (tree, rule, attr,
-  * value, class) → Σweight aggregation shape as the fused k-fold fit
-  * ([[C45.fitFolds]]), with the per-(row, tree) integer bootstrap
-  * multiplicity riding as the weight instead of a fold exclusion.
+/** Bagged C4.5: all `nTrees` bootstrap replicates grow side by side
+  * in the [[LevelLoop]], one histogram job per level for the whole
+  * ensemble, with the per-(row, tree) bootstrap multiplicity as the
+  * loop's multiplicity. Each tree is bit-identical to a sequential
+  * [[C45.fit]] on its explicitly replicated sample, in either missing
+  * mode (C45ForestSpec pins both), and records masses in multiplicity
+  * micros.
   *
   * Bootstrap weights are DETERMINISTIC Poisson(1) draws (the standard
   * streaming/distributed bootstrap — Oza & Russell 2001; at n rows a
@@ -190,49 +190,13 @@ case class C45Forest(trees: Vector[C45Model], seed: Int) {
   * with no RNG state, no shuffle, and exact replay in the DuckDB
   * oracle (the same md5 mirror as [[graft.functions.Hashing.hash60]]).
   * Weights are materialized ONCE into the fit's cached projection (T
-  * long columns); each level reads them back with one element_at.
-  *
-  * Scale shape: the per-level histogram explodes each cached row to
-  * its in-bag trees (E[#] = (1 − e⁻¹)·T ≈ 0.63·T) × its live
-  * attributes, then partial-aggregates map-side, so the shuffle is
-  * O(model), never O(data) — the single-tree fit's bound times the
-  * ensemble width. Routing is the flat first-match CASE WHEN per tree
-  * ([[C45.flatRidColumn]], the fused fold fit's unweighted path):
-  * bagged C4.5 ensembles are depth-bounded by construction here
-  * (params.base.maxDepth), which keeps the per-tree expression inside
-  * whole-stage codegen.
-  *
-  * With `base.missingMode = "fractional"` on a null-bearing corpus,
-  * the fit composes Quinlan's unknown-value distribution with the
-  * bootstrap: histogram weights become per-copy micros × multiplicity
-  * and ONLY the null-bearing rows ride a tree-tagged RouteX
-  * broadcast-join chain (the fused fold fit's clean/dirty split,
-  * [[C45.fitFolds]]) — a null-valued row descends every child of its
-  * split at known-mass share with the single tree's exact micro
-  * rounding applied to the PER-COPY weight (multiplicity multiplies
-  * outside the rounding), while the null-free majority re-routes per
-  * level through the flat per-tree rid CASE over the caller's cache.
-  * Still ONE aggregation job per level; persisted chain state is
-  * dirty × E[in-bag trees] rows per join-routed level. Decisions and
-  * recorded masses stay bit-identical to a sequential
-  * `C45.fit(missingMode = "fractional")` per explicitly-replicated
-  * bootstrap sample (C45ForestSpec pins it), because the weight
-  * expression, micro rounding, and driver math are the single fit's
-  * shared code and integer sums commute.
+  * long columns).
   *
   * Numeric binning (`base.maxBins`) computes ONE shared set of
-  * quantile edges from the FULL data (one probe + one approxQuantile
+  * quantile edges from the FULL data (one probe + one quantile
   * job, not T): a tree's in-bag sample sees a subset of the full value
   * set, so shared edges bound every tree's boundary window identically
-  * — a deliberate, documented divergence from per-replicate binning.
-  *
-  * Each tree's decisions replay [[C45.levelStats]]/[[C45.decideLevel]]
-  * on its weighted cell slice — bit-identical to a sequential
-  * [[C45.fit]] on the explicitly replicated bootstrap sample
-  * (C45ForestSpec pins this), because integer weight sums are
-  * order-independent and the driver math is shared code. Recorded
-  * `leafMass`/`leafDist` are bootstrap-multiplicity micros (Σw × 10⁶
-  * per leaf). */
+  * — a deliberate, documented divergence from per-replicate binning. */
 object C45Forest {
 
   /** Cumulative Poisson(1) probabilities scaled to 2⁶⁰, k = 0..6:
@@ -330,345 +294,26 @@ object C45Forest {
   def fitWithImportance(df: DataFrame, schema: C45Schema, key: Column,
       params: C45ForestParams = C45ForestParams())
       : (C45Forest, Vector[Map[Int, Double]]) = {
-    val spark = df.sparkSession
     val names = schema.attrNames
-    val clsCol = schema.classCol
-    val catAttrs = schema.categoricalAttrs
-    val numAttrs = schema.numericAttrs
     val d = names.size
     val T = params.nTrees
     require(params.attrsPerTree <= d,
       s"attrsPerTree ${params.attrsPerTree} exceeds attribute count $d")
     val wCols = (0 until T).map(t => s"__fw$t")
-
-    // one cached projection: attrs + class + the T materialized
-    // bootstrap weights (so the level loop never recomputes md5);
-    // callers that pre-persisted keep their cache — the weight
-    // columns are then computed per level ON TOP of that cache
-    // (projection over a cache is cheap; md5 × T per row per level is
-    // the price of not double-caching the corpus)
-    val prePersisted = df.storageLevel != StorageLevel.NONE ||
-      C45.inputCacheBacked(df)
-    val proj = df.select((names :+ clsCol).map(col) ++
-      (0 until T).map(t =>
-        bootstrapWeight(key, lit(t), params.seed).as(wCols(t))): _*)
-    val data = if (prePersisted) proj
-      else graft.operators.Widen.toParallelism(proj)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-
-    // up-front probes in ONE agg job, mirroring C45.fit: non-null
-    // class labels, the binning gate's approx-distinct sketches, and
-    // (fractional mode) whether any row carries a null attribute value
-    // — the fractional machinery engages only when nulls occur at all,
-    // so a null-free corpus takes the drop path bit-for-bit
-    val dirtyCol: Column = names.map(col(_).isNull)
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val dcAggs =
-      if (params.base.maxBins <= 0) Seq.empty
-      else numAttrs.map(a =>
-        approx_count_distinct(col(a.name)).as(s"__dc_${a.name}"))
-    val dirtyAggs =
-      if (params.base.missingMode != "fractional") Seq.empty
-      else Seq(count(when(dirtyCol, 1)).as("__dirty"))
-    val probeAggs =
-      Seq(count(when(col(clsCol).isNull, 1)).as("cls")) ++ dcAggs ++ dirtyAggs
-    val probe = data.agg(probeAggs.head, probeAggs.tail: _*).head()
-    require(probe.getLong(0) == 0L,
-      s"C45Forest.fit requires non-null class labels: column '$clsCol' " +
-        "contains NULLs")
-    val fractional = params.base.missingMode == "fractional" &&
-      names.nonEmpty && probe.getAs[Long]("__dirty") > 0L
-    // fractional masses ride in micros (multiplicity × 10⁶); drop-mode
-    // cells stay raw multiplicities and decideLevel scales the record
-    val unit = if (fractional) 1e6 else 1.0
-    val W1 = 1000000L
-
-    val classLabels: Seq[String] =
-      if (schema.classLabels.nonEmpty) schema.classLabels
-      else data.select(col(clsCol).cast("string")).na.drop().distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-
-    // shared quantile edges (see scaladoc): full-data approxQuantile
-    // through the same API/snap expression as the single-tree fit
-    val binEdges: Map[Int, Array[Double]] =
-      if (params.base.maxBins <= 0 || numAttrs.isEmpty) Map.empty
-      else {
-        val need = numAttrs.filter(a =>
-          probe.getAs[Long](s"__dc_${a.name}") > params.base.maxBins)
-        if (need.isEmpty) Map.empty
-        else {
-          val probs = (1 until params.base.maxBins)
-            .map(_.toDouble / params.base.maxBins).toArray
-          val qs = data.stat.approxQuantile(need.map(_.name).toArray, probs, 1e-4)
-          need.map(_.name).zip(qs).collect {
-            case (nm, es) if es.nonEmpty =>
-              schema.attrIndex(nm) -> es.distinct.sorted
-          }.toMap
-        }
-      }
-    def numValCol(a: graft.meta.AttrMeta): Column = {
-      val raw = col(a.name).cast("double")
-      binEdges.get(schema.attrIndex(a.name))
-        .map(e => graft.functions.SortedCeilSnap.snapTo(e, raw))
-        .getOrElse(raw)
+    // attrs + class + the T materialized bootstrap weights, so no level
+    // recomputes md5; over a caller's cache the weights are computed
+    // per level on top of it rather than caching the corpus twice
+    LevelLoop.withTrainingFrame(df, (names :+ schema.classCol).map(col) ++
+        wCols.indices.map(t => bootstrapWeight(key, lit(t), params.seed).as(wCols(t)))) { data =>
+      val shared = LevelLoop.probe(data, schema, params.base, "C45Forest.fit")
+      val probe = shared.copy(labels = Vector.fill(T)(shared.labels.head),
+        edges = Vector.fill(T)(shared.edges.head))
+      val fits = LevelLoop.grow(data, schema, params.base, LevelLoop.Models("fitForest",
+        probe, t => col(wCols(t)), probe.mass, micros = probe.fractional,
+        subspace = t => attrSubset(t, d, params.attrsPerTree),
+        sample = if (params.mtry <= 0) None else Some((t, level, rid, live) =>
+          mtrySample(live, params.mtry, params.seed, t, level, rid))))
+      (C45Forest(fits.map(_._1).toVector, params.seed), fits.map(_._2).toVector)
     }
-
-    val subsets: IndexedSeq[Set[Int]] =
-      (0 until T).map(t => attrSubset(t, d, params.attrsPerTree))
-
-    final class TState {
-      var open: Vector[Rule] = Vector(Rule.root)
-      var closed: Vector[Rule] = Vector.empty
-      var closedMass: Vector[Long] = Vector.empty
-      var closedDist: Vector[Map[String, Long]] = Vector.empty
-      var globalMajority: Option[String] = None
-      var routesX: Seq[RouteX] = Nil
-      // previous level's routes + cells: the final level closes on
-      // derived class marginals with no histogram job (drop mode —
-      // C45.deriveFinalCounts)
-      var routes: Seq[Route] = Nil
-      var cells: Array[(Int, Int, String, String, Long)] = null
-      val imp = scala.collection.mutable.Map.empty[Int, Double]
-        .withDefaultValue(0.0)
-    }
-    val state = Array.fill(T)(new TState)
-    val sc = spark.sparkContext
-    // per-level wall diagnostics — the same GRAFT_FIT_PROFILE switch
-    // as C45.fit / fitFolds / C45Boost
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-    // fractional routing state, mirroring C45.fitFolds': the previous
-    // level's fused DIRTY routed base (null-bearing rows only — see the
-    // histogram branch below) and the persisted handle to free once the
-    // next level materializes
-    var prevBase: DataFrame = null
-    var prevPersisted: Option[DataFrame] = None
-    val routedPersists = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-    var level = 0
-    while (state.exists(_.open.nonEmpty) && level <= params.base.maxDepth) {
-      val active = (0 until T).filter(t => state(t).open.nonEmpty)
-      if (!fractional && level == params.base.maxDepth && level > 0 &&
-          active.forall(t => state(t).cells != null)) {
-        // final level, drop mode: every open rule of every tree closes
-        // on its class marginal, derived exactly from that tree's
-        // parent cells — the widest fused histogram job is skipped
-        active.foreach { t =>
-          val s = state(t)
-          val st = C45.LevelStats(C45.deriveFinalCounts(s.cells, s.routes),
-            Map.empty, Map.empty, Map.empty)
-          val dec = C45.decideLevel(s.open, level, st, schema, params.base,
-            classLabels, fractional, unit, s.globalMajority)
-          dec.closedAdd.foreach { case (r, m, dd) =>
-            s.closed :+= r; s.closedMass :+= m; s.closedDist :+= dd }
-          dec.importanceAdd.foreach { case (aid, v) => s.imp(aid) += v }
-          s.globalMajority = dec.globalMajority
-          s.open = dec.nextOpen
-        }
-        level += 1
-      } else {
-      // per-tree histogram map over its LIVE attrs: the tree's subspace
-      // minus the attrs used on every open path (candidates the
-      // decision pass would reject anyway), plus the aid=-1 class
-      // marginal slice
-      def pairsFor(aids: Int => Boolean): Seq[Column] = {
-        // final level: only the class marginal is consumed (every open
-        // rule closes on depth) — skip the attribute slices outright
-        if (level == params.base.maxDepth)
-          return Seq(lit(-1), col("__cls"))
-        val liveCat = catAttrs.filter(a => aids(schema.attrIndex(a.name)))
-        val liveNum = numAttrs.filter(a => aids(schema.attrIndex(a.name)))
-        Seq(lit(-1), col("__cls")) ++
-          liveCat.flatMap(a =>
-            Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))) ++
-          liveNum.flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-            numValCol(a).cast("string")))
-      }
-      val attrMaps: Seq[(Int, Column)] = active.map { t =>
-        if (params.mtry <= 0) {
-          val deadAids = state(t).open.map(_.usedAttrs).reduce(_ intersect _)
-          (t, map(pairsFor(aid => subsets(t)(aid) && !deadAids(aid)): _*))
-        } else {
-          // per-NODE sampling: one map per open rid (keyed on the
-          // routed __rid), each holding only that node's md5-drawn
-          // candidate attrs + the aid=-1 class marginal — unsampled
-          // attrs never even reach the histogram shuffle
-          val chain = state(t).open.zipWithIndex.map { case (r, rid) =>
-            val live = (0 until d).filter(aid =>
-              subsets(t)(aid) && !r.usedAttrs(aid))
-            val sampled = mtrySample(live, params.mtry, params.seed,
-              t, level, rid)
-            (rid, map(pairsFor(sampled): _*))
-          }
-          (t, chain.tail.foldLeft(
-            when(col("__rid") === chain.head._1, chain.head._2)) {
-            case (acc, (rid, m)) => acc.when(col("__rid") === rid, m)
-          })
-        }
-      }
-      val mapByTree: Column =
-        if (attrMaps.size == 1) attrMaps.head._2
-        else attrMaps.tail.foldLeft(
-          when(col("__tree") === attrMaps.head._1, attrMaps.head._2)) {
-          case (acc, (t, m)) => acc.when(col("__tree") === t, m)
-        }
-      val ridPairs: Seq[Column] = active.flatMap { t =>
-        Seq(lit(t), C45.flatRidColumn(state(t).open, names))
-      }
-      val wByTree = element_at(
-        array(wCols.map(col): _*), col("__tree") + 1)
-      val prevDesc = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft.fitForest level=$level T=$T histogram")
-      val tLevel0 = System.nanoTime()
-      def groupRows(rows: Array[org.apache.spark.sql.Row])
-          : Map[Int, Array[(Int, Int, String, String, Long)]] =
-        rows.groupBy(_.getInt(0)).view.mapValues(_.map(r =>
-          (r.getInt(1), r.getInt(2), r.getString(3), r.getString(4),
-            r.getLong(5)))).toMap
-      // the level-0 fan-out base of the DIRTY rows (fractional mode):
-      // one row per (null-bearing row, in-bag tree) at root rid. The
-      // chain tracks the PER-COPY micro weight `__w` (starts at 10⁶;
-      // the only column the RouteX rounding touches) and the integer
-      // bootstrap multiplicity `__m` SEPARATELY — the histogram weighs
-      // by __w × __m, so every micro rounding happens exactly as it
-      // would on each replicated copy (floor(10⁶·frac + 0.5) · m, NOT
-      // floor(m·10⁶·frac + 0.5)) and the fit stays bit-identical to
-      // the sequential fractional fit on the replicated sample. Lazy:
-      // level 0 reads it through the cached projection; only
-      // join-routed levels persist their output.
-      def rootFanout: DataFrame = data
-        .filter(dirtyCol)
-        .withColumn("__cls", col(clsCol).cast("string"))
-        .select((Seq(col("__cls")) ++ names.map(col) ++ wCols.map(col) :+
-          explode(array((0 until T).map(lit(_)): _*)).as("__tree")): _*)
-        .withColumn("__m", wByTree)
-        .filter(col("__m") > 0)
-        .withColumn("__w", lit(W1))
-        .withColumn("__rid", lit(0))
-        .select(col("__tree") +: col("__rid") +: col("__w") +: col("__m") +:
-          col("__cls") +: names.map(col): _*)
-      val cellsByTree: Map[Int, Array[(Int, Int, String, String, Long)]] =
-        try {
-          if (!fractional) {
-            data
-              .withColumn("__cls", col(clsCol).cast("string"))
-              .select((Seq(col("__cls")) ++ names.map(col) ++ wCols.map(col) :+
-                explode(map(ridPairs: _*)).as(Seq("__tree", "__rid"))): _*)
-              .filter(col("__rid") >= 0)
-              .withColumn("__w", wByTree)
-              .filter(col("__w") > 0)
-              .select(col("__tree"), col("__rid"), col("__cls").as("cls"),
-                col("__w"), explode(mapByTree).as(Seq("aid", "val")))
-              .filter(col("val").isNotNull)
-              .groupBy("__tree", "__rid", "aid", "val", "cls")
-              .agg(sum(col("__w")).as("cnt"))
-              .collect()
-              .groupBy(_.getInt(0)).view.mapValues(_.map(r =>
-                (r.getInt(1), r.getInt(2), r.getString(3), r.getString(4),
-                  r.getLong(5)))).toMap
-          } else {
-            // fractional mode — the fused fold fit's CLEAN/DIRTY split
-            // (C45.fitFolds) with the TREE tag riding the chain: only
-            // null-bearing rows can fan out, so only they ride the
-            // weighted RouteX broadcast-join chain (persisted state
-            // dirty×E[in-bag trees] per join-routed level); the
-            // null-free majority re-routes per level through the flat
-            // per-tree rid CASE over the caller's cache at weight
-            // multiplicity × 10⁶. One union, ONE aggregation job per
-            // level — exact long sums, order-independent.
-            import spark.implicits._
-            val base =
-              if (level == 0) rootFanout
-              else {
-                val xr = active.flatMap(t => state(t).routesX.map(x =>
-                  (t, x.prid, x.kind, x.aid, x.boundary, x.side, x.catval,
-                    x.crid, x.frac)))
-                val routeDf = xr.toDF("__ptree", "__prid", "__kind", "__aid",
-                  "__boundary", "__side", "__catval", "__crid", "__frac")
-                val routeAids = xr.map(_._4).toSet
-                val routeNum = numAttrs.filter(a =>
-                  routeAids(schema.attrIndex(a.name)))
-                val routeCat = catAttrs.filter(a =>
-                  routeAids(schema.attrIndex(a.name)))
-                prevBase
-                  .join(broadcast(routeDf),
-                    prevBase("__tree") === routeDf("__ptree") &&
-                      prevBase("__rid") === routeDf("__prid"))
-                  .withColumn("__wN", C45.routeXWeight(routeNum, routeCat, schema))
-                  .filter(col("__wN").isNotNull && col("__wN") > 0)
-                  .drop("__rid", "__w", "__ptree", "__prid", "__kind", "__aid",
-                    "__boundary", "__side", "__catval", "__frac")
-                  .withColumnRenamed("__crid", "__rid")
-                  .withColumnRenamed("__wN", "__w")
-              }
-            val based =
-              if (level >= 1 && level < params.base.maxDepth) {
-                val p = C45.persistUncompressed(base); routedPersists += p; p
-              } else base
-            val dirtySide = based
-              .select(col("__tree"), col("__rid"), col("__cls").as("cls"),
-                (col("__w") * col("__m")).as("__w"),
-                explode(mapByTree).as(Seq("aid", "val")))
-            val cleanSide = data
-              .filter(!dirtyCol)
-              .withColumn("__cls", col(clsCol).cast("string"))
-              .select((Seq(col("__cls")) ++ names.map(col) ++ wCols.map(col) :+
-                explode(map(ridPairs: _*)).as(Seq("__tree", "__rid"))): _*)
-              .filter(col("__rid") >= 0)
-              .withColumn("__w", wByTree * lit(W1))
-              .filter(col("__w") > 0)
-              .select(col("__tree"), col("__rid"), col("__cls").as("cls"),
-                col("__w"), explode(mapByTree).as(Seq("aid", "val")))
-            val rows = dirtySide.unionByName(cleanSide)
-              .filter(col("val").isNotNull)
-              .groupBy("__tree", "__rid", "aid", "val", "cls")
-              .agg(sum(col("__w")).as("cnt"))
-              .collect()
-            prevPersisted.foreach(_.unpersist())
-            prevPersisted =
-              if (level >= 1 && level < params.base.maxDepth) Some(based)
-              else None
-            prevBase = based
-            groupRows(rows)
-          }
-        } finally sc.setJobDescription(prevDesc)
-      if (profile)
-        println(f"[fitForest] level=$level trees=${active.size} " +
-          f"cells=${cellsByTree.values.map(_.length).sum} " +
-          f"hist=${(System.nanoTime() - tLevel0) / 1e9}%.2fs")
-      active.foreach { t =>
-        val s = state(t)
-        val cells = cellsByTree.getOrElse(t, Array.empty[(Int, Int, String, String, Long)])
-        val st = C45.levelStats(cells, schema, classLabels,
-          fractional, unit, params.base)
-        val dec = C45.decideLevel(s.open, level, st, schema, params.base,
-          classLabels, fractional, unit, s.globalMajority)
-        dec.closedAdd.foreach { case (r, m, dd) =>
-          s.closed :+= r; s.closedMass :+= m; s.closedDist :+= dd }
-        dec.importanceAdd.foreach { case (aid, v) => s.imp(aid) += v }
-        s.globalMajority = dec.globalMajority
-        s.open = dec.nextOpen
-        s.routesX = dec.routesX
-        s.routes = dec.routes
-        s.cells = cells
-      }
-      level += 1
-      }
-    }
-    } finally routedPersists.foreach(_.unpersist())
-    (C45Forest((0 until T).map { t =>
-      val s = state(t)
-      s.open.foreach { r =>
-        s.closed :+= r.closed(s.globalMajority.getOrElse(classLabels.head))
-        s.closedMass :+= 0L
-        s.closedDist :+= Map.empty
-      }
-      C45Model(schema.copy(classLabels = classLabels), s.closed,
-        s.globalMajority.getOrElse(classLabels.head), s.closedMass,
-        s.closedDist)
-    }.toVector, params.seed),
-      state.map(_.imp.toMap).toVector)
-    } finally if (!prePersisted) data.unpersist()
   }
 }

@@ -1,0 +1,382 @@
+package graft.fit
+
+import graft.functions.SortedCeilSnap
+import graft.meta.C45Schema
+import graft.model.Rule
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+/** The level loop every C4.5 fitter grows through: the plain fit, the
+  * cross-validation folds, the forest and every boost round are K
+  * models grown side by side over one training frame — the reference's
+  * one-job-per-tree-level driver loop (Main.java:59-123), with the
+  * rule queue replaced by a tree walk and the raw-pair shuffle by a
+  * partially aggregated histogram.
+  *
+  * Per level, ONE histogram job: every row is routed to the open rule
+  * it reaches in each model it trains ([[C45.frontierRidColumn]], the tree grown
+  * so far walked inside one `graft_tree_leaf` expression; a single
+  * model plans `withColumn("__rid", walk)`, K models explode
+  * `map(model → walk_m)`), exploded to its live (attribute, value)
+  * pairs plus a class sentinel (aid −1), and summed by
+  * `groupBy(model, rid, aid, val, cls)`. The cells are O(K × model)
+  * (numeric values are quantile-snapped to at most `maxBins` edges),
+  * so the split math runs driver-side in a fixed order:
+  * [[C45.levelStats]] and [[C45.decideLevel]] per model. Attributes
+  * used on every open path of a model leave its explode; at `maxDepth`
+  * only the class marginal is exploded, and when no row fans out that
+  * level runs no job at all — its marginals derive from the parent's
+  * cells ([[C45.deriveFinalCounts]]).
+  *
+  * The weight model. A cell sums, over the rows routed to it,
+  * multiplicity × per-copy mass:
+  *  - the multiplicity is a per-(row, model) Long: 1 for a plain fit
+  *    or a boost round, the fold mask `fold ≠ m` for cross-validation,
+  *    the Poisson(1) bootstrap draw for a forest tree (0 = the row does
+  *    not train that model);
+  *  - the per-copy mass starts at 1 (whole rows), at 10⁶ (micros, when
+  *    null rows fan out) or at the boost weight;
+  *  - cells are micros (`micros`) for a fractional fit and always for
+  *    boost; the driver math then runs weighted and records masses as
+  *    they are, else it scales row counts by 10⁶;
+  *  - under missing mode "fractional", when some attribute value is
+  *    null (`fanOut`), a null-valued row descends EVERY child of its
+  *    rule's split with its per-copy mass scaled by the child's share
+  *    of known mass, rounded half-up to whole units (Quinlan's
+  *    unknown-value distribution). Only rows with a null can fan out,
+  *    so only they ride a weighted chain: level 0 tags them at the
+  *    root, each later level broadcast-joins the previous level's
+  *    chain against the (model, rule) → child edges ([[RouteX]]) and
+  *    persists the result, uncompressed, for the next level's join;
+  *    the previous level's chain is then freed, and a `finally` frees
+  *    every chain a throwing level left. Null-free rows re-route
+  *    through the walk every level, straight over the training frame.
+  *    The chain carries mass and multiplicity separately and the
+  *    histogram weighs by their product, so a bootstrap copy rounds
+  *    exactly like an explicitly replicated row.
+  * Integer sums commute, so every model is bit-identical to fitting
+  * it alone on its (replicated, reweighted) rows under any
+  * partitioning (CrossValSpec, C45ForestSpec and C45BoostSpec pin it).
+  */
+private[fit] object LevelLoop {
+
+  type Cell = (Int, Int, String, String, Long)
+
+  /** One row at full weight, in micros. */
+  val W1 = 1000000L
+
+  /** Per-level wall-clock lines on stdout: `-Dgraft.fit.profile=1`, or
+    * the upper-cased environment variable through a forked runner. */
+  def profile: Boolean = sys.props.get("graft.fit.profile").contains("1") ||
+    sys.env.get("GRAFT_FIT_PROFILE").contains("1")
+
+  /** Rows with a null attribute value: the only rows that can fan out. */
+  def anyNull(schema: C45Schema): Column =
+    schema.attrNames.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
+
+  /** The projection `cols` of `df` as a fit's training frame, handed to
+    * `body`. A cache-backed `df` is read through (re-persisting would
+    * store the same bytes again); otherwise the projection is widened
+    * to the session parallelism and persisted for the fit's duration,
+    * since every level re-scans it (Widen scaladoc). */
+  def withTrainingFrame[T](df: DataFrame, cols: Seq[Column])(body: DataFrame => T): T = {
+    val proj = df.select(cols: _*)
+    if (df.storageLevel != StorageLevel.NONE || C45.inputCacheBacked(df)) body(proj)
+    else {
+      val data = graft.operators.Widen.toParallelism(proj).persist(StorageLevel.MEMORY_AND_DISK)
+      try body(data) finally data.unpersist()
+    }
+  }
+
+  /** What a fitter learns before its first level: whether null rows
+    * fan out, and each model's class labels and numeric bin edges. */
+  final case class Probe(fractional: Boolean, labels: IndexedSeq[Seq[String]],
+                         edges: IndexedSeq[Map[Int, Array[Double]]]) {
+    /** The per-copy starting mass of a row: micros when it can fan out. */
+    def mass: Column = lit(if (fractional) W1 else 1L)
+  }
+
+  /** ONE aggregation job over `data`: fails on a null class label,
+    * says whether any attribute value is null, and counts each numeric
+    * attribute's approximate distinct values per model (the binning
+    * gate; none when `maxBins` is off). With `folds` = (column, k),
+    * model f trains on the rows whose fold is not f, and its sketches
+    * see only those values. Returns (any null, (model, attr) → count). */
+  private def scan(data: DataFrame, schema: C45Schema, params: C45Params, who: String,
+           folds: Option[(String, Int)] = None): (Boolean, Map[(Int, String), Long]) = {
+    val models = folds.fold(1)(_._2)
+    def trains(m: Int)(c: Column): Column = folds.fold(c) { case (foldCol, _) => when(col(foldCol) =!= m, c) }
+    val keys = if (params.maxBins <= 0) Nil
+      else for (m <- 0 until models; a <- schema.numericAttrs) yield (m, a.name)
+    val dc = keys.map { case (m, n) => approx_count_distinct(trains(m)(col(n))) }
+    val aggs = Seq(count(when(col(schema.classCol).isNull, 1)), count(when(anyNull(schema), 1))) ++ dc
+    val row = data.agg(aggs.head, aggs.tail: _*).head()
+    require(row.getLong(0) == 0L,
+      s"$who requires non-null class labels: column '${schema.classCol}' contains NULLs")
+    (row.getLong(1) > 0L, keys.zipWithIndex.map { case (key, i) => key -> row.getLong(i + 2) }.toMap)
+  }
+
+  /** [[scan]], then each model's class labels (declared, else discovered
+    * in one job: sorted, and per fold only those its training rows
+    * carry) and its quantile bin edges: one quantile job per
+    * model that has attributes with more than `maxBins` distinct
+    * values, over the rows the model trains on. */
+  def probe(data: DataFrame, schema: C45Schema, params: C45Params, who: String,
+            folds: Option[(String, Int)] = None): Probe = {
+    val (anyNulls, distinct) = scan(data, schema, params, who, folds)
+    val cls = col(schema.classCol).cast("string")
+    val frames: IndexedSeq[DataFrame] = folds match {
+      case None => Vector(data)
+      case Some((foldCol, k)) => (0 until k).map(f => data.filter(col(foldCol) =!= f))
+    }
+    val labels: IndexedSeq[Seq[String]] =
+      if (schema.classLabels.nonEmpty) frames.map(_ => schema.classLabels)
+      else folds match {
+        case None => Vector(data.select(cls).distinct().collect().map(_.getString(0)).sorted.toSeq)
+        case Some((foldCol, _)) =>
+          val seen = data.groupBy(cls).agg(collect_set(col(foldCol))).collect()
+            .map(r => r.getString(0) -> r.getSeq[Int](1).toSet)
+          frames.indices.map(f => seen.collect { case (c, fs) if fs.exists(_ != f) => c }.sorted.toSeq)
+      }
+    val probs = (1 until params.maxBins).map(_.toDouble / params.maxBins).toArray
+    val edges = frames.zipWithIndex.map { case (frame, m) =>
+      val need = schema.numericAttrs.map(_.name)
+        .filter(n => params.maxBins > 0 && distinct((m, n)) > params.maxBins)
+      if (need.isEmpty) Map.empty[Int, Array[Double]]
+      else need.zip(frame.stat.approxQuantile(need.toArray, probs, 1e-4)).collect {
+        case (n, es) if es.nonEmpty => schema.attrIndex(n) -> es.distinct.sorted
+      }.toMap
+    }
+    Probe(params.missingMode == "fractional" && schema.attrs.nonEmpty && anyNulls, labels, edges)
+  }
+
+  /** The K models one fitter grows. `multiplicity(m)` is a Long over
+    * the training frame's columns (0: the row does not train model m);
+    * `mass` is the per-copy starting mass. `subspace(m)` bounds the
+    * attributes model m may split on, and `sample`, when set, draws
+    * each open node's candidates from its live attributes:
+    * (model, level, rid, live aids) → sampled aids. */
+  final case class Models(caller: String, probe: Probe, multiplicity: Int => Column,
+                          mass: Column, micros: Boolean,
+                          subspace: Int => Int => Boolean = _ => _ => true,
+                          sample: Option[(Int, Int, Int, Seq[Int]) => Set[Int]] = None) {
+    def k: Int = probe.labels.size
+  }
+
+  private final class State {
+    var open: Vector[Rule] = Vector(Rule.root)
+    var closed = Vector.empty[(Rule, Long, Map[String, Long])]
+    var majority: Option[String] = None
+    var routes: Seq[Route] = Nil
+    var routesX: Seq[RouteX] = Nil
+    var cells: Array[Cell] = Array.empty
+    val imp = scala.collection.mutable.Map.empty[Int, Double].withDefaultValue(0.0)
+  }
+
+  /** Grow `ms` over `data` (attributes, class column and whatever
+    * `multiplicity`/`mass` read): each model with its gain importance.
+    * `router` assigns a row its open-rule index (−1: none); only specs
+    * swap in another one. */
+  def grow(data: DataFrame, schema: C45Schema, params: C45Params, ms: Models,
+           router: (Vector[Rule], C45Schema) => Column = C45.frontierRidColumn)
+      : IndexedSeq[(C45Model, Map[Int, Double])] = {
+    val spark = data.sparkSession
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val names = schema.attrNames
+    val fanOut = ms.probe.fractional
+    val unit = if (ms.micros) 1e6 else 1.0
+    val st = Vector.fill(ms.k)(new State)
+    val dirty = anyNull(schema)
+
+    // `rows` tagged with each active model's (__model, __rid, __m),
+    // keeping only the copies that reach an open rule and train it
+    def routed(rows: DataFrame, active: Seq[Int]): DataFrame = {
+      val tagged =
+        if (ms.k == 1) rows.withColumn("__model", lit(0))
+          .withColumn("__rid", router(st(0).open, schema))
+          .withColumn("__m", ms.multiplicity(0))
+        else rows.select(col("*"), explode(map(active.flatMap(m =>
+            Seq(lit(m), router(st(m).open, schema))): _*)).as(Seq("__model", "__rid")))
+          .withColumn("__m", element_at(array((0 until ms.k).map(ms.multiplicity): _*),
+            col("__model") + 1))
+      tagged.filter(col("__rid") >= 0 && col("__m") > 0)
+        .withColumn("__cls", col(schema.classCol).cast("string"))
+    }
+
+    // the (model, rid) → (attribute, value) map a level explodes
+    def attrPairs(level: Int, active: Seq[Int]): Column = {
+      def pairs(m: Int, live: Int => Boolean): Column = map(Seq(lit(-1), col("__cls")) ++
+        (if (level == params.maxDepth) Nil else schema.attrs.zipWithIndex.flatMap {
+          case (a, aid) if live(aid) =>
+            val raw = col(a.name).cast("double")
+            Seq(lit(aid), if (!a.isNumeric) col(a.name).cast("string")
+              else ms.probe.edges(m).get(aid).fold(raw)(SortedCeilSnap.snapTo(_, raw)).cast("string"))
+          case _ => Nil
+        }): _*)
+      def byKey(key: String, cases: Seq[(Int, Column)]): Column =
+        if (cases.size == 1) cases.head._2
+        else cases.tail.foldLeft(when(col(key) === cases.head._1, cases.head._2)) {
+          case (acc, (v, c)) => acc.when(col(key) === v, c) }
+      byKey("__model", active.map { m =>
+        val open = st(m).open
+        m -> (ms.sample match {
+          case None =>
+            val dead = open.map(_.usedAttrs).reduce(_ intersect _)
+            pairs(m, aid => ms.subspace(m)(aid) && !dead(aid))
+          case Some(draw) =>
+            // per-node sampling: one map per open rule, keyed on __rid
+            byKey("__rid", open.zipWithIndex.map { case (r, rid) =>
+              rid -> pairs(m, draw(m, level, rid,
+                names.indices.filter(aid => ms.subspace(m)(aid) && !r.usedAttrs(aid))))
+            })
+        })
+      })
+    }
+
+    var chain: DataFrame = null
+    var held: Option[DataFrame] = None
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    // this level's chain of null-bearing copies (see the scaladoc)
+    def nextChain(level: Int, active: Seq[Int]): DataFrame = {
+      val c =
+        if (level == 0)
+          routed(data.filter(dirty), active).select(Seq(col("__model"), col("__rid"),
+            ms.mass.as("__w"), col("__m"), col("__cls")) ++ names.map(col): _*)
+        else {
+          val xr = active.flatMap(m => st(m).routesX.map(x =>
+            (m, x.prid, x.kind, x.aid, x.boundary, x.side, x.catval, x.crid, x.frac)))
+          val edges = xr.toDF("__pmodel", "__prid", "__kind", "__aid", "__boundary",
+            "__side", "__catval", "__crid", "__frac")
+          val routeAids = xr.map(_._4).toSet
+          val deadAll = active.map(m => st(m).open.map(_.usedAttrs).reduce(_ intersect _))
+            .reduce(_ intersect _)
+          chain.join(broadcast(edges),
+              chain("__model") === edges("__pmodel") && chain("__rid") === edges("__prid"))
+            .withColumn("__wN", routeXWeight(schema.attrs.filter(a =>
+              routeAids(schema.attrIndex(a.name))), schema))
+            .filter(col("__wN").isNotNull && col("__wN") > 0)
+            .drop("__rid", "__w", "__pmodel", "__prid", "__kind", "__aid",
+              "__boundary", "__side", "__catval", "__frac")
+            .withColumnRenamed("__crid", "__rid")
+            .withColumnRenamed("__wN", "__w")
+            // attributes no open path of any model can split on again
+            .drop(names.filter(n => deadAll(schema.attrIndex(n))): _*)
+        }
+      if (level >= 1 && level < params.maxDepth) {
+        val p = persistUncompressed(c); persisted += p; p
+      } else c
+    }
+
+    def histogram(level: Int, active: Seq[Int]): Map[Int, Array[Cell]] = {
+      val pairs = attrPairs(level, active)
+      def exploded(rows: DataFrame, weight: Column): DataFrame =
+        rows.select(col("__model"), col("__rid"), col("__cls").as("cls"), weight.as("__w"),
+          explode(pairs).as(Seq("aid", "val")))
+      val clean = exploded(routed(if (fanOut) data.filter(!dirty) else data, active),
+        ms.mass * col("__m"))
+      val next = if (fanOut) nextChain(level, active) else null
+      val rows = if (!fanOut) clean
+        else exploded(next, col("__w") * col("__m")).unionByName(clean)
+      val prevDesc = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"graft.${ms.caller} level=$level models=${active.size} histogram")
+      val collected =
+        try rows.filter(col("val").isNotNull)
+          .groupBy("__model", "__rid", "aid", "val", "cls")
+          .agg(sum(col("__w")).as("cnt"))
+          .collect()
+        finally sc.setJobDescription(prevDesc)
+      if (fanOut) {
+        held.foreach(_.unpersist())
+        held = if (level >= 1 && level < params.maxDepth) Some(next) else None
+        chain = next
+      }
+      collected.groupBy(_.getInt(0)).view.mapValues(_.map(r =>
+        (r.getInt(1), r.getInt(2), r.getString(3), r.getString(4), r.getLong(5)))).toMap
+    }
+
+    var level = 0
+    try {
+      while (st.exists(_.open.nonEmpty) && level <= params.maxDepth) {
+        val t0 = System.nanoTime()
+        val active = st.indices.filter(st(_).open.nonEmpty)
+        // at maxDepth every open rule closes on its class marginal,
+        // which the parent's cells give exactly unless rows fan out
+        val derive = !fanOut && level == params.maxDepth && level > 0
+        val cells = if (derive) Map.empty[Int, Array[Cell]] else histogram(level, active)
+        active.foreach { m =>
+          val s = st(m)
+          val labels = ms.probe.labels(m)
+          val stats =
+            if (derive) C45.LevelStats(C45.deriveFinalCounts(s.cells, s.routes),
+              Map.empty, Map.empty, Map.empty)
+            else C45.levelStats(cells.getOrElse(m, Array.empty), schema, labels,
+              ms.micros, unit, params)
+          val d = C45.decideLevel(s.open, level, stats, schema, params, labels,
+            ms.micros, unit, s.majority)
+          s.closed ++= d.closedAdd
+          d.importanceAdd.foreach { case (a, v) => s.imp(a) += v }
+          s.majority = d.globalMajority
+          s.open = d.nextOpen
+          s.routes = d.routes
+          s.routesX = d.routesX
+          s.cells = cells.getOrElse(m, Array.empty)
+        }
+        if (profile)
+          println(f"[${ms.caller}] level=$level models=${active.size} " +
+            (if (derive) "derived (no job)"
+            else f"cells=${cells.values.map(_.length).sum} ${(System.nanoTime() - t0) / 1e9}%.2fs"))
+        level += 1
+      }
+    } finally persisted.foreach(_.unpersist())
+    st.indices.map { m =>
+      val s = st(m)
+      val labels = ms.probe.labels(m)
+      val majority = s.majority.getOrElse(labels.head)
+      // maxDepth exhaustion: survivors close as majority leaves (#4)
+      val (leaves, mass, dist) = (s.closed ++
+        s.open.map(r => (r.closed(majority), 0L, Map.empty[String, Long]))).unzip3
+      (C45Model(schema.copy(classLabels = labels), leaves, majority, mass, dist), s.imp.toMap)
+    }
+  }
+
+  /** Persist without columnar compression: a chain level lives for
+    * exactly one level and is scanned twice (its histogram, the next
+    * level's join), so dictionary/RLE encoding costs more CPU than the
+    * memory it saves. The conf is snapshotted at persist time, so the
+    * temporary set cannot leak to other caches. */
+  private def persistUncompressed(df: DataFrame): DataFrame = {
+    val s = df.sparkSession
+    val key = "spark.sql.inMemoryColumnarStorage.compressed"
+    val old = s.conf.get(key)
+    s.conf.set(key, "false")
+    try df.persist(StorageLevel.MEMORY_AND_DISK)
+    finally s.conf.set(key, old)
+  }
+
+  /** A chain copy's mass on the edge it joined (columns __w, __frac,
+    * __kind, __aid, __boundary, __side, __catval and the row's
+    * `routeAttrs` values): full mass where the value selects this
+    * child, `floor(mass × frac + 0.5)` on EVERY child where it is
+    * null, null (the copy leaves) otherwise. */
+  private def routeXWeight(routeAttrs: Seq[graft.meta.AttrMeta], schema: C45Schema): Column = {
+    val fracW = floor(col("__w") * col("__frac") + lit(0.5)).cast("long")
+    def value(numeric: Boolean): Column = element_at(map(routeAttrs.filter(_.isNumeric == numeric)
+      .flatMap(a => Seq(lit(schema.attrIndex(a.name)),
+        col(a.name).cast(if (numeric) "double" else "string"))): _*), col("__aid"))
+    val num = value(numeric = true)
+    val cat = value(numeric = false)
+    val branches = Seq(
+      routeAttrs.exists(_.isNumeric) -> ("num", when(col("__side") === "le" && num <= col("__boundary"), col("__w"))
+        .when(col("__side") === "gt" && num > col("__boundary"), col("__w"))
+        .when(num.isNull, fracW)),
+      routeAttrs.exists(!_.isNumeric) -> ("cat", when(cat === col("__catval"), col("__w"))
+        .when(cat.isNull, fracW))).collect { case (true, b) => b }
+    if (branches.isEmpty) lit(null)
+    else branches.tail.foldLeft(when(col("__kind") === branches.head._1, branches.head._2)) {
+      case (acc, (kind, b)) => acc.when(col("__kind") === kind, b)
+    }
+  }
+}

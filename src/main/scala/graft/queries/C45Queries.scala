@@ -1360,7 +1360,7 @@ object C45Queries {
   //      the label computed from the ORIGINAL columns) trained with
   //      q_forest's 5-tree rotating-subspace bootstrap. Null-bearing
   //      rows ride the tree-tagged RouteX chain at per-copy micros ×
-  //      multiplicity (C45Forest scaladoc), so every tree is
+  //      multiplicity (LevelLoop scaladoc), so every tree is
   //      bit-identical to a sequential fractional fit on its replicated
   //      bootstrap sample (C45ForestSpec pins the property; this query
   //      gates it end to end). Oracle: VALUES pin of the committed
@@ -2002,7 +2002,7 @@ object C45Queries {
   //      class is stamped from the ORIGINAL value, so each weak fit
   //      must recover the planted XOR from the 75% known mass while
   //      null rows descend every split at boost-micros × known-share
-  //      (C45Boost scaladoc: the per-round RouteX chain carries the
+  //      (LevelLoop scaladoc: each round's RouteX chain carries the
   //      BOOST weight as its starting mass). The per-round error/
   //      reweight pass stays on deterministic hard routing, the same
   //      eval contract as q_crossval_missing. Oracle: VALUES pin of

@@ -322,11 +322,7 @@ class DeepFrontierSpec extends AnyFunSuite {
 object DeepFrontierSpec {
 
   /** The same fit routed by the flat first-match CASE WHEN
-    * ([[C45.flatRidColumn]]): the fused fold fit at k = 1, with every
-    * row stamped into the one fit's training side. */
-  def flatFit(df: DataFrame, schema: C45Schema, params: C45Params): C45Model = {
-    val stamped = df.withColumn("__fold", lit(-1)).persist()
-    try C45.fitFolds(stamped, "__fold", 1, schema, params).head
-    finally stamped.unpersist()
-  }
+    * ([[C45.flatRidColumn]]) instead of the tree walk. */
+  def flatFit(df: DataFrame, schema: C45Schema, params: C45Params): C45Model =
+    C45.fitRouted(df, schema, params, (open, s) => C45.flatRidColumn(open, s.attrNames))._1
 }

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkTestSession
 import graft.meta.{AttrMeta, C45Schema}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A fit that throws part-way releases everything it persisted: the
@@ -24,11 +25,15 @@ class FitFailureSpec extends AnyFunSuite {
     Seq(AttrMeta("color", isNumeric = false), AttrMeta("size", isNumeric = true)),
     "cls", Seq("a", "b"))
 
-  /** `schema` with a lookup that counts its calls and, past `budget`
+  // `schema` plus `noise`, which tracks the label noise, so fractional
+  // trees still have a live attribute to split on at level 2
+  private val deepSchema = schema.copy(attrs = schema.attrs :+ AttrMeta("noise", isNumeric = true))
+
+  /** `base` with a lookup that counts its calls and, past `budget`
     * (none when negative), runs `onFail` and throws. */
-  private def injecting(budget: Int, calls: AtomicInteger,
-                        onFail: () => Unit = () => ()): C45Schema =
-    new C45Schema(schema.attrs, schema.classCol, schema.classLabels) {
+  private def injecting(budget: Int, calls: AtomicInteger, onFail: () => Unit = () => (),
+                        base: C45Schema = schema): C45Schema =
+    new C45Schema(base.attrs, base.classCol, base.classLabels) {
       override def isNumericAttr(i: Int): Boolean = {
         if (calls.incrementAndGet() > budget && budget >= 0) { onFail(); throw new Injected }
         super.isNumericAttr(i)
@@ -36,8 +41,10 @@ class FitFailureSpec extends AnyFunSuite {
     }
 
   // size splits at 9, color below it; a third of the rows are noise,
-  // so boosting keeps going past its first round
-  private def trainDf(): DataFrame = {
+  // so boosting keeps going past its first round. With `nulls`, some
+  // colors and sizes are null, so fractional fits fan those rows out
+  // through a persisted chain; `k` keys the bootstrap and the folds.
+  private def trainDf(nulls: Boolean = false): DataFrame = {
     val s = spark
     import s.implicits._
     (for (i <- 0 until 400) yield {
@@ -46,22 +53,25 @@ class FitFailureSpec extends AnyFunSuite {
       val cls =
         if (size <= 9) { if (color == "red" || i % 3 != 0) "a" else "b" }
         else { if (color == "blue" || i % 3 != 0) "b" else "a" }
-      (color, size, cls)
-    }).toDF("color", "size", "cls")
+      (if (nulls && i % 11 == 0) null else color,
+        if (nulls && i % 13 == 0) None else Some(size), (i % 3).toDouble, cls, i.toString)
+    }).toDF("color", "size", "noise", "cls", "k")
   }
 
   /** Runs `shallow` to learn its lookup count, then `deep` with that
-    * budget, and checks the persisted-RDD set: above its baseline
-    * when the failure strikes, back at it afterwards. */
-  private def releasesOnFailure(shallow: C45Schema => Any, deep: C45Schema => Any): Unit = {
+    * budget, and checks the persisted-RDD set: at least `held` above
+    * its baseline when the failure strikes, back at it afterwards. */
+  private def releasesOnFailure(shallow: C45Schema => Any, deep: C45Schema => Any,
+                                held: Int = 1, base: C45Schema = schema): Unit = {
     val sc = spark.sparkContext
     val spent = new AtomicInteger
-    shallow(injecting(-1, spent))
+    shallow(injecting(-1, spent, base = base))
     val baseline = sc.getPersistentRDDs.size
     var live = -1
     intercept[Injected](deep(injecting(spent.get, new AtomicInteger,
-      () => live = sc.getPersistentRDDs.size)))
-    assert(live > baseline, s"the failure must strike while the fit holds a cache ($live, $baseline)")
+      () => live = sc.getPersistentRDDs.size, base)))
+    assert(live >= baseline + held,
+      s"the failure must strike while the fit holds $held caches ($live, $baseline)")
     assert(sc.getPersistentRDDs.size == baseline,
       s"persisted RDDs leaked: $baseline before, ${sc.getPersistentRDDs.size} after")
   }
@@ -81,5 +91,27 @@ class FitFailureSpec extends AnyFunSuite {
     // the deep run throws in round 1's first level, after its histogram
     // job materialized the reweighted cache over round 0's
     releasesOnFailure(boost(1), boost(3))
+  }
+
+  test("C45Forest.fit releases its training cache and fan-out chain when a " +
+      "fractional level throws") {
+    val df = trainDf(nulls = true)
+    def forest(depth: Int)(s: C45Schema) =
+      C45Forest.fit(df, s, col("k"), C45ForestParams(nTrees = 2, seed = 3,
+        base = C45Params(maxDepth = depth, maxBins = 0, missingMode = "fractional")))
+    // the deep run throws after level 2's histogram job, holding the
+    // training cache and level 2's persisted chain
+    releasesOnFailure(forest(2), forest(3), held = 2, deepSchema)
+  }
+
+  test("C45CrossVal.crossValidate releases its fold cache and fan-out chain " +
+      "when a fractional level throws") {
+    val df = trainDf(nulls = true)
+    def cv(depth: Int)(s: C45Schema) =
+      C45CrossVal.crossValidate(df, s,
+        C45Params(maxDepth = depth, maxBins = 0, missingMode = "fractional"), col("k"), 3)
+    // the deep run throws after level 1's histogram job, holding the
+    // fold-stamped cache and level 1's persisted chain
+    releasesOnFailure(cv(1), cv(2), held = 2)
   }
 }
