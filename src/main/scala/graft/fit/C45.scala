@@ -65,22 +65,29 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * reaching no leaf (an attribute value unseen in training, or a null
     * along the path) fall back to the global majority class.
     *
-    * Two plans. Up to `routeThreshold` leaves, one flat first-match
-    * CASE WHEN over the full root-to-leaf conjunctions — codegen-
-    * friendly while short. A WIDER model would blow past whole-stage-
-    * codegen limits and re-test depth-long conjunction prefixes once
-    * per rule, so it instead walks the tree inside one
-    * [[graft.functions.TreeLeaf]] expression (a constant-size loop over
-    * the flattened node arrays: no join, no shuffle, no extra job) and
-    * looks the label up in a literal array by leaf index. Falls back
-    * to the CASE WHEN when the leaf set has no tree form (rule sets
-    * generalized by [[C45RuleSimplify]] overlap, and first-match order
-    * is then semantic). */
-  def transform(df: DataFrame, outputCol: String = "prediction",
-                routeThreshold: Int = 64): DataFrame =
-    if (leaves.size > routeThreshold)
-      routedTransform(df, outputCol).getOrElse(flatTransform(df, outputCol))
-    else flatTransform(df, outputCol)
+    * The leaf count picks one of two plans. Up to
+    * [[C45Model.FlatMaxLeaves]] leaves, one flat first-match CASE WHEN
+    * over the full root-to-leaf conjunctions: codegen-friendly while
+    * short, and measurably faster than the walk there. A WIDER model
+    * would blow past whole-stage-codegen limits and re-test depth-long
+    * conjunction prefixes once per rule, so it instead walks the tree
+    * inside one [[graft.functions.TreeLeaf]] expression (a
+    * constant-size loop over the flattened node arrays: no join, no
+    * shuffle, no extra job) and looks the label up in a literal array
+    * by leaf index. Falls back to the CASE WHEN when the leaf set has
+    * no tree form (rule sets generalized by [[C45RuleSimplify]]
+    * overlap, and first-match order is then semantic). */
+  def transform(df: DataFrame, outputCol: String = "prediction"): DataFrame =
+    transformVia(df, outputCol, wide)
+
+  /** [[transform]] through the tree walk (`walk`, when the leaves have
+    * a tree form) or the flat CASE WHEN, whatever the leaf count:
+    * specs compare the two plans. */
+  private[fit] def transformVia(df: DataFrame, outputCol: String, walk: Boolean): DataFrame =
+    (if (walk) routedTransform(df, outputCol) else None).getOrElse(flatTransform(df, outputCol))
+
+  /** More leaves than the flat plans serve. */
+  private def wide: Boolean = leaves.size > C45Model.FlatMaxLeaves
 
   private def flatTransform(df: DataFrame, outputCol: String): DataFrame = {
     val names = schema.attrNames
@@ -111,19 +118,23 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
 
   /** The leaf index each row reaches through the tree (−1 for a null
     * or unseen value along its path), as one [[graft.functions.TreeLeaf]]
-    * expression: numeric split attributes cast to double, categorical
-    * ones to string, so the walk compares exactly as
-    * [[graft.model.Rule.toPredicate]] does. None when the leaves have
-    * no tree form. */
-  private[fit] def treeLeafColumn: Option[Column] = treeStructure().map { _ =>
-    // one input per (attribute, split kind), in first-use order
-    val slots = scala.collection.mutable.LinkedHashMap.empty[(Int, Boolean), Int]
-    val tree = C45.treeNodes(leaves.map(_.conditions), (aid, split) =>
-      slots.getOrElseUpdate((aid, !split.isInstanceOf[CatEq]), slots.size))
-    val names = schema.attrNames
-    TreeLeaf.column(slots.keys.toSeq.map { case (aid, numeric) =>
-      col(names(aid)).cast(if (numeric) "double" else "string") }, tree)
-  }
+    * expression. None when the leaves have no tree form. */
+  private[fit] def treeLeafColumn: Option[Column] =
+    if (!treeForm) None else Some(TreeLeaf.column(walkInputs, walkTree))
+
+  /** The walk's inputs, one per (attribute, split kind) in first-use
+    * order: numeric split attributes cast to double, categorical ones
+    * to string, so the walk compares exactly as
+    * [[graft.model.Rule.toPredicate]] does. */
+  private lazy val slots: Seq[(Int, Boolean)] =
+    leaves.flatMap(_.conditions.map { case (aid, s) => (aid, !s.isInstanceOf[CatEq]) }).distinct
+
+  private def walkInputs: Seq[Column] = slots.map { case (aid, numeric) =>
+    col(schema.attrNames(aid)).cast(if (numeric) "double" else "string") }
+
+  /** The leaves' paths flattened into node arrays; leaf i outputs i. */
+  private def walkTree: TreeLeaf.Nodes =
+    C45.treeNodes(leaves.map(_.conditions), (aid, s) => slots.indexOf((aid, !s.isInstanceOf[CatEq])))
 
   /** The class set [[transformProba]] emits columns for, in its column
     * order (sorted strings): every class observed in a leaf
@@ -142,19 +153,22 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * unseen value on the path) and zero-mass leaves take the majority
     * class at 10⁶. Output: `outputCol` (the [[transform]] label) plus
     * one `<probPrefix><class>` micros column per class label, classes
-    * sorted. The leaf index comes from the same two plans as
-    * transform — a flat first-match CASE WHEN while the model is
-    * narrow, the [[treeLeafColumn]] tree walk past `routeThreshold`
-    * leaves (generalized rule sets have no tree form and always take
-    * the order-aware flat path) — and the label and every class's
-    * micros are literal-array lookups on it. Fit-produced, pruned,
-    * simplified ([[C45RuleSimplify]], first-match distributions), and
-    * sidecar-loaded ([[C45Model.load]]) models carry the
-    * distributions; only rule-text-only loads ([[C45Model.loadRules]])
-    * do not. */
+    * sorted. The leaf index comes from [[transform]]'s two plans,
+    * picked the same way — a flat first-match CASE WHEN up to
+    * [[C45Model.FlatMaxLeaves]] leaves or without a tree form, the
+    * [[treeLeafColumn]] tree walk beyond — and the label and every
+    * class's micros are literal-array lookups on it. Fit-produced,
+    * pruned, simplified ([[C45RuleSimplify]], first-match
+    * distributions), and sidecar-loaded ([[C45Model.load]]) models
+    * carry the distributions; only rule-text-only loads
+    * ([[C45Model.loadRules]]) do not. */
   def transformProba(df: DataFrame, outputCol: String = "prediction",
-                     probPrefix: String = "p_",
-                     routeThreshold: Int = 64): DataFrame = {
+                     probPrefix: String = "p_"): DataFrame =
+    transformProbaVia(df, outputCol, probPrefix, wide)
+
+  /** [[transformProba]] with the plan forced, as [[transformVia]]. */
+  private[fit] def transformProbaVia(df: DataFrame, outputCol: String, probPrefix: String,
+                                     walk: Boolean): DataFrame = {
     require(leafDist.size == leaves.size && leaves.nonEmpty,
       "transformProba needs per-leaf class distributions: fit/prune/" +
         "simplify/C45Model.load produce them (loadRules text-only " +
@@ -174,7 +188,7 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     val majorityMicros = classes.map(c => if (c == majority) 1000000L else 0L)
     // first-match order preserved on the flat path (required for
     // overlapping generalized rule sets)
-    val leafIdx = (if (leaves.size > routeThreshold) treeLeafColumn else None)
+    val leafIdx = (if (walk) treeLeafColumn else None)
       .getOrElse(C45.flatRidColumn(leaves, schema.attrNames))
     val leaf = col("__leaf")
     df.withColumn("__leaf", leafIdx)
@@ -190,63 +204,29 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * semantic. Drives the semantics switches in [[transformFractional]]
     * (C4.5rules unknown-fails scoring) and [[C45Pruning]] (rejects:
     * subtree replacement needs a partition). */
-  private[fit] def overlapping: Boolean =
-    leaves.size > 1 && treeStructure().isEmpty
+  private[fit] def overlapping: Boolean = leaves.size > 1 && !treeForm
 
-  /** Reconstruct the tree from the leaf rules' condition prefixes:
-    * node ids for every distinct path prefix (assigned level-wise in
-    * first-appearance order — deterministic, leaves is an ordered
-    * Vector) plus one Route row set per level (internal splits + leaf
-    * self-loops, so the fractional level-walk is one linear join
-    * chain; [[treeLeafColumn]] flattens the same rows). None when
-    * the leaf set has no tree form: a single root leaf, duplicate
-    * leaves, a leaf prefix extended further (overlapping generalized
-    * rules), or a node whose children mix attributes/boundaries. */
-  private def treeStructure(): Option[
-      (scala.collection.mutable.LinkedHashMap[Vector[(Int, Split)], Int],
-       Seq[Seq[Route]])] = {
-    val leafConds = leaves.map(_.conditions)
-    if (leafConds.isEmpty || leaves.exists(_.label.isEmpty)) return None
-    val leafSet = leafConds.toSet
-    if (leafSet.size != leafConds.size) return None // duplicate leaves: order matters
-    val maxD = leafConds.map(_.length).max
-    if (maxD == 0) return None // single root leaf — the flat literal is ideal
-    val nid = scala.collection.mutable.LinkedHashMap[Vector[(Int, Split)], Int]()
-    (0 to maxD).foreach { d =>
-      leafConds.foreach { c =>
-        if (c.length >= d) { val p = c.take(d); if (!nid.contains(p)) nid(p) = nid.size }
+  /** Whether the leaf rules' condition prefixes form a tree: every
+    * distinct path prefix is a leaf or an internal node, and an
+    * internal node's children split on one attribute, either `<= b`
+    * and `> b` on one boundary or equality on distinct categories.
+    * False for a single root leaf, duplicate leaves, a leaf prefix
+    * extended further (overlapping generalized rules), a lone child
+    * and mixed sibling splits. The tree walks
+    * ([[treeLeafColumn]], [[fractionalVotes]]) flatten such a tree. */
+  private lazy val treeForm: Boolean = {
+    val paths = leaves.map(_.conditions)
+    val leafSet = paths.toSet
+    val children = paths.flatMap(p => (1 to p.length).map(p.take)).distinct.groupBy(_.init)
+    leaves.nonEmpty && leaves.forall(_.label.nonEmpty) && leafSet.size == paths.size &&
+      paths.exists(_.nonEmpty) && !leafSet.exists(children.contains) &&
+      children.values.forall { kids =>
+        kids.map(_.last._1).distinct.size == 1 && (kids.map(_.last._2) match {
+          case Seq(NumLE(a), NumGT(b)) => a == b
+          case Seq(NumGT(b), NumLE(a)) => a == b
+          case splits => splits.forall(_.isInstanceOf[CatEq])
+        })
       }
-    }
-    // a prefix that is both a leaf and extended further = overlap
-    val extendedPrefixes = nid.keys.filter(_.nonEmpty).map(_.init).toSet
-    if (leafSet.exists(extendedPrefixes.contains)) return None
-    val prefixes = nid.keys.toSeq
-    val levels: Seq[Seq[Route]] =
-      (0 until maxD).map { d =>
-        val internal = prefixes.filter(p => p.length == d && !leafSet.contains(p))
-        val routeRows = internal.map { p =>
-          val added = prefixes.filter(q => q.length == d + 1 && q.init == p).map(_.last)
-          val le = added.collect { case (a, NumLE(b)) => (a, b) }
-          val gt = added.collect { case (a, NumGT(b)) => (a, b) }
-          val cat = added.collect { case (a, CatEq(v)) => (a, v) }
-          (le, gt, cat) match {
-            case (Seq((a1, b1)), Seq((a2, b2)), Seq()) if a1 == a2 && b1 == b2 =>
-              Route(nid(p), "num", a1, b1,
-                nid(p :+ (a1 -> NumLE(b1))), nid(p :+ (a1 -> NumGT(b1))), Map.empty)
-            case (Seq(), Seq(), vs) if vs.nonEmpty &&
-              vs.map(_._1).distinct.size == 1 && vs.map(_._2).distinct.size == vs.size =>
-              val a = vs.head._1
-              Route(nid(p), "cat", a, 0.0, -1, -1,
-                vs.map { case (ai, v) => v -> nid(p :+ (ai -> CatEq(v))) }.toMap)
-            case _ => return None // not a clean single-attribute split
-          }
-        }
-        val leafLoops = prefixes
-          .filter(p => p.length <= d && leafSet.contains(p))
-          .map(p => Route(nid(p), "leaf", -1, 0.0, nid(p), nid(p), Map.empty))
-        routeRows ++ leafLoops
-      }
-    Some((nid, levels))
   }
 
   /** Score rows that may carry NULL attribute values with Quinlan's
@@ -261,14 +241,10 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * global majority). Rows with no nulls get exactly [[transform]]'s
     * answer: every factor is 0 or 1 and one leaf carries weight 1.
     *
-    * Two plans, mirroring [[transform]]: up to `routeThreshold` leaves,
-    * one flat map-only expression (per leaf a product of per-condition
-    * factors, per class a fixed-order sum — zero shuffles, fully
-    * codegen'd). Wider models level-walk through broadcast edge joins
-    * with the weight fanning out exactly as the fit's fractional
-    * routing does (weights ride as exact long micros so the per-row
-    * per-class sums are order-independent), then ONE hash aggregation
-    * by row id and a join back to the input. Fit-produced, pruned
+    * One plan at any width: the per-class votes come from one
+    * [[graft.functions.TreeVote]] expression ([[fractionalVotes]]), a
+    * walk over the same node arrays [[transform]]'s wide plan uses,
+    * then the argmax. No join, no shuffle. Fit-produced, pruned
     * (which keep the merged leaf distributions), simplified, and
     * sidecar-loaded ([[C45Model.load]]) models carry the masses;
     * rule-text-only loads do not and must use [[transform]].
@@ -278,23 +254,54 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * unknown-FAILS first-match (a test on a null value is unsatisfied
     * — Quinlan 1993, ch. 5), which is exactly [[transform]]'s
     * semantics, so such models delegate there. */
-  def transformFractional(df: DataFrame, outputCol: String = "prediction",
-                          routeThreshold: Int = 64): DataFrame = {
+  def transformFractional(df: DataFrame, outputCol: String = "prediction"): DataFrame = {
     require(leafMass.size == leaves.size && leaves.nonEmpty,
       "transformFractional needs per-leaf training masses: fit/prune/" +
         "simplify/C45Model.load produce them (loadRules text-only " +
         "loads do not — use transform)")
     require(leaves.forall(_.label.nonEmpty), "model has open rules")
-    if (overlapping) return transform(df, outputCol, routeThreshold)
-    val classes = leaves.flatMap(_.label).distinct.sorted
-    if (leaves.size <= routeThreshold) flatFractional(df, outputCol, classes)
-    else routedFractional(df, outputCol, classes)
-      .getOrElse(flatFractional(df, outputCol, classes))
+    if (overlapping) transform(df, outputCol)
+    else df.withColumn("__c45_votes", fractionalVotes)
+      .withColumn(outputCol, argmaxPred(fractionalClasses.zipWithIndex.map { case (c, i) =>
+        c -> col("__c45_votes").getItem(i) }))
+      .drop("__c45_votes")
+  }
+
+  /** The classes [[fractionalVotes]] votes for, in its order. */
+  private[fit] def fractionalClasses: Seq[String] = leaves.flatMap(_.label).distinct.sorted
+
+  /** Each row's per-class fractional vote ([[fractionalClasses]]
+    * order) as one [[graft.functions.TreeVote]] array column. A node's
+    * share is `mass(p) / mass(p.init)` over [[prefixMass]] (0.0 under
+    * a zero-mass parent), so the walk multiplies and sums exactly as
+    * a per-leaf product of per-condition factors, summed per class in
+    * leaf order, would. Needs a tree form or a single leaf
+    * ([[overlapping]] models have no tree to descend). */
+  private[fit] def fractionalVotes: Column = {
+    val tree = walkTree
+    val mass = prefixMass
+    val share = new Array[Double](tree.kind.length)
+    leaves.foreach { r =>
+      r.conditions.indices.foldLeft(0) { (node, d) =>
+        val child = r.conditions(d)._2 match {
+          case NumLE(_) => tree.left(node)
+          case NumGT(_) => tree.right(node)
+          case CatEq(v) => tree.cats(node).get(UTF8String.fromString(v)).intValue
+        }
+        val p = r.conditions.take(d + 1)
+        val pm = mass(p.init).toDouble
+        share(child) = if (pm > 0) mass(p) / pm else 0.0
+        child
+      }
+    }
+    val classes = fractionalClasses
+    TreeLeaf.voteColumn(walkInputs, new TreeLeaf.Vote(tree, share,
+      leaves.map(r => classes.indexOf(r.label.get)).toArray, classes.size))
   }
 
   /** Training mass of every distinct path prefix (micros): the
     * denominator/numerator pool for the per-edge fractions. */
-  private def prefixMass: Map[Vector[(Int, Split)], Long] = {
+  private[fit] def prefixMass: Map[Vector[(Int, Split)], Long] = {
     val m = scala.collection.mutable.Map.empty[Vector[(Int, Split)], Long]
     leaves.zip(leafMass).foreach { case (r, w) =>
       (0 to r.conditions.length).foreach { d =>
@@ -308,7 +315,7 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * (weight, -classIndex, label) structs — ties go to the smaller
     * index, i.e. the lexicographically smallest class — then the
     * all-zero fallback to majority. */
-  private def argmaxPred(byClass: Seq[(String, Column)]): Column =
+  private[fit] def argmaxPred(byClass: Seq[(String, Column)]): Column =
     if (byClass.size == 1)
       when(byClass.head._2 > 0, lit(byClass.head._1)).otherwise(lit(majority))
     else {
@@ -316,158 +323,6 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
         struct(w.as("w"), lit(-i).as("r"), lit(c).as("c")) }: _*)
       when(best.getField("w") > 0, best.getField("c")).otherwise(lit(majority))
     }
-
-  /** Flat fractional scoring as a STAGED TRIE WALK: one projection
-    * per tree level, each adding the level's node-weight columns as
-    * `w(child) = w(parent) × edge-factor` — every shared path prefix
-    * is computed ONCE and referenced by name, instead of inlining the
-    * full root-to-leaf product per leaf. The naive per-leaf form
-    * repeats every shared prefix across leaves AND classes
-    * (O(leaves × depth × classes) subexpressions); on a 5-member
-    * forest that expression fell out of whole-stage codegen entirely
-    * (zero codegen spans, interpreted eval — 24s for 600k rows at
-    * sf0.1, vs ~3s staged). CollapseProject keeps the stages separate
-    * because the node columns are referenced more than once (children
-    * + class sums), so each weight is evaluated exactly once per row
-    * inside codegen. Numerically BIT-IDENTICAL to the per-leaf fold:
-    * the staged products associate left-to-right exactly like
-    * `foldLeft(1.0)(_ * _)` (and `1.0 × f = f` exactly in IEEE), and
-    * the class sums keep the same leaf order. */
-  private def flatFractional(df: DataFrame, outputCol: String,
-                             classes: Seq[String]): DataFrame = {
-    val names = schema.attrNames
-    val mass = prefixMass
-    // all distinct non-empty prefixes, shallow→deep, stable order
-    val prefixes: Vector[Vector[(Int, Split)]] = leaves
-      .flatMap(r => (1 to r.conditions.length).map(r.conditions.take))
-      .distinct
-    val colOf: Map[Vector[(Int, Split)], String] =
-      prefixes.zipWithIndex.map { case (p, i) => p -> s"__c45f_w$i" }.toMap
-    def factor(p: Vector[(Int, Split)]): Column = {
-      val (aid, s) = p.last
-      // a zero-mass parent (possible only through zero-mass leaves,
-      // e.g. maxDepth-exhausted ones) contributes nothing: frac 0,
-      // never 0/0
-      val denom = mass(p.init).toDouble
-      val frac = if (denom > 0) mass(p) / denom else 0.0
-      val a = col(names(aid))
-      when(a.isNull, lit(frac))
-        .otherwise(when(s.toPredicate(a), lit(1.0)).otherwise(lit(0.0)))
-    }
-    val byDepth = prefixes.groupBy(_.length).toSeq.sortBy(_._1)
-    val staged = byDepth.foldLeft(df) { case (d, (depth, ps)) =>
-      d.withColumns(ps.map { p =>
-        colOf(p) -> (if (depth == 1) factor(p)
-        else col(colOf(p.init)) * factor(p))
-      }.toMap)
-    }
-    def wLeaf(r: Rule): Column =
-      if (r.conditions.isEmpty) lit(1.0) else col(colOf(r.conditions))
-    val byClass = classes.map { c =>
-      c -> leaves.collect {
-        case r if r.label.contains(c) => wLeaf(r)
-      }.reduce(_ + _)
-    }
-    staged.withColumn(outputCol, argmaxPred(byClass))
-      .drop(prefixes.map(colOf): _*)
-  }
-
-  /** Wide-model fractional scoring: a level-walk with the fit's
-    * fractional fan-out — one
-    * broadcast edge join per level where a null split value multiplies
-    * the row into every child at `floor(w·frac + 0.5)` micros, leaves
-    * self-loop at full weight, and a known-but-unseen value drops the
-    * branch (that subtree's vote is zero, exactly as the flat factors
-    * give 0). One hash aggregation by row id collapses the fan-out to
-    * per-class long sums (order-independent), and a left join back to
-    * the input restores rows whose every branch died (→ majority).
-    * Row ids come from monotonically_increasing_id, which is
-    * deterministic for a deterministic source partitioning — both
-    * scans of `withId` in the self-join see identical ids. Returns
-    * None when the leaves don't form a proper tree (overlapping
-    * generalized rules) — such models carry no masses anyway. */
-  private def routedFractional(df: DataFrame, outputCol: String,
-                               classes: Seq[String]): Option[DataFrame] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val structure = treeStructure()
-    if (structure.isEmpty) return None
-    val (nid, levels) = structure.get
-    val mass = prefixMass
-    val nidMass: Map[Int, Long] = nid.map { case (p, i) => i -> mass(p) }.toMap
-    val edgeLevels: Seq[Seq[PredEdge]] = levels.map(_.flatMap { r =>
-      r.kind match {
-        case "leaf" => Seq(PredEdge(r.prid, "leaf", -1, 0.0, "", "", r.prid, 1.0))
-        case "num" =>
-          // zero-mass parents (see flatFractional): frac 0, never 0/0
-          val pm = nidMass(r.prid).toDouble
-          def fr(c: Int) = if (pm > 0) nidMass(c) / pm else 0.0
-          Seq(PredEdge(r.prid, "num", r.aid, r.boundary, "le", "", r.lrid,
-              fr(r.lrid)),
-            PredEdge(r.prid, "num", r.aid, r.boundary, "gt", "", r.rrid,
-              fr(r.rrid)))
-        case _ =>
-          val pm = nidMass(r.prid).toDouble
-          r.children.toSeq.sortBy(_._1).map { case (v, c) =>
-            PredEdge(r.prid, "cat", r.aid, 0.0, "", v, c,
-              if (pm > 0) nidMass(c) / pm else 0.0) }
-      }
-    })
-    val names = schema.attrNames
-    val withId = df.withColumn("__rowid", monotonically_increasing_id())
-    var cur = withId.select(
-      (col("__rowid") +: names.map(col)) :+
-        lit(1000000L).as("__w") :+ lit(nid(Vector.empty)).as("__nid"): _*)
-    edgeLevels.foreach { edges =>
-      val edgeDf = edges.toDF("__pnid", "__kind", "__aid", "__boundary",
-        "__side", "__catval", "__cnid", "__frac")
-      val routeAids = edges.filter(_.kind != "leaf").map(_.aid).toSet
-      val routeNum = schema.numericAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-      val routeCat = schema.categoricalAttrs.filter(a => routeAids(schema.attrIndex(a.name)))
-      val fracW = floor(col("__w") * col("__frac") + lit(0.5)).cast("long")
-      val leafBranch = when(col("__kind") === "leaf", col("__w"))
-      val withNum =
-        if (routeNum.isEmpty) leafBranch
-        else {
-          val numv = map(routeNum.flatMap(a =>
-            Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("double"))): _*)
-          val v = element_at(numv, col("__aid"))
-          leafBranch.when(col("__kind") === "num",
-            when(col("__side") === "le" && v <= col("__boundary"), col("__w"))
-              .when(col("__side") === "gt" && v > col("__boundary"), col("__w"))
-              .when(v.isNull, fracW))
-        }
-      val newW =
-        if (routeCat.isEmpty) withNum
-        else {
-          val catv = map(routeCat.flatMap(a =>
-            Seq(lit(schema.attrIndex(a.name)), col(a.name).cast("string"))): _*)
-          val cv = element_at(catv, col("__aid"))
-          withNum.when(col("__kind") === "cat",
-            when(cv === col("__catval"), col("__w")).when(cv.isNull, fracW))
-        }
-      cur = cur.join(broadcast(edgeDf), cur("__nid") === edgeDf("__pnid"))
-        .withColumn("__wN", newW)
-        .filter(col("__wN").isNotNull && col("__wN") > 0)
-        .drop("__nid", "__w", "__pnid", "__kind", "__aid", "__boundary",
-          "__side", "__catval", "__frac")
-        .withColumnRenamed("__cnid", "__nid")
-        .withColumnRenamed("__wN", "__w")
-    }
-    val labelDf = leaves.map(r => (nid(r.conditions), r.label.get))
-      .toDF("__lnid", "__lbl")
-    val sums = classes.map(c =>
-      sum(when(col("__lbl") === lit(c), col("__w")).otherwise(lit(0L)))
-        .as(s"__wc_$c"))
-    val votes = cur.join(broadcast(labelDf), col("__nid") === col("__lnid"))
-      .groupBy("__rowid")
-      .agg(sums.head, sums.tail: _*)
-    val pred = argmaxPred(classes.map(c => c -> col(s"__wc_$c")))
-    Some(withId.join(votes, Seq("__rowid"), "left")
-      .withColumn(outputCol,
-        when(col(s"__wc_${classes.head}").isNull, lit(majority)).otherwise(pred))
-      .drop((("__rowid" +: classes.map(c => s"__wc_$c"))): _*))
-  }
 
   /** The model as a DataFrame (rule codec string, label, depth). */
   def toDF(spark: SparkSession): DataFrame = {
@@ -524,6 +379,13 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
 }
 
 object C45Model {
+  /** The most leaves [[C45Model.transform]] and
+    * [[C45Model.transformProba]] serve through the flat first-match
+    * CASE WHEN; wider tree-form models walk the tree. The flat plan is
+    * faster while it is short, and the leaf count is what its code
+    * size grows with. */
+  private[fit] val FlatMaxLeaves = 64
+
   /** Inverse of [[C45Model.saveRules]]: the final `:label` line (a
     * condition-less closed rule) carries the global majority. Text
     * codec only — the loaded model has no leaf distributions (use
@@ -616,15 +478,6 @@ private[fit] case class Route(prid: Int, kind: String, aid: Int,
 private[fit] case class RouteX(prid: Int, kind: String, aid: Int,
                                boundary: Double, side: String,
                                catval: String, crid: Int, frac: Double)
-
-/** One routing edge for the wide-model fractional PREDICT level-walk
-  * ([[C45Model.transformFractional]]): like [[RouteX]] but in node-id
-  * space with leaf self-loops, `frac` = the child subtree's share of
-  * its parent's training mass. (Top-level for the same encoder reason
-  * as [[Route]].) */
-private[fit] case class PredEdge(pnid: Int, kind: String, aid: Int,
-                                 boundary: Double, side: String,
-                                 catval: String, cnid: Int, frac: Double)
 
 object C45 {
 

@@ -115,8 +115,8 @@ case class C45Forest(trees: Vector[C45Model], seed: Int) {
     * [[transform]] does. Null-free rows get [[transform]]'s answer
     * bit-for-bit (every member factor is 0 or 1). Needs fit-produced
     * or sidecar-loaded members (rule-text-only trees carry no masses
-    * and must serve through [[transform]]). Flat map-only per member
-    * while models are narrow — zero joins, zero shuffles. */
+    * and must serve through [[transform]]). One tree-walk expression
+    * per member — zero joins, zero shuffles. */
   def transformFractional(df: DataFrame,
                           outputCol: String = "prediction"): DataFrame = {
     val preds = trees.indices.map(t => s"__c45f_p$t")

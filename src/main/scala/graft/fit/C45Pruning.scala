@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * job and aggregates to per-(leaf, class) counts, O(#leaves ×
   * #classes) rows to the driver — through the flat disjoint-predicate
   * CASE WHEN while the model is narrow, and through the same tree-walk
-  * expression transform uses past `routeThreshold` leaves (a
+  * expression transform uses past [[C45Model.FlatMaxLeaves]] leaves (a
   * thousands-of-leaves CASE WHEN blows whole-stage-codegen limits).
+  * Subtree raising runs only up to that width (see [[prune]]).
   * The pruning pass itself is a driver-side fold over the
   * leaf trie: O(model), no further jobs, deterministic (ties
   * collapse, and majority ties pick the lexicographically smallest
@@ -152,18 +153,21 @@ object C45Pruning {
     * re-route depends on attribute values the fit's per-leaf
     * distributions no longer carry). */
   def prune(model: C45Model, df: DataFrame, z: Double = DefaultZ,
-            routeThreshold: Int = 64, raising: Boolean = false): C45Model = {
+            raising: Boolean = false): C45Model =
+    pruneVia(model, df, z, raising, walk = model.leaves.size > C45Model.FlatMaxLeaves)
+
+  /** [[prune]] with its counts scan forced through the tree walk
+    * (`walk`) or the flat CASE WHEN: specs compare the two. */
+  private[fit] def pruneVia(model: C45Model, df: DataFrame, z: Double,
+                            raising: Boolean, walk: Boolean): C45Model = {
     if (model.leaves.isEmpty) return model
     require(!model.overlapping,
       "pruning is subtree replacement over a tree-form leaf partition; " +
         "generalized (C45RuleSimplify) rule sets overlap and cannot be " +
         "subtree-pruned — simplify already minimizes each rule")
-    val counts = scanCounts(model, df, routeThreshold)
-    // raising re-routes through flat leaf-predicate expressions — past
-    // routeThreshold leaves that expression would blow codegen exactly
-    // like the flat transform, so wide models prune replacement-only
+    val counts = scanCounts(model, df, walk)
     val raise =
-      if (!raising || model.leaves.size > routeThreshold) None
+      if (!raising || !raisable(model)) None
       else {
         val cands = selectLargest(raiseCandidatesAll(model.leaves), counts)
         if (cands.isEmpty) None
@@ -186,12 +190,11 @@ object C45Pruning {
     * to `prune(model, df, raising = true)`: n = Σmicros/1e6 recovers
     * the integer row count exactly (both factors and the true quotient
     * are representable). `df` must be the frame the model was fitted
-    * on; wide models (past `routeThreshold`) fall back to
+    * on; wide models (past [[C45Model.FlatMaxLeaves]]) fall back to
     * replacement-only [[pruneTraining]], mirroring [[prune]]'s raising
     * gate. */
   def pruneTrainingRaising(model: C45Model, df: DataFrame,
-                           z: Double = DefaultZ,
-                           routeThreshold: Int = 64): C45Model = {
+                           z: Double = DefaultZ): C45Model = {
     if (model.leaves.isEmpty) return model
     require(!model.overlapping,
       "pruning is subtree replacement over a tree-form leaf partition; " +
@@ -200,7 +203,7 @@ object C45Pruning {
     require(model.leafDist.size == model.leaves.size,
       "pruneTrainingRaising needs per-leaf class distributions: fit/prune/" +
         "C45Model.load produce them (loadRules text-only loads do not)")
-    if (model.leaves.size > routeThreshold) return pruneTraining(model, z)
+    if (!raisable(model)) return pruneTraining(model, z)
     val counts = model.leafDist.zipWithIndex
       .collect { case (d, i) if d.nonEmpty => i -> d }.toMap
     val raise = {
@@ -359,20 +362,27 @@ object C45Pruning {
       }
   }
 
+  /** Whether subtree raising may run: [[raiseScan]] re-routes through
+    * per-candidate CASE WHEN arms that grow with the subtree, so past
+    * the flat serving width they would blow whole-stage-codegen limits
+    * exactly like a flat transform — wider models prune
+    * replacement-only. */
+  private def raisable(model: C45Model): Boolean =
+    model.leaves.size <= C45Model.FlatMaxLeaves
+
   /** One job: route every row to its (disjoint) leaf, count classes.
-    * Narrow models use the flat first-match CASE WHEN; past
-    * `routeThreshold` leaves the tree-walk expression transform uses
-    * ([[C45Model.treeLeafColumn]]) routes instead — constant expression
-    * size, codegen-safe at any width, no join. Both produce identical
-    * counts (leaves partition the space, so first-match ≡ only-match
-    * whenever the tree form exists). */
+    * Through the flat first-match CASE WHEN, or with `walk` through the
+    * tree-walk expression transform uses past
+    * [[C45Model.FlatMaxLeaves]] leaves ([[C45Model.treeLeafColumn]]) —
+    * constant expression size, codegen-safe at any width, no join.
+    * Both produce identical counts (leaves partition the space, so
+    * first-match ≡ only-match whenever the tree form exists). */
   private def scanCounts(model: C45Model, df: DataFrame,
-                         routeThreshold: Int): Map[Int, Map[String, Long]] = {
+                         walk: Boolean): Map[Int, Map[String, Long]] = {
     val leaves = model.leaves
-    // narrow models route through the SAME flat expression the fit
-    // uses — shared so a change to rid assignment can never leave
-    // pruning behind
-    val rid = (if (leaves.size > routeThreshold) model.treeLeafColumn else None)
+    // the flat plan routes through the SAME rid expression narrow
+    // serving uses
+    val rid = (if (walk) model.treeLeafColumn else None)
       .getOrElse(C45.flatRidColumn(leaves, model.schema.attrNames))
     val sc = df.sparkSession.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")

@@ -37,7 +37,7 @@ case class C45Windowed(model: C45Model, passes: Int, converged: Boolean,
   * `hash(key) % denom = 0  OR  wrong(m_0)  OR ... OR  wrong(m_{k-1})`
   * — where each `wrong(m_i)` routes the row through an already-fitted
   * tree (flat codegen'd CASE WHEN while narrow, the one-expression
-  * tree walk past [[C45Model.transform]]'s routeThreshold). No
+  * tree walk past [[C45Model.FlatMaxLeaves]] leaves). No
   * row-membership shuffle, no persisted chain, nothing to checkpoint:
   * the window is a deterministic function of (row, fitted models), so
   * the whole loop replays bit-identically under any partitioning or

@@ -17,8 +17,10 @@ import org.apache.spark.storage.StorageLevel
   * Per level, ONE histogram job: every row is routed to the open rule
   * it reaches in each model it trains ([[C45.frontierRidColumn]], the tree grown
   * so far walked inside one `graft_tree_leaf` expression; a single
-  * model plans `withColumn("__rid", walk)`, K models explode
-  * `map(model → walk_m)`), exploded to its live (attribute, value)
+  * model plans `withColumn("__rid", walk)`, K models compute their
+  * multiplicities once per row and explode one (model, rid,
+  * multiplicity) triple per model, walking only where the row trains
+  * the model), exploded to its live (attribute, value)
   * pairs plus a class sentinel (aid −1), and summed by
   * `groupBy(model, rid, aid, val, cls)`. The cells are O(K × model)
   * (numeric values are quantile-snapped to at most `maxBins` edges),
@@ -191,16 +193,24 @@ private[fit] object LevelLoop {
     val dirty = anyNull(schema)
 
     // `rows` tagged with each active model's (__model, __rid, __m),
-    // keeping only the copies that reach an open rule and train it
+    // keeping only the copies that reach an open rule and train it; K
+    // models compute each multiplicity once per row and walk a model's
+    // tree only where the row trains it
     def routed(rows: DataFrame, active: Seq[Int]): DataFrame = {
       val tagged =
         if (ms.k == 1) rows.withColumn("__model", lit(0))
           .withColumn("__rid", router(st(0).open, schema))
           .withColumn("__m", ms.multiplicity(0))
-        else rows.select(col("*"), explode(map(active.flatMap(m =>
-            Seq(lit(m), router(st(m).open, schema))): _*)).as(Seq("__model", "__rid")))
-          .withColumn("__m", element_at(array((0 until ms.k).map(ms.multiplicity): _*),
-            col("__model") + 1))
+        else {
+          val mult = active.map(m => s"__m$m")
+          rows.withColumns(mult.zip(active.map(ms.multiplicity)).toMap)
+            .select(col("*"), inline(array(active.zip(mult).map { case (m, c) =>
+              struct(lit(m).as("__model"),
+                when(col(c) > 0, router(st(m).open, schema)).otherwise(lit(-1)).as("__rid"),
+                col(c).as("__m"))
+            }: _*)))
+            .drop(mult: _*)
+        }
       tagged.filter(col("__rid") >= 0 && col("__m") > 0)
         .withColumn("__cls", col(schema.classCol).cast("string"))
     }

@@ -5,10 +5,12 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Walk a decision tree to its leaf in one expression: the leaf index
   * a row reaches, or −1 when a null split value or an unseen category
@@ -23,12 +25,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * 0.0), so the walk agrees with a first-match CASE WHEN over the
   * leaves' conjunctions on every row.
   *
-  * Two callers. Wide models score through it (`C45Model.transform`,
-  * `transformProba`, `C45Pruning`'s leaf counts). The single-tree fit
-  * routes every level through it (`C45.frontierRidColumn`): there the
-  * leaves are the open rules, every attribute is an input, and the
-  * node arrays are reference objects, so each level generates the
-  * same code and reuses the first level's compiled class. */
+  * Two callers. Models with more than `C45Model.FlatMaxLeaves` leaves
+  * score through it (`C45Model.transform`, `transformProba`,
+  * `C45Pruning`'s leaf counts). Every level of every fit routes
+  * through it (`C45.frontierRidColumn`): there the leaves are the open
+  * rules, every attribute is an input, and the node arrays are
+  * reference objects, so each level generates the same code and reuses
+  * the first level's compiled class. The same node arrays also drive
+  * [[TreeVote]], every model's fractional vote. */
 case class TreeLeaf(children: Seq[Expression], tree: TreeLeaf.Nodes)
   extends Expression {
 
@@ -58,17 +62,7 @@ case class TreeLeaf(children: Seq[Expression], tree: TreeLeaf.Nodes)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val n = children.length
-    val num = ctx.addMutableState("double[]", "treeNum", v => s"$v = new double[$n];")
-    val str = ctx.addMutableState("UTF8String[]", "treeStr", v => s"$v = new UTF8String[$n];")
-    val isNull = ctx.addMutableState("boolean[]", "treeNull", v => s"$v = new boolean[$n];")
-    val fills = children.zipWithIndex.map { case (c, i) =>
-      val e = c.genCode(ctx)
-      val target = if (c.dataType == DoubleType) num else str
-      s"""${e.code}
-         |$isNull[$i] = ${e.isNull};
-         |if (!${e.isNull}) { $target[$i] = ${e.value}; }""".stripMargin
-    }
+    val (num, str, isNull, fills) = TreeLeaf.genInputs(ctx, children)
     val kind = ctx.addReferenceObj("treeKind", tree.kind, "byte[]")
     val slot = ctx.addReferenceObj("treeSlot", tree.slot, "int[]")
     val bound = ctx.addReferenceObj("treeBound", tree.boundary, "double[]")
@@ -80,7 +74,7 @@ case class TreeLeaf(children: Seq[Expression], tree: TreeLeaf.Nodes)
     val s = ctx.freshName("slot")
     val next = ctx.freshName("next")
     ev.copy(isNull = FalseLiteral, code = code"""
-      |${ctx.splitExpressionsWithCurrentInputs(fills, "treeLeafInputs")}
+      |$fills
       |int ${ev.value} = -1;
       |int $node = 0;
       |while (true) {
@@ -96,6 +90,46 @@ case class TreeLeaf(children: Seq[Expression], tree: TreeLeaf.Nodes)
       |    $node = ((Integer) $next).intValue();
       |  }
       |}
+    """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
+}
+
+/** Quinlan's fractional vote for unknown values (C4.5, 1993, ch. 4) in
+  * one expression: per class, the summed weight of the leaves a row
+  * reaches when a null split value descends every child. Inputs are
+  * [[TreeLeaf]]'s; the walk itself is [[TreeLeaf.Vote.apply]], which
+  * the interpreted and the generated path both call. */
+case class TreeVote(children: Seq[Expression], vote: TreeLeaf.Vote) extends Expression {
+
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "graft_tree_vote"
+
+  override def eval(input: InternalRow): Any = {
+    val n = children.length
+    val num = new Array[Double](n)
+    val str = new Array[UTF8String](n)
+    val isNull = new Array[Boolean](n)
+    children.zipWithIndex.foreach { case (c, i) =>
+      c.eval(input) match {
+        case null => isNull(i) = true
+        case d: Double => num(i) = d
+        case u: UTF8String => str(i) = u
+      }
+    }
+    vote(num, str, isNull)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (num, str, isNull, fills) = TreeLeaf.genInputs(ctx, children)
+    val v = ctx.addReferenceObj("treeVote", vote, classOf[TreeLeaf.Vote].getName)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      |$fills
+      |ArrayData ${ev.value} = $v.apply($num, $str, $isNull);
     """.stripMargin)
   }
 
@@ -122,6 +156,93 @@ object TreeLeaf {
     override def toString: String = s"tree(${kind.length} nodes)"
   }
 
+  /** The fractional walk over `tree`. `share(n)` is node n's
+    * multiplier under a null split value: its training-mass share of
+    * its parent. `leafClass` maps a leaf's output index to its class
+    * position among `classes`. */
+  final class Vote(val tree: Nodes, val share: Array[Double], val leafClass: Array[Int],
+                   val classes: Int) extends Serializable {
+    override def toString: String = s"vote($tree, $classes classes)"
+
+    /** Per-class vote of one row whose inputs are `num`/`str` (unset
+      * where `isNull`). A child's weight is its parent's, or its
+      * parent's times its share on every child of a null split value;
+      * the root's is 1. A not-taken branch, an unseen category and a
+      * zero weight die, which is exact: every weight is >= 0. Each
+      * class sums its leaves' weights in leaf-index order. */
+    def apply(num: Array[Double], str: Array[UTF8String], isNull: Array[Boolean]): ArrayData = {
+      val out = new Array[Double](classes)
+      // one path at weight 1 until the first null split value
+      var node = 0
+      while (node >= 0 && tree.kind(node) != Leaf && !isNull(tree.slot(node)))
+        node = step(node, num, str)
+      if (node >= 0) {
+        if (tree.kind(node) != Leaf) fanOut(node, num, str, isNull, out)
+        else if (tree.leaf(node) >= 0) out(leafClass(tree.leaf(node))) = 1.0
+      }
+      UnsafeArrayData.fromPrimitiveArray(out)
+    }
+
+    /** The child a known split value takes at internal `node`, −1 for
+      * an unseen category. Numbers compare as Spark's `<=` does. */
+    private def step(node: Int, num: Array[Double], str: Array[UTF8String]): Int = {
+      val s = tree.slot(node)
+      if (tree.kind(node) == Num) {
+        if (SQLOrderingUtil.compareDoubles(num(s), tree.boundary(node)) <= 0) tree.left(node)
+        else tree.right(node)
+      } else {
+        val next = tree.cats(node).get(str(s))
+        if (next == null) -1 else next.intValue
+      }
+    }
+
+    private def fanOut(from: Int, num: Array[Double], str: Array[UTF8String],
+                       isNull: Array[Boolean], out: Array[Double]): Unit = {
+      val stack = scala.collection.mutable.Stack.empty[(Int, Double)]
+      val hits = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
+      stack.push((from, 1.0))
+      while (stack.nonEmpty) {
+        val (node, w) = stack.pop()
+        if (tree.kind(node) == Leaf) {
+          if (tree.leaf(node) >= 0) hits += ((tree.leaf(node), w))
+        } else if (isNull(tree.slot(node))) {
+          val kids =
+            if (tree.kind(node) == Num) Iterator(tree.left(node), tree.right(node))
+            else tree.cats(node).values.iterator.asScala.map(_.intValue)
+          kids.foreach { c =>
+            val cw = w * share(c)
+            if (cw > 0) stack.push((c, cw))
+          }
+        } else {
+          val next = step(node, num, str)
+          if (next >= 0) stack.push((next, w))
+        }
+      }
+      hits.sortInPlaceBy(_._1).foreach { case (l, w) => out(leafClass(l)) += w }
+    }
+  }
+
+  /** Each child evaluated into slot i of three arrays — the number,
+    * the string and whether it is null — as generated fill code. */
+  private[functions] def genInputs(ctx: CodegenContext, children: Seq[Expression])
+      : (String, String, String, String) = {
+    val n = children.length
+    val num = ctx.addMutableState("double[]", "treeNum", v => s"$v = new double[$n];")
+    val str = ctx.addMutableState("UTF8String[]", "treeStr", v => s"$v = new UTF8String[$n];")
+    val isNull = ctx.addMutableState("boolean[]", "treeNull", v => s"$v = new boolean[$n];")
+    val fills = children.zipWithIndex.map { case (c, i) =>
+      val e = c.genCode(ctx)
+      val target = if (c.dataType == DoubleType) num else str
+      s"""${e.code}
+         |$isNull[$i] = ${e.isNull};
+         |if (!${e.isNull}) { $target[$i] = ${e.value}; }""".stripMargin
+    }
+    (num, str, isNull, ctx.splitExpressionsWithCurrentInputs(fills, "treeLeafInputs"))
+  }
+
   def column(attrs: Seq[Column], tree: Nodes): Column =
     ColumnBridge.column(TreeLeaf(attrs.map(ColumnBridge.expression), tree))
+
+  def voteColumn(attrs: Seq[Column], vote: Vote): Column =
+    ColumnBridge.column(TreeVote(attrs.map(ColumnBridge.expression), vote))
 }

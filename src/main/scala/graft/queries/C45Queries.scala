@@ -1469,8 +1469,8 @@ object C45Queries {
   //      above (bootstrap draws are tier-specific). ----
   def qForestPredictMissing(s: SparkSession, dir: String): DataFrame = {
     val (f, df) = forestMissingFixture(s, dir)
-    // the fractional vote is T wide per-leaf branch-share expressions
-    // per row — heavy map work that a 1-3-partition parquet scan would
+    // the fractional vote is T tree walks per row, fanning out on
+    // nulls — heavy map work that a 1-3-partition parquet scan would
     // run on 1-3 cores; one narrow round-robin exchange first lets the
     // whole session serve it (no-op at corpus scale — Widen scaladoc)
     f.transformFractional(graft.operators.Widen.toParallelism(df),

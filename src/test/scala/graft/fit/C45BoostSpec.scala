@@ -215,6 +215,18 @@ class C45BoostSpec extends AnyFunSuite {
     assert(both.filter(col("h") =!= col("fr")).count() == 0)
   }
 
+  test("transformFractional compiles every stage: each member votes " +
+    "through one walk expression") {
+    val df = fixture
+    val fit = C45Boost.fit(df, schema, params)
+    val (n, failures) = graft.CodegenLog.failures(
+      fit.transformFractional(df.withColumn("x1",
+        when(col("x1") === 2.0, lit(null)).otherwise(col("x1"))), "fr")
+        .filter(col("fr") =!= col("cls")).count())
+    assert(n < df.count())
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("save -> load round-trips the boosted ensemble bit-exactly " +
     "(rules, α/ε micros, distributions, probabilities)") {
     val df = fixture

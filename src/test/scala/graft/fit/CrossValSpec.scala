@@ -2,6 +2,7 @@ package graft.fit
 
 import graft.SparkTestSession
 import graft.meta.{AttrMeta, C45Schema}
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -108,22 +109,6 @@ class CrossValSpec extends AnyFunSuite {
       // moves. One description per level == one histogram QUERY per
       // level, the SCALE.md fusion claim; a sequential 3-fold fit
       // would stamp 3 queries per level.
-      val groupId = s"crossval-fused-${System.nanoTime()}"
-      val groupJobs = new java.util.concurrent.atomic.AtomicInteger
-      val levelDescs =
-        java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (s.properties != null &&
-              groupId == s.properties.getProperty("spark.jobGroup.id")) {
-            groupJobs.incrementAndGet()
-            val d = s.properties.getProperty("spark.job.description", "")
-            if (d.startsWith("graft.fitFolds level=")) levelDescs.add(d)
-          }
-      }
-      spark.sparkContext.addSparkListener(l)
-      spark.sparkContext.setJobGroup(groupId, "fused fold fit under test")
       // AQE decomposes one logical query into a job per materialized
       // stage — pin it off so the ABSOLUTE job bound below stays
       // meaningful (the distinct-description invariant holds either
@@ -131,15 +116,11 @@ class CrossValSpec extends AnyFunSuite {
       val aqe = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val models = C45.fitFolds(stamped, "__fold", 3, schema,
-          C45Params(maxDepth = 2, maxBins = 0), fractional = true)
+        val (models, descs) = JobCount.described(spark.sparkContext)(
+          C45.fitFolds(stamped, "__fold", 3, schema,
+            C45Params(maxDepth = 2, maxBins = 0), fractional = true))
         assert(models.size == 3)
-        // listener events post asynchronously; poll (bounded) for the
-        // expected count rather than trusting a fixed sleep on a
-        // loaded box
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (levelDescs.size < 3 && System.nanoTime() < deadline)
-          Thread.sleep(50)
+        val levelDescs = descs.filter(_.startsWith("graft.fitFolds level=")).toSet
         // levels 0..2 → exactly 3 level-stamped histogram queries
         // shared by ALL 3 fits
         assert(levelDescs.size == 3,
@@ -147,13 +128,9 @@ class CrossValSpec extends AnyFunSuite {
         // ... and nothing else of any size runs in the group beyond
         // those queries' own jobs (each may launch a broadcast-build
         // job alongside its collect; loose bound, not an exact pin)
-        assert(groupJobs.get <= 9,
-          s"unexpected extra jobs in the fused fit: ${groupJobs.get}")
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(l)
-      }
+        assert(descs.size <= 9,
+          s"unexpected extra jobs in the fused fit: ${descs.size}")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     } finally stamped.unpersist()
   }
 

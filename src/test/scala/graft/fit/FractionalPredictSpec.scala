@@ -49,22 +49,26 @@ class FractionalPredictSpec extends AnyFunSuite {
       .toDF("id", "a", "x", "y")
   }
 
-  private def run(routeThreshold: Int): Seq[String] =
-    model.transformFractional(df, routeThreshold = routeThreshold)
-      .orderBy("id") // the routed plan's joins don't preserve input order
-      .select("prediction").collect().map(_.getString(0)).toSeq
+  private def predictions(scored: org.apache.spark.sql.DataFrame): Seq[String] =
+    scored.orderBy("id").select("prediction").collect().map(_.getString(0)).toSeq
 
   test("flat path reproduces the hand-computed weighted votes") {
-    assert(run(routeThreshold = 64) == cases.map(_._4))
+    assert(predictions(FlatFractional(model, df)) == cases.map(_._4))
   }
 
   test("routed level-walk path agrees with the flat path exactly") {
-    // routeThreshold=1 forces the broadcast-edge fan-out plan; the
-    // micro-quantized weights land on the same argmax as the flat
-    // double products for these exact-decimal fractions — and the
-    // unseen-value row (every branch dead) must resurface as majority
-    // through the left join-back
-    assert(run(routeThreshold = 1) == cases.map(_._4))
+    // the one-expression tree walk transformFractional serves through:
+    // the same argmax as the flat reference, from bit-identical
+    // per-class votes — and the unseen-value row (every branch dead)
+    // falls back to the majority
+    assert(predictions(model.transformFractional(df)) == cases.map(_._4))
+    val classes = model.fractionalClasses
+    val both = FlatFractional(model, df).withColumn("walk", model.fractionalVotes)
+      .orderBy("id").collect()
+    both.foreach { r =>
+      val walked = r.getAs[scala.collection.Seq[Double]]("walk").toSeq
+      assert(walked == classes.map(c => r.getAs[Double](s"__flat_v_$c")), r)
+    }
   }
 
   test("null-free rows score identically to transform, both plans") {
@@ -75,12 +79,12 @@ class FractionalPredictSpec extends AnyFunSuite {
     val d = rows.toDF("a", "x", "y")
     val viaTransform = model.transform(d)
       .select("a", "x", "y", "prediction").collect().toSeq
-    val viaFlat = model.transformFractional(d)
+    val viaFlat = FlatFractional(model, d)
       .select("a", "x", "y", "prediction").collect().toSeq
-    val viaRouted = model.transformFractional(d, routeThreshold = 1)
+    val viaWalk = model.transformFractional(d)
       .select("a", "x", "y", "prediction").collect().toSeq
     assert(viaFlat == viaTransform)
-    assert(viaRouted.sortBy(_.toString) == viaTransform.sortBy(_.toString))
+    assert(viaWalk == viaTransform)
   }
 
   test("a fit-produced model carries aligned leaf masses that sum to the input") {

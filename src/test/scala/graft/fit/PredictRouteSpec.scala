@@ -46,16 +46,16 @@ class PredictRouteSpec extends AnyFunSuite {
       ("zz", "b0", 1.0, "?"), ("a0", "zz", 9.0, "?"),
       (null.asInstanceOf[String], "b1", 0.0, "?"), ("a3", null.asInstanceOf[String], 2.0, "?"))
       .toDF("a", "b", "x", "cls"))
-    def score(threshold: Int) =
-      m.transform(probes, "pred", routeThreshold = threshold)
+    def score(walk: Boolean) =
+      m.transformVia(probes, "pred", walk)
         .select("a", "b", "x", "pred").collect()
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getString(3)))
         .sortBy(t => (Option(t._1).getOrElse(""), Option(t._2).getOrElse(""), t._3))
-    val flat = score(100000)
-    val routed = score(1)
+    val flat = score(walk = false)
+    val routed = score(walk = true)
     assert(routed.sameElements(flat))
     // and every training row predicts its own engineered class
-    val acc = m.transform(df, "pred", routeThreshold = 1)
+    val acc = m.transform(df, "pred")
       .filter(col("pred") === col("cls")).count()
     assert(acc == df.count())
   }
@@ -73,8 +73,7 @@ class PredictRouteSpec extends AnyFunSuite {
     val schema = C45Schema.fromDataFrame(df, "cls")
     val m = C45.fit(df, schema)
     val input = wideParquet("predict_route")
-    for (scored <- Seq(m.transform(input, "pred", routeThreshold = 1),
-                       m.transformProba(input, "pred", routeThreshold = 1))) {
+    for (scored <- Seq(m.transform(input, "pred"), m.transformProba(input, "pred"))) {
       val plan = scored.queryExecution.executedPlan.toString
       assert(plan.contains("graft_tree_leaf"), plan)
       assert(!plan.contains("Join") && !plan.contains("Exchange"),
@@ -114,7 +113,7 @@ class PredictRouteSpec extends AnyFunSuite {
     import s.implicits._
     val probe = Seq(("t", 5.0), ("t", 1.0), ("u", 9.0)).toDF("a", "x")
     assert(m.routedTransform(probe, "pred").isEmpty)
-    val got = m.transform(probe, "pred", routeThreshold = 0)
+    val got = m.transformVia(probe, "pred", walk = true)
       .select("a", "x", "pred").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getString(2))).toSet
     assert(got == Set(("t", 5.0, "n"), ("t", 1.0, "p"), ("u", 9.0, "p")))
@@ -132,7 +131,7 @@ class PredictRouteSpec extends AnyFunSuite {
     val m = C45Pruning.prune(C45.fit(noisy, schema), noisy)
     val routed = m.routedTransform(noisy, "pred")
     assert(routed.isDefined)
-    val flat = m.transform(noisy, "pred", routeThreshold = 100000)
+    val flat = m.transformVia(noisy, "pred", walk = false)
       .select("a", "b", "x", "pred").collect().map(_.toSeq).toVector
     val viaRoute = routed.get
       .select("a", "b", "x", "pred").collect().map(_.toSeq).toVector

@@ -62,11 +62,11 @@ class ProbaSpec extends AnyFunSuite {
       "l_linestatus", Seq("F", "O"))
     val m = C45.fit(li, schema, C45Params(maxDepth = 3))
     assert(m.leaves.size > 1, "need a real tree for the routed path")
-    val flat = m.transformProba(li)
+    val flat = m.transformProbaVia(li, "prediction", "p_", walk = false)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("prediction"), col("p_F"), col("p_O"))
       .orderBy("l_orderkey", "l_linenumber").collect()
-    val routed = m.transformProba(li, routeThreshold = 1)
+    val routed = m.transformProbaVia(li, "prediction", "p_", walk = true)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("prediction"), col("p_F"), col("p_O"))
       .orderBy("l_orderkey", "l_linenumber").collect()

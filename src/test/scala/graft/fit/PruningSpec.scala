@@ -3,6 +3,7 @@ package graft.fit
 import graft.SparkTestSession
 import graft.meta.{AttrMeta, C45Schema}
 import graft.model.{CatEq, NumLE, NumGT, Rule}
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -182,8 +183,8 @@ class PruningSpec extends AnyFunSuite {
   test("wide models prune through the routed level-walk, same result as flat") {
     val s = spark
     import s.implicits._
-    // a two-level fan-out: 6 × 4 = up to 24 leaves, past a tiny
-    // routeThreshold; labels planted so several subtrees are pure
+    // a two-level fan-out: 6 × 4 = up to 24 leaves, its counts scan
+    // forced through each plan; labels planted so several subtrees are pure
     // noise and collapse identically on both routing paths
     val rows = for {
       i <- 1 to 800
@@ -196,8 +197,8 @@ class PruningSpec extends AnyFunSuite {
       "cls", Seq("n", "p"))
     val model = C45.fit(df, schema, C45Params(maxDepth = 4))
     assume(model.leaves.size > 4, s"need a wide model, got ${model.leaves.size}")
-    val flat = C45Pruning.prune(model, df, routeThreshold = 10000)
-    val routed = C45Pruning.prune(model, df, routeThreshold = 2)
+    val flat = C45Pruning.pruneVia(model, df, C45Pruning.DefaultZ, raising = false, walk = false)
+    val routed = C45Pruning.pruneVia(model, df, C45Pruning.DefaultZ, raising = false, walk = true)
     assert(routed.leaves.map(_.encode) == flat.leaves.map(_.encode))
   }
 
@@ -316,32 +317,13 @@ class PruningSpec extends AnyFunSuite {
     // job descriptions stamp the two scan kinds; inside a job group,
     // the training path must show ONLY the raise scan (the general
     // path additionally runs "graft.prune scan counts")
-    val groupId = s"prune-training-raise-${System.nanoTime()}"
-    val descs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            groupId == e.properties.getProperty("spark.jobGroup.id")) {
-          val d = e.properties.getProperty("spark.job.description", "")
-          if (d.startsWith("graft.prune")) descs.add(d)
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(groupId, "one-job raising prune under test")
-    val viaDist =
-      try C45Pruning.pruneTrainingRaising(model, df)
-      finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(l)
-      }
+    val (viaDist, jobs) = JobCount.described(spark.sparkContext)(
+      C45Pruning.pruneTrainingRaising(model, df))
     assert(viaDist.leaves.map(_.encode) == viaScan.leaves.map(_.encode))
     assert(viaDist.leafDist == viaScan.leafDist)
     assert(viaDist.majority == viaScan.majority)
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (descs.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(descs.size == 1 &&
-      descs.iterator().next().startsWith("graft.prune raise scan"),
+    val descs = jobs.filter(_.startsWith("graft.prune")).toSet
+    assert(descs.size == 1 && descs.head.startsWith("graft.prune raise scan"),
       s"training raising must run exactly the raise scan, saw $descs")
   }
 

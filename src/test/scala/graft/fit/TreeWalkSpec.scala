@@ -9,13 +9,16 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge semantics of the wide-model tree walk (`graft_tree_leaf`):
-  * on a 66-leaf tree mixing numeric and categorical splits, scoring
-  * through the walk must equal the flat first-match CASE WHEN for
-  * `transform`, `transformProba` and a saved-then-loaded model, on
-  * generated rows full of NaN, ±Inf, null, −0.0 at a 0.0 boundary,
-  * unseen categories and int/long/decimal attributes — under both the
-  * interpreted (local relation) and the generated-code (parquet) plan. */
+/** Edge semantics of the tree walks. On a 66-leaf tree mixing numeric
+  * and categorical splits, scoring through `graft_tree_leaf` must equal
+  * the flat first-match CASE WHEN for `transform`, `transformProba` and
+  * a saved-then-loaded model; on that tree and an 18-leaf one,
+  * `graft_tree_vote` (the fractional vote) must equal the flat
+  * per-leaf product reference ([[FlatFractional]]) bit for bit. Rows
+  * are generated full of NaN, ±Inf, null, −0.0 at a 0.0 boundary,
+  * unseen and empty categories and int/long/decimal attributes, and
+  * leaves include zero-mass ones; both walks run under the interpreted
+  * (local relation) and the generated-code (parquet) plan. */
 class TreeWalkSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -34,10 +37,10 @@ class TreeWalkSpec extends AnyFunSuite {
     Seq(3 -> NumLE(100.0), 3 -> NumGT(100.0)),
     Seq(4 -> NumLE(2.5), 4 -> NumGT(2.5)))
 
-  private def paths(prefix: Vector[(Int, Split)]): Vector[Vector[(Int, Split)]] =
-    if (prefix.length == levels.size || prefix.lastOption.exists(_._2 == CatEq("w")))
+  private def paths(depth: Int, prefix: Vector[(Int, Split)]): Vector[Vector[(Int, Split)]] =
+    if (prefix.length == depth || prefix.lastOption.exists(_._2 == CatEq("w")))
       Vector(prefix)
-    else levels(prefix.length).toVector.flatMap(s => paths(prefix :+ s))
+    else levels(prefix.length).toVector.flatMap(s => paths(depth, prefix :+ s))
 
   private val classes = Seq("n", "p", "q")
   private val dist: Gen[Map[String, Long]] = Gen.frequency(
@@ -45,14 +48,19 @@ class TreeWalkSpec extends AnyFunSuite {
     9 -> Gen.listOfN(3, Gen.chooseNum(0L, 50L)).map(ns =>
       classes.zip(ns).collect { case (c, k) if k > 0 => c -> k * 1000000L }.toMap))
 
-  private val model: C45Model = {
-    val conds = paths(Vector.empty)
+  /** The tree of the first `depth` levels, with generated leaf
+    * distributions and labels. */
+  private def treeModel(depth: Int): C45Model = {
+    val conds = paths(depth, Vector.empty)
     val dists = Gen.listOfN(conds.size, dist).pureApply(Gen.Parameters.default, Seed(7L)).toVector
     val labels = Gen.listOfN(conds.size, Gen.oneOf(classes))
       .pureApply(Gen.Parameters.default, Seed(11L))
     C45Model(schema, conds.zip(labels).map { case (c, l) => Rule(c, Some(l)) }, "p",
       dists.map(_.values.sum), dists)
   }
+
+  private val model = treeModel(levels.size)
+  private val narrow = treeModel(3)
 
   private val rowSchema = StructType(Seq(
     StructField("id", IntegerType), StructField("d", DoubleType),
@@ -85,7 +93,6 @@ class TreeWalkSpec extends AnyFunSuite {
   }
 
   private def rows(df: DataFrame): Seq[Row] = df.orderBy("id").collect().toSeq
-  private val flat = 100000
 
   test("the model is wide, mixed and served by the tree walk") {
     assert(model.leaves.size == 66)
@@ -98,7 +105,7 @@ class TreeWalkSpec extends AnyFunSuite {
   for ((name, input) <- Seq("interpreted" -> (() => local), "codegen" -> (() => parquet))) {
     test(s"$name: transform equals the flat CASE WHEN") {
       val walked = rows(model.transform(input()))
-      assert(walked == rows(model.transform(input(), routeThreshold = flat)))
+      assert(walked == rows(model.transformVia(input(), "prediction", walk = false)))
       // every kind of stop is exercised: nulls and unseen values fall
       // back to the majority, and NaN / −0.0 reach leaves
       assert(walked.map(_.getAs[String]("prediction")).toSet == Set("n", "p", "q"))
@@ -106,7 +113,7 @@ class TreeWalkSpec extends AnyFunSuite {
 
     test(s"$name: transformProba equals the flat CASE WHEN") {
       assert(rows(model.transformProba(input())) ==
-        rows(model.transformProba(input(), routeThreshold = flat)))
+        rows(model.transformProbaVia(input(), "prediction", "p_", walk = false)))
     }
 
     test(s"$name: save, load, transform equals the flat CASE WHEN") {
@@ -115,7 +122,37 @@ class TreeWalkSpec extends AnyFunSuite {
       val loaded = C45Model.load(spark, dir, schema)
       assert(loaded == model)
       assert(rows(loaded.transform(input())) ==
-        rows(model.transform(input(), routeThreshold = flat)))
+        rows(model.transformVia(input(), "prediction", walk = false)))
+    }
+  }
+
+  test("the narrow model is flat-served and mixed") {
+    assert(narrow.leaves.size == 18)
+    assert(narrow.leafDist.contains(Map.empty[String, Long]))
+    assert(!narrow.transform(parquet).queryExecution.executedPlan.toString
+      .contains("graft_tree_leaf"))
+  }
+
+  for ((name, input) <- Seq("interpreted" -> (() => local), "codegen" -> (() => parquet));
+       (size, m) <- Seq("narrow" -> narrow, "wide" -> model)) {
+    test(s"$name: $size fractional vote equals the flat reference bit for bit") {
+      val classes = m.fractionalClasses
+      val both = rows(FlatFractional(m, m.transformFractional(input(), "walked"))
+        .withColumn("votes", m.fractionalVotes))
+      both.foreach { r =>
+        assert(r.getAs[scala.collection.Seq[Double]]("votes").toSeq ==
+          classes.map(c => r.getAs[Double](s"__flat_v_$c")), r)
+        assert(r.getAs[String]("walked") == r.getAs[String]("prediction"), r)
+      }
+      // nulls fan out to several leaves, and every class wins somewhere
+      assert(both.count(r => r.getAs[scala.collection.Seq[Double]]("votes").count(_ > 0) > 1) > 100)
+      assert(both.map(_.getAs[String]("walked")).toSet == classes.toSet)
+    }
+
+    test(s"$name: $size fractional vote equals transform on null-free rows") {
+      val clean = input().na.drop(Seq("d", "c", "i", "l", "m"))
+      assert(clean.count() > 500)
+      assert(rows(m.transformFractional(clean)) == rows(m.transform(clean)))
     }
   }
 
