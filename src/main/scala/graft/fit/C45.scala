@@ -32,7 +32,8 @@ import scala.reflect.runtime.universe.TypeTag
   * grown so far inside one [[graft.functions.TreeLeaf]] expression
   * over the training cache (see [[LevelLoop]]). The walk's generated
   * code does not depend on the tree, so all levels share one compiled
-  * class; only null rows that fan out ride a joined chain. */
+  * class. Fractional fits walk the same tree, fanning null-valued rows
+  * out along it (`graft_tree_fan`, [[graft.functions.TreeWalk]]). */
 case class C45Params(minDataRatio: Double = InfoStats.DefaultMinDataRatio,
                      maxDepth: Int = 30,
                      maxBins: Int = 256,
@@ -120,7 +121,7 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * or unseen value along its path), as one [[graft.functions.TreeLeaf]]
     * expression. None when the leaves have no tree form. */
   private[fit] def treeLeafColumn: Option[Column] =
-    if (!treeForm) None else Some(TreeLeaf.column(walkInputs, walkTree))
+    if (!treeForm) None else Some(TreeLeaf.column(walkInputs, walkTree()))
 
   /** The walk's inputs, one per (attribute, split kind) in first-use
     * order: numeric split attributes cast to double, categorical ones
@@ -133,8 +134,9 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     col(schema.attrNames(aid)).cast(if (numeric) "double" else "string") }
 
   /** The leaves' paths flattened into node arrays; leaf i outputs i. */
-  private def walkTree: TreeLeaf.Nodes =
-    C45.treeNodes(leaves.map(_.conditions), (aid, s) => slots.indexOf((aid, !s.isInstanceOf[CatEq])))
+  private def walkTree(share: Vector[(Int, Split)] => Double = _ => 0.0): TreeLeaf.Nodes =
+    C45.treeNodes(leaves.map(_.conditions),
+      (aid, s) => slots.indexOf((aid, !s.isInstanceOf[CatEq])), share)
 
   /** The class set [[transformProba]] emits columns for, in its column
     * order (sorted strings): every class observed in a leaf
@@ -242,7 +244,7 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     * answer: every factor is 0 or 1 and one leaf carries weight 1.
     *
     * One plan at any width: the per-class votes come from one
-    * [[graft.functions.TreeVote]] expression ([[fractionalVotes]]), a
+    * `graft_tree_vote` expression ([[fractionalVotes]]), a
     * walk over the same node arrays [[transform]]'s wide plan uses,
     * then the argmax. No join, no shuffle. Fit-produced, pruned
     * (which keep the merged leaf distributions), simplified, and
@@ -271,31 +273,20 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
   private[fit] def fractionalClasses: Seq[String] = leaves.flatMap(_.label).distinct.sorted
 
   /** Each row's per-class fractional vote ([[fractionalClasses]]
-    * order) as one [[graft.functions.TreeVote]] array column. A node's
+    * order) as one `graft_tree_vote` array column. A node's
     * share is `mass(p) / mass(p.init)` over [[prefixMass]] (0.0 under
     * a zero-mass parent), so the walk multiplies and sums exactly as
     * a per-leaf product of per-condition factors, summed per class in
     * leaf order, would. Needs a tree form or a single leaf
     * ([[overlapping]] models have no tree to descend). */
   private[fit] def fractionalVotes: Column = {
-    val tree = walkTree
     val mass = prefixMass
-    val share = new Array[Double](tree.kind.length)
-    leaves.foreach { r =>
-      r.conditions.indices.foldLeft(0) { (node, d) =>
-        val child = r.conditions(d)._2 match {
-          case NumLE(_) => tree.left(node)
-          case NumGT(_) => tree.right(node)
-          case CatEq(v) => tree.cats(node).get(UTF8String.fromString(v)).intValue
-        }
-        val p = r.conditions.take(d + 1)
-        val pm = mass(p.init).toDouble
-        share(child) = if (pm > 0) mass(p) / pm else 0.0
-        child
-      }
+    val tree = walkTree { p =>
+      val pm = mass(p.init).toDouble
+      if (pm > 0) mass(p) / pm else 0.0
     }
     val classes = fractionalClasses
-    TreeLeaf.voteColumn(walkInputs, new TreeLeaf.Vote(tree, share,
+    TreeLeaf.walkColumn(Nil, walkInputs, new TreeLeaf.Vote(tree,
       leaves.map(r => classes.indexOf(r.label.get)).toArray, classes.size))
   }
 
@@ -466,19 +457,6 @@ private[fit] case class Route(prid: Int, kind: String, aid: Int,
                               boundary: Double, lrid: Int, rrid: Int,
                               children: Map[String, Int])
 
-/** Exploded routing row for the FRACTIONAL-weight path: one row per
-  * (parent rule, child rule) edge, carrying the one condition that
-  * selects the child ("num" side le/gt of `boundary`, or "cat"
-  * equality on `catval`) and `frac` — the child's share of the
-  * parent's KNOWN mass on the split attribute, which is the weight
-  * multiplier a null-valued row receives for this child (Quinlan's
-  * C4.5 unknown-value distribution). The [[LevelLoop]]'s fan-out
-  * chain joins on these: a known value keeps exactly one branch at
-  * full weight, a null keeps every branch at fractional weight. */
-private[fit] case class RouteX(prid: Int, kind: String, aid: Int,
-                               boundary: Double, side: String,
-                               catval: String, crid: Int, frac: Double)
-
 object C45 {
 
   private[fit] case class Cand(aid: Int, gainRatio: Double, gain: Double,
@@ -496,13 +474,15 @@ object C45 {
 
   /** What one level's driver-side decision pass produced: rules closed
     * this level (with their exact-micros mass and class distribution),
-    * the next frontier, the level's splits as routing rows,
-    * gain-importance increments, and the (possibly newly fixed)
-    * global majority. */
+    * the next frontier with each rule's share of its parent's known
+    * mass (what a null split value passes down), the level's splits as
+    * routing rows, gain-importance increments, and the (possibly newly
+    * fixed) global majority. */
   private[fit] case class LevelDecision(
       closedAdd: Vector[(Rule, Long, Map[String, Long])],
       nextOpen: Vector[Rule],
-      routes: Seq[Route], routesX: Seq[RouteX],
+      shares: Vector[Double],
+      routes: Seq[Route],
       importanceAdd: Seq[(Int, Double)],
       globalMajority: Option[String])
 
@@ -523,15 +503,17 @@ object C45 {
     * path ends at outputs the path's index, and a node no path ends at
     * outputs −1 — so is the unreached side of a numeric split, and a
     * category no path takes misses the node's map, which the walk also
-    * answers with −1. `slotOf` gives a split's walk input position.
-    * The paths must form a tree: siblings split on one attribute (and
-    * one boundary), as every fitted rule set's paths do. */
-  private[fit] def treeNodes(paths: Seq[Vector[(Int, Split)]],
-                             slotOf: (Int, Split) => Int): TreeLeaf.Nodes = {
+    * answers with −1. `slotOf` gives a split's walk input position and
+    * `share` the share of the path prefix ending at a node (0.0 at the
+    * root and off the paths). The paths must form a tree: siblings
+    * split on one attribute (and one boundary), as every fitted rule
+    * set's paths do. */
+  private[fit] def treeNodes(paths: Seq[Vector[(Int, Split)]], slotOf: (Int, Split) => Int,
+                             share: Vector[(Int, Split)] => Double = _ => 0.0): TreeLeaf.Nodes = {
     final class Node {
       var kind: Byte = TreeLeaf.Leaf
       var slot, left, right, leaf = -1
-      var boundary = 0.0
+      var boundary, share = 0.0
       var cats: java.util.HashMap[UTF8String, Integer] = null
     }
     val nodes = scala.collection.mutable.ArrayBuffer(new Node)
@@ -544,7 +526,8 @@ object C45 {
     }
     paths.zipWithIndex.foreach { case (path, out) =>
       var at = 0
-      path.foreach { case (aid, split) =>
+      path.indices.foreach { d =>
+        val (aid, split) = path(d)
         val n = nodes(at)
         n.slot = slotOf(aid, split)
         at = split match {
@@ -554,12 +537,14 @@ object C45 {
             if (n.kind == TreeLeaf.Leaf) { n.kind = TreeLeaf.Cat; n.cats = new java.util.HashMap }
             n.cats.computeIfAbsent(UTF8String.fromString(v), _ => fresh())
         }
+        nodes(at).share = share(path.take(d + 1))
       }
       nodes(at).leaf = out
     }
     new TreeLeaf.Nodes(nodes.map(_.kind).toArray, nodes.map(_.slot).toArray,
       nodes.map(_.boundary).toArray, nodes.map(_.left).toArray,
-      nodes.map(_.right).toArray, nodes.map(_.cats).toArray, nodes.map(_.leaf).toArray)
+      nodes.map(_.right).toArray, nodes.map(_.cats).toArray, nodes.map(_.leaf).toArray,
+      nodes.map(_.share).toArray)
   }
 
   /** The fit's frontier router: the index in `open` of the rule each
@@ -569,13 +554,17 @@ object C45 {
     * exactly where [[flatRidColumn]] matches no rule. Closed leaves
     * need no nodes: a branch no open path takes walks to −1. Every
     * attribute is a walk input, in schema order (numeric as double,
-    * categorical as string), and the node arrays are reference
-    * objects, so the generated code is the same whatever the frontier:
+    * categorical as string), and the tree is a reference object, so
+    * the generated code is the same whatever the frontier:
     * every level of a fit hits the codegen cache after the first. */
   private[fit] def frontierRidColumn(open: Vector[Rule], schema: C45Schema): Column =
-    TreeLeaf.column(
-      schema.attrs.map(a => col(a.name).cast(if (a.isNumeric) "double" else "string")),
-      treeNodes(open.map(_.conditions), (aid, _) => aid))
+    TreeLeaf.column(frontierInputs(schema), treeNodes(open.map(_.conditions), (aid, _) => aid))
+
+  /** Every attribute as a frontier walk input, in schema order: the
+    * inputs of [[frontierRidColumn]] and of the fractional fan-out
+    * walk over the same nodes (LevelLoop.fanned). */
+  private[fit] def frontierInputs(schema: C45Schema): Seq[Column] =
+    schema.attrs.map(a => col(a.name).cast(if (a.isNumeric) "double" else "string"))
 
   /** Driver-side split stats on the collected cells — the same
     * factored identities as InfoStats (A4-A7 and the O2 boundary
@@ -741,8 +730,8 @@ object C45 {
       globalMajority0: Option[String]): LevelDecision = {
     val closedAdd = Vector.newBuilder[(Rule, Long, Map[String, Long])]
     val nextOpen = Vector.newBuilder[Rule]
+    val shares = Vector.newBuilder[Double]
     val routes = Seq.newBuilder[Route]
-    val routesX = Seq.newBuilder[RouteX]
     val imp = Seq.newBuilder[(Int, Double)]
     var globalMajority = globalMajority0
     var nextIdx = 0
@@ -774,14 +763,9 @@ object C45 {
             case Some(b) =>
               nextOpen += rule.withCondition(best.aid, NumLE(b))
               nextOpen += rule.withCondition(best.aid, NumGT(b))
+              shares ++= Seq(best.fracLeft, 1.0 - best.fracLeft)
               routes += Route(rid, "num", best.aid, b, nextIdx, nextIdx + 1,
                 Map.empty)
-              if (fractional) {
-                routesX += RouteX(rid, "num", best.aid, b, "le", "",
-                  nextIdx, best.fracLeft)
-                routesX += RouteX(rid, "num", best.aid, b, "gt", "",
-                  nextIdx + 1, 1.0 - best.fracLeft)
-              }
               nextIdx += 2
             case None =>
               // one child per value observed at this node (#4: children
@@ -790,23 +774,18 @@ object C45 {
               routes += Route(rid, "cat", best.aid, 0.0, -1, -1,
                 vals.zipWithIndex.map { case ((v, _), i) => v -> (nextIdx + i) }
                   .toMap)
-              if (fractional) {
-                val known = vals.map(_._2).sum.toDouble
-                vals.zipWithIndex.foreach { case ((v, c), i) =>
-                  routesX += RouteX(rid, "cat", best.aid, 0.0, "", v,
-                    nextIdx + i, c / known)
-                }
-              }
-              vals.foreach { case (v, _) =>
+              val known = vals.map(_._2).sum.toDouble
+              vals.foreach { case (v, c) =>
                 nextOpen += rule.withCondition(best.aid, CatEq(v))
+                shares += c / known
               }
               nextIdx += vals.size
           }
         }
       }
     }
-    LevelDecision(closedAdd.result(), nextOpen.result(), routes.result(),
-      routesX.result(), imp.result(), globalMajority)
+    LevelDecision(closedAdd.result(), nextOpen.result(), shares.result(), routes.result(),
+      imp.result(), globalMajority)
   }
 
   def fit(df: DataFrame, schema: C45Schema,

@@ -16,7 +16,7 @@ import org.apache.spark.storage.StorageLevel
   * (canonical C4.5 unknown-value distribution, composed with the boost
   * weight: a null-valued row descends every child with weight
   * boost-micros × known-mass share, the same half-up micro rounding
-  * as the single tree's RouteX path). Serving and the per-round
+  * as the single tree's fan-out walk). Serving and the per-round
   * error/reweight pass stay on [[C45Model.transform]]'s deterministic
   * hard routing (a null on the path falls to the majority), exactly
   * like the cross-validation eval contract. */

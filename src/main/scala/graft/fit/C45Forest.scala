@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * routes to no leaf, the single-tree drop mode per replicate) or
   * "fractional" (canonical C4.5 unknown-value distribution — a
   * null-valued row descends EVERY child of its rule's split with
-  * weight bootstrap-multiplicity × known-mass share, exact micros; see
-  * the [[LevelLoop]] weight model).
+  * weight bootstrap-multiplicity × known-mass share, exact micros, in
+  * the same per-level walk that routes every row; see the
+  * [[LevelLoop]] weight model).
   * `mtry` (0 = off) is Breiman-2001 per-NODE random feature sampling:
   * each open node considers only a deterministic md5-ranked sample of
   * `mtry` of its live attributes ([[C45Forest.mtrySample]]) — sampling

@@ -1,8 +1,8 @@
 package graft.fit
 
-import graft.functions.SortedCeilSnap
+import graft.functions.{SortedCeilSnap, TreeLeaf}
 import graft.meta.C45Schema
-import graft.model.Rule
+import graft.model.{Rule, Split}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -45,18 +45,16 @@ import org.apache.spark.storage.StorageLevel
   *  - under missing mode "fractional", when some attribute value is
   *    null (`fanOut`), a null-valued row descends EVERY child of its
   *    rule's split with its per-copy mass scaled by the child's share
-  *    of known mass, rounded half-up to whole units (Quinlan's
-  *    unknown-value distribution). Only rows with a null can fan out,
-  *    so only they ride a weighted chain: level 0 tags them at the
-  *    root, each later level broadcast-joins the previous level's
-  *    chain against the (model, rule) → child edges ([[RouteX]]) and
-  *    persists the result, uncompressed, for the next level's join;
-  *    the previous level's chain is then freed, and a `finally` frees
-  *    every chain a throwing level left. Null-free rows re-route
-  *    through the walk every level, straight over the training frame.
-  *    The chain carries mass and multiplicity separately and the
-  *    histogram weighs by their product, so a bootstrap copy rounds
-  *    exactly like an explicitly replicated row.
+  *    of known mass, rounded half-up to whole units once per level,
+  *    parent first (Quinlan's unknown-value distribution). Such a
+  *    level walks each row through the tree grown so far in one
+  *    `graft_tree_fan` expression ([[fanned]]) that emits the row's
+  *    (model, rid, mass, multiplicity) copies, exploded in place of
+  *    the single rid: the same projection, generator and partial
+  *    aggregation over the training frame as any other level. The
+  *    copies carry mass and multiplicity separately and the histogram
+  *    weighs by their product, so a bootstrap copy rounds exactly like
+  *    an explicitly replicated row.
   * Integer sums commute, so every model is bit-identical to fitting
   * it alone on its (replicated, reweighted) rows under any
   * partitioning (CrossValSpec, C45ForestSpec and C45BoostSpec pin it).
@@ -72,10 +70,6 @@ private[fit] object LevelLoop {
     * the upper-cased environment variable through a forked runner. */
   def profile: Boolean = sys.props.get("graft.fit.profile").contains("1") ||
     sys.env.get("GRAFT_FIT_PROFILE").contains("1")
-
-  /** Rows with a null attribute value: the only rows that can fan out. */
-  def anyNull(schema: C45Schema): Column =
-    schema.attrNames.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
 
   /** The projection `cols` of `df` as a fit's training frame, handed to
     * `body`. A cache-backed `df` is read through (re-persisting would
@@ -112,7 +106,8 @@ private[fit] object LevelLoop {
     val keys = if (params.maxBins <= 0) Nil
       else for (m <- 0 until models; a <- schema.numericAttrs) yield (m, a.name)
     val dc = keys.map { case (m, n) => approx_count_distinct(trains(m)(col(n))) }
-    val aggs = Seq(count(when(col(schema.classCol).isNull, 1)), count(when(anyNull(schema), 1))) ++ dc
+    val anyNull = schema.attrNames.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
+    val aggs = Seq(count(when(col(schema.classCol).isNull, 1)), count(when(anyNull, 1))) ++ dc
     val row = data.agg(aggs.head, aggs.tail: _*).head()
     require(row.getLong(0) == 0L,
       s"$who requires non-null class labels: column '${schema.classCol}' contains NULLs")
@@ -168,29 +163,44 @@ private[fit] object LevelLoop {
 
   private final class State {
     var open: Vector[Rule] = Vector(Rule.root)
+    var share = Map.empty[Vector[(Int, Split)], Double]
     var closed = Vector.empty[(Rule, Long, Map[String, Long])]
     var majority: Option[String] = None
     var routes: Seq[Route] = Nil
-    var routesX: Seq[RouteX] = Nil
     var cells: Array[Cell] = Array.empty
     val imp = scala.collection.mutable.Map.empty[Int, Double].withDefaultValue(0.0)
   }
 
+  /** What a fan-out level routes by: per model, its open rules and the
+    * share of known mass of every path prefix grown so far (the
+    * multiplier a null value passes down the edge ending there). */
+  final case class Frontier(level: Int, active: Seq[Int], open: IndexedSeq[Vector[Rule]],
+                            share: IndexedSeq[Map[Vector[(Int, Split)], Double]])
+
+  /** A fan-out level's rows: `data` with every copy of every row that
+    * reaches an open rule of an active model it trains, tagged
+    * (__model, __rid, __mass, __m) by one `graft_tree_fan` walk per
+    * row ([[graft.functions.TreeWalk]]). */
+  def fanned(data: DataFrame, schema: C45Schema, ms: Models, f: Frontier): DataFrame =
+    data.select(col("*"), inline(TreeLeaf.walkColumn(ms.mass +: f.active.map(ms.multiplicity),
+      C45.frontierInputs(schema), new TreeLeaf.Fans(f.active.toArray,
+        f.active.map(m => C45.treeNodes(f.open(m).map(_.conditions), (aid, _) => aid, f.share(m)))
+          .toArray))))
+
   /** Grow `ms` over `data` (attributes, class column and whatever
     * `multiplicity`/`mass` read): each model with its gain importance.
-    * `router` assigns a row its open-rule index (−1: none); only specs
-    * swap in another one. */
+    * `router` assigns a row its open-rule index (−1: none) and `fan`
+    * tags a fan-out level's rows ([[fanned]]); only specs swap in
+    * others. */
   def grow(data: DataFrame, schema: C45Schema, params: C45Params, ms: Models,
-           router: (Vector[Rule], C45Schema) => Column = C45.frontierRidColumn)
+           router: (Vector[Rule], C45Schema) => Column = C45.frontierRidColumn,
+           fan: (DataFrame, C45Schema, Models, Frontier) => DataFrame = fanned)
       : IndexedSeq[(C45Model, Map[Int, Double])] = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val sc = spark.sparkContext
+    val sc = data.sparkSession.sparkContext
     val names = schema.attrNames
     val fanOut = ms.probe.fractional
     val unit = if (ms.micros) 1e6 else 1.0
     val st = Vector.fill(ms.k)(new State)
-    val dirty = anyNull(schema)
 
     // `rows` tagged with each active model's (__model, __rid, __m),
     // keeping only the copies that reach an open rule and train it; K
@@ -212,7 +222,6 @@ private[fit] object LevelLoop {
             .drop(mult: _*)
         }
       tagged.filter(col("__rid") >= 0 && col("__m") > 0)
-        .withColumn("__cls", col(schema.classCol).cast("string"))
     }
 
     // the (model, rid) → (attribute, value) map a level explodes
@@ -245,102 +254,58 @@ private[fit] object LevelLoop {
       })
     }
 
-    var chain: DataFrame = null
-    var held: Option[DataFrame] = None
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-    // this level's chain of null-bearing copies (see the scaladoc)
-    def nextChain(level: Int, active: Seq[Int]): DataFrame = {
-      val c =
-        if (level == 0)
-          routed(data.filter(dirty), active).select(Seq(col("__model"), col("__rid"),
-            ms.mass.as("__w"), col("__m"), col("__cls")) ++ names.map(col): _*)
-        else {
-          val xr = active.flatMap(m => st(m).routesX.map(x =>
-            (m, x.prid, x.kind, x.aid, x.boundary, x.side, x.catval, x.crid, x.frac)))
-          val edges = xr.toDF("__pmodel", "__prid", "__kind", "__aid", "__boundary",
-            "__side", "__catval", "__crid", "__frac")
-          val routeAids = xr.map(_._4).toSet
-          val deadAll = active.map(m => st(m).open.map(_.usedAttrs).reduce(_ intersect _))
-            .reduce(_ intersect _)
-          chain.join(broadcast(edges),
-              chain("__model") === edges("__pmodel") && chain("__rid") === edges("__prid"))
-            .withColumn("__wN", routeXWeight(schema.attrs.filter(a =>
-              routeAids(schema.attrIndex(a.name))), schema))
-            .filter(col("__wN").isNotNull && col("__wN") > 0)
-            .drop("__rid", "__w", "__pmodel", "__prid", "__kind", "__aid",
-              "__boundary", "__side", "__catval", "__frac")
-            .withColumnRenamed("__crid", "__rid")
-            .withColumnRenamed("__wN", "__w")
-            // attributes no open path of any model can split on again
-            .drop(names.filter(n => deadAll(schema.attrIndex(n))): _*)
-        }
-      if (level >= 1 && level < params.maxDepth) {
-        val p = persistUncompressed(c); persisted += p; p
-      } else c
-    }
-
     def histogram(level: Int, active: Seq[Int]): Map[Int, Array[Cell]] = {
-      val pairs = attrPairs(level, active)
-      def exploded(rows: DataFrame, weight: Column): DataFrame =
-        rows.select(col("__model"), col("__rid"), col("__cls").as("cls"), weight.as("__w"),
-          explode(pairs).as(Seq("aid", "val")))
-      val clean = exploded(routed(if (fanOut) data.filter(!dirty) else data, active),
-        ms.mass * col("__m"))
-      val next = if (fanOut) nextChain(level, active) else null
-      val rows = if (!fanOut) clean
-        else exploded(next, col("__w") * col("__m")).unionByName(clean)
+      val (rows, mass) =
+        if (fanOut) (fan(data, schema, ms, Frontier(level, active, st.map(_.open), st.map(_.share))),
+          col("__mass"))
+        else (routed(data, active), ms.mass)
       val prevDesc = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"graft.${ms.caller} level=$level models=${active.size} histogram")
       val collected =
-        try rows.filter(col("val").isNotNull)
+        try rows.withColumn("__cls", col(schema.classCol).cast("string"))
+          .select(col("__model"), col("__rid"), col("__cls").as("cls"),
+            (mass * col("__m")).as("__w"), explode(attrPairs(level, active)).as(Seq("aid", "val")))
+          .filter(col("val").isNotNull)
           .groupBy("__model", "__rid", "aid", "val", "cls")
           .agg(sum(col("__w")).as("cnt"))
           .collect()
         finally sc.setJobDescription(prevDesc)
-      if (fanOut) {
-        held.foreach(_.unpersist())
-        held = if (level >= 1 && level < params.maxDepth) Some(next) else None
-        chain = next
-      }
       collected.groupBy(_.getInt(0)).view.mapValues(_.map(r =>
         (r.getInt(1), r.getInt(2), r.getString(3), r.getString(4), r.getLong(5)))).toMap
     }
 
     var level = 0
-    try {
-      while (st.exists(_.open.nonEmpty) && level <= params.maxDepth) {
-        val t0 = System.nanoTime()
-        val active = st.indices.filter(st(_).open.nonEmpty)
-        // at maxDepth every open rule closes on its class marginal,
-        // which the parent's cells give exactly unless rows fan out
-        val derive = !fanOut && level == params.maxDepth && level > 0
-        val cells = if (derive) Map.empty[Int, Array[Cell]] else histogram(level, active)
-        active.foreach { m =>
-          val s = st(m)
-          val labels = ms.probe.labels(m)
-          val stats =
-            if (derive) C45.LevelStats(C45.deriveFinalCounts(s.cells, s.routes),
-              Map.empty, Map.empty, Map.empty)
-            else C45.levelStats(cells.getOrElse(m, Array.empty), schema, labels,
-              ms.micros, unit, params)
-          val d = C45.decideLevel(s.open, level, stats, schema, params, labels,
-            ms.micros, unit, s.majority)
-          s.closed ++= d.closedAdd
-          d.importanceAdd.foreach { case (a, v) => s.imp(a) += v }
-          s.majority = d.globalMajority
-          s.open = d.nextOpen
-          s.routes = d.routes
-          s.routesX = d.routesX
-          s.cells = cells.getOrElse(m, Array.empty)
-        }
-        if (profile)
-          println(f"[${ms.caller}] level=$level models=${active.size} " +
-            (if (derive) "derived (no job)"
-            else f"cells=${cells.values.map(_.length).sum} ${(System.nanoTime() - t0) / 1e9}%.2fs"))
-        level += 1
+    while (st.exists(_.open.nonEmpty) && level <= params.maxDepth) {
+      val t0 = System.nanoTime()
+      val active = st.indices.filter(st(_).open.nonEmpty)
+      // at maxDepth every open rule closes on its class marginal,
+      // which the parent's cells give exactly unless rows fan out
+      val derive = !fanOut && level == params.maxDepth && level > 0
+      val cells = if (derive) Map.empty[Int, Array[Cell]] else histogram(level, active)
+      active.foreach { m =>
+        val s = st(m)
+        val labels = ms.probe.labels(m)
+        val stats =
+          if (derive) C45.LevelStats(C45.deriveFinalCounts(s.cells, s.routes),
+            Map.empty, Map.empty, Map.empty)
+          else C45.levelStats(cells.getOrElse(m, Array.empty), schema, labels,
+            ms.micros, unit, params)
+        val d = C45.decideLevel(s.open, level, stats, schema, params, labels,
+          ms.micros, unit, s.majority)
+        s.closed ++= d.closedAdd
+        d.importanceAdd.foreach { case (a, v) => s.imp(a) += v }
+        s.majority = d.globalMajority
+        s.open = d.nextOpen
+        s.share ++= d.nextOpen.map(_.conditions).zip(d.shares)
+        s.routes = d.routes
+        s.cells = cells.getOrElse(m, Array.empty)
       }
-    } finally persisted.foreach(_.unpersist())
+      if (profile)
+        println(f"[${ms.caller}] level=$level models=${active.size} " +
+          (if (derive) "derived (no job)"
+          else f"cells=${cells.values.map(_.length).sum} ${(System.nanoTime() - t0) / 1e9}%.2fs"))
+      level += 1
+    }
     st.indices.map { m =>
       val s = st(m)
       val labels = ms.probe.labels(m)
@@ -349,44 +314,6 @@ private[fit] object LevelLoop {
       val (leaves, mass, dist) = (s.closed ++
         s.open.map(r => (r.closed(majority), 0L, Map.empty[String, Long]))).unzip3
       (C45Model(schema.copy(classLabels = labels), leaves, majority, mass, dist), s.imp.toMap)
-    }
-  }
-
-  /** Persist without columnar compression: a chain level lives for
-    * exactly one level and is scanned twice (its histogram, the next
-    * level's join), so dictionary/RLE encoding costs more CPU than the
-    * memory it saves. The conf is snapshotted at persist time, so the
-    * temporary set cannot leak to other caches. */
-  private def persistUncompressed(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.inMemoryColumnarStorage.compressed"
-    val old = s.conf.get(key)
-    s.conf.set(key, "false")
-    try df.persist(StorageLevel.MEMORY_AND_DISK)
-    finally s.conf.set(key, old)
-  }
-
-  /** A chain copy's mass on the edge it joined (columns __w, __frac,
-    * __kind, __aid, __boundary, __side, __catval and the row's
-    * `routeAttrs` values): full mass where the value selects this
-    * child, `floor(mass × frac + 0.5)` on EVERY child where it is
-    * null, null (the copy leaves) otherwise. */
-  private def routeXWeight(routeAttrs: Seq[graft.meta.AttrMeta], schema: C45Schema): Column = {
-    val fracW = floor(col("__w") * col("__frac") + lit(0.5)).cast("long")
-    def value(numeric: Boolean): Column = element_at(map(routeAttrs.filter(_.isNumeric == numeric)
-      .flatMap(a => Seq(lit(schema.attrIndex(a.name)),
-        col(a.name).cast(if (numeric) "double" else "string"))): _*), col("__aid"))
-    val num = value(numeric = true)
-    val cat = value(numeric = false)
-    val branches = Seq(
-      routeAttrs.exists(_.isNumeric) -> ("num", when(col("__side") === "le" && num <= col("__boundary"), col("__w"))
-        .when(col("__side") === "gt" && num > col("__boundary"), col("__w"))
-        .when(num.isNull, fracW)),
-      routeAttrs.exists(!_.isNumeric) -> ("cat", when(cat === col("__catval"), col("__w"))
-        .when(cat.isNull, fracW))).collect { case (true, b) => b }
-    if (branches.isEmpty) lit(null)
-    else branches.tail.foldLeft(when(col("__kind") === branches.head._1, branches.head._2)) {
-      case (acc, (kind, b)) => acc.when(col("__kind") === kind, b)
     }
   }
 }

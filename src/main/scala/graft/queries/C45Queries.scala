@@ -1071,8 +1071,8 @@ object C45Queries {
   //      cross-validation with nulls planted on the STRUCTURAL
   //      attribute (l_quantity, 1 row in 7 at a third salt), so the
   //      fractional missing-mode machinery engages inside the fused
-  //      fold fit — every fold's tree grows through weighted RouteX
-  //      fan-outs. Held-out scoring is C45Model.transform's flat
+  //      fold fit — every fold's tree grows through weighted fan-out
+  //      walks. Held-out scoring is C45Model.transform's flat
   //      routing: a null on the path falls to the majority fallback
   //      (the deterministic eval contract; the fractional-weight VOTE
   //      is the separate predict surface, q_predict_missing). Counts
@@ -1359,7 +1359,7 @@ object C45Queries {
   //      null-planted view (~25% of l_tax nulled by pure key arithmetic,
   //      the label computed from the ORIGINAL columns) trained with
   //      q_forest's 5-tree rotating-subspace bootstrap. Null-bearing
-  //      rows ride the tree-tagged RouteX chain at per-copy micros ×
+  //      rows fan out along each tree's walk at per-copy micros ×
   //      multiplicity (LevelLoop scaladoc), so every tree is
   //      bit-identical to a sequential fractional fit on its replicated
   //      bootstrap sample (C45ForestSpec pins the property; this query
@@ -2002,7 +2002,7 @@ object C45Queries {
   //      class is stamped from the ORIGINAL value, so each weak fit
   //      must recover the planted XOR from the 75% known mass while
   //      null rows descend every split at boost-micros × known-share
-  //      (LevelLoop scaladoc: each round's RouteX chain carries the
+  //      (LevelLoop scaladoc: each round's fan-out walk carries the
   //      BOOST weight as its starting mass). The per-round error/
   //      reweight pass stays on deterministic hard routing, the same
   //      eval contract as q_crossval_missing. Oracle: VALUES pin of

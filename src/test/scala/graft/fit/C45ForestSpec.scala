@@ -76,7 +76,7 @@ class C45ForestSpec extends AnyFunSuite {
     "sequential fractional fits on replicated bootstrap samples " +
     "(null-bearing corpus)") {
     // ~20% nulls on x1, keyed deterministically — the fractional
-    // machinery must engage (dirty rows ride the RouteX chain) and
+    // machinery must engage (dirty rows fan out along each walk) and
     // every tree must equal C45.fit(missingMode=fractional) on its
     // explicitly replicated bootstrap sample, masses in exact micros
     val df = fixture.withColumn("x1",

@@ -4,7 +4,10 @@ import graft.SparkTestSession
 import graft.meta.{AttrMeta, C45Schema}
 import org.apache.spark.JobCount
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,9 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The tests named `join-routed fit …` date from when wide frontiers
   * routed through a broadcast rule-table join; they now pin the walk
   * that replaced it against the flat first-match CASE WHEN routing
-  * ([[DeepFrontierSpec.flatFit]]). The one join the fit still plans —
-  * the fractional fit's weighted RouteX chain for null-bearing rows —
-  * keeps its broadcast pin. */
+  * ([[DeepFrontierSpec.flatFit]]). A fractional fit's levels fan
+  * null-bearing rows out inside the same kind of walk, and their plans
+  * are pinned to one exchange, no join, no union and no cache but the
+  * training frame's. */
 class DeepFrontierSpec extends AnyFunSuite {
   import DeepFrontierSpec.flatFit
   lazy val spark = SparkTestSession.spark
@@ -81,11 +85,11 @@ class DeepFrontierSpec extends AnyFunSuite {
 
   /** `fit`'s result and the executed plans of the queries it ran,
     * captured as each query finishes. */
-  private def fitPlans(fit: => C45Model): (C45Model, List[String]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  private def fitPlans(fit: => C45Model): (C45Model, List[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        plans.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -248,7 +252,7 @@ class DeepFrontierSpec extends AnyFunSuite {
     val (m, plans) = fitPlans(
       C45.fit(edgeCorpus, edgeSchema, C45Params(maxDepth = 4, missingMode = "drop")))
     assert(frontier(m, 3) > 64)
-    val histograms = plans.filter(_.contains("__rid"))
+    val histograms = plans.map(_.toString).filter(_.contains("__rid"))
     // levels 0-3 each run one histogram; every level-3 rule is pure
     assert(histograms.size == 4, histograms.mkString("\n\n"))
     val widest = histograms.map { p =>
@@ -260,33 +264,34 @@ class DeepFrontierSpec extends AnyFunSuite {
     assert(widest > 128, s"the widest level walked only $widest nodes")
   }
 
-  test("every join-routed level plans a broadcast join and no shuffle") {
-    // The fit's one remaining route join: under missingMode
-    // "fractional" the null-bearing rows ride a weighted RouteX chain,
-    // each level past the root joining the previous level's base
-    // against that level's routing edges. Each such level must be a
-    // BroadcastHashJoin with no shuffle of its own: the histogram
-    // aggregate's exchange is the level's only one. A lost broadcast
-    // hint would turn every level into a full shuffle of the chain;
-    // size-based broadcasting is off so only the hint can plan one.
-    // Adaptive execution is off so each plan prints once.
-    val confs = Map("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+  test("every fractional level plans one fan-out walk: no join, union or chain") {
+    // Under missingMode "fractional" each level walks every row of the
+    // training cache through one graft_tree_fan expression, null-valued
+    // rows fanning out along the tree, and explodes the copies: no
+    // join against a route table, no union with a second scan of the
+    // cache, no persisted per-level chain. The histogram aggregate's
+    // exchange is the level's only one. Adaptive execution is off so
+    // each plan prints once.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (m, plans) =
       try fitPlans(C45.fit(edgeCorpus, edgeSchema,
         C45Params(maxDepth = 4, missingMode = "fractional")))
-      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-    assert(frontier(m, 1) > 1, "a join-routed level must carry a multi-route table")
-    val routed = plans.filter(_.contains("__prid"))
-    assert(routed.size >= 2, s"expected >=2 join-routed levels, got ${routed.size}")
-    routed.foreach { p =>
-      assert(p.contains("BroadcastHashJoin"), s"routing must broadcast-hash-join:\n$p")
-      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
-        s"routing must not shuffle:\n$p")
-      assert("Exchange hashpartitioning".r.findAllMatchIn(p).size == 1,
-        s"only the histogram aggregate may shuffle:\n$p")
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(frontier(m, 2) > 1, "the fit must grow past its first split")
+    val levels = plans.filter(_.toString.contains("__rid"))
+    assert(levels.size >= 3, s"expected >=3 histogram levels, got ${levels.size}")
+    levels.foreach { p =>
+      val text = p.toString
+      assert(text.contains("graft_tree_fan"), s"a level must fan out in the walk:\n$text")
+      assert(p.collect { case j: BaseJoinExec => j }.isEmpty && !text.contains("Join"),
+        s"a level must not join:\n$text")
+      assert(p.collect { case u: UnionExec => u }.isEmpty, s"a level must not union:\n$text")
+      assert(p.collect { case c: InMemoryTableScanExec => c }.size == 1 &&
+        "InMemoryRelation".r.findAllMatchIn(text).size == 1,
+        s"a level must read the training cache and no other:\n$text")
+      assert(p.collect { case e: Exchange => e }.size == 1,
+        s"only the histogram aggregate may shuffle:\n$text")
     }
   }
 

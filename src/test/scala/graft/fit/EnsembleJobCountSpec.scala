@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exact Spark job counts of the ensemble fitters, so a change to how
-  * they plan a level (routing, chain joins, final-level elision)
-  * shows up as a changed number. Class labels are declared and the
+  * they plan a level (routing, fan-out, final-level elision) shows up
+  * as a changed number. Class labels are declared and the
   * training frame is cached and materialized outside the counted
   * window; adaptive execution is off so an aggregate's shuffle map
   * stage does not count as a job of its own. */
@@ -53,9 +53,9 @@ class EnsembleJobCountSpec extends AnyFunSuite {
     C45Forest.fit(df, schema, col("k"), C45ForestParams(nTrees = 2, seed = 3,
       base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)))
 
-  private def boost(depth: Int)(df: DataFrame): C45Boost =
+  private def boost(depth: Int, mode: String = "drop")(df: DataFrame): C45Boost =
     C45Boost.fit(df, schema, C45BoostParams(rounds = 1,
-      base = C45Params(maxDepth = depth, maxBins = 0, missingMode = "drop")))
+      base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)))
 
   test("a 2-tree drop-mode forest runs the probe plus one job per grown level") {
     // probe + levels 0..d-1; level d derives from level d-1's cells
@@ -64,13 +64,19 @@ class EnsembleJobCountSpec extends AnyFunSuite {
   }
 
   test("a fractional 2-tree forest on a null-bearing corpus: exact job count") {
-    // probe + levels 0..2 (the final level cannot derive: null rows fan
-    // out) + the chain's broadcast route-table builds at levels 1 and 2
-    assert(jobs(withNulls = true)(forest(2, "fractional")) == 6)
+    // probe + levels 0..2: the final level cannot derive (null rows fan
+    // out), and a fan-out level is one job like any other, with no
+    // route table to broadcast
+    assert(jobs(withNulls = true)(forest(2, "fractional")) == 4)
   }
 
   test("a 1-round drop-mode boost: probe, one job per grown level, one eval") {
     assert(jobs(withNulls = false)(boost(1)) == 3)
     assert(jobs(withNulls = false)(boost(2)) == 4)
+  }
+
+  test("a 1-round fractional boost on a null-bearing corpus: exact job count") {
+    // probe + levels 0..1 (no derived final level) + the eval pass
+    assert(jobs(withNulls = true)(boost(1, "fractional")) == 4)
   }
 }

@@ -42,8 +42,8 @@ class FitFailureSpec extends AnyFunSuite {
 
   // size splits at 9, color below it; a third of the rows are noise,
   // so boosting keeps going past its first round. With `nulls`, some
-  // colors and sizes are null, so fractional fits fan those rows out
-  // through a persisted chain; `k` keys the bootstrap and the folds.
+  // colors and sizes are null, so fractional fits fan those rows out;
+  // `k` keys the bootstrap and the folds.
   private def trainDf(nulls: Boolean = false): DataFrame = {
     val s = spark
     import s.implicits._
@@ -59,10 +59,10 @@ class FitFailureSpec extends AnyFunSuite {
   }
 
   /** Runs `shallow` to learn its lookup count, then `deep` with that
-    * budget, and checks the persisted-RDD set: at least `held` above
-    * its baseline when the failure strikes, back at it afterwards. */
+    * budget, and checks the persisted-RDD set: above its baseline when
+    * the failure strikes, back at it afterwards. */
   private def releasesOnFailure(shallow: C45Schema => Any, deep: C45Schema => Any,
-                                held: Int = 1, base: C45Schema = schema): Unit = {
+                                base: C45Schema = schema): Unit = {
     val sc = spark.sparkContext
     val spent = new AtomicInteger
     shallow(injecting(-1, spent, base = base))
@@ -70,8 +70,8 @@ class FitFailureSpec extends AnyFunSuite {
     var live = -1
     intercept[Injected](deep(injecting(spent.get, new AtomicInteger,
       () => live = sc.getPersistentRDDs.size, base)))
-    assert(live >= baseline + held,
-      s"the failure must strike while the fit holds $held caches ($live, $baseline)")
+    assert(live >= baseline + 1,
+      s"the failure must strike while the fit holds a cache ($live, $baseline)")
     assert(sc.getPersistentRDDs.size == baseline,
       s"persisted RDDs leaked: $baseline before, ${sc.getPersistentRDDs.size} after")
   }
@@ -100,8 +100,8 @@ class FitFailureSpec extends AnyFunSuite {
       C45Forest.fit(df, s, col("k"), C45ForestParams(nTrees = 2, seed = 3,
         base = C45Params(maxDepth = depth, maxBins = 0, missingMode = "fractional")))
     // the deep run throws after level 2's histogram job, holding the
-    // training cache and level 2's persisted chain
-    releasesOnFailure(forest(2), forest(3), held = 2, deepSchema)
+    // training cache (a fan-out level persists nothing of its own)
+    releasesOnFailure(forest(2), forest(3), deepSchema)
   }
 
   test("C45CrossVal.crossValidate releases its fold cache and fan-out chain " +
@@ -111,7 +111,7 @@ class FitFailureSpec extends AnyFunSuite {
       C45CrossVal.crossValidate(df, s,
         C45Params(maxDepth = depth, maxBins = 0, missingMode = "fractional"), col("k"), 3)
     // the deep run throws after level 1's histogram job, holding the
-    // fold-stamped cache and level 1's persisted chain
-    releasesOnFailure(cv(1), cv(2), held = 2)
+    // fold-stamped cache (a fan-out level persists nothing of its own)
+    releasesOnFailure(cv(1), cv(2))
   }
 }
