@@ -2,12 +2,20 @@
 """Per-job table of a Spark event log: jobs, tasks and wall time per job
 group and description, each job labelled by kind.
 
-    python3 scripts/eventlog_jobs.py <event log file or directory> [--group SUBSTR]
+    python3 scripts/eventlog_jobs.py <event log file or directory> [--group SUBSTR] [--jobs]
 
 The log must be uncompressed JSON lines. A directory is searched for its
 `events_*` files (Spark's rolling `eventlog_v2_*` layout) or, failing
 that, taken as one log per file; with several applications the newest
 one is read. `--group` keeps only job groups that contain SUBSTR.
+
+`--jobs` prints one row per job instead: its id, its call site (the name
+of its last stage, e.g. `localCheckpoint at Dedup.scala:760`, or
+`(adaptive map stage)` for a map stage that adaptive execution submitted
+from its own thread), the tasks each of its stages ran (`4+1`: a 4-task
+map stage, then a 1-task result stage; skipped stages are left out), its
+wall ms, and the driver gap: ms from the end of the previous job in the
+log to this job's start (negative when jobs overlap).
 
 Kinds, from the stages a job ran and their RDDs:
   broadcast     result tasks over ParallelCollectionRDD roots only, under a
@@ -70,9 +78,16 @@ def jobs_of(files):
                         desc=props.get("spark.job.description") or "",
                         start=e["Submission Time"], end=None, tasks=0,
                         types=collections.Counter(), roots=set(), scopes=set(),
-                        shuffle=False)
+                        shuffle=False, site="", stage_tasks={})
                     for s in e["Stage IDs"]:
                         stage_job[s] = e["Job ID"]
+                    names = {i["Stage ID"]: i.get("Stage Name", "") for i in e.get("Stage Infos", [])}
+                    if names:
+                        site = names[max(names)]
+                        # adaptive execution submits its map stages from a
+                        # pool thread, so their call site names that thread
+                        jobs[e["Job ID"]]["site"] = ("(adaptive map stage)"
+                            if "withThreadLocalCaptured" in site else site)
                 elif ev == "SparkListenerStageCompleted":
                     info = e["Stage Info"]
                     j = jobs.get(stage_job.get(info["Stage ID"]))
@@ -91,6 +106,7 @@ def jobs_of(files):
                         continue
                     j["tasks"] += 1
                     j["types"][e.get("Task Type")] += 1
+                    j["stage_tasks"][e["Stage ID"]] = j["stage_tasks"].get(e["Stage ID"], 0) + 1
                     m = e.get("Task Metrics") or {}
                     read = m.get("Shuffle Read Metrics") or {}
                     write = m.get("Shuffle Write Metrics") or {}
@@ -118,13 +134,31 @@ def kind(j):
     return "result"
 
 
+def print_jobs(every, group):
+    """One row per job whose group contains `group`."""
+    print(f"{'job':>5} {'group':<26} {'call site':<44} {'tasks':<10} {'wall_ms':>8} {'gap_ms':>7}")
+    prev_end = None
+    for jid, j in every:
+        gap = j["start"] - prev_end if prev_end is not None else 0
+        prev_end = j["end"] or j["start"]
+        if group not in j["group"]:
+            continue
+        tasks = "+".join(str(n) for _, n in sorted(j["stage_tasks"].items())) or "0"
+        print(f"{jid:>5} {j['group'][:26]:<26} {j['site'][:44]:<44} {tasks:<10} "
+              f"{j['wall_ms']:>8} {gap:>7}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("log")
     ap.add_argument("--group", default="")
+    ap.add_argument("--jobs", action="store_true", help="one row per job")
     args = ap.parse_args()
-    jobs = [j for _, j in sorted(jobs_of(log_files(args.log)).items())
-            if args.group in j["group"]]
+    every = sorted(jobs_of(log_files(args.log)).items())
+    if args.jobs:
+        print_jobs(every, args.group)
+        return
+    jobs = [j for _, j in every if args.group in j["group"]]
     rows = collections.OrderedDict()
     for j in jobs:
         key = (j["group"], j["desc"], j["kind"])

@@ -711,145 +711,136 @@ object Dedup {
     * (the minimum doc id reachable through the similarity graph), so a
     * keep-one-per-cluster policy is a single filter.
     *
-    * Iterative min-label propagation: each round joins the (tiny
-    * relative to the corpus) edge list against current labels and takes
-    * the per-node min — the standard large-scale CC formulation
-    * (alternating shuffled join + pre-aggregated min; rounds = graph
-    * diameter, which is small for near-dup clusters). Runs to an exact
-    * fixpoint, so the result is the true components independent of
-    * iteration schedule. */
+    * Bucketed union-find (local contraction, after Łącki et al. 2018):
+    * the edges hash into `edges / BucketEdges + 1` buckets, one task
+    * runs a union-find over each bucket, and every node takes the
+    * smallest root it saw. A graph under `BucketEdges` edges is one
+    * bucket, so it is labelled exactly in ONE round whatever its
+    * diameter. With several buckets, the round's checkpoint observes
+    * Σ (roots per node − 1); while that is positive the next round
+    * unions the contracted (label, root) edges under a fresh hash
+    * order, and a window min restores the minimum-id labels at the end.
+    * Ids must be integral; the result is a checkpointed (id,
+    * cluster_id) table in the input's id type. Throws
+    * `IllegalStateException` if the rounds run out. */
   def connectedComponents(pairs: DataFrame, iCol: String = "i",
-                          jCol: String = "j", maxIter: Int = 50): DataFrame = {
-    // persist the undirected edge set BEFORE anything counts or joins
-    // it: `pairs` is typically an expensive similarity self-join, and
-    // both the partition sizing below and the iteration consume edges.
-    // Both orientations come from ONE pass via explode (a union of two
-    // selects would put the pair pipeline in the plan twice and
-    // evaluate it twice on materialization).
-    val undirected = pairs
-      .select(explode(array(
-        struct(col(iCol).as("src"), col(jCol).as("dst")),
-        struct(col(jCol).as("src"), col(iCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val nEdges = undirected.count()
-    if (nEdges == 0) { // no near-dups: every label table is empty
-      return pairs.select(col(iCol).as("id"), col(iCol).as("cluster_id")).limit(0)
-    }
-    // co-partition edges and labels by node id up front: every
-    // iteration's join then reuses the same hash partitioning (one
-    // shuffle at setup, none per round on the edge side); partition
-    // count scales with the EDGE table (small relative to the corpus),
-    // not the session default
-    val nParts = math.max(2, math.min(
-      pairs.sparkSession.sparkContext.defaultParallelism,
-      (nEdges / 100000L).toInt + 1))
-    // the loop's shuffle width follows the MEASURED edge count, not
-    // the session default — GraphRank.hits' discipline: an iterative
-    // fixpoint over a tiny label table at corpus-tuned width pays
-    // rounds × the full per-partition fixed cost for nothing. Small
-    // graphs run in a conf-isolated session CLONE at the loop width
-    // (shared context and cache — the persisted edge table stays
-    // warm); big graphs stay in the caller's session untouched. The
-    // final label table re-roots back to the caller's session.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L)) // defensive: non-numeric conf ("auto") → wide
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = nParts < sessSp &&
-      !sys.env.get("GRAFT_CC_LOOPWIDTH").contains("0")
-    val loopSess =
-      if (small) bridge.cloneWithConf(sess,
-        "spark.sql.shuffle.partitions" -> nParts.toString)
-      else sess
-    val und = if (small) bridge.reRoot(undirected, loopSess) else undirected
-    val edges = und
-      .repartition(nParts, col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // localCheckpoint (eager) each round: truncates the logical-plan
-    // lineage, without which per-iteration analysis cost grows with the
-    // iteration count — the classic iterative-DataFrame pitfall
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster_id", col("id"))
-      .repartition(nParts, col("id"))
+                          jCol: String = "j"): DataFrame =
+    connectedComponents(pairs, iCol, jCol, BucketEdges, MaxRounds)
+
+  // edges (duplicates included) per bucket: one task holds a bucket's
+  // edge list in memory, ~1M edges is a few tens of MB; multi-bucket
+  // rounds shrink the graph by a constant factor in expectation
+  private val BucketEdges = 1L << 20
+  private val MaxRounds = 40
+
+  /** [[connectedComponents]] with its bucket capacity and round cap
+    * exposed, so specs can force multi-round runs on tiny graphs. */
+  private[operators] def connectedComponents(pairs: DataFrame, iCol: String,
+      jCol: String, bucketEdges: Long, maxRounds: Int): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Observation}
+    import org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val idType = pairs.select(least(col(iCol), col(jCol))).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"connected components need integral ids, got ${idType.simpleString}")
+    def typed(df: DataFrame, label: Column): DataFrame =
+      df.select(col("node").cast(idType).as("id"), label.cast(idType).as("cluster_id"))
+    // a null endpoint leaves its partner as a self pair (least and
+    // greatest skip nulls); a both-null pair drops
+    val counted = new Observation()
+    val edges = pairs
+      .select(least(col(iCol), col(jCol)).cast("long").as("a"),
+        greatest(col(iCol), col(jCol)).cast("long").as("b"))
+      .filter(col("a").isNotNull)
+      .observe(counted, count(lit(1)).as("n"))
       .localCheckpoint()
-    undirected.unpersist() // edges is materialized by the line above
-    // labels only ever decrease (min-propagation), so Σ cluster_id is a
-    // strictly-decreasing fixpoint witness: convergence is one cheap
-    // aggregate per round, no change-detection join
-    def checksum(df: DataFrame): Long =
-      Option(df.agg(sum("cluster_id")).collect()(0).get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    var prevSum = checksum(labels)
-    var iter = 0
-    var converged = false
-    // pointer-jumping engages only past this many plain one-hop
-    // rounds: near-dup cluster graphs have tiny diameters and usually
-    // converge before it, so the common case never pays the jump's
-    // extra join/checkpoint — while a pathological long-path component
-    // still converges in O(log diameter) extra rounds instead of
-    // exceeding maxIter (measured: jump-every-round cost more than it
-    // saved on the bench graphs; diameter ≤ 3 is the norm there)
-    val JumpAfter =
-      sys.env.get("GRAFT_CC_JUMP_AFTER").map(_.toInt).getOrElse(3)
-    while (!converged && iter < maxIter) {
-      val viaNeighbor = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("cluster_id"))
-      val mined = viaNeighbor.union(labels)
-        .groupBy("id").agg(min("cluster_id").as("cluster_id"))
-        .localCheckpoint()
-      // pointer-jump (path doubling): additionally follow each label's
-      // OWN label — a node whose cluster_id is k also learns k's
-      // current cluster_id. The remaining hop distance to each
-      // component's minimum roughly HALVES per round on top of the
-      // one-hop neighbor step — the standard CC acceleration
-      // (large-star/small-star family). Pure schedule change of the
-      // same monotone fixpoint: labels only ever decrease and only to
-      // ids reachable in the similarity graph, so the converged table
-      // is the IDENTICAL exact min-label component labeling. Every
-      // cluster_id is some node's id (init: own id; propagated:
-      // another node's), so the left join misses only defensively.
-      val next =
-        if (iter < JumpAfter) mined
-        else {
-          val parent = mined.select(col("id").as("__pid"),
-            col("cluster_id").as("__pcid"))
-          val jumped = mined
-            .join(parent, mined("cluster_id") === parent("__pid"), "left")
-            .select(mined("id").as("id"),
-              least(mined("cluster_id"),
-                coalesce(col("__pcid"), mined("cluster_id")))
-                .as("cluster_id"))
+    val nEdges = counted.get("n").asInstanceOf[Long]
+    // every node table this call checkpoints; all are released on the
+    // way out, the returned table is not one of them
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      if (nEdges == 0) return typed(pairs.select(col(iCol).as("node")).limit(0), col("node"))
+      var e = edges
+      var n = nEdges
+      var done = false
+      while (!done) {
+        if (rounds.size == maxRounds) throw new IllegalStateException(
+          s"connected components did not converge in $maxRounds rounds over $nEdges edges")
+        val round = rounds.size
+        val nb = (n / bucketEdges + 1).toInt
+        // one partition per bucket; a single bucket coalesces the edge
+        // table into one task, with no shuffle
+        val found = (if (nb == 1) e.coalesce(1) else e.repartition(nb, col("a"), col("b"), lit(round)))
+          .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+          .mapPartitions(unionFind(_, round).iterator)(Encoders.product[UnionFindRow])
+          .toDF()
+        // one bucket: every node saw exactly one root, the exact
+        // components; round 0 orders roots by id, so they are the minima
+        if (nb == 1 && round == 0) return typed(found, col("root")).localCheckpoint()
+        if (nb == 1) {
+          rounds += found.select(col("node"), col("root").as("label")).localCheckpoint()
+          done = true
+        } else {
+          val seen = new Observation()
+          val nodes = found.groupBy("node").agg(collect_set(struct("key", "root")).as("rs"))
+            .select(col("node"), array_min(col("rs")).getField("root").as("label"),
+              col("rs").getField("root").as("roots"))
+            .observe(seen, sum(size(col("roots")) - 1).as("extra"))
             .localCheckpoint()
-          org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(mined)
-          jumped
+          rounds += nodes
+          n = seen.get("extra").asInstanceOf[Long]
+          done = n == 0
+          e = nodes.select(col("label").as("a"), explode(col("roots")).as("b"))
+            .filter(col("a") =!= col("b"))
         }
-      val nextSum = checksum(next)
-      // next is eagerly checkpointed (its lineage no longer references
-      // labels), so the superseded round's blocks can be released NOW —
-      // otherwise every round of every invocation pins a dead label
-      // table until driver GC, steady memory pressure on a shared JVM
-      org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(labels)
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      iter += 1
+      }
+      // compose the rounds' labels from the original nodes onward, then
+      // label each final class by its minimum original id
+      val reps = rounds.tail.foldLeft(rounds.head.select(col("node"), col("label"))) {
+        (lab, next) =>
+          lab.join(next.select(col("node").as("__n"), col("label").as("__l")),
+              col("label") === col("__n"), "left")
+            .select(col("node"), coalesce(col("__l"), col("label")).as("label"))
+      }
+      typed(reps, min(col("node")).over(Window.partitionBy("label"))).localCheckpoint()
+    } finally {
+      rounds.foreach(freeLocalCheckpoint)
+      freeLocalCheckpoint(edges)
     }
-    if (sys.env.contains("GRAFT_CC_PROFILE"))
-      println(s"[cc] converged=$converged rounds=$iter edges=$nEdges")
-    // the RETURNED label table stays checkpointed (callers read it);
-    // its blocks are one bounded table, reclaimed when the caller
-    // drops the Dataset and the driver GCs the RDD
-    if (small) bridge.reRoot(labels, sess) else labels
-    } finally edges.unpersist()
-    // the whole loop is eager, so failures must not leak cached tables
-    // (unpersist on an already-released table is a harmless no-op)
-    } finally undirected.unpersist()
+  }
+
+  private[operators] case class UnionFindRow(node: Long, root: Long, key: Long)
+
+  /** Union-find over one bucket's edges (a, b): one (node, root, key)
+    * per endpoint, root being the minimum-key node of its component.
+    * Round 0 keys each node by its id; later rounds by a bijective hash
+    * of the id salted by the round, a fresh pseudo-random order, so a
+    * path of increasing ids still contracts. */
+  private def unionFind(es: Iterator[(Long, Long)], round: Int): Array[UnionFindRow] = {
+    val ends = { val b = Array.newBuilder[Long]; es.foreach { e => b += e._1; b += e._2 }; b.result() }
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var m = 0
+    for (k <- ids.indices) if (m == 0 || ids(k) != ids(m - 1)) { ids(m) = ids(k); m += 1 }
+    val key = Array.tabulate(m)(x => if (round == 0) ids(x) else mix64(ids(x) ^ mix64(round)))
+    val parent = Array.range(0, m)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def at(v: Long): Int = find(java.util.Arrays.binarySearch(ids, 0, m, v))
+    for (e <- 0 until ends.length / 2) {
+      val (a, b) = (at(ends(2 * e)), at(ends(2 * e + 1)))
+      if (a != b) { if (key(a) < key(b)) parent(b) = a else parent(a) = b }
+    }
+    Array.tabulate(m) { x => val r = find(x); UnionFindRow(ids(x), ids(r), key(r)) }
+  }
+
+  /** The splitmix64 finalizer: a bijection on longs. */
+  private def mix64(z: Long): Long = {
+    val y = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L; val x = (y ^ (y >>> 27)) * 0x94D049BB133111EBL
+    x ^ (x >>> 31)
   }
 
   /** Apply a near-duplicate pair set to the corpus: collapse every
@@ -861,7 +852,8 @@ object Dedup {
     * answers "what is duplicated"; this answers "what do I train on".
     *
     * Scale shape: the component table is EDGE-sized (near-dup members
-    * only, a sliver of the corpus), the loser set (cluster members
+    * only, a sliver of the corpus, labelled by one union-find pass
+    * over the edges below ~1M of them), the loser set (cluster members
     * that are not the canonical min) is smaller still, and the corpus
     * passes through one left-anti equi-join on the id — broadcast when
     * the loser set fits, hash-partitioned otherwise; either way the

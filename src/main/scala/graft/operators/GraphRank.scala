@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * near-dup similarity graph (a centrality-weighted alternative to
   * min-id canonical selection: the best-connected member of a dup
   * neighborhood is usually the canonical-quality one) and as the
-  * engine's general iterative-graph shape beyond the connected-
-  * components fixpoint.
+  * engine's general iterative-graph shape beyond connected
+  * components.
   *
   * Semantics (Page et al. 1999, simplified): undirected pairs become
   * two directed edges; per round each node sends
@@ -27,12 +27,11 @@ import org.apache.spark.sql.functions._
   * edge⋈rank join (shuffle on the node key — co-partitioned round to
   * round), one partial-agg contribution sum, one left join back onto
   * the node set. Rank tables are node-sized and each round ends in
-  * an EAGER localCheckpoint — the connectedComponents discipline:
-  * without lineage truncation every round's plan embeds the previous
-  * one TWICE (once via the rank table, once via the shared edge
-  * table), so analysis cost doubles per round (measured 1.7s → 17s
-  * across five rounds on a 1k-node graph). Superseded rounds free
-  * their blocks immediately. */
+  * an EAGER localCheckpoint: without lineage truncation every round's
+  * plan embeds the previous one TWICE (once via the rank table, once
+  * via the shared edge table), so analysis cost doubles per round
+  * (measured 1.7s → 17s across five rounds on a 1k-node graph).
+  * Superseded rounds free their blocks immediately. */
 object GraphRank {
 
   val U: Long = 1000000000000L // rank unit: picos

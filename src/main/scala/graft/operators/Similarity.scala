@@ -402,7 +402,7 @@ object Similarity {
     * same cluster with cos(a,b) ≥ τ), NOT transitive-closure
     * clustering: a kept vector is the smallest id of its
     * neighborhood, and chains collapse toward the smallest id without
-    * a connected-components fixpoint. The CC-based alternative (exact
+    * a connected-components pass. The CC-based alternative (exact
     * transitive clusters) is [[graft.operators.Dedup.keepCanonical]];
     * this one is one join + one aggregation, the shape the paper runs
     * at web scale. Deterministic: cosines are rounded to 6dp before
@@ -484,8 +484,8 @@ object Similarity {
     * outlier into some cluster; DBSCAN names them). A vector is CORE
     * when its ε-neighborhood (cosine ≥ `epsCos`, self included)
     * holds ≥ `minPts` vectors; clusters are the connected components
-    * of the core-core neighbor graph (exact min-label fixpoint —
-    * [[graft.operators.Dedup.connectedComponents]]); non-core vectors
+    * of the core-core neighbor graph (exact minimum-id labels from the
+    * bucketed union-find of [[graft.operators.Dedup.connectedComponents]]); non-core vectors
     * with a core neighbor join their minimum core-neighbor cluster as
     * BORDER points (the deterministic resolution of DBSCAN's
     * border-tie ambiguity); everything else is noise (cluster NULL).
@@ -531,9 +531,9 @@ object Similarity {
     *
     * Downstream of the pair table everything is linear in edges:
     * one degree rollup gates cores (neighborhood = neighbor count +
-    * self ≥ minPts), clusters are the exact min-label fixpoint over
-    * core-core edges ([[graft.operators.Dedup.connectedComponents]]
-    * — its eager-checkpoint discipline included), and border points
+    * self ≥ minPts), clusters are the exact minimum-id components of
+    * the core-core edges ([[graft.operators.Dedup.connectedComponents]]
+    * — one union-find round below ~1M edges), and border points
     * attach to their MINIMUM core-neighbor cluster (one join + min).
     * With an approximate candidate generator the result is DBSCAN
     * over the generator's recall: a missed true pair can demote a

@@ -620,8 +620,8 @@ object ExtQueries {
 
   // ---- PageRank over the LSH near-dup graph (deterministic integer
   //      semantics): centrality-weighted ranking of the duplicate
-  //      neighborhoods — the general iterative-graph shape beyond the
-  //      CC fixpoint. Top-50 by rank; full pipeline (LSH pairs + 5
+  //      neighborhoods — the general iterative-graph shape beyond
+  //      CC. Top-50 by rank; full pipeline (LSH pairs + 5
   //      unrolled rounds) replays in the oracle. VARIANT NOTE: like
   //      GraphRank.pagerank, dangling/isolated mass is NOT
   //      redistributed — nodes without out-edges decay toward the
