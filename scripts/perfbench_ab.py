@@ -13,8 +13,18 @@ builds it if needed, so builds never overlap a timed run. Every run must
 print `"correct": true`; the script stops at the first that does not.
 
 For each end-to-end metric it prints the per-seed values of both sides,
-each side's median and quartiles, and how many pairs the change won
-(strictly better in the metric's direction). Raw outputs go to --out.
+each side's median and quartiles, how many pairs the change won
+(strictly better in the metric's direction) and a verdict:
+
+  gain              the change won at least 9 of every 10 pairs, and its
+                    median is better than the parent's by more than the
+                    parent's interquartile range (q3 - q1);
+  worse than bound  the change's median is worse than the parent's by
+                    more than the metric's `bound` in BENCHMARK.json, as a
+                    fraction of the parent's median;
+  within bound      anything else.
+
+Raw outputs go to --out.
 
 With --traced-seed N it then makes one traced run (`--trace 1`) per side
 on seed N and prints, for every span that ran a job on either side,
@@ -23,6 +33,7 @@ exec_run_s. `--seeds none` skips the timed pairs.
 """
 import argparse
 import json
+import math
 import os
 import statistics
 import subprocess
@@ -70,6 +81,17 @@ def quartiles(xs):
 
 def fmt(v):
     return f"{v:.4g}"
+
+
+def verdict(metric, par, chg, wins):
+    """gain, worse than bound or within bound (see the module header)."""
+    med_p, med_c = statistics.median(par), statistics.median(chg)
+    better = (med_p - med_c) if metric["better"] == "lower" else (med_c - med_p)
+    q1, q3 = quartiles(par)
+    if 10 * wins >= 9 * len(par) and better > q3 - q1:
+        return "gain"
+    worse = -better / abs(med_p) if med_p else (math.inf if better < 0 else 0.0)
+    return "worse than bound" if worse > metric["bound"] else "within bound"
 
 
 def main():
@@ -127,6 +149,7 @@ def timed_pairs(sides, bench, workload, seeds, out):
         med_p, med_c = statistics.median(par), statistics.median(chg)
         rel = (med_c - med_p) / med_p if med_p else float("nan")
         print(f"  change wins {wins}/{len(seeds)} (ties {ties}); median change {rel:+.1%}")
+        print(f"  verdict: {verdict(m, par, chg, wins)}")
 
 
 def traced_pair(sides, bench, workload, seed, out):

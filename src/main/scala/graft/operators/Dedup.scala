@@ -729,8 +729,9 @@ object Dedup {
 
   // edges (duplicates included) per bucket: one task holds a bucket's
   // edge list in memory, ~1M edges is a few tens of MB; multi-bucket
-  // rounds shrink the graph by a constant factor in expectation
-  private val BucketEdges = 1L << 20
+  // rounds shrink the graph by a constant factor in expectation. Also
+  // the largest directed edge list GraphRank ranks in one task.
+  private[operators] val BucketEdges = 1L << 20
   private val MaxRounds = 40
 
   /** [[connectedComponents]] with its bucket capacity and round cap

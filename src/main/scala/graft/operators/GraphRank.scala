@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint
+import org.apache.spark.sql.graft.SessionBridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Iterative graph centrality over a pair table — PageRank in
   * DETERMINISTIC INTEGER semantics, for ranking documents inside the
@@ -23,15 +26,23 @@ import org.apache.spark.sql.functions._
   * to the restart base) — the variant is documented because the
   * integer replay pins it exactly.
   *
-  * Scale shape: edges + degrees persist once; each round is one
-  * edge⋈rank join (shuffle on the node key — co-partitioned round to
-  * round), one partial-agg contribution sum, one left join back onto
-  * the node set. Rank tables are node-sized and each round ends in
-  * an EAGER localCheckpoint: without lineage truncation every round's
-  * plan embeds the previous one TWICE (once via the rank table, once
-  * via the shared edge table), so analysis cost doubles per round
-  * (measured 1.7s → 17s across five rounds on a 1k-node graph).
-  * Superseded rounds free their blocks immediately. */
+  * Scale shape: the pair table persists once and is counted. When its
+  * directed edges (2 × pairs) fit one task ([[Dedup.BucketEdges]],
+  * ~1M) and the ids are integral, every round runs inside ONE task
+  * over the pair table plus the node ids that touch a pair (one
+  * broadcast semi-join); nodes without a pair never enter the task and
+  * take their closed form (deg 0, the restart base) in one final
+  * node-side left join, whose result is the one checkpoint. Larger
+  * graphs run one round at a time: edges + degrees persist once; each
+  * round is one edge⋈rank join (shuffle on the node key — co-
+  * partitioned round to round), one partial-agg contribution sum, one
+  * left join back onto the node set. Rank tables are node-sized and
+  * each round ends in an EAGER localCheckpoint: without lineage
+  * truncation every round's plan embeds the previous one TWICE (once
+  * via the rank table, once via the shared edge table), so analysis
+  * cost doubles per round (measured 1.7s → 17s across five rounds on a
+  * 1k-node graph). Superseded rounds free their blocks immediately.
+  * Both shapes return the same rows. */
 object GraphRank {
 
   val U: Long = 1000000000000L // rank unit: picos
@@ -40,43 +51,43 @@ object GraphRank {
     * (isolated nodes have deg 0 and the restart-base rank). */
   def pagerank(pairs: DataFrame, nodes: DataFrame, idCol: String,
                iters: Int = 5, dampPermille: Long = 850,
-               scope: CacheScope = CacheScope.unmanaged()): DataFrame = {
+               scope: CacheScope = CacheScope.unmanaged()): DataFrame =
+    pagerank(pairs, nodes, idCol, iters, dampPermille, scope, Dedup.BucketEdges)
+
+  /** [[pagerank]] with the one-task capacity in directed edges exposed,
+    * so specs can force the per-round loop (capacity 0). */
+  private[operators] def pagerank(pairs: DataFrame, nodes: DataFrame, idCol: String,
+      iters: Int, dampPermille: Long, scope: CacheScope, oneTaskEdges: Long): DataFrame = {
     require(iters >= 1, "iters must be positive")
     require(dampPermille >= 0 && dampPermille <= 1000,
       "damping is per-mille in [0, 1000]")
-    // the pair table feeds BOTH union branches — persist it so an
-    // expensive upstream miner (LSH) runs once, not per direction
+    // the pair table feeds BOTH edge orientations — persist it so an
+    // expensive upstream miner (LSH) runs once, not per direction; the
+    // count materializes it at the caller's width
     val p2 = scope.persist(pairs)
+    val nPairs = p2.count()
+    val ids = nodes.select(col(idCol).as("id"))
+    val oneTask = fitsOneTask(p2, ids, nPairs, oneTaskEdges)
+    val ns = if (oneTask) ids else scope.persist(ids) // read every round
+    val n = ns.count()
+    require(n > 0, "empty node set")
+    val base = (1000L - dampPermille) * U / 1000L / n
+    if (oneTask) {
+      return inOneTask(p2, ns)(_.pagerank(iters, dampPermille, base, U / n))
+        .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"),
+          coalesce(col("x"), lit(base)).as("pr_picos"))
+        .localCheckpoint()
+    }
     val edges = scope.persist(
       p2.select(col("i").as("u"), col("j").as("v"))
         .union(p2.select(col("j").as("u"), col("i").as("v"))))
     val deg = scope.persist(edges.groupBy("u").agg(count(lit(1)).as("deg")))
-    val ns = scope.persist(nodes.select(col(idCol).as("id")))
-    val n = ns.count()
-    require(n > 0, "empty node set")
-    val base = (1000L - dampPermille) * U / 1000L / n
-    // loop width sized from the MEASURED edge count in a conf-isolated
-    // session clone — [[hits]]' discipline (see its scaladoc): node-
-    // sized iterative state at corpus-tuned width pays iters × the
-    // full per-partition fixed cost for nothing. The count also
-    // materializes the edge cache at the CALLER's width before the
-    // clone exists, so an expensive upstream miner never runs narrow.
-    // Exact integer arithmetic throughout: the labeling is width-
-    // independent and the final plan re-roots back to the caller.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    def inLoop(df: DataFrame): DataFrame =
-      if (small) bridge.reRoot(df, loopSess) else df
-    val edgesL = inLoop(edges)
-    val degL = inLoop(deg)
-    val nsL = inLoop(ns)
+    // exact integer arithmetic throughout: the ranks are width-
+    // independent, so the loop runs at a width sized from the edge count
+    val (loopSess, back) = SessionBridge.loopSession(pairs.sparkSession, 2 * nPairs)
+    val edgesL = SessionBridge.reRoot(edges, loopSess)
+    val degL = SessionBridge.reRoot(deg, loopSess)
+    val nsL = SessionBridge.reRoot(ns, loopSess)
     var pr = nsL.select(col("id"), lit(U / n).as("pr")).localCheckpoint()
     for (_ <- 1 to iters) {
       val contribs = edgesL
@@ -90,16 +101,15 @@ object GraphRank {
         .select(col("id"),
           (lit(base) + coalesce(col("s"), lit(0L))).as("pr"))
         .localCheckpoint() // eager: truncates lineage, materializes now
-      org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(pr)
+      freeLocalCheckpoint(pr)
       pr = next
     }
     // the returned table reads the final round's checkpoint; its
     // blocks are one node-sized table, reclaimed when the caller
     // drops the Dataset
-    val out = pr.join(degL, pr("id") === degL("u"), "left")
+    back(pr.join(degL, pr("id") === degL("u"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"),
-        col("pr").as("pr_picos"))
-    if (small) bridge.reRoot(out, sess) else out
+        col("pr").as("pr_picos")))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over a
@@ -116,59 +126,184 @@ object GraphRank {
     * rounds; LPA is a heuristic whose fixpoint may oscillate, so the
     * round count is part of the contract, exactly like [[pagerank]].
     *
-    * Scale shape is [[pagerank]]'s: pairs persist once, become both
-    * edge orientations; per round one edge⋈label join (shuffle on
-    * the node key), one (node, label) partial-agg count, one
-    * struct-argmax collapse, one left join back to the node set; the
-    * label table is node-sized and each round ends in an eager
+    * Scale shape is [[pagerank]]'s: the pair table persists once and
+    * is counted. A graph that fits one task runs every round in it,
+    * and nodes without a pair keep their own id through the final
+    * node-side left join. Larger graphs run per round: one edge⋈label
+    * join (shuffle on the node key), one (node, label) partial-agg
+    * count, one struct-argmax collapse, one left join back to the node
+    * set; the label table is node-sized and each round ends in an eager
     * `localCheckpoint` with the superseded round freed (the
     * iterative-loop lineage discipline). */
   def labelPropagation(pairs: DataFrame, nodes: DataFrame, idCol: String,
                        iters: Int = 5,
-                       scope: CacheScope = CacheScope.unmanaged()): DataFrame = {
+                       scope: CacheScope = CacheScope.unmanaged()): DataFrame =
+    labelPropagation(pairs, nodes, idCol, iters, scope, Dedup.BucketEdges)
+
+  /** [[labelPropagation]] with the one-task capacity in directed edges
+    * exposed, so specs can force the per-round loop (capacity 0). */
+  private[operators] def labelPropagation(pairs: DataFrame, nodes: DataFrame,
+      idCol: String, iters: Int, scope: CacheScope, oneTaskEdges: Long): DataFrame = {
     require(iters >= 1, "iters must be positive")
     val p2 = scope.persist(pairs)
+    val nPairs = p2.count()
+    val ns = nodes.select(col(idCol).as("id"))
+    if (fitsOneTask(p2, ns, nPairs, oneTaskEdges)) {
+      return inOneTask(p2, ns)(_.labels(iters))
+        .select(col("id"),
+          coalesce(col("x").cast(ns.schema.head.dataType), col("id")).as("community"))
+        .localCheckpoint()
+    }
     val edges = scope.persist(
       p2.select(col("i").as("u"), col("j").as("v"))
         .union(p2.select(col("j").as("u"), col("i").as("v"))))
-    val ns = scope.persist(nodes.select(col(idCol).as("id")))
-    // loop width from the measured edge count in a conf-isolated clone
-    // ([[hits]]' discipline); the count materializes the edge cache at
-    // the caller's width first. Votes/argmax are exact integer aggs —
-    // width-independent.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    def inLoop(df: DataFrame): DataFrame =
-      if (small) bridge.reRoot(df, loopSess) else df
-    val edgesL = inLoop(edges)
-    val nsL = inLoop(ns)
+    // votes/argmax are exact integer aggs — width-independent
+    val (loopSess, back) = SessionBridge.loopSession(pairs.sparkSession, 2 * nPairs)
+    val edgesL = SessionBridge.reRoot(edges, loopSess)
+    val nsL = SessionBridge.reRoot(scope.persist(ns), loopSess)
     var lbl = nsL.select(col("id"), col("id").as("lbl")).localCheckpoint()
     for (_ <- 1 to iters) {
       // per-neighbor label votes → (node, label) counts → argmax by
-      // (count desc, label asc) via one partial-aggregating struct max
+      // (count desc, label asc) via one partial-aggregating struct max;
+      // bitwise_not reverses the label order without overflowing
       val votes = edgesL
         .join(lbl, edgesL("u") === lbl("id")).drop("id")
         .groupBy(col("v").as("id"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .groupBy("id")
-        .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("b"))
-        .select(col("id"), (-col("b.nl")).as("newLbl"))
+        .agg(max(struct(col("c"), bitwise_not(col("lbl")).as("nl"))).as("b"))
+        .select(col("id"), bitwise_not(col("b.nl")).as("newLbl"))
       val next = lbl
         .join(votes, Seq("id"), "left")
         .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl"))
         .localCheckpoint() // eager: truncates lineage, materializes now
-      org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(lbl)
+      freeLocalCheckpoint(lbl)
       lbl = next
     }
-    val out = lbl.select(col("id"), col("lbl").as("community"))
-    if (small) bridge.reRoot(out, sess) else out
+    back(lbl.select(col("id"), col("lbl").as("community")))
+  }
+
+  private val IntegralIds = Seq(ByteType, ShortType, IntegerType, LongType)
+
+  /** Whether a pair table of `nPairs` pairs runs in one task: its
+    * directed edges fit under `capacity` and every id is integral. */
+  private def fitsOneTask(p2: DataFrame, ns: DataFrame, nPairs: Long,
+                          capacity: Long): Boolean =
+    2 * nPairs < capacity &&
+      Seq(p2.schema("i"), p2.schema("j"), ns.schema("id"))
+        .forall(f => IntegralIds.contains(f.dataType))
+
+  /** `run` over the pair table `p2` and the ids of `ns` that touch a
+    * pair, in one task, yielding (node, deg, x) for every such id; `ns`
+    * left-joined to those rows (at most one per directed edge, small
+    * enough to broadcast). */
+  private def inOneTask(p2: DataFrame, ns: DataFrame)(
+      run: OneTaskGraph => Iterator[(Long, Long, Long)]): DataFrame = {
+    val ends = p2.select(explode(array(col("i").cast("long"), col("j").cast("long"))).as("e"))
+    val touching = ns.select(col("id").cast("long").as("a"))
+      .join(broadcast(ends), col("a") === col("e"), "left_semi")
+    val rows = p2.select(lit(true).as("pair"), col("i").cast("long").as("a"),
+        col("j").cast("long").as("b"))
+      .union(touching.select(lit(false).as("pair"), col("a"), lit(null).cast("long").as("b")))
+      .repartition(1)
+      .as(Encoders.tuple(Encoders.scalaBoolean, Encoders.LONG, Encoders.LONG))
+    val out = rows.mapPartitions(rs => run(new OneTaskGraph(rs)))(
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
+      .toDF("node", "deg", "x")
+    ns.join(broadcast(out), col("id").cast("long") === col("node"), "left")
+  }
+
+  /** A pair table's graph inside one task, built from (true, i, j) pair
+    * rows and one (false, id, null) row per node-table row whose id
+    * touches a pair. Ids get dense indices in id order. `deg(x)` counts
+    * the directed edges out of `x` (one to a null id included, as the
+    * per-round join counts it), `mult(x)` the node-table rows of `x` (0
+    * for an id outside the node table: it sends nothing and reports
+    * nothing), and `from(at(v) until at(v + 1))` holds the sources of
+    * `v`'s directed in-edges. Arithmetic is exact: an overflow throws,
+    * as it does under ANSI SQL in the per-round loop. */
+  private final class OneTaskGraph(rows: Iterator[(Boolean, java.lang.Long, java.lang.Long)]) {
+    private val both = Array.newBuilder[Long] // pairs with two ids, flattened
+    private val half = Array.newBuilder[Long] // the id of a pair whose other is null
+    private val nodeRows = Array.newBuilder[Long]
+    rows.foreach {
+      case (false, a, _) => nodeRows += a
+      case (_, a, b) if a != null && b != null => both += a; both += b
+      case (_, a, b) => Option(a).orElse(Option(b)).foreach(half += _)
+    }
+    private val ends = both.result()
+    private val all = ends ++ half.result()
+    val ids: Array[Long] = {
+      val a = all.clone()
+      java.util.Arrays.sort(a)
+      var k = 0
+      for (x <- a.indices) if (k == 0 || a(x) != a(k - 1)) { a(k) = a(x); k += 1 }
+      java.util.Arrays.copyOf(a, k)
+    }
+    private def index(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val m: Int = ids.length
+    val deg = new Array[Long](m)
+    all.foreach(v => deg(index(v)) += 1)
+    val mult = new Array[Long](m)
+    nodeRows.result().foreach(v => mult(index(v)) += 1)
+    val at = new Array[Int](m + 1)
+    val from = new Array[Int](ends.length)
+    locally {
+      val ix = ends.map(index)
+      ix.foreach(v => at(v + 1) += 1)
+      for (v <- 0 until m) at(v + 1) += at(v)
+      val fill = at.clone()
+      for (e <- 0 until ix.length by 2) {
+        from(fill(ix(e + 1))) = ix(e); fill(ix(e + 1)) += 1
+        from(fill(ix(e))) = ix(e + 1); fill(ix(e)) += 1
+      }
+    }
+    private def out(value: Int => Long): Iterator[(Long, Long, Long)] =
+      Iterator.range(0, m).filter(mult(_) > 0).map(v => (ids(v), deg(v), value(v)))
+
+    /** [[GraphRank.pagerank]]'s rounds from rank `start`. */
+    def pagerank(iters: Int, damp: Long, base: Long, start: Long): Iterator[(Long, Long, Long)] = {
+      import java.lang.Math.{addExact, multiplyExact}
+      var pr = Array.fill(m)(start)
+      for (_ <- 1 to iters) {
+        val c = Array.tabulate(m)(u =>
+          if (mult(u) == 0) 0L else multiplyExact(pr(u), damp) / 1000L / deg(u))
+        pr = Array.tabulate(m) { v =>
+          var s = base
+          for (k <- at(v) until at(v + 1)) s = addExact(s, multiplyExact(mult(from(k)), c(from(k))))
+          s
+        }
+      }
+      out(pr(_))
+    }
+
+    /** [[GraphRank.labelPropagation]]'s rounds; a label is the index of
+      * the id it names, so index order is label order. */
+    def labels(iters: Int): Iterator[(Long, Long, Long)] = {
+      var lbl = Array.range(0, m)
+      val votes = new Array[Long](m)
+      val seen = new Array[Int](m)
+      for (_ <- 1 to iters) {
+        val next = lbl.clone()
+        for (v <- 0 until m if mult(v) > 0) {
+          var k = 0
+          for (e <- at(v) until at(v + 1) if mult(from(e)) > 0) {
+            val l = lbl(from(e))
+            if (votes(l) == 0) { seen(k) = l; k += 1 }
+            votes(l) = java.lang.Math.addExact(votes(l), mult(from(e)))
+          }
+          var best = -1
+          for (x <- 0 until k) {
+            val l = seen(x)
+            if (best < 0 || votes(l) > votes(best) || (votes(l) == votes(best) && l < best)) best = l
+          }
+          for (x <- 0 until k) votes(seen(x)) = 0
+          if (best >= 0) next(v) = best
+        }
+        lbl = next
+      }
+      out(v => ids(lbl(v)))
+    }
   }
 
   /** Per-node triangle counts + local clustering coefficient over a
@@ -260,20 +395,11 @@ object GraphRank {
     var edges = und.select(col("i").as("u"), col("j").as("v"))
       .union(und.select(col("j").as("u"), col("i").as("v")))
       .localCheckpoint()
-    // loop width from the measured (checkpointed) edge count in a
-    // conf-isolated clone ([[hits]]' discipline); peel rounds are
-    // degree counts + semi-joins over a shrinking edge table — exact
-    // and width-independent.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    if (small) edges = bridge.reRoot(edges, loopSess)
+    // loop width from the measured (checkpointed) edge count ([[hits]]'
+    // discipline); peel rounds are degree counts + semi-joins over a
+    // shrinking edge table — exact and width-independent.
+    val (loopSess, back) = SessionBridge.loopSession(pairs.sparkSession, edges.count())
+    edges = SessionBridge.reRoot(edges, loopSess)
     for (_ <- 1 to rounds) {
       val keep = edges.groupBy("u").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("u"))
@@ -282,11 +408,10 @@ object GraphRank {
         .join(keep.select(col("u").as("v")), "v")
         .select("u", "v")
         .localCheckpoint() // eager: truncates lineage, materializes now
-      org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(edges)
+      freeLocalCheckpoint(edges)
       edges = next
     }
-    val out = edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    if (small) bridge.reRoot(out, sess) else out
+    back(edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg")))
   }
 
   /** Multi-source BFS hop distance over a pair table: the minimum
@@ -321,21 +446,13 @@ object GraphRank {
     val edges = scope.persist(
       p2.select(col("i").as("u"), col("j").as("v"))
         .union(p2.select(col("j").as("u"), col("i").as("v"))))
-    // loop width from the measured edge count in a conf-isolated clone
-    // ([[hits]]' discipline); the count materializes the edge cache at
-    // the caller's width first. Frontier expansion is distinct/anti-
-    // join over exact ids — width-independent.
-    val sess = pairs.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L))
-    val loopSp = math.max(1L, math.min(sessSp, edges.count() / 500000L + 1))
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess = if (small) bridge.cloneWithConf(sess,
-      "spark.sql.shuffle.partitions" -> loopSp.toString) else sess
-    val edgesL = if (small) bridge.reRoot(edges, loopSess) else edges
-    val sourcesL = if (small) bridge.reRoot(sources, loopSess) else sources
+    // loop width from the measured edge count ([[hits]]' discipline);
+    // the count materializes the edge cache at the caller's width
+    // first. Frontier expansion is distinct/anti-join over exact ids —
+    // width-independent.
+    val (loopSess, back) = SessionBridge.loopSession(pairs.sparkSession, edges.count())
+    val edgesL = SessionBridge.reRoot(edges, loopSess)
+    val sourcesL = SessionBridge.reRoot(sources, loopSess)
     val frontiers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var frontier = sourcesL.select(col(idCol).as("id")).distinct()
       .select(col("id"), lit(0L).as("hops")).localCheckpoint()
@@ -357,7 +474,7 @@ object GraphRank {
         .select(col("id"), lit(r.toLong).as("hops"))
         .localCheckpoint() // eager: only the NEW frontier materializes
       if (next.isEmpty) { // already-converged graph: stop paying rounds
-        org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(next)
+        freeLocalCheckpoint(next)
         done = true
       } else {
         frontiers += next
@@ -366,8 +483,7 @@ object GraphRank {
       }
       r += 1
     }
-    val out = frontiers.reduce(_.union(_))
-    if (small) bridge.reRoot(out, sess) else out
+    back(frontiers.reduce(_.union(_)))
   }
 
   /** HITS hub/authority scores (Kleinberg, JACM 1999) over a DIRECTED
@@ -440,23 +556,12 @@ object GraphRank {
     require(maxDeg < 9000000L,
       s"hits: max node degree $maxDeg exceeds the long headroom " +
         "(raw*10^6 wraps past deg ~9e6); pre-aggregate or shard the graph")
-    val sess = e0.sparkSession
-    val sessSp = math.max(1L,
-      scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(200L)) // defensive: non-numeric conf ("auto") → treat as wide
-    val loopSp = math.max(1L,
-      math.min(sessSp, degStats.getLong(1) / 500000L + 1))
     // big graphs run at the session width in the caller's session;
     // small ones get a conf-isolated clone at the loop width (shared
     // context and cache, so the persisted edge/node tables stay warm)
-    val bridge = org.apache.spark.sql.graft.SessionBridge
-    val small = loopSp < sessSp
-    val loopSess =
-      if (small) bridge.cloneWithConf(sess,
-        "spark.sql.shuffle.partitions" -> loopSp.toString)
-      else sess
-    val e = if (small) bridge.reRoot(e0, loopSess) else e0
-    val ns = if (small) bridge.reRoot(ns0, loopSess) else ns0
+    val (loopSess, back) = SessionBridge.loopSession(e0.sparkSession, degStats.getLong(1))
+    val e = SessionBridge.reRoot(e0, loopSess)
+    val ns = SessionBridge.reRoot(ns0, loopSess)
     var hub = ns.select(col("id"), lit(M).as("hub")).localCheckpoint()
     var auth = ns.select(col("id"), lit(M).as("auth")).localCheckpoint()
     def half(score: DataFrame, scoreCol: String, srcKey: String,
@@ -476,16 +581,15 @@ object GraphRank {
     }
     for (_ <- 1 to iters) {
       val a2 = half(hub, "hub", "u", "v", "auth")
-      org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(auth)
+      freeLocalCheckpoint(auth)
       auth = a2
       val h2 = half(auth, "auth", "v", "u", "hub")
-      org.apache.spark.sql.graft.CheckpointBridge.freeLocalCheckpoint(hub)
+      freeLocalCheckpoint(hub)
       hub = h2
     }
-    val out = hub.join(auth, "id")
+    back(hub.join(auth, "id")
       .select(col("id"), col("hub").as("hub_micros"),
-        col("auth").as("auth_micros"))
-    if (small) bridge.reRoot(out, sess) else out
+        col("auth").as("auth_micros")))
   }
 
   /** Common-neighbor link prediction over a pair table: for every

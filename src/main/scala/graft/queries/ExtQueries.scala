@@ -628,7 +628,8 @@ object ExtQueries {
   //      restart base instead of donating their rank to everyone, so
   //      ranks here run slightly below a textbook
   //      dangling-redistributing PageRank (the trade buys the exact
-  //      integer replay both engines pin) ----
+  //      integer replay both engines pin). The slice's graph fits one
+  //      task, so all 5 rounds run in one task over the pair table ----
   private val PrIters = 5
   private val PrDamp = 850L
   private val PrTopK = 50
@@ -675,7 +676,8 @@ object ExtQueries {
   //      bridge node adopts whichever side out-votes the other).
   //      Synchronous rounds, fixed count (part of the contract, like
   //      q_pagerank); every node reports its final community plus the
-  //      community's size. Isolated docs are singleton communities ----
+  //      community's size. Isolated docs are singleton communities. Like
+  //      q_pagerank's, the 5 rounds run in one task over the pair table ----
   private val LpaIters = 5
   def qLabelProp(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).filter(col("doc_id") < 1000)

@@ -23,13 +23,16 @@ object ColumnBridge {
   * until driver GC happens to collect the RDD. This helper releases a
   * superseded checkpoint's blocks eagerly; the caller must guarantee
   * the Dataset is never evaluated again (its lineage is truncated, so
-  * recomputation is impossible by design). */
+  * recomputation is impossible by design). The blocks go through the
+  * context's `private[spark]` `unpersistRDD`: `RDD.unpersist` would
+  * warn, for every locally checkpointed RDD, that it cannot be
+  * recomputed, which is exactly the intended state here. */
 object CheckpointBridge {
   def freeLocalCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
 }
@@ -60,11 +63,31 @@ object SessionBridge {
   /** Rebind `df`'s logical plan to session `to` — planning (and conf
     * reads) then happen under `to`'s SQLConf. The plan itself is
     * session-agnostic; cached/checkpointed inputs resolve through the
-    * shared context. */
+    * shared context. A frame already in `to` comes back as it is. */
   def reRoot(df: org.apache.spark.sql.DataFrame,
              to: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
+    if (df.sparkSession eq to) df
+    else org.apache.spark.sql.classic.Dataset.ofRows(
       to.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
         .queryExecution.logical)
+
+  /** The session an iterative loop over `rows` measured rows of state
+    * runs in, and the function that re-roots the loop's final plan back
+    * into `s`. The loop width is `rows / 500000 + 1` shuffle partitions:
+    * node-sized state at a corpus-tuned width pays the full
+    * per-partition fixed cost every round for nothing. Below `s`'s
+    * width the loop gets a clone at that width; otherwise it runs in
+    * `s` itself and the re-root back is the identity. A non-numeric
+    * width conf ("auto") counts as wide. */
+  def loopSession(s: org.apache.spark.sql.SparkSession, rows: Long)
+      : (org.apache.spark.sql.SparkSession,
+         org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+    val width = "spark.sql.shuffle.partitions"
+    val sessSp = math.max(1L,
+      scala.util.Try(s.conf.get(width).toLong).getOrElse(200L))
+    val loopSp = math.max(1L, math.min(sessSp, rows / 500000L + 1))
+    if (loopSp < sessSp) (cloneWithConf(s, width -> loopSp.toString), reRoot(_, s))
+    else (s, identity)
+  }
 }

@@ -179,6 +179,17 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  test("releasing its checkpoints logs no unpersist warning") {
+    val s = spark
+    import s.implicits._
+    // a released local checkpoint cannot be recomputed by design, so
+    // Spark's "cannot be recomputed after unpersisting" warning is noise
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("i", "j")
+    val (n, warned) = graft.LogCapture.warnings(Dedup.connectedComponents(pairs).count())
+    assert(n == 5)
+    assert(!warned.exists(_.contains("was locally checkpointed")), warned.mkString("\n"))
+  }
+
   test("int ids come back as int; non-integral ids are rejected") {
     val s = spark
     import s.implicits._

@@ -1,6 +1,10 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[GraphRank.pagerank]] — deterministic integer PageRank: exact
@@ -154,6 +158,108 @@ class GraphRankSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("community")))
       .sortBy(_._1).toSeq
     assert(run(2) == run(9))
+  }
+
+  // ------------- one task ≡ per-round loop (both operators) -------------
+
+  private type Pair = (Option[Long], Option[Long])
+
+  /** A messy graph over `pool`'s ids: pairs duplicated, reversed, self-
+    * paired and half-null at random, plus one both-null pair; a node
+    * table that drops some endpoints, adds isolated ids, repeats some
+    * ids and holds one null id. */
+  private def messy(pool: Gen[Long]): Gen[(Seq[Pair], Seq[Option[Long]])] = for {
+    n <- Gen.chooseNum(5, 60)
+    edges <- Gen.listOfN(n, Gen.zip(pool, pool))
+    shape <- Gen.listOfN(n, Gen.chooseNum(0, 9))
+    drop <- Gen.listOfN(n, Gen.chooseNum(0, 5))
+    isolated <- Gen.listOfN(4, pool)
+  } yield {
+    val pairs = edges.zip(shape).flatMap {
+      case ((a, b), 0) => Seq[Pair]((Some(a), Some(b)), (Some(a), Some(b))) // duplicate
+      case ((a, b), 1) => Seq[Pair]((Some(b), Some(a)))                     // reversed
+      case ((a, b), 2) => Seq[Pair]((Some(a), Some(b)), (Some(a), Some(a))) // plus a self pair
+      case ((a, _), 3) => Seq[Pair]((Some(a), None))                        // null endpoints
+      case ((_, b), 4) => Seq[Pair]((None, Some(b)))
+      case ((a, b), _) => Seq[Pair]((Some(a), Some(b)))
+    } :+ ((None, None): Pair)
+    val ends = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val kept = ends.zip(drop).collect { case (v, d) if d > 0 => v }  // endpoints outside nodes
+    val nodes = (kept ++ kept.take(3) ++ isolated).distinct.map(Option(_)) ++
+      kept.take(3).map(Option(_)) :+ None                              // 3 ids twice, a null id
+    (pairs, nodes)
+  }
+
+  private val longIds: Gen[Long] = Gen.oneOf(Gen.chooseNum(-12L, 12L),
+    Gen.chooseNum(0L, 2L).map(Long.MinValue + _), Gen.chooseNum(0L, 2L).map(Long.MaxValue - _))
+
+  /** Both operators' rows, sorted, at one-task capacity `cap`. */
+  private def outputs(pairs: DataFrame, nodes: DataFrame, iters: Int, cap: Long) = {
+    def rows(run: CacheScope => DataFrame) = {
+      val scope = new CacheScope
+      try {
+        val df = run(scope)
+        (df.schema.map(_.dataType), df.collect().map(_.toString).sorted.toSeq)
+      } finally scope.release()
+    }
+    (rows(GraphRank.pagerank(pairs, nodes, "id", iters, 850L, _, cap)),
+      rows(GraphRank.labelPropagation(pairs, nodes, "id", iters, _, cap)))
+  }
+
+  test("one task equals the per-round loop on messy long and int graphs, iters 1 and 5") {
+    val longs = (1 to 4).map { k =>
+      val (p, n) = messy(longIds).pureApply(Gen.Parameters.default, Seed(k.toLong))
+      // Long.MinValue votes: the loop's label order must not negate it
+      val extremes = Seq(Long.MinValue -> Long.MaxValue, Long.MinValue -> (Long.MinValue + 1),
+        (Long.MinValue + 1) -> Long.MaxValue).map { case (a, b) => (Some(a), Some(b)): Pair }
+      ((p ++ extremes).toDF("i", "j"), (n ++ Seq(Some(Long.MinValue), Some(Long.MaxValue))).toDF("id"))
+    }
+    val ints = (5 to 6).map { k =>
+      val (p, n) = messy(Gen.chooseNum(-12L, 12L)).pureApply(Gen.Parameters.default, Seed(k.toLong))
+      (p.map { case (a, b) => (a.map(_.toInt), b.map(_.toInt)) }.toDF("i", "j"),
+        n.map(_.map(_.toInt)).toDF("id"))
+    }
+    val noPairs = (Seq.empty[Pair].toDF("i", "j"), Seq(Some(3L), Some(3L), None).toDF("id"))
+    for ((pairs, nodes) <- longs ++ ints :+ noPairs; iters <- Seq(1, 5)) {
+      val (pr, lp) = outputs(pairs, nodes, iters, Dedup.BucketEdges)
+      assert(pr._2.size == nodes.count() && lp._2.size == nodes.count())
+      assert((pr, lp) == outputs(pairs, nodes, iters, 0L), s"iters $iters")
+    }
+  }
+
+  test("one task runs a fixed job count (adaptive execution off)") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("i", "j")
+    val nodes = (1L to 9L).toDF("id")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val (pr, prJobs) = JobCount.of(spark.sparkContext)(GraphRank.pagerank(pairs, nodes, "id"))
+      val (lp, lpJobs) = JobCount.of(spark.sparkContext)(GraphRank.labelPropagation(pairs, nodes, "id"))
+      // pagerank: the pair count, the node count, the endpoint
+      // broadcast, the one-task broadcast, the result checkpoint; label
+      // propagation needs no node count
+      assert((prJobs, lpJobs) == ((5, 4)))
+      assert(pr.count() == 9 && lp.count() == 9)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("one task keeps only the returned table and the scope's pair table") {
+    val pairs = (1L to 30L).map(i => (i, i % 7 + 100L)).toDF("i", "j")
+    val nodes = ((1L to 40L) ++ (100L to 106L)).toDF("id")
+    val sc = spark.sparkContext
+    Seq[CacheScope => DataFrame](
+      s => GraphRank.pagerank(pairs, nodes, "id", scope = s),
+      s => GraphRank.labelPropagation(pairs, nodes, "id", scope = s)).foreach { run =>
+      val scope = new CacheScope
+      val before = sc.getPersistentRDDs.keySet
+      val out = run(scope)
+      assert(scope.trackedCount == 1, "only the pair table is cached")
+      assert((sc.getPersistentRDDs.keySet -- before).size == 2,
+        "the pair table's cache and the returned checkpoint")
+      assert(out.count() == 47)
+      scope.release()
+      assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    }
   }
 
   // ------------------------- triangleCounts -------------------------
