@@ -1,27 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JIT-friendly codegen fallback, same rationale as Verify.scala
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // The generated-class cache (static conf, default 100 entries) must
-      // hold the suite's working set for the warmup pass to do its job:
-      // the timed reps re-run IDENTICAL deterministic plans, and with the
-      // default cache ~197 queries × dozens of codegen units evict each
-      // other between reps, so every rep re-pays Janino compilation
-      // instead of measuring execution. Parameterized, local default
-      // sized to the suite; harmless (bounded class metadata) elsewhere.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup pass (untimed): JIT + whole-stage-codegen compilation +
     // parquet footer caches; the timed pass then measures steady-state

@@ -1,0 +1,32 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local session builder of the mains ([[Bench]], [[Verify]]
+  * and the dev tools) and the test session; callers add what is theirs
+  * (an app name, a warehouse dir) and call `getOrCreate()`. */
+object GraftSession {
+  def local(cpus: Int): SparkSession.Builder = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects;
+    // read as LongType ns (Sessionize converts exactly)
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // generated methods past the JIT's 8000-byte compile cutoff run
+    // in the JVM bytecode interpreter — slower than Spark's own
+    // interpreted expressions. Fall back at that threshold instead
+    // of the 64KB class-format limit: measured 4x on the 5-member
+    // fractional-forest serving span (20s -> 4.6s at sf0.1), zero
+    // effect on normally-sized spans
+    .config("spark.sql.codegen.hugeMethodLimit", "8000")
+    // The generated-class cache (static conf, default 100 entries) must
+    // hold the suite's working set for Bench's warmup pass to do its
+    // job: the timed reps re-run IDENTICAL deterministic plans, and with
+    // the default cache ~197 queries × dozens of codegen units evict
+    // each other between reps, so every rep re-pays Janino compilation
+    // instead of measuring execution. Harmless (bounded class metadata)
+    // elsewhere.
+    .config("spark.sql.codegen.cache.maxEntries", "20000")
+}

@@ -1,33 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects;
-      // read as LongType ns (Sessionize converts exactly)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // generated methods past the JIT's 8000-byte compile cutoff run
-      // in the JVM bytecode interpreter — slower than Spark's own
-      // interpreted expressions. Fall back at that threshold instead
-      // of the 64KB class-format limit: measured 4x on the 5-member
-      // fractional-forest serving span (20s -> 4.6s at sf0.1), zero
-      // effect on normally-sized spans
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // generated-class cache sized to the full query suite (static
-      // conf, default 100): the verify pass runs 197 queries, many
-      // sharing fit/serve plans — see Bench.scala's rationale
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b dumps just those queries (dev loop —

@@ -193,8 +193,12 @@ case class C45Model(schema: C45Schema, leaves: Vector[Rule], majority: String,
     val leafIdx = (if (walk) treeLeafColumn else None)
       .getOrElse(C45.flatRidColumn(leaves, schema.attrNames))
     val leaf = col("__leaf")
+    // quoted: an input column may carry a dot (the ensembles' per-member
+    // micros columns of a StringIndexer label "0.0"), which a bare col()
+    // would read as field access
+    val inputs = df.columns.toSeq.map(c => col(s"`${c.replace("`", "``")}`"))
     df.withColumn("__leaf", leafIdx)
-      .select((df.columns.toSeq.map(col) :+
+      .select((inputs :+
         byLeaf(leaf, majority, leaves.map(_.label.get)).as(outputCol)) ++
         classes.zipWithIndex.map { case (c, ci) =>
           byLeaf(leaf, majorityMicros(ci), leafMicros.map(_(ci))).as(s"$probPrefix$c")

@@ -1,88 +1,23 @@
 package graft.fit
 
-import graft.meta.{AttrMeta, C45Schema}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.ml.{Estimator, Model}
-import org.apache.spark.ml.param.{IntParam, Param, ParamMap, Params,
-  ParamValidators, StringArrayParam}
+import org.apache.spark.ml.{Estimator, Model, PipelineStage}
+import org.apache.spark.ml.param.{IntParam, ParamMap, ParamValidators}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable,
   Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, NumericType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Shared params for [[C45BoostClassifier]] /
-  * [[C45BoostClassificationModel]] — the `spark.ml` face of the
-  * AdaBoost.M1 ensemble ([[C45Boost]]), following [[C45Classifier]]'s
-  * conventions: numeric-dtype features fit continuous, anything else
-  * categorical; the label is stringified for the fit and predictions
-  * cast back to the fit-time label dtype. Unlike the forest wrapper
-  * there is no key column — boost weights are data-dependent, not
-  * hash-drawn. Probabilities (optional, [[probabilityCol]]) are the
-  * normalized α-vote mass shares ([[C45Boost.transformProba]]). */
-private[fit] trait C45BoostClassifierParams extends Params {
-  final val labelCol: Param[String] =
-    new Param[String](this, "labelCol", "label column name")
-  final val predictionCol: Param[String] =
-    new Param[String](this, "predictionCol", "prediction output column name")
-  final val probabilityCol: Param[String] = new Param[String](this,
-    "probabilityCol", "optional class-probability output column (empty = " +
-      "off): an ml Vector of the normalized alpha-weighted vote mass " +
-      "shares, indexed by ascending numeric label value for numeric " +
-      "labels and by sorted class string otherwise")
-  final val featureCols: StringArrayParam = new StringArrayParam(this,
-    "featureCols", "feature columns: numeric dtypes fit as continuous " +
-      "attributes, everything else as categorical")
-  final val maxDepth: IntParam = new IntParam(this, "maxDepth",
-    "maximum depth of each weak learner (shallow keeps them weak)",
-    ParamValidators.gtEq(0))
-  final val maxBins: IntParam = new IntParam(this, "maxBins",
-    "quantile-bin cap for the numeric split search (<= 0 disables)")
+/** AdaBoost.M1's own param (the shared ones are in [[C45MlParams]]).
+  * There is no key column — boost weights are data-dependent, not
+  * hash-drawn. Probabilities are the normalized α-vote mass shares
+  * ([[C45Boost.transformProba]]). Defaults: `maxDepth` 2 (shallow keeps
+  * the weak learners weak), `missingMode` drop. */
+private[fit] trait C45BoostClassifierParams extends C45MlParams {
+  this: PipelineStage =>
   final val rounds: IntParam = new IntParam(this, "rounds",
     "boosting rounds cap (the loop also stops on the M1 conditions: " +
       "a perfect round or error >= 0.5)", ParamValidators.gtEq(1))
-  final val missingMode: Param[String] = new Param[String](this,
-    "missingMode", "null attribute handling at fit time: 'drop' (a null " +
-      "value leaves each histogram slice and routes to no leaf) or " +
-      "'fractional' (Quinlan's unknown-value distribution composed with " +
-      "the boost weights)",
-    ParamValidators.inArray(Array("drop", "fractional")))
-  setDefault(labelCol -> "label", predictionCol -> "prediction",
-    probabilityCol -> "", featureCols -> Array.empty[String], maxDepth -> 2,
-    maxBins -> 256, rounds -> 5, missingMode -> "drop")
-
-  final def getLabelCol: String = $(labelCol)
-  final def getPredictionCol: String = $(predictionCol)
-  final def getProbabilityCol: String = $(probabilityCol)
-  final def getFeatureCols: Array[String] = $(featureCols)
-
-  protected def validateSchema(schema: StructType, requireLabel: Boolean,
-                               predictionType: => DataType): StructType = {
-    require($(featureCols).nonEmpty, "featureCols must be set (non-empty)")
-    $(featureCols).foreach(f => require(schema.fieldNames.contains(f),
-      s"feature column '$f' missing from ${schema.fieldNames.mkString(",")}"))
-    schema.fieldNames.filter(_.startsWith("__c45")) match {
-      case Array() => ()
-      case bad => throw new IllegalArgumentException(
-        s"input columns ${bad.mkString(", ")} collide with the wrapper's " +
-          "reserved __c45* namespace — rename them before fit/transform")
-    }
-    if (requireLabel)
-      require(schema.fieldNames.contains($(labelCol)),
-        s"label column '${$(labelCol)}' missing")
-    require(!schema.fieldNames.contains($(predictionCol)),
-      s"output column '${$(predictionCol)}' already exists")
-    val withPred =
-      schema.add(StructField($(predictionCol), predictionType, nullable = true))
-    if ($(probabilityCol).isEmpty) withPred
-    else {
-      require(!schema.fieldNames.contains($(probabilityCol)),
-        s"output column '${$(probabilityCol)}' already exists")
-      withPred.add(StructField($(probabilityCol),
-        org.apache.spark.ml.linalg.SQLDataTypes.VectorType, nullable = true))
-    }
-  }
+  setDefault(maxDepth -> 2, rounds -> 5, missingMode -> "drop")
 }
 
 /** `spark.ml` Estimator over [[C45Boost.fit]]: AdaBoost.M1 with
@@ -96,8 +31,6 @@ class C45BoostClassifier(override val uid: String)
   def this() = this(Identifiable.randomUID("c45boost"))
 
   def setLabelCol(v: String): this.type = set(labelCol, v)
-  def setPredictionCol(v: String): this.type = set(predictionCol, v)
-  def setProbabilityCol(v: String): this.type = set(probabilityCol, v)
   def setFeatureCols(v: Array[String]): this.type = set(featureCols, v)
   def setFeatureCols(v: Seq[String]): this.type = set(featureCols, v.toArray)
   def setMaxDepth(v: Int): this.type = set(maxDepth, v)
@@ -106,16 +39,7 @@ class C45BoostClassifier(override val uid: String)
   def setMissingMode(v: String): this.type = set(missingMode, v)
 
   override def fit(dataset: Dataset[_]): C45BoostClassificationModel = {
-    transformSchema(dataset.schema)
-    val df = dataset.toDF()
-    val labelType = df.schema($(labelCol)).dataType
-    val attrs = $(featureCols).toIndexedSeq.map { f =>
-      AttrMeta(f, df.schema(f).dataType.isInstanceOf[NumericType])
-    }
-    val schema = C45Schema(attrs, "__c45_label", Nil)
-    val train = df.select(
-      $(featureCols).map(col).toIndexedSeq :+
-        col($(labelCol)).cast("string").as("__c45_label"): _*)
+    val (train, schema, labelType) = fitFrame(dataset)
     val b = C45Boost.fit(train, schema, C45BoostParams(
       rounds = $(rounds),
       base = C45Params(maxDepth = $(maxDepth), maxBins = $(maxBins),
@@ -125,64 +49,17 @@ class C45BoostClassifier(override val uid: String)
   }
 
   override def transformSchema(schema: StructType): StructType =
-    validateSchema(schema, requireLabel = true,
-      predictionType = schema($(labelCol)).dataType)
+    validateSchema(schema, fitted = None)
 
   override def copy(extra: ParamMap): C45BoostClassifier = defaultCopy(extra)
 }
 
 /** The fitted `spark.ml` Model: α-weighted-vote scoring through
-  * [[C45Boost.transform]] (T flat CASE WHEN columns + a pure-Column
-  * argmax), prediction cast back to the fit-time label dtype; optional
-  * ml-convention probability Vector from the normalized α-vote mass
-  * shares ([[C45Boost.transformProba]], exact micros / 10⁶). */
-class C45BoostClassificationModel private[fit](
-    override val uid: String,
-    val boost: C45Boost,
-    private[fit] val labelType: DataType)
-    extends Model[C45BoostClassificationModel]
-    with C45BoostClassifierParams with MLWritable {
-
-  def setPredictionCol(v: String): this.type = set(predictionCol, v)
-  def setProbabilityCol(v: String): this.type = set(probabilityCol, v)
-
-  override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
-    if ($(probabilityCol).isEmpty) {
-      boost.transform(dataset.toDF(), "__c45_pred")
-        .withColumn($(predictionCol), col("__c45_pred").cast(labelType))
-        .drop("__c45_pred")
-    } else {
-      val classes = boost.labels
-      val ordered =
-        if (labelType.isInstanceOf[NumericType]) classes.sortBy(_.toDouble)
-        else classes
-      val scored = boost.transformProba(dataset.toDF(), "__c45_pred", "__c45_p_")
-      val arr = org.apache.spark.sql.functions.array(
-        ordered.map(c => col(s"`__c45_p_$c`") / 1000000.0): _*)
-      scored
-        .withColumn($(predictionCol), col("__c45_pred").cast(labelType))
-        .withColumn($(probabilityCol),
-          org.apache.spark.ml.functions.array_to_vector(arr))
-        .drop("__c45_pred" +: classes.map(c => s"__c45_p_$c"): _*)
-    }
-  }
-
-  override def transformSchema(schema: StructType): StructType =
-    validateSchema(schema, requireLabel = false, predictionType = labelType)
-
-  override def copy(extra: ParamMap): C45BoostClassificationModel =
-    copyValues(new C45BoostClassificationModel(uid, boost, labelType), extra)
-      .setParent(parent)
-
-  override def write: MLWriter = new C45BoostClassificationModel.Writer(this)
-}
-
-/** Companion readers, mirroring the forest wrapper's layout: standard
-  * `metadata/` JSON + the ENGINE's own persistence ([[C45Boost.save]]:
-  * `engine/t<i>/` round dirs + the `engine/boost.txt` α/ε manifest —
-  * the wrapper delegates, it does not re-encode) + a one-row
-  * `wrapper/` parquet carrying the engine schema and label dtype.
+  * [[C45Boost.transform]]. Members of at most 64 leaves score as flat
+  * CASE WHEN columns, wider ones through the one-expression tree walk;
+  * a pure-Column argmax takes the vote. Saves through the engine's own
+  * [[C45Boost.save]] under `engine/` (the `boost.txt` α/ε manifest and
+  * one `t<i>/` directory per round).
   *
   * FORMAT NOTE: this is save format v2 (round 19+). v1 saves carried
   * α/ε as `alpha_micros`/`error_micros` columns in the wrapper parquet
@@ -190,70 +67,35 @@ class C45BoostClassificationModel private[fit](
   * reader (the manifest open fails with the path in the message) —
   * re-save through [[C45Boost.save]]. No v1 saves exist in this
   * repository's artifacts, so no compatibility shim is carried. */
+class C45BoostClassificationModel private[fit](
+    override val uid: String,
+    val boost: C45Boost,
+    private[fit] val labelType: DataType)
+    extends Model[C45BoostClassificationModel]
+    with C45BoostClassifierParams with MLWritable {
+
+  override def transform(dataset: Dataset[_]): DataFrame = {
+    import C45MlParams.{Pred, ProbaPrefix}
+    serve(dataset, labelType, boost.labels)(
+      boost.transform(_, Pred), boost.transformProba(_, Pred, ProbaPrefix))
+  }
+
+  override def transformSchema(schema: StructType): StructType =
+    validateSchema(schema, fitted = Some(labelType))
+
+  override def copy(extra: ParamMap): C45BoostClassificationModel =
+    copyValues(new C45BoostClassificationModel(uid, boost, labelType), extra)
+      .setParent(parent)
+
+  override def write: MLWriter =
+    C45MlPersistence.writer(this, labelType, boost.trees.head.schema)(boost.save)
+}
+
 object C45BoostClassifier extends DefaultParamsReadable[C45BoostClassifier]
 
 object C45BoostClassificationModel
     extends MLReadable[C45BoostClassificationModel] {
-
-  override def read: MLReader[C45BoostClassificationModel] = new Reader
-
-  private class Writer(instance: C45BoostClassificationModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      val paramJson = instance.extractParamMap().toSeq
-        .sortBy(_.param.name)
-        .map { pp =>
-          val p = pp.param.asInstanceOf[Param[Any]]
-          s""""${p.name}":${p.jsonEncode(pp.value)}"""
-        }.mkString("{", ",", "}")
-      val meta = s"""{"class":"${instance.getClass.getName}",""" +
-        s""""timestamp":${System.currentTimeMillis()},""" +
-        s""""sparkVersion":"${spark.version}",""" +
-        s""""uid":"${instance.uid}",""" +
-        s""""paramMap":$paramJson,"defaultParamMap":{}}"""
-      import spark.implicits._
-      spark.createDataset(Seq(meta)).coalesce(1)
-        .write.text(new Path(path, "metadata").toString)
-      instance.boost.save(spark, new Path(path, "engine").toString)
-      val s = instance.boost.trees.head.schema
-      Seq((s.attrNames, s.attrs.map(_.isNumeric), s.classLabels,
-          instance.labelType.sql))
-        .toDF("attr_names", "attr_numeric", "class_labels", "label_type")
-        .coalesce(1)
-        .write.parquet(new Path(path, "wrapper").toString)
-    }
-  }
-
-  private class Reader extends MLReader[C45BoostClassificationModel] {
-    override def load(path: String): C45BoostClassificationModel = {
-      val spark = sparkSession
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val metaLine = spark.read.text(new Path(path, "metadata").toString)
-        .head().getString(0)
-      val meta = JsonMethods.parse(metaLine)
-      implicit val fmt: Formats = DefaultFormats
-      val uid = (meta \ "uid").extract[String]
-      val w = spark.read.parquet(new Path(path, "wrapper").toString).head()
-      def strs(f: String): Seq[String] =
-        w.getAs[scala.collection.Seq[String]](f).toSeq
-      val attrs = strs("attr_names")
-        .zip(w.getAs[scala.collection.Seq[Boolean]]("attr_numeric").toSeq)
-        .map { case (n, num) => AttrMeta(n, num) }
-      val schema = C45Schema(attrs, "__c45_label", strs("class_labels"))
-      val labelType = DataType.fromDDL(w.getAs[String]("label_type"))
-      val m = new C45BoostClassificationModel(uid,
-        C45Boost.load(spark, new Path(path, "engine").toString, schema),
-        labelType)
-      meta \ "paramMap" match {
-        case JObject(fields) => fields.foreach { case (name, v) =>
-          val p = m.getParam(name).asInstanceOf[Param[Any]]
-          m.set(p, p.jsonDecode(JsonMethods.compact(JsonMethods.render(v))))
-        }
-        case _ => ()
-      }
-      m
-    }
-  }
+  override def read: MLReader[C45BoostClassificationModel] =
+    C45MlPersistence.reader(s => new C45BoostClassificationModel(s.uid,
+      C45Boost.load(s.spark, s.engine, s.schema), s.labelType))
 }

@@ -99,7 +99,9 @@ case class C45Forest(trees: Vector[C45Model], seed: Int) {
     val emitted: Vector[Set[String]] = trees.map(_.probaClasses.toSet)
     val out = labels.foldLeft(withVote) { (d, c) =>
       val sum = trees.indices.map(t =>
-        if (emitted(t)(c)) col(s"__c45f_tp${t}_$c") else lit(0L)).reduce(_ + _)
+        // backticks: a class label may contain dots (StringIndexer's
+        // "0.0"), which col() would read as field access
+        if (emitted(t)(c)) col(s"`__c45f_tp${t}_$c`") else lit(0L)).reduce(_ + _)
       d.withColumn(s"$probPrefix$c",
         floor((sum + lit(T / 2)) / lit(T)).cast("long"))
     }

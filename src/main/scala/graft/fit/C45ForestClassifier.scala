@@ -1,55 +1,30 @@
 package graft.fit
 
-import graft.meta.{AttrMeta, C45Schema}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ml.{Estimator, Model}
-import org.apache.spark.ml.param.{IntParam, Param, ParamMap, Params,
-  ParamValidators, StringArrayParam}
+import org.apache.spark.ml.{Estimator, Model, PipelineStage}
+import org.apache.spark.ml.param.{IntParam, ParamMap, ParamValidators,
+  StringArrayParam}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable,
   Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, concat_ws}
-import org.apache.spark.sql.types.{DataType, NumericType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Shared params for [[C45ForestClassifier]] /
-  * [[C45ForestClassificationModel]] — the `spark.ml` face of the
-  * bagged C4.5 ensemble ([[C45Forest]]), mirroring [[C45Classifier]]'s
-  * conventions: numeric-dtype features fit continuous, anything else
-  * categorical; the label is stringified for the fit and predictions
-  * cast back to the fit-time label dtype.
-  *
-  * The forest needs one extra input the single tree does not:
-  * `keyCols`, the columns whose concatenation is the DETERMINISTIC
-  * bootstrap row key (C45Forest's md5 Poisson draws are a pure
-  * function of it — no RNG state, identical samples on any replica of
-  * the data). `missingMode` picks the fit-time null semantics (drop
-  * default, fractional = Quinlan's unknown-value distribution composed
-  * with the bootstrap weights); there is no fractional serving — the
-  * ensemble votes hard. */
-private[fit] trait C45ForestClassifierParams extends Params {
-  final val labelCol: Param[String] =
-    new Param[String](this, "labelCol", "label column name")
-  final val predictionCol: Param[String] =
-    new Param[String](this, "predictionCol", "prediction output column name")
-  final val probabilityCol: Param[String] = new Param[String](this,
-    "probabilityCol", "optional class-probability output column (empty = " +
-      "off): an ml Vector of the ensemble-averaged leaf-distribution " +
-      "shares, indexed by ascending numeric label value for numeric " +
-      "labels and by sorted class string otherwise")
-  final val featureCols: StringArrayParam = new StringArrayParam(this,
-    "featureCols", "feature columns: numeric dtypes fit as continuous " +
-      "attributes, everything else as categorical")
+/** The bagged ensemble's own params (the shared ones are in
+  * [[C45MlParams]]). The forest needs one input the single tree does
+  * not: `keyCols`, the columns whose concatenation is the DETERMINISTIC
+  * bootstrap row key (C45Forest's md5 Poisson draws are a pure function
+  * of it — no RNG state, identical samples on any replica of the data).
+  * Fractional `missingMode` composes Quinlan's unknown-value
+  * distribution with the bootstrap weights; there is no fractional
+  * serving — the ensemble votes hard. Defaults: `maxDepth` 8,
+  * `missingMode` drop. */
+private[fit] trait C45ForestClassifierParams extends C45MlParams {
+  this: PipelineStage =>
   final val keyCols: StringArrayParam = new StringArrayParam(this,
     "keyCols", "columns concatenated ('#'-separated, stringified) into " +
       "the deterministic bootstrap row key — any stable row identifier; " +
       "duplicate keys share a draw")
-  final val maxDepth: IntParam = new IntParam(this, "maxDepth",
-    "maximum tree depth", ParamValidators.gtEq(0))
-  final val maxBins: IntParam = new IntParam(this, "maxBins",
-    "quantile-bin cap for the numeric split search (<= 0 disables " +
-      "binning; edges are computed ONCE from the full data and shared " +
-      "by every tree)")
   final val numTrees: IntParam = new IntParam(this, "numTrees",
     "bootstrap replicates in the ensemble", ParamValidators.gtEq(1))
   final val attrsPerTree: IntParam = new IntParam(this, "attrsPerTree",
@@ -61,62 +36,23 @@ private[fit] trait C45ForestClassifierParams extends Params {
       "live attributes", ParamValidators.gtEq(0))
   final val seed: IntParam = new IntParam(this, "seed",
     "salt of the deterministic bootstrap hash")
-  final val missingMode: Param[String] = new Param[String](this,
-    "missingMode", "null attribute handling at fit time: 'drop' (a null " +
-      "value leaves each histogram slice and routes to no leaf) or " +
-      "'fractional' (Quinlan's unknown-value distribution composed with " +
-      "the bootstrap multiplicities)",
-    ParamValidators.inArray(Array("drop", "fractional")))
-  setDefault(labelCol -> "label", predictionCol -> "prediction",
-    probabilityCol -> "", featureCols -> Array.empty[String],
-    keyCols -> Array.empty[String], maxDepth -> 8, maxBins -> 256,
-    numTrees -> 10, attrsPerTree -> 0, mtry -> 0, seed -> 42,
-    missingMode -> "drop")
+  setDefault(keyCols -> Array.empty[String], maxDepth -> 8, numTrees -> 10,
+    attrsPerTree -> 0, mtry -> 0, seed -> 42, missingMode -> "drop")
 
-  final def getLabelCol: String = $(labelCol)
-  final def getPredictionCol: String = $(predictionCol)
-  final def getProbabilityCol: String = $(probabilityCol)
-  final def getFeatureCols: Array[String] = $(featureCols)
   final def getKeyCols: Array[String] = $(keyCols)
 
-  /** Same contract as the single-tree wrapper's validateSchema, plus
-    * the key columns; the reserved namespace here is the whole
-    * `__c45` prefix (the wrapper routes through `__c45_*`, the
-    * ensemble's internal scoring columns through `__c45f_*`). The
-    * label is checked only when `requireLabel`; `predictionType` is
-    * by-name so the friendly label require fires before any
-    * `schema(labelCol)` lookup. */
-  protected def validateSchema(schema: StructType, requireLabel: Boolean,
-                               predictionType: => DataType): StructType = {
-    require($(featureCols).nonEmpty, "featureCols must be set (non-empty)")
-    $(featureCols).foreach(f => require(schema.fieldNames.contains(f),
-      s"feature column '$f' missing from ${schema.fieldNames.mkString(",")}"))
-    schema.fieldNames.filter(_.startsWith("__c45")) match {
-      case Array() => ()
-      case bad => throw new IllegalArgumentException(
-        s"input columns ${bad.mkString(", ")} collide with the wrapper's " +
-          "reserved __c45* namespace — rename them before fit/transform")
-    }
-    if (requireLabel) {
-      require(schema.fieldNames.contains($(labelCol)),
-        s"label column '${$(labelCol)}' missing")
-      require($(keyCols).nonEmpty,
-        "keyCols must be set (non-empty): the bootstrap draws are a " +
-          "deterministic function of the row key")
-      $(keyCols).foreach(k => require(schema.fieldNames.contains(k),
-        s"key column '$k' missing from ${schema.fieldNames.mkString(",")}"))
-    }
-    require(!schema.fieldNames.contains($(predictionCol)),
-      s"output column '${$(predictionCol)}' already exists")
-    val withPred =
-      schema.add(StructField($(predictionCol), predictionType, nullable = true))
-    if ($(probabilityCol).isEmpty) withPred
-    else {
-      require(!schema.fieldNames.contains($(probabilityCol)),
-        s"output column '${$(probabilityCol)}' already exists")
-      withPred.add(StructField($(probabilityCol),
-        org.apache.spark.ml.linalg.SQLDataTypes.VectorType, nullable = true))
-    }
+  /** The bootstrap row key, built for the fit and for
+    * [[C45ForestClassificationModel.oobEval]] alike ('#'-joined
+    * stringified `keyCols`), so the out-of-bag masks match the training
+    * draws bit for bit. Fails fast when a key column is unset or
+    * missing from `schema`. */
+  private[fit] def bootstrapKey(schema: StructType): Column = {
+    require($(keyCols).nonEmpty,
+      "keyCols must be set (non-empty): the bootstrap draws are a " +
+        "deterministic function of the row key")
+    $(keyCols).foreach(k => require(schema.fieldNames.contains(k),
+      s"key column '$k' missing from ${schema.fieldNames.mkString(",")}"))
+    concat_ws("#", $(keyCols).map(c => col(c).cast("string")).toIndexedSeq: _*)
   }
 }
 
@@ -132,8 +68,6 @@ class C45ForestClassifier(override val uid: String)
   def this() = this(Identifiable.randomUID("c45forest"))
 
   def setLabelCol(v: String): this.type = set(labelCol, v)
-  def setPredictionCol(v: String): this.type = set(predictionCol, v)
-  def setProbabilityCol(v: String): this.type = set(probabilityCol, v)
   def setFeatureCols(v: Array[String]): this.type = set(featureCols, v)
   def setFeatureCols(v: Seq[String]): this.type = set(featureCols, v.toArray)
   def setKeyCols(v: Array[String]): this.type = set(keyCols, v)
@@ -147,42 +81,34 @@ class C45ForestClassifier(override val uid: String)
   def setMissingMode(v: String): this.type = set(missingMode, v)
 
   override def fit(dataset: Dataset[_]): C45ForestClassificationModel = {
-    transformSchema(dataset.schema)
-    val df = dataset.toDF()
-    val labelType = df.schema($(labelCol)).dataType
-    val attrs = $(featureCols).toIndexedSeq.map { f =>
-      AttrMeta(f, df.schema(f).dataType.isInstanceOf[NumericType])
-    }
-    val schema = C45Schema(attrs, "__c45_label", Nil)
-    // features + stringified label + the key columns (the engine's
-    // projection computes the T bootstrap-weight columns from the key
-    // expression over this frame, then drops the key)
-    val train = df.select(
-      ($(featureCols) ++ $(keyCols)).distinct.map(col).toIndexedSeq :+
-        col($(labelCol)).cast("string").as("__c45_label"): _*)
-    val key = concat_ws("#", $(keyCols).map(c => col(c).cast("string"))
-      .toIndexedSeq: _*)
-    val f = C45Forest.fit(train, schema, key, C45ForestParams(
-      nTrees = $(numTrees), attrsPerTree = $(attrsPerTree),
-      seed = $(seed), mtry = $(mtry),
-      base = C45Params(maxDepth = $(maxDepth), maxBins = $(maxBins),
-        missingMode = $(missingMode))))
+    // the key columns ride along: the engine's projection computes the
+    // T bootstrap-weight columns from the key over this frame, then
+    // drops them
+    val (train, schema, labelType) = fitFrame(dataset, keep = $(keyCols))
+    val f = C45Forest.fit(train, schema, bootstrapKey(dataset.schema),
+      C45ForestParams(nTrees = $(numTrees), attrsPerTree = $(attrsPerTree),
+        seed = $(seed), mtry = $(mtry),
+        base = C45Params(maxDepth = $(maxDepth), maxBins = $(maxBins),
+          missingMode = $(missingMode))))
     copyValues(new C45ForestClassificationModel(uid, f, labelType)
       .setParent(this))
   }
 
-  override def transformSchema(schema: StructType): StructType =
-    validateSchema(schema, requireLabel = true,
-      predictionType = schema($(labelCol)).dataType)
+  override def transformSchema(schema: StructType): StructType = {
+    bootstrapKey(schema) // fails fast on unset or missing key columns
+    validateSchema(schema, fitted = None)
+  }
 
   override def copy(extra: ParamMap): C45ForestClassifier = defaultCopy(extra)
 }
 
 /** The fitted `spark.ml` Model: majority-vote scoring through
-  * [[C45Forest.transform]] (T flat CASE WHEN columns + a pure-Column
-  * argmax — zero joins, zero shuffles), prediction cast back to the
-  * fit-time label dtype; optional ml-convention probability Vector
-  * from the ensemble-averaged exact micros. */
+  * [[C45Forest.transform]]. Members of at most 64 leaves score as flat
+  * CASE WHEN columns, wider ones through the one-expression tree walk;
+  * a pure-Column argmax takes the vote, with no join and no shuffle.
+  * Saves one engine directory per tree (`engine/t<i>/`,
+  * [[C45Model.save]]) and the tree count and bootstrap seed in
+  * `wrapper/`. */
 class C45ForestClassificationModel private[fit](
     override val uid: String,
     val forest: C45Forest,
@@ -190,139 +116,52 @@ class C45ForestClassificationModel private[fit](
     extends Model[C45ForestClassificationModel]
     with C45ForestClassifierParams with MLWritable {
 
-  def setPredictionCol(v: String): this.type = set(predictionCol, v)
-  def setProbabilityCol(v: String): this.type = set(probabilityCol, v)
-
   override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
-    if ($(probabilityCol).isEmpty) {
-      forest.transform(dataset.toDF(), "__c45_pred")
-        .withColumn($(predictionCol), col("__c45_pred").cast(labelType))
-        .drop("__c45_pred")
-    } else {
-      val classes = forest.labels
-      val ordered =
-        if (labelType.isInstanceOf[NumericType]) classes.sortBy(_.toDouble)
-        else classes
-      val scored = forest.transformProba(dataset.toDF(), "__c45_pred", "__c45_p_")
-      val arr = org.apache.spark.sql.functions.array(
-        ordered.map(c => col(s"`__c45_p_$c`") / 1000000.0): _*)
-      scored
-        .withColumn($(predictionCol), col("__c45_pred").cast(labelType))
-        .withColumn($(probabilityCol),
-          org.apache.spark.ml.functions.array_to_vector(arr))
-        .drop("__c45_pred" +: classes.map(c => s"__c45_p_$c"): _*)
-    }
+    import C45MlParams.{Pred, ProbaPrefix}
+    serve(dataset, labelType, forest.labels)(
+      forest.transform(_, Pred), forest.transformProba(_, Pred, ProbaPrefix))
   }
 
   /** Out-of-bag evaluation through the wrapped engine
     * ([[C45Forest.oobEval]]): each row is scored ONLY by the trees
     * whose bootstrap bag excluded it — an unbiased held-out estimate
-    * with zero extra fits. The bootstrap key is rebuilt from `keyCols`
-    * EXACTLY as the fit built it ('#'-joined stringified columns), so
-    * the masks match the training draws bit-for-bit. `dataset` must
-    * carry the key columns and the label column; returns the confusion
-    * counts `(actual, oob_prediction, n)`. */
+    * with zero extra fits. `dataset` must carry the key columns and the
+    * label column; returns the confusion counts
+    * `(actual, oob_prediction, n)`. */
   def oobEval(dataset: Dataset[_]): DataFrame = {
-    require($(keyCols).nonEmpty,
-      "keyCols must be set (non-empty): oobEval recomputes the fit's " +
-        "deterministic bootstrap masks from the row key")
     val df = dataset.toDF()
-    ($(keyCols) :+ $(labelCol)).foreach(c =>
-      require(df.schema.fieldNames.contains(c),
-        s"column '$c' missing from ${df.schema.fieldNames.mkString(",")}"))
-    val key = concat_ws("#", $(keyCols).map(c => col(c).cast("string"))
-      .toIndexedSeq: _*)
+    val key = bootstrapKey(df.schema)
+    require(df.schema.fieldNames.contains($(labelCol)),
+      s"label column '${$(labelCol)}' missing")
     forest.oobEval(df, key, $(labelCol))
   }
 
   override def transformSchema(schema: StructType): StructType =
-    validateSchema(schema, requireLabel = false, predictionType = labelType)
+    validateSchema(schema, fitted = Some(labelType))
 
   override def copy(extra: ParamMap): C45ForestClassificationModel =
     copyValues(new C45ForestClassificationModel(uid, forest, labelType), extra)
       .setParent(parent)
 
-  override def write: MLWriter = new C45ForestClassificationModel.Writer(this)
+  override def write: MLWriter =
+    C45MlPersistence.writer(this, labelType, forest.trees.head.schema,
+      "n_trees" -> forest.trees.size, "bootstrap_seed" -> forest.seed) {
+      (spark, dir) => forest.trees.zipWithIndex.foreach { case (m, t) =>
+        m.save(spark, new Path(dir, s"t$t").toString)
+      }
+    }
 }
 
-/** Companion readers, mirroring [[C45ClassificationModel]]'s layout:
-  * standard `metadata/` JSON (PipelineModel dispatch) + one engine
-  * directory PER TREE (`engine/t<i>/` — reference text codec + parquet
-  * distribution sidecar via [[C45Model.save]]) + a one-row `wrapper/`
-  * parquet with the engine schema, fit-time label dtype, tree count,
-  * and bootstrap seed. */
 object C45ForestClassifier extends DefaultParamsReadable[C45ForestClassifier]
 
 object C45ForestClassificationModel
     extends MLReadable[C45ForestClassificationModel] {
-
-  override def read: MLReader[C45ForestClassificationModel] = new Reader
-
-  private class Writer(instance: C45ForestClassificationModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      val paramJson = instance.extractParamMap().toSeq
-        .sortBy(_.param.name)
-        .map { pp =>
-          val p = pp.param.asInstanceOf[Param[Any]]
-          s""""${p.name}":${p.jsonEncode(pp.value)}"""
-        }.mkString("{", ",", "}")
-      val meta = s"""{"class":"${instance.getClass.getName}",""" +
-        s""""timestamp":${System.currentTimeMillis()},""" +
-        s""""sparkVersion":"${spark.version}",""" +
-        s""""uid":"${instance.uid}",""" +
-        s""""paramMap":$paramJson,"defaultParamMap":{}}"""
-      import spark.implicits._
-      spark.createDataset(Seq(meta)).coalesce(1)
-        .write.text(new Path(path, "metadata").toString)
-      instance.forest.trees.zipWithIndex.foreach { case (m, t) =>
-        m.save(spark, new Path(path, s"engine/t$t").toString)
-      }
-      val s = instance.forest.trees.head.schema
-      Seq((s.attrNames, s.attrs.map(_.isNumeric), s.classLabels,
-          instance.labelType.sql, instance.forest.trees.size,
-          instance.forest.seed))
-        .toDF("attr_names", "attr_numeric", "class_labels", "label_type",
-          "n_trees", "bootstrap_seed")
-        .coalesce(1)
-        .write.parquet(new Path(path, "wrapper").toString)
+  override def read: MLReader[C45ForestClassificationModel] =
+    C45MlPersistence.reader { s =>
+      val trees = (0 until s.wrapper.getAs[Int]("n_trees")).map(t =>
+        C45Model.load(s.spark, new Path(s.engine, s"t$t").toString, s.schema))
+      new C45ForestClassificationModel(s.uid,
+        C45Forest(trees.toVector, s.wrapper.getAs[Int]("bootstrap_seed")),
+        s.labelType)
     }
-  }
-
-  private class Reader extends MLReader[C45ForestClassificationModel] {
-    override def load(path: String): C45ForestClassificationModel = {
-      val spark = sparkSession
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val metaLine = spark.read.text(new Path(path, "metadata").toString)
-        .head().getString(0)
-      val meta = JsonMethods.parse(metaLine)
-      implicit val fmt: Formats = DefaultFormats
-      val uid = (meta \ "uid").extract[String]
-      val w = spark.read.parquet(new Path(path, "wrapper").toString).head()
-      def strs(f: String): Seq[String] =
-        w.getAs[scala.collection.Seq[String]](f).toSeq
-      val attrs = strs("attr_names")
-        .zip(w.getAs[scala.collection.Seq[Boolean]]("attr_numeric").toSeq)
-        .map { case (n, num) => AttrMeta(n, num) }
-      val schema = C45Schema(attrs, "__c45_label", strs("class_labels"))
-      val nTrees = w.getAs[Int]("n_trees")
-      val trees = (0 until nTrees).map(t =>
-        C45Model.load(spark, new Path(path, s"engine/t$t").toString, schema))
-        .toVector
-      val labelType = DataType.fromDDL(w.getAs[String]("label_type"))
-      val m = new C45ForestClassificationModel(uid,
-        C45Forest(trees, w.getAs[Int]("bootstrap_seed")), labelType)
-      meta \ "paramMap" match {
-        case JObject(fields) => fields.foreach { case (name, v) =>
-          val p = m.getParam(name).asInstanceOf[Param[Any]]
-          m.set(p, p.jsonDecode(JsonMethods.compact(JsonMethods.render(v))))
-        }
-        case _ => ()
-      }
-      m
-    }
-  }
 }

@@ -59,7 +59,7 @@ import org.apache.spark.storage.StorageLevel
   * it alone on its (replicated, reweighted) rows under any
   * partitioning (CrossValSpec, C45ForestSpec and C45BoostSpec pin it).
   */
-private[fit] object LevelLoop {
+private[graft] object LevelLoop {
 
   type Cell = (Int, Int, String, String, Long)
 

@@ -33,11 +33,18 @@ import org.apache.spark.storage.StorageLevel
 final class CacheScope {
   private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Persist `df` (MEMORY_AND_DISK) and track it for [[release]]. */
+  /** Persist `df` (MEMORY_AND_DISK) and track it for [[release]]. A
+    * frame whose plan is already cached (by the caller, another scope
+    * or an earlier call in this one) is returned as it is, neither
+    * persisted again nor tracked: a scope releases only what it
+    * cached. */
   private[graft] def persist(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    tracked += p
-    p
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      tracked += p
+      p
+    }
   }
 
   /** Number of tables currently tracked (spec hook). */

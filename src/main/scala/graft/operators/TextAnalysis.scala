@@ -435,8 +435,7 @@ object TextAnalysis {
       df.localCheckpoint() // eager: materializes now, truncates lineage
     var cur = keep(words0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    val profile = sys.props.get("graft.fit.profile").contains("1") ||
-      sys.env.get("GRAFT_FIT_PROFILE").contains("1")
+    val profile = graft.fit.LevelLoop.profile
     var tWindow = System.nanoTime()
     try {
       var r = 1

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.fit.{C45, C45Params}
 import graft.meta.C45Schema
 import graft.sources.Tables
@@ -20,16 +21,8 @@ object FitMain {
     // session this main itself created
     val preExisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-fit")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JIT-friendly codegen fallback, same rationale as Verify.scala
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+      .appName("graft-fit").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val schema = C45Schema.parseFile(attPath)
     val df = Tables.loadTsv(spark, trainPath, schema)

@@ -1,5 +1,6 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Ad-hoc single-query timing harness (dev tool): runs the named
   * SparkEntry queries (default: q_fit_tree) with one warmup pass and
@@ -11,19 +12,13 @@ import org.apache.spark.sql.SparkSession
 object FitProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     if (args.contains("--levels")) sys.props("graft.fit.profile") = "1"
     val names = args.filterNot(_ == "--levels").toSeq match {
       case Seq() => Seq("q_fit_tree")
       case some => some
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -5,18 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for the whole test run. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.local(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JIT-friendly codegen fallback, same rationale as Verify.scala
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // generated-class cache sized to the suite (default 100 thrashes
-      // across 80+ suites re-running shared fit plans — Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()

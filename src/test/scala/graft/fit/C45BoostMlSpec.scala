@@ -143,4 +143,17 @@ class C45BoostMlSpec extends AnyFunSuite {
     val m = estimator.fit(df)
     assert(m.transform(df.drop("cls")).columns.contains("prediction"))
   }
+
+  test("schema validation: a feature listed twice or the label among " +
+    "the features fails naming the column") {
+    val df = planted("/root/testdata/sf0.001")
+    val twice = intercept[IllegalArgumentException](
+      new C45BoostClassifier().setLabelCol("cls")
+        .setFeatureCols(features :+ "l_quantity").fit(df))
+    assert(twice.getMessage.contains("feature column 'l_quantity' is listed twice"))
+    val leak = intercept[IllegalArgumentException](
+      new C45BoostClassifier().setLabelCol("cls")
+        .setFeatureCols(features :+ "cls").fit(df))
+    assert(leak.getMessage.contains("label column 'cls' is also a feature column"))
+  }
 }

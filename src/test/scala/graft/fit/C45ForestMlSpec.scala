@@ -186,4 +186,35 @@ class C45ForestMlSpec extends AnyFunSuite {
     val m = estimator.fit(df)
     assert(m.transform(df.drop("cls")).columns.contains("prediction"))
   }
+
+  test("schema validation: a feature listed twice or the label among " +
+    "the features fails naming the column") {
+    val df = planted("/root/testdata/sf0.001")
+    val twice = intercept[IllegalArgumentException](
+      new C45ForestClassifier().setLabelCol("cls").setKeyCols(keys)
+        .setFeatureCols(features :+ "l_quantity").fit(df))
+    assert(twice.getMessage.contains("feature column 'l_quantity' is listed twice"))
+    val leak = intercept[IllegalArgumentException](
+      new C45ForestClassifier().setLabelCol("cls").setKeyCols(keys)
+        .setFeatureCols(features :+ "cls").fit(df))
+    assert(leak.getMessage.contains("label column 'cls' is also a feature column"))
+  }
+
+  test("probabilityCol after a StringIndexer: dotted class labels " +
+    "serve a label-indexed vector") {
+    val df = planted("/root/testdata/sf0.001")
+    val indexer = new StringIndexer()
+      .setInputCol("cls").setOutputCol("label").setStringOrderType("alphabetAsc")
+    val forest = new C45ForestClassifier()
+      .setFeatureCols(features).setKeyCols(keys).setLabelCol("label")
+      .setMaxDepth(2).setNumTrees(3).setSeed(5).setProbabilityCol("probability")
+    val scored = new Pipeline().setStages(Array(indexer, forest)).fit(df)
+      .transform(df)
+    val rows = scored.select("probability", "prediction").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val v = r.getAs[org.apache.spark.ml.linalg.Vector](0)
+      assert(v.size == 2 && math.abs(v.toArray.sum - 1.0) < 1e-5)
+    }
+  }
 }

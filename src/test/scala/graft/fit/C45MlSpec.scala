@@ -285,4 +285,17 @@ class C45MlSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](C45Pruning.zForCF(0.5))
     assertThrows[IllegalArgumentException](C45Pruning.zForCF(0.0))
   }
+
+  test("schema validation: a feature listed twice or the label among " +
+    "the features fails naming the column") {
+    val df = planted("/root/testdata/sf0.001")
+    val twice = intercept[IllegalArgumentException](
+      new C45Classifier().setLabelCol("cls")
+        .setFeatureCols(features :+ "l_quantity").fit(df))
+    assert(twice.getMessage.contains("feature column 'l_quantity' is listed twice"))
+    val leak = intercept[IllegalArgumentException](
+      new C45Classifier().setLabelCol("cls")
+        .setFeatureCols(features :+ "cls").fit(df))
+    assert(leak.getMessage.contains("label column 'cls' is also a feature column"))
+  }
 }

@@ -213,9 +213,13 @@ class ExtOpsSpec extends AnyFunSuite {
   test("minhash LSH pairs have no false positives and high recall vs exact") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 1, 0.5)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.minHashLshPairs(docs, "doc_id", "text",
-      k = 16, rowsPerBand = 2, threshold = 0.5)
+    // a released scope: a table left cached here would be cached
+    // already when "CacheScope releases every table…" persists it
+    val scope = new CacheScope
+    val lsh = try Dedup.minHashLshPairs(docs, "doc_id", "text",
+      k = 16, rowsPerBand = 2, threshold = 0.5, scope = scope)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally scope.release()
     assert(lsh.subsetOf(exact), "verify step must kill false positives")
     assert(exact.nonEmpty)
     val recall = lsh.size.toDouble / exact.size

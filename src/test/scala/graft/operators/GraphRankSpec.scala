@@ -262,6 +262,34 @@ class GraphRankSpec extends AnyFunSuite {
     }
   }
 
+  test("pagerank then labelPropagation in one scope cache the pair table once") {
+    val pairs = (1L to 30L).map(i => (i, i % 7 + 100L)).toDF("i", "j")
+    val nodes = ((1L to 40L) ++ (100L to 106L)).toDF("id")
+    val scope = new CacheScope
+    val (_, warnings) = graft.LogCapture.warnings {
+      GraphRank.pagerank(pairs, nodes, "id", scope = scope).count()
+      GraphRank.labelPropagation(pairs, nodes, "id", scope = scope).count()
+    }
+    try {
+      assert(scope.trackedCount == 1, "the pair table, tracked once")
+      assert(!warnings.exists(_.contains("Asked to cache already cached data")),
+        warnings.mkString("\n"))
+    } finally scope.release()
+    assert(pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("a scope leaves a table the caller persisted cached after release") {
+    val pairs = (1L to 30L).map(i => (i, i % 7 + 100L)).toDF("i", "j").persist()
+    val nodes = ((1L to 40L) ++ (100L to 106L)).toDF("id")
+    try {
+      val scope = new CacheScope
+      GraphRank.labelPropagation(pairs, nodes, "id", scope = scope).count()
+      assert(scope.trackedCount == 0, "the caller owns the pair table")
+      scope.release()
+      assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally pairs.unpersist()
+  }
+
   // ------------------------- triangleCounts -------------------------
 
   private def runTri(pairs: Seq[(Long, Long)]): Map[Long, (Long, Long, Long)] =
