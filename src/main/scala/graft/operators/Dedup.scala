@@ -817,7 +817,7 @@ object Dedup {
     * Round 0 keys each node by its id; later rounds by a bijective hash
     * of the id salted by the round, a fresh pseudo-random order, so a
     * path of increasing ids still contracts. */
-  private def unionFind(es: Iterator[(Long, Long)], round: Int): Array[UnionFindRow] = {
+  private[operators] def unionFind(es: Iterator[(Long, Long)], round: Int): Array[UnionFindRow] = {
     val ends = { val b = Array.newBuilder[Long]; es.foreach { e => b += e._1; b += e._2 }; b.result() }
     val ids = ends.clone()
     java.util.Arrays.sort(ids)

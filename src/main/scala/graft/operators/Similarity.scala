@@ -484,11 +484,15 @@ object Similarity {
     * outlier into some cluster; DBSCAN names them). A vector is CORE
     * when its ε-neighborhood (cosine ≥ `epsCos`, self included)
     * holds ≥ `minPts` vectors; clusters are the connected components
-    * of the core-core neighbor graph (exact minimum-id labels from the
-    * bucketed union-find of [[graft.operators.Dedup.connectedComponents]]); non-core vectors
-    * with a core neighbor join their minimum core-neighbor cluster as
-    * BORDER points (the deterministic resolution of DBSCAN's
+    * of the core-core neighbor graph (exact minimum-id labels); non-core
+    * vectors with a core neighbor join their minimum core-neighbor
+    * cluster as BORDER points (the deterministic resolution of DBSCAN's
     * border-tie ambiguity); everything else is noise (cluster NULL).
+    *
+    * Shape: the quadratic cosine pair join runs in parallel and its ε
+    * pair table persists once; the labelling is [[dbscanFromPairs]]'s,
+    * which runs in ONE task, with no shuffle, while the pair table's
+    * directed edges fit ~1M, and relationally beyond.
     *
     * The ε-neighbor pair join here is the EXACT bounded baseline (the
     * q_embed_neardup discipline — feed it a bounded slice); at corpus
@@ -525,24 +529,62 @@ object Similarity {
     * vector id in an `id` column (isolated ids have no pair and must
     * still surface as noise); `pairs` is any table of ε-neighbor
     * witnesses in columns `i`, `j` — unordered, duplicated (LSH bands
-    * emit a pair once per colliding band), or self-paired input is
-    * fine: pairs are normalized to distinct `i < j` edges before the
-    * degree rollup, so duplicate witnesses never inflate density.
+    * emit a pair once per colliding band), self-paired or half-null
+    * input is fine: pairs are normalized to distinct `i < j` edges
+    * before the degree count, so duplicate witnesses never inflate
+    * density. A neighborhood is the neighbor count + self; a core needs
+    * ≥ `minPts` of it and a node-table row (an endpoint outside the
+    * node table counts toward its partner but is never reported).
+    * Clusters are the exact minimum-id components of the core-core
+    * edges, and border points attach to their MINIMUM core-neighbor
+    * cluster. Every node-table row yields exactly one output row.
     *
-    * Downstream of the pair table everything is linear in edges:
-    * one degree rollup gates cores (neighborhood = neighbor count +
-    * self ≥ minPts), clusters are the exact minimum-id components of
-    * the core-core edges ([[graft.operators.Dedup.connectedComponents]]
-    * — one union-find round below ~1M edges), and border points
-    * attach to their MINIMUM core-neighbor cluster (one join + min).
+    * Scale shape ([[graft.operators.GraphRank.pagerank]]'s): the pair
+    * table persists once and is counted. When its directed edges
+    * (2 × pairs) fit one task ([[Dedup.BucketEdges]], ~1M) and the ids
+    * are integral, ONE task labels every node that touches a pair, with
+    * no shuffle: it drops self and null pairs, deduplicates the
+    * undirected edges, counts neighbors, gates cores, runs one
+    * union-find over the core-core edges and attaches border points.
+    * The task reads the pair rows plus the node ids that touch a pair
+    * (one broadcast semi-join). Nodes without a pair never enter it and
+    * take their closed form — a singleton core when `minPts` is 1, noise
+    * otherwise — in one final broadcast left join, whose checkpoint is
+    * the result. Larger graphs run relationally: the distinct edges
+    * persist, one degree rollup gates cores, the core-core edges go
+    * through [[graft.operators.Dedup.connectedComponents]] (one
+    * union-find round below ~1M edges), and border points take one
+    * join + min. Both shapes return the same rows and column types.
+    *
     * With an approximate candidate generator the result is DBSCAN
     * over the generator's recall: a missed true pair can demote a
     * core to border/noise or split a bridge — identical to how every
     * LSH-banded dedup in this engine trades recall for the n² term. */
   def dbscanFromPairs(nodes: DataFrame, pairs: DataFrame, minPts: Int,
-                      scope: CacheScope = CacheScope.unmanaged()): DataFrame = {
+                      scope: CacheScope = CacheScope.unmanaged()): DataFrame =
+    dbscanFromPairs(nodes, pairs, minPts, scope, Dedup.BucketEdges)
+
+  /** [[dbscanFromPairs]] with the one-task capacity in directed edges
+    * exposed, so specs can force the relational path (capacity 0). */
+  private[operators] def dbscanFromPairs(nodes: DataFrame, pairs: DataFrame,
+      minPts: Int, scope: CacheScope, oneTaskEdges: Long): DataFrame = {
     require(minPts >= 1, "minPts must be positive")
-    val nbrs = scope.persist(pairs
+    // the pair table feeds the endpoint broadcast and the task (or
+    // every relational step): an upstream pair join runs once
+    val p2 = scope.persist(pairs)
+    val nPairs = p2.count()
+    val ns = nodes.select("id")
+    if (OneTaskGraph.fitsOneTask(p2, ns, nPairs, oneTaskEdges)) {
+      // clusters typed as the relational path's coalesce types them
+      val x = col("x").cast(p2.select(least(col("i"), col("j"))).schema.head.dataType)
+      val isCore = coalesce(col("deg"), lit(0L)) + 1 >= minPts
+      return OneTaskGraph.inOneTask(p2, ns)(_.dbscan(minPts))
+        .select(col("id"),
+          when(isCore, "core").when(x.isNotNull, "border").otherwise("noise").as("role"),
+          when(isCore, coalesce(x, col("id"))).otherwise(x).as("cluster"))
+        .localCheckpoint()
+    }
+    val nbrs = scope.persist(p2
       .filter(col("i") =!= col("j"))
       .select(least(col("i"), col("j")).as("i"),
         greatest(col("i"), col("j")).as("j"))
@@ -550,11 +592,12 @@ object Similarity {
     val deg = nbrs.select(col("i").as("id"))
       .union(nbrs.select(col("j").as("id")))
       .groupBy("id").agg(count(lit(1)).as("nc"))
-    val nd = scope.persist(nodes.select("id")
+    val nd = scope.persist(ns
       .join(deg, Seq("id"), "left")
       .select(col("id"),
         (coalesce(col("nc"), lit(0L)) + 1 >= minPts).as("is_core")))
-    val coreIds = nd.filter(col("is_core"))
+    // distinct: a core id the node table repeats still labels once
+    val coreIds = nd.filter(col("is_core")).select("id").distinct()
     val coreEdges = nbrs
       .join(coreIds.select(col("id").as("i")), "i")
       .join(coreIds.select(col("id").as("j")), "j")

@@ -1964,8 +1964,9 @@ object ExtQueries {
   //      border attachment. Like q_embed_neardup, this gate query is
   //      the EXACT all-pairs BASELINE on an explicitly BOUNDED input
   //      (vec_id < 1000): bench readers should treat its cost as
-  //      O(n²) by construction, and most of its wall time is the CC
-  //      fixpoint's fixed per-round job cost, not the pair join. The
+  //      O(n²) by construction. Its ε pair table is far under the
+  //      one-task capacity (~1M directed edges), so the labelling after
+  //      the pair join is one task and a fixed handful of jobs. The
   //      corpus-scale paths are Similarity.dbscanBucketed (SemDeDup
   //      k-means candidate buckets) and dbscanFromPairs fed SRP-LSH
   //      band pairs — DbscanSpec pins bucketed ≡ exact on planted

@@ -1,12 +1,19 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import MessyGraphs.{Pair, longIds, messy, scoped, typedRows}
 
 /** [[Similarity.dbscan]] — density clustering with explicit noise:
   * hand geometry (dense blob + sparse outliers), border attachment
-  * determinism, and role/cluster sanity on the real corpus. */
+  * determinism, role/cluster sanity on the real corpus, and the
+  * one-task labelling against the relational one. Every pipeline runs
+  * under its own scope, released after its rows are collected. */
 class DbscanSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -26,9 +33,8 @@ class DbscanSpec extends AnyFunSuite {
     val d = (Seq((1L, ray(0)), (2L, ray(2)), (3L, ray(4)), (4L, ray(6)),
       (20L, ray(22)), (30L, ray(90))))
       .toDF("vec_id", "embedding")
-    val got = Similarity.dbscan(d, "vec_id", "embedding",
-        epsCos = 0.95, minPts = 4)
-      .collect()
+    val got = scoped(s => Similarity.dbscan(d, "vec_id", "embedding",
+        epsCos = 0.95, minPts = 4, s))
       .map(r => r.getAs[Long]("id") -> (r.getAs[String]("role"),
         if (r.isNullAt(r.fieldIndex("cluster"))) -1L
         else r.getAs[Long]("cluster"))).toMap
@@ -47,9 +53,8 @@ class DbscanSpec extends AnyFunSuite {
       (10L, ray(40)), (11L, ray(41)), (12L, ray(42)), (13L, ray(43)),
       (5L, ray(21.5)))
       .toDF("vec_id", "embedding")
-    val got = Similarity.dbscan(d, "vec_id", "embedding",
-        epsCos = 0.946, minPts = 4)
-      .collect()
+    val got = scoped(s => Similarity.dbscan(d, "vec_id", "embedding",
+        epsCos = 0.946, minPts = 4, s))
       .map(r => r.getAs[Long]("id") -> (r.getAs[String]("role"),
         if (r.isNullAt(r.fieldIndex("cluster"))) -1L
         else r.getAs[Long]("cluster"))).toMap
@@ -59,9 +64,8 @@ class DbscanSpec extends AnyFunSuite {
   }
 
   test("real corpus: partition of roles, clusters only from cores, deterministic") {
-    def run() = Similarity.dbscan(emb, "vec_id", "embedding",
-        epsCos = 0.3, minPts = 5)
-      .collect()
+    def run() = scoped(s => Similarity.dbscan(emb, "vec_id", "embedding",
+        epsCos = 0.3, minPts = 5, s))
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("role"),
         if (r.isNullAt(r.fieldIndex("cluster"))) -1L
         else r.getAs[Long]("cluster"))).sortBy(_._1).toSeq
@@ -77,8 +81,7 @@ class DbscanSpec extends AnyFunSuite {
     assert(a.filter(_._3 != -1L).forall(t => coreIds.contains(t._3)))
   }
 
-  private def labeled(df: org.apache.spark.sql.DataFrame) = df
-    .collect()
+  private def labeled(run: CacheScope => DataFrame) = scoped(run)
     .map(r => r.getAs[Long]("id") -> (r.getAs[String]("role"),
       if (r.isNullAt(r.fieldIndex("cluster"))) -1L
       else r.getAs[Long]("cluster"))).toMap
@@ -99,10 +102,10 @@ class DbscanSpec extends AnyFunSuite {
       (3L, 4L), (4L, 5L))
     val messy = clean.map { case (i, j) => (j, i) } ++
       clean ++ Seq((2L, 1L), (4L, 5L), (3L, 3L))
-    val got = labeled(Similarity.dbscanFromPairs(
-      nodes, messy.toDF("i", "j"), minPts = 4))
-    val want = labeled(Similarity.dbscanFromPairs(
-      nodes, clean.toDF("i", "j"), minPts = 4))
+    val got = labeled(s => Similarity.dbscanFromPairs(
+      nodes, messy.toDF("i", "j"), minPts = 4, s))
+    val want = labeled(s => Similarity.dbscanFromPairs(
+      nodes, clean.toDF("i", "j"), minPts = 4, s))
     assert(got == want, s"messy $got vs clean $want")
     (1L to 4L).foreach(i => assert(got(i) == (("core", 1L)), s"id $i"))
     assert(got(5L) == (("border", 1L)))
@@ -119,9 +122,9 @@ class DbscanSpec extends AnyFunSuite {
           (col("a.nrm") * col("b.nrm"))).as("cos"))
       .filter(col("cos") >= 0.3).select("i", "j")
     val viaPairs = labeled(
-      Similarity.dbscanFromPairs(v.select("id"), pairs, minPts = 5))
+      s => Similarity.dbscanFromPairs(v.select("id"), pairs, minPts = 5, s))
     val direct = labeled(
-      Similarity.dbscan(emb, "vec_id", "embedding", epsCos = 0.3, minPts = 5))
+      s => Similarity.dbscan(emb, "vec_id", "embedding", epsCos = 0.3, minPts = 5, s))
     assert(viaPairs == direct)
   }
 
@@ -138,13 +141,104 @@ class DbscanSpec extends AnyFunSuite {
       Seq((30L, ray(90)), (31L, ray(270))))
       .toDF("vec_id", "embedding")
     val exact = labeled(
-      Similarity.dbscan(d, "vec_id", "embedding", epsCos = 0.95, minPts = 4))
-    val bucketed = labeled(Similarity.dbscanBucketed(
+      s => Similarity.dbscan(d, "vec_id", "embedding", epsCos = 0.95, minPts = 4, s))
+    val bucketed = labeled(s => Similarity.dbscanBucketed(
       d, "vec_id", "embedding", epsCos = 0.95, minPts = 4,
-      nCentroids = 2, nIter = 10))
+      nCentroids = 2, nIter = 10, s))
     assert(bucketed == exact, s"bucketed $bucketed vs exact $exact")
     assert(exact(1L)._1 == "core" && exact(11L)._1 == "core")
     assert(exact(1L)._2 != exact(11L)._2, "the blobs are distinct clusters")
     assert(exact(30L) == (("noise", -1L)) && exact(31L) == (("noise", -1L)))
+  }
+
+  // ------------------ one task ≡ relational labelling ------------------
+
+  /** Column types and sorted rows of [[Similarity.dbscanFromPairs]] at
+    * one-task capacity `cap`. */
+  private def outputs(pairs: DataFrame, nodes: DataFrame, minPts: Int, cap: Long) =
+    typedRows(Similarity.dbscanFromPairs(nodes, pairs, minPts, _, cap))
+
+  test("a repeated node id yields one row per node-table row on both paths") {
+    // triangle 1-2-3 is core at minPts 3 (3 also neighbors 4); 4 is a
+    // border of cluster 1, 5 is isolated noise. Core 1 is listed three
+    // times, border 4 and noise 5 twice each.
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("i", "j")
+    val nodes = Seq(1L, 1L, 1L, 2L, 3L, 4L, 4L, 5L, 5L).toDF("id")
+    val want = Seq.fill(3)((1L, "core", Some(1L))) ++ Seq((2L, "core", Some(1L)),
+      (3L, "core", Some(1L))) ++ Seq.fill(2)((4L, "border", Some(1L))) ++
+      Seq.fill(2)((5L, "noise", None))
+    for (cap <- Seq(Dedup.BucketEdges, 0L)) {
+      val got = scoped(s => Similarity.dbscanFromPairs(nodes, pairs, 3, s, cap))
+        .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
+        .sortBy(t => (t._1, t._2)).toSeq
+      assert(got == want, s"capacity $cap")
+    }
+  }
+
+  test("one task equals the relational path on messy long and int graphs, minPts 1, 2 and 4") {
+    val longs = (1 to 4).map { k =>
+      val (p, n) = messy(longIds).pureApply(Gen.Parameters.default, Seed(k.toLong))
+      val extremes = Seq(Long.MinValue -> Long.MaxValue, Long.MinValue -> (Long.MinValue + 1),
+        (Long.MinValue + 1) -> Long.MaxValue).map { case (a, b) => (Some(a), Some(b)): Pair }
+      ((p ++ extremes).toDF("i", "j"), (n ++ Seq(Some(Long.MinValue), Some(Long.MaxValue))).toDF("id"))
+    }
+    val ints = (5 to 6).map { k =>
+      val (p, n) = messy(Gen.chooseNum(-12L, 12L)).pureApply(Gen.Parameters.default, Seed(k.toLong))
+      (p.map { case (a, b) => (a.map(_.toInt), b.map(_.toInt)) }.toDF("i", "j"),
+        n.map(_.map(_.toInt)).toDF("id"))
+    }
+    // int pairs over long node ids: the cluster column coalesces to long
+    val mixed = {
+      val (p, n) = messy(Gen.chooseNum(-12L, 12L)).pureApply(Gen.Parameters.default, Seed(7L))
+      (p.map { case (a, b) => (a.map(_.toInt), b.map(_.toInt)) }.toDF("i", "j"), n.toDF("id"))
+    }
+    // two 4-cliques and id 5 next to one member of each: a border of
+    // both clusters at minPts 4
+    val bridged = {
+      def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
+      ((clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(10L, 11L, 12L, 13L)) ++ Seq((4L, 5L), (5L, 10L)))
+        .toDF("i", "j"), (Seq(1L, 2L, 3L, 4L, 5L) ++ (10L to 13L)).toDF("id"))
+    }
+    val noPairs = (Seq.empty[Pair].toDF("i", "j"), Seq(Some(3L), Some(3L), None).toDF("id"))
+    for ((pairs, nodes) <- longs ++ ints :+ mixed :+ bridged :+ noPairs; minPts <- Seq(1, 2, 4)) {
+      val one = outputs(pairs, nodes, minPts, Dedup.BucketEdges)
+      assert(one._2.size == nodes.count())
+      assert(one == outputs(pairs, nodes, minPts, 0L), s"minPts $minPts")
+    }
+  }
+
+  test("one task runs a fixed job count (adaptive execution off)") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (7L, 8L)).toDF("i", "j")
+    val nodes = (1L to 9L).toDF("id")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val scope = new CacheScope
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val (db, jobs) = JobCount.of(spark.sparkContext)(
+        Similarity.dbscanFromPairs(nodes, pairs, 3, scope))
+      // the pair count, the endpoint broadcast, the one-task broadcast,
+      // the result checkpoint
+      assert(jobs == 4)
+      assert(db.count() == 9)
+    } finally {
+      scope.release()
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+  }
+
+  test("one task keeps only the returned table after the scope's release") {
+    val d = ((1L to 5L).map(i => (i, ray(i.toDouble))) ++
+      Seq((40L, ray(60)), (41L, ray(200))))
+      .toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    val scope = new CacheScope
+    val before = sc.getPersistentRDDs.keySet
+    val out = Similarity.dbscan(d, "vec_id", "embedding", epsCos = 0.95, minPts = 4, scope)
+    assert(scope.trackedCount == 2, "the vectors and the pair table are cached")
+    assert((sc.getPersistentRDDs.keySet -- before).size == 3,
+      "the two caches and the returned checkpoint")
+    assert(out.count() == 7)
+    scope.release()
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import MessyGraphs.{Pair, longIds, messy, scoped, typedRows}
 
 /** [[GraphRank.pagerank]] — deterministic integer PageRank: exact
   * agreement with a driver-side replay of the integer semantics,
@@ -36,9 +37,8 @@ class GraphRankSpec extends AnyFunSuite {
     // hub 1 touches 2,3,4; chain 4-5; node 9 isolated
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 5L))
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 9L)
-    val got = GraphRank.pagerank(
-        pairs.toDF("i", "j"), nodes.toDF("id"), "id", iters = 5)
-      .collect()
+    val got = scoped(s => GraphRank.pagerank(
+        pairs.toDF("i", "j"), nodes.toDF("id"), "id", iters = 5, scope = s))
       .map(r => r.getAs[Long]("id") ->
         (r.getAs[Long]("deg"), r.getAs[Long]("pr_picos"))).toMap
     val exp = replay(pairs, nodes, iters = 5, damp = 850L)
@@ -52,9 +52,9 @@ class GraphRankSpec extends AnyFunSuite {
   test("total rank mass is conserved up to integer-division loss") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L)) // 3-cycle: symmetric
     val nodes = Seq(1L, 2L, 3L)
-    val got = GraphRank.pagerank(pairs.toDF("i", "j"), nodes.toDF("id"),
-        "id", iters = 5)
-      .collect().map(_.getAs[Long]("pr_picos"))
+    val got = scoped(s => GraphRank.pagerank(pairs.toDF("i", "j"), nodes.toDF("id"),
+        "id", iters = 5, scope = s))
+      .map(_.getAs[Long]("pr_picos"))
     // symmetric graph: all ranks equal, and each stays near U/3
     assert(got.distinct.length == 1)
     assert(math.abs(got.head - GraphRank.U / 3) < 1000,
@@ -64,9 +64,9 @@ class GraphRankSpec extends AnyFunSuite {
   test("deterministic under repartitioning") {
     val pairs = (1L to 60L).map(i => (i, (i % 30) + 100L))
     val nodes = ((1L to 60L) ++ (100L to 130L)).distinct
-    def run(parts: Int) = GraphRank.pagerank(
-        pairs.toDF("i", "j").repartition(parts), nodes.toDF("id"), "id")
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("pr_picos")))
+    def run(parts: Int) = scoped(s => GraphRank.pagerank(
+        pairs.toDF("i", "j").repartition(parts), nodes.toDF("id"), "id", scope = s))
+      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("pr_picos")))
       .sortBy(_._1).toSeq
     assert(run(2) == run(9))
   }
@@ -93,9 +93,8 @@ class GraphRankSpec extends AnyFunSuite {
 
   private def runLpa(pairs: Seq[(Long, Long)], nodes: Seq[Long],
                      iters: Int = 5): Map[Long, Long] =
-    GraphRank.labelPropagation(
-        pairs.toDF("i", "j"), nodes.toDF("id"), "id", iters = iters)
-      .collect()
+    scoped(s => GraphRank.labelPropagation(
+        pairs.toDF("i", "j"), nodes.toDF("id"), "id", iters = iters, scope = s))
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("community")).toMap
 
   test("lpa: exact agreement with the driver-side replay") {
@@ -153,58 +152,19 @@ class GraphRankSpec extends AnyFunSuite {
   test("lpa: deterministic under repartitioning") {
     val pairs = (1L to 60L).map(i => (i, (i % 20) + 100L))
     val nodes = ((1L to 60L) ++ (100L to 120L)).distinct
-    def run(parts: Int) = GraphRank.labelPropagation(
-        pairs.toDF("i", "j").repartition(parts), nodes.toDF("id"), "id")
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("community")))
+    def run(parts: Int) = scoped(s => GraphRank.labelPropagation(
+        pairs.toDF("i", "j").repartition(parts), nodes.toDF("id"), "id", scope = s))
+      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("community")))
       .sortBy(_._1).toSeq
     assert(run(2) == run(9))
   }
 
   // ------------- one task ≡ per-round loop (both operators) -------------
 
-  private type Pair = (Option[Long], Option[Long])
-
-  /** A messy graph over `pool`'s ids: pairs duplicated, reversed, self-
-    * paired and half-null at random, plus one both-null pair; a node
-    * table that drops some endpoints, adds isolated ids, repeats some
-    * ids and holds one null id. */
-  private def messy(pool: Gen[Long]): Gen[(Seq[Pair], Seq[Option[Long]])] = for {
-    n <- Gen.chooseNum(5, 60)
-    edges <- Gen.listOfN(n, Gen.zip(pool, pool))
-    shape <- Gen.listOfN(n, Gen.chooseNum(0, 9))
-    drop <- Gen.listOfN(n, Gen.chooseNum(0, 5))
-    isolated <- Gen.listOfN(4, pool)
-  } yield {
-    val pairs = edges.zip(shape).flatMap {
-      case ((a, b), 0) => Seq[Pair]((Some(a), Some(b)), (Some(a), Some(b))) // duplicate
-      case ((a, b), 1) => Seq[Pair]((Some(b), Some(a)))                     // reversed
-      case ((a, b), 2) => Seq[Pair]((Some(a), Some(b)), (Some(a), Some(a))) // plus a self pair
-      case ((a, _), 3) => Seq[Pair]((Some(a), None))                        // null endpoints
-      case ((_, b), 4) => Seq[Pair]((None, Some(b)))
-      case ((a, b), _) => Seq[Pair]((Some(a), Some(b)))
-    } :+ ((None, None): Pair)
-    val ends = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val kept = ends.zip(drop).collect { case (v, d) if d > 0 => v }  // endpoints outside nodes
-    val nodes = (kept ++ kept.take(3) ++ isolated).distinct.map(Option(_)) ++
-      kept.take(3).map(Option(_)) :+ None                              // 3 ids twice, a null id
-    (pairs, nodes)
-  }
-
-  private val longIds: Gen[Long] = Gen.oneOf(Gen.chooseNum(-12L, 12L),
-    Gen.chooseNum(0L, 2L).map(Long.MinValue + _), Gen.chooseNum(0L, 2L).map(Long.MaxValue - _))
-
   /** Both operators' rows, sorted, at one-task capacity `cap`. */
-  private def outputs(pairs: DataFrame, nodes: DataFrame, iters: Int, cap: Long) = {
-    def rows(run: CacheScope => DataFrame) = {
-      val scope = new CacheScope
-      try {
-        val df = run(scope)
-        (df.schema.map(_.dataType), df.collect().map(_.toString).sorted.toSeq)
-      } finally scope.release()
-    }
-    (rows(GraphRank.pagerank(pairs, nodes, "id", iters, 850L, _, cap)),
-      rows(GraphRank.labelPropagation(pairs, nodes, "id", iters, _, cap)))
-  }
+  private def outputs(pairs: DataFrame, nodes: DataFrame, iters: Int, cap: Long) =
+    (typedRows(GraphRank.pagerank(pairs, nodes, "id", iters, 850L, _, cap)),
+      typedRows(GraphRank.labelPropagation(pairs, nodes, "id", iters, _, cap)))
 
   test("one task equals the per-round loop on messy long and int graphs, iters 1 and 5") {
     val longs = (1 to 4).map { k =>
@@ -231,16 +191,22 @@ class GraphRankSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("i", "j")
     val nodes = (1L to 9L).toDF("id")
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val scope = new CacheScope
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val (pr, prJobs) = JobCount.of(spark.sparkContext)(GraphRank.pagerank(pairs, nodes, "id"))
-      val (lp, lpJobs) = JobCount.of(spark.sparkContext)(GraphRank.labelPropagation(pairs, nodes, "id"))
+      val (pr, prJobs) = JobCount.of(spark.sparkContext)(
+        GraphRank.pagerank(pairs, nodes, "id", scope = scope))
+      val (lp, lpJobs) = JobCount.of(spark.sparkContext)(
+        GraphRank.labelPropagation(pairs, nodes, "id", scope = scope))
       // pagerank: the pair count, the node count, the endpoint
       // broadcast, the one-task broadcast, the result checkpoint; label
       // propagation needs no node count
       assert((prJobs, lpJobs) == ((5, 4)))
       assert(pr.count() == 9 && lp.count() == 9)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    } finally {
+      scope.release()
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("one task keeps only the returned table and the scope's pair table") {
