@@ -39,6 +39,15 @@ and the C4.5 level loop describes each histogram job as
 into its levels. The first perfbench call also builds, and its
 class-data-sharing dump writes an event log of its own; the newest
 application is the run.
+
+`graft.Bench` and `graft.Verify` run each query under a job group named
+after it, so `--group q_minhash_lsh` keeps that query's jobs:
+
+    mkdir -p /tmp/ev
+    JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true -Dspark.eventLog.compress=false \\
+      -Dspark.eventLog.dir=file:///tmp/ev" SPARK_GRAFT_ONLY=q_minhash_lsh \\
+      sbt -batch "runMain graft.Verify <sf dir> /tmp/verify_out"
+    python3 scripts/eventlog_jobs.py /tmp/ev --group q_minhash_lsh
 """
 import argparse
 import collections

@@ -14,7 +14,8 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
       SparkEntry.queries.foreach { case (name, fn) =>
         if (only.forall(_.contains(name))) {
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
+          try GraftSession.inJobGroup(spark, name)(fn(spark, sfDir).count())
+          catch { case _: Throwable => () }
           spark.catalog.clearCache()
         }
       }
@@ -61,7 +62,8 @@ object Bench {
         val fn = SparkEntry.queries(name)
         Memos.resetAll()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try GraftSession.inJobGroup(spark, name)(fn(spark, sfDir).count())
+        catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         name -> dt

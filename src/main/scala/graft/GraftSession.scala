@@ -29,4 +29,13 @@ object GraftSession {
     // instead of measuring execution. Harmless (bounded class metadata)
     // elsewhere.
     .config("spark.sql.codegen.cache.maxEntries", "20000")
+
+  /** `body` under job group `name`, cleared after it: the jobs of one
+    * query of [[Bench]] or [[Verify]] share a group, so an event log
+    * splits per query (`scripts/eventlog_jobs.py --group <name>`). */
+  def inJobGroup[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try body finally sc.clearJobGroup()
+  }
 }

@@ -37,18 +37,26 @@ object Hashing {
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  /** md5 digest of `bytes` through the per-thread instance. */
+  def md5Jvm(bytes: Array[Byte]): Array[Byte] = md5Local.get().digest(bytes)
+
+  /** The unsigned 60-bit value of hex digits `from until from + 15` of
+    * digest `d`: the JVM side of [[HexSlice60]] over md5 hex output. */
+  def hexSlice60(d: Array[Byte], from: Int): Long = {
+    var h = 0L
+    var x = from
+    while (x < from + 15) {
+      h = (h << 4) | ((d(x >> 1) >> (if ((x & 1) == 0) 4 else 0)) & 0xfL)
+      x += 1
+    }
+    h
+  }
+
   /** JVM mirror of [[hash60]] for executor-side aggregator buffers
     * (e.g. the count-min UDAF, which needs `depth` hashes per input
-    * value inside `reduce`). HashingSpec pins hash60Jvm ≡ the Column
+    * value inside `reduce`). CmsAggSpec pins hash60Jvm ≡ the Column
     * form on a value sweep, so all three forms (Column, SQL, JVM) are
     * one hash family. */
-  def hash60Jvm(v: String, salt: Int = 0): Long = {
-    val md = md5Local.get()
-    val d = md.digest(s"$salt|$v".getBytes("UTF-8"))
-    // first 15 hex chars = 7.5 bytes: build the 60-bit value directly
-    var h = 0L
-    var i = 0
-    while (i < 7) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
-    (h << 4) | ((d(7) & 0xf0L) >> 4)
-  }
+  def hash60Jvm(v: String, salt: Int = 0): Long =
+    hexSlice60(md5Jvm(s"$salt|$v".getBytes("UTF-8")), 0)
 }

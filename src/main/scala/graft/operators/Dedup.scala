@@ -252,6 +252,7 @@ object Dedup {
     * PER WINDOW ELEMENT — ~n × tokens regex splits per document, the
     * difference between 0.5s and 10s on the sf0.1 corpus. */
   def shingles(c: Column, n: Int): Column = {
+    require(n >= 1, s"shingles need n >= 1, got $n")
     val t = split(trim(lower(c)), "\\s+")
     if (n == 1) array_distinct(t)
     else element_at(transform(array(t), tk =>
@@ -439,20 +440,31 @@ object Dedup {
   /** [[minHashSignatures]] over a pre-exploded (id, s) shingle table —
     * lets callers pre-filter the shingle stream (e.g. a df cap). */
   private[operators] def minHashFromExploded(exploded: DataFrame, k: Int): DataFrame = {
-    // ONE md5 per shingle: h0/h1 are disjoint 60-bit slices of the
-    // same digest (md5 chars 1-15 and 16-30), reduced mod p
-    val digest = md5(concat(lit("0|"), col("s")))
+    val (h0, h1) = minHashSeeds(col("d"))
     exploded
-      .withColumn("d", digest)
-      .withColumn("h0",
-        graft.functions.HexSlice60.slice(col("d"), 1) % MinHashMod)
-      .withColumn("h1",
-        graft.functions.HexSlice60.slice(col("d"), 16) % MinHashMod)
+      .withColumn("d", md5(concat(lit("0|"), col("s"))))
+      .withColumn("h0", h0)
+      .withColumn("h1", h1)
       .drop("d")
       .groupBy("id")
       .agg(min(col("h0")).as("m0"),
         (1 until k).map(i =>
           min((col("h0") + lit(i.toLong) * col("h1")) % MinHashMod).as(s"m$i")): _*)
+  }
+
+  /** A shingle's (h0, h1) from its digest `d = md5("0|" + s)`: ONE md5
+    * per shingle, h0/h1 being disjoint 60-bit slices of it (md5 hex
+    * chars 1-15 and 16-30), reduced mod p. */
+  private[operators] def minHashSeeds(d: Column): (Column, Column) =
+    (graft.functions.HexSlice60.slice(d, 1) % MinHashMod,
+      graft.functions.HexSlice60.slice(d, 16) % MinHashMod)
+
+  /** JVM mirror of [[minHashSeeds]] for a shingle's UTF-8 bytes (the
+    * one-task LSH path hashes each distinct shingle once); DedupLshSpec
+    * pins it to the Column form. */
+  private[operators] def minHashSeedsJvm(s: Array[Byte]): (Long, Long) = {
+    val d = Hashing.md5Jvm("0|".getBytes("UTF-8") ++ s)
+    (Hashing.hexSlice60(d, 0) % MinHashMod, Hashing.hexSlice60(d, 15) % MinHashMod)
   }
 
   /** MinHash-LSH near-duplicate pairs: band the k-component signature
@@ -474,12 +486,42 @@ object Dedup {
     * collapses to one banded row per distinct signature; candidates
     * expand back to id pairs afterwards (output-bound) and every pair
     * is still individually verified by exact Jaccard, so the result
-    * is exactly the naive banded join's. */
+    * is exactly the naive banded join's.
+    *
+    * Ids: a repeated id pairs under one signature over the union of its
+    * rows' shingles; uncapped, each (row of i, row of j) is verified on
+    * its own (one output row each), capped, the id's union set is. A
+    * null-id row counts toward shingle document frequency but is never
+    * part of a pair.
+    *
+    * Scale shape: one aggregation over the input gates the path. When
+    * the rows plus their shingle occurrences fit one task
+    * ([[BucketEdges]], ~1M) and the id column is integral, ONE task
+    * mines the pairs ([[OneTaskLsh]]): the rows' (id, shingles) come to
+    * it through `repartition(1)`, tokenized by [[shingles]] and kept as
+    * UTF-8 bytes, and it replays the relational pipeline below (document
+    * frequency and cap, per-id Carter–Wegman mins, signature groups, the
+    * `hash60` band hashes, cross-group and intra-group candidates, exact
+    * Jaccard), yielding the pairs lazily. Nothing is persisted. Larger
+    * corpora and other id types run relationally. Both shapes return the
+    * same rows and column types. */
   def minHashLshPairs(df0: DataFrame, idCol: String, textCol: String,
                       k: Int, rowsPerBand: Int, threshold: Double,
                       n: Int = 1, maxShingleDf: Long = 0L,
-                      scope: CacheScope = CacheScope.unmanaged()): DataFrame = {
+                      scope: CacheScope = CacheScope.unmanaged()): DataFrame =
+    minHashLshPairs(df0, idCol, textCol, k, rowsPerBand, threshold, n, maxShingleDf,
+      scope, BucketEdges)
+
+  /** [[minHashLshPairs]] with the one-task capacity in rows plus shingle
+    * occurrences exposed, so specs can force the relational path
+    * (capacity 0). */
+  private[operators] def minHashLshPairs(df0: DataFrame, idCol: String, textCol: String,
+      k: Int, rowsPerBand: Int, threshold: Double, n: Int, maxShingleDf: Long,
+      scope: CacheScope, oneTaskCapacity: Long): DataFrame = {
+    require(k >= 1 && rowsPerBand >= 1, s"k and rowsPerBand must be positive, got $k and $rowsPerBand")
     require(k % rowsPerBand == 0, "k must be a multiple of rowsPerBand")
+    if (OneTaskLsh.fits(df0, idCol, textCol, n, oneTaskCapacity))
+      return OneTaskLsh.pairs(df0, idCol, textCol, k, rowsPerBand, threshold, n, maxShingleDf)
     // heavy pre-shuffle map phase (shingle explode + k md5 draws per
     // shingle) — widen a narrow one-file scan first (Widen scaladoc)
     val df = Widen.toParallelism(df0)
@@ -494,9 +536,11 @@ object Dedup {
     // pairing — persist it once with the exact full-signature group
     // key (pipe-joined components: collision-free, unlike a hash of
     // them, so no pair can be lost to a key collision); lifetime owned
-    // by the caller's `scope`
+    // by the caller's `scope`. A null id is left out here, after the
+    // document frequencies: the expansion's least/greatest would skip
+    // it and pair its partner with itself
     val mStr = (0 until k).map(i => col(s"m$i").cast("string"))
-    val sigG = scope.persist(minHashFromExploded(ex, k)
+    val sigG = scope.persist(minHashFromExploded(ex.filter(col("id").isNotNull), k)
       .withColumn("gk", concat_ws("|", mStr: _*)))
     // one representative row per distinct signature; members share
     // every component, so min() reproduces the group's m-values exactly

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * [[Similarity.dbscanFromPairs]]): one gate, one task builder, and the
   * graph the task runs over. */
 private[operators] object OneTaskGraph {
-  private val IntegralIds = Seq(ByteType, ShortType, IntegerType, LongType)
+  val IntegralIds = Seq(ByteType, ShortType, IntegerType, LongType)
 
   /** Whether a pair table of `nPairs` pairs runs in one task: its
     * directed edges fit under `capacity` and every id is integral. */

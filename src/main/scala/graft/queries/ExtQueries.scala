@@ -519,13 +519,15 @@ object ExtQueries {
        |  WHERE c::DOUBLE / (si.sz + sj.sz - c) >= 0.5)""".stripMargin
   }
   /** Session-memoized LSH near-dup pair mine over the bounded
-    * doc_id < 1000 slice — the IDENTICAL verified pair table that four
+    * doc_id < 1000 slice — the IDENTICAL verified pair table that eight
     * queries consume (q_dedup_eval's candidate side, q_pagerank,
-    * q_label_prop, q_triangles). The mine (shingle cap → signatures →
-    * banding → candidate join → exact verify) is by far their most
-    * expensive sub-pipeline, and per-query re-mining made the graph
-    * trio pay it three times per bench pass before a few seconds of
-    * actual graph work. The slice is ≤ 1000 docs at EVERY scale
+    * q_label_prop, q_triangles, q_kcore, q_bfs_hops, q_link_pred,
+    * q_dbscan_lsh). The mine (shingle cap → signatures → banding →
+    * candidate join → exact verify) runs in one task on a slice this
+    * size (a gate job and one shuffle, [[Dedup.minHashLshPairs]]); the
+    * memo spares the later consumers in one session even that (Bench
+    * resets it before every timed rep, so each timed query mines
+    * once). The slice is ≤ 1000 docs at EVERY scale
     * factor, so the verified pair table is bounded (thousands of
     * rows); memoizing the COLLECTED pairs keyed by data dir and
     * replaying them as a local DataFrame is safe at any SF and changes

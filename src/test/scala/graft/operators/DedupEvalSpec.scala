@@ -3,10 +3,12 @@ package graft.operators
 import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import MessyGraphs.scoped
 
 /** The q_dedup_eval contract: LSH recall measured against the exact
   * Jaccard truth set. Planted fixture first (recall arithmetic is
-  * checkable by hand), then the real-corpus invariants. */
+  * checkable by hand), then the real-corpus invariants. The pair
+  * pipelines run under their own scopes, released after collect. */
 class DedupEvalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -20,11 +22,11 @@ class DedupEvalSpec extends AnyFunSuite {
       (10L, "one two three four five six"),
       (11L, "seven eight nine ten eleven twelve"))
       .toDF("doc_id", "text")
-    val truth = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 1, threshold = 0.5).select("i", "j").collect()
+    val truth = scoped(s => Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+      n = 1, threshold = 0.5, scope = s).select("i", "j"))
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.minHashLshPairs(docs, "doc_id", "text",
-      k = 16, rowsPerBand = 2, threshold = 0.5).select("i", "j").collect()
+    val lsh = scoped(s => Dedup.minHashLshPairs(docs, "doc_id", "text",
+      k = 16, rowsPerBand = 2, threshold = 0.5, scope = s).select("i", "j"))
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(truth == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     assert(lsh == truth, "identical texts must be fully recalled")

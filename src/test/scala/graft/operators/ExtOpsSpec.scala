@@ -675,8 +675,9 @@ class ExtOpsSpec extends AnyFunSuite {
 
   test("CacheScope releases every table a pipeline persisted") {
     val scope = new CacheScope
+    // capacity 0: the relational path, the one that persists tables
     val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text",
-      k = 4, rowsPerBand = 2, threshold = 0.5, scope = scope)
+      k = 4, rowsPerBand = 2, threshold = 0.5, n = 1, maxShingleDf = 0L, scope, 0L)
     pairs.count() // consume fully
     assert(scope.trackedCount == 3,
       "signature groups + bands + verify sets should be tracked")

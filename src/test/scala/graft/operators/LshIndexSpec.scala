@@ -4,14 +4,18 @@ import graft.SparkTestSession
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import MessyGraphs.scoped
 
+/** [[Dedup.LshIndex]] against the one-shot [[Dedup.minHashLshPairs]]
+  * recompute. Every probe and recompute runs under its own scope,
+  * released after its rows are collected. */
 class LshIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
 
-  private def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
-    df.collect().map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"),
+  private def pairSet(run: CacheScope => DataFrame): Set[(Long, Long, Double)] =
+    scoped(run).map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"),
       r.getAs[Double]("jaccard"))).toSet
 
   /** Real corpus slice + a seeded guaranteed near-dup pair straddling
@@ -34,10 +38,10 @@ class LshIndexSpec extends AnyFunSuite {
     val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
     val idx = Dedup.buildLshIndex(base, "doc_id", "text", k = 16, rowsPerBand = 2)
     try {
-      val got = pairSet(idx.pairsWith(batch, "doc_id", "text", threshold = 0.5))
-      val full = pairSet(
+      val got = pairSet(s => idx.pairsWith(batch, "doc_id", "text", threshold = 0.5, scope = s))
+      val full = pairSet(s =>
         Dedup.minHashLshPairs(d, "doc_id", "text", k = 16, rowsPerBand = 2,
-          threshold = 0.5))
+          threshold = 0.5, scope = s))
         .filter { case (i, j, _) => batchIds(i) || batchIds(j) }
       assert(got == full)
       assert(got.exists { case (i, j, _) =>
@@ -54,10 +58,10 @@ class LshIndexSpec extends AnyFunSuite {
     val idx2 = Dedup.buildLshIndex(base, "doc_id", "text", k = 16, rowsPerBand = 2)
       .append(batch1, "doc_id", "text")
     try {
-      val got = pairSet(idx2.pairsWith(batch2, "doc_id", "text", threshold = 0.5))
-      val full = pairSet(
+      val got = pairSet(s => idx2.pairsWith(batch2, "doc_id", "text", threshold = 0.5, scope = s))
+      val full = pairSet(s =>
         Dedup.minHashLshPairs(d, "doc_id", "text", k = 16, rowsPerBand = 2,
-          threshold = 0.5))
+          threshold = 0.5, scope = s))
         .filter { case (i, j, _) => batch2Ids(i) || batch2Ids(j) }
       assert(got == full)
     } finally idx2.release()
@@ -75,7 +79,7 @@ class LshIndexSpec extends AnyFunSuite {
     val idx = Dedup.buildLshIndex(base, "doc_id", "text",
       k = 16, rowsPerBand = 2, maxShingleDf = cap)
     try {
-      val got = pairSet(idx.pairsWith(batch, "doc_id", "text", threshold = 0.4))
+      val got = pairSet(s => idx.pairsWith(batch, "doc_id", "text", threshold = 0.4, scope = s))
       // reference: REWRITE every doc to only its kept tokens (shingle
       // sets then equal the capped ones exactly), run the one-shot
       // uncapped pipeline over the rewrite, restrict to batch pairs
@@ -93,9 +97,9 @@ class LshIndexSpec extends AnyFunSuite {
         .filter(size(col("__kept")) > 0)
         .withColumn("text", concat_ws(" ", col("__kept")))
         .drop("__kept")
-      val full = pairSet(
+      val full = pairSet(s =>
         Dedup.minHashLshPairs(rewritten, "doc_id", "text",
-          k = 16, rowsPerBand = 2, threshold = 0.4))
+          k = 16, rowsPerBand = 2, threshold = 0.4, scope = s))
         .filter { case (i, j, _) => batchIds(i) || batchIds(j) }
       assert(got == full)
       assert(got.nonEmpty, "seeded pair lost to the cap")
@@ -106,9 +110,10 @@ class LshIndexSpec extends AnyFunSuite {
     val d = seededDocs
     val idx = Dedup.buildLshIndex(d.filter(col("doc_id") < 300),
       "doc_id", "text", k = 16, rowsPerBand = 2)
+    val scope = new CacheScope
     try {
       val out = idx.pairsWith(d.filter(col("doc_id") >= 300),
-        "doc_id", "text", threshold = 0.5)
+        "doc_id", "text", threshold = 0.5, scope = scope)
       out.count() // materialize so InMemoryTableScans resolve
       val plan = out.queryExecution.executedPlan.toString
       // the standing tables must be read from cache, not recomputed
@@ -116,6 +121,6 @@ class LshIndexSpec extends AnyFunSuite {
         s"index tables not read from cache:\n$plan")
       assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoopJoin"),
         s"candidate probe must be key-equality:\n$plan")
-    } finally idx.release()
+    } finally { scope.release(); idx.release() }
   }
 }

@@ -7,7 +7,8 @@ import org.scalacheck.Gen
 /** Shared fixtures of the pair-table graph specs (GraphRankSpec,
   * DbscanSpec): a messy graph generator, an id pool with extremes, and
   * a collect under its own released [[CacheScope]], so a spec leaves no
-  * table cached for later suites. */
+  * table cached for later suites (the dedup specs collect through it
+  * too). */
 object MessyGraphs {
   type Pair = (Option[Long], Option[Long])
 
