@@ -36,7 +36,8 @@ A perfbench run with event logging, one workload and seed:
 perfbench tags every span's jobs with a `perfbench:<span>#<n>` job group,
 and the C4.5 level loop describes each histogram job as
 `graft.<fitter> level=N models=M histogram`, so the table splits a fit
-into its levels. The first perfbench call also builds, and its
+into its levels; a small fit runs one `graft.<fitter> local rows=N
+models=K` collect instead. The first perfbench call also builds, and its
 class-data-sharing dump writes an event log of its own; the newest
 application is the run.
 

@@ -592,6 +592,10 @@ object C45 {
         if (math.abs(info) < tol) 0.0 else InfoStats.Epsilon
       } else gain / splitInfo
     }
+    // each class label's positions among the sorted labels; a cell of
+    // another class counts in no numeric boundary scan
+    val sortedLabels = classLabels.sorted
+    val labelIndex = sortedLabels.indices.groupBy(sortedLabels)
     val catStats = Map.newBuilder[(Int, Int), Cand]
     val catValues = Map.newBuilder[(Int, Int), Seq[(String, Long)]]
     val numStats = Map.newBuilder[(Int, Int), Cand]
@@ -638,11 +642,12 @@ object C45 {
           // (MyReducer.java:140-141,188-190). Argmin on
           // (cond_entropy, boundary), strict <. Counts stay exact
           // longs (micros) through the cumulative scan.
-          val labels = classLabels.sorted
+          val labels = sortedLabels
           val byVal = cs.groupBy(_._3)
             .map { case (v, g) =>
-              v.toDouble -> labels.map(c =>
-                g.filter(_._4 == c).map(_._5).sum)
+              val counts = new Array[Long](labels.size)
+              g.foreach(t => labelIndex.get(t._4).foreach(_.foreach(i => counts(i) += t._5)))
+              v.toDouble -> counts.toSeq
             }.toSeq.sortBy(_._1)
           val tot = labels.indices.map(i => byVal.map(_._2(i)).sum)
           val left = Array.fill(labels.size)(0L)
@@ -703,8 +708,9 @@ object C45 {
       cells: Array[(Int, Int, String, String, Long)],
       routes: Seq[Route]): Map[Int, Map[String, Long]] = {
     val out = Map.newBuilder[Int, Map[String, Long]]
+    val byRule = cells.groupBy(c => (c._1, c._2))
     routes.foreach { rt =>
-      val slice = cells.filter(c => c._1 == rt.prid && c._2 == rt.aid)
+      val slice = byRule.getOrElse((rt.prid, rt.aid), Array.empty[(Int, Int, String, String, Long)])
       if (rt.kind == "num") {
         val le = scala.collection.mutable.Map.empty[String, Long]
           .withDefaultValue(0L)
@@ -715,10 +721,13 @@ object C45 {
         }
         if (le.nonEmpty) out += rt.lrid -> le.toMap
         if (gt.nonEmpty) out += rt.rrid -> gt.toMap
-      } else rt.children.foreach { case (v, crid) =>
-        val m = slice.iterator.filter(_._3 == v).toSeq.groupBy(_._4)
-          .map { case (c, g) => c -> g.map(_._5).sum }
-        if (m.nonEmpty) out += crid -> m
+      } else {
+        val byValue = slice.groupBy(_._3)
+        rt.children.foreach { case (v, crid) =>
+          val m = byValue.getOrElse(v, Array.empty[(Int, Int, String, String, Long)]).groupBy(_._4)
+            .map { case (c, g) => c -> g.map(_._5).sum }
+          if (m.nonEmpty) out += crid -> m
+        }
       }
     }
     out.result()
@@ -826,24 +835,28 @@ object C45 {
                         params: C45Params = C45Params()): (C45Model, Map[Int, Double]) =
     fitRouted(df, schema, params, frontierRidColumn)
 
-  /** [[fitWithImportance]] with the frontier router as an argument:
-    * specs route through [[flatRidColumn]] to compare the two. One
+  /** [[fitWithImportance]] with the frontier router and the local
+    * gate's capacity as arguments: specs route through [[flatRidColumn]]
+    * (at capacity 0, which keeps every level a Spark job) to compare
+    * the two, and compare the local and the Spark histogram. One
     * model of the [[LevelLoop]]: multiplicity 1, rows at mass 1, or
     * micros that fan out when the corpus has null attribute values and
     * `missingMode` is "fractional". A caller that already cached `df`
     * keeps its cache ([[LevelLoop.withTrainingFrame]]). */
   private[fit] def fitRouted(df: DataFrame, schema: C45Schema, params: C45Params,
-                             router: (Vector[Rule], C45Schema) => Column)
+                             router: (Vector[Rule], C45Schema) => Column,
+                             capacity: Long = LevelLoop.LocalCells)
       : (C45Model, Map[Int, Double]) =
     LevelLoop.withTrainingFrame(df, (schema.attrNames :+ schema.classCol).map(col)) { data =>
       val probe = LevelLoop.probe(data, schema, params, "C45.fit")
       LevelLoop.grow(data, schema, params, LevelLoop.Models("fit", probe, _ => lit(1L),
-        probe.mass, micros = probe.fractional), router).head
+        probe.mass, micros = probe.fractional), router, capacity = capacity).head
     }
 
   /** k-fold fitting: model f trains on the rows of `stamped` whose
-    * `foldCol` is not f, all k grown by ONE histogram job per level
-    * ([[LevelLoop]], multiplicity `foldCol ≠ f`). Each model is
+    * `foldCol` is not f, all k grown side by side, one histogram per
+    * level ([[LevelLoop]], multiplicity `foldCol ≠ f`; `capacity` is
+    * its local gate). Each model is
     * bit-identical to [[fit]] on its training rows (CrossValSpec), and
     * records masses on the same 10⁶ scale whatever the mode
     * (MassScaleSpec).
@@ -852,13 +865,16 @@ object C45 {
     * (int in [0, k)), the schema's attributes and the class column;
     * `fractional` says whether null rows fan out. */
   private[fit] def fitFolds(stamped: DataFrame, foldCol: String, k: Int,
-      schema: C45Schema, params: C45Params, fractional: Boolean = false): Seq[C45Model] =
+      schema: C45Schema, params: C45Params, fractional: Boolean = false,
+      capacity: Long = LevelLoop.LocalCells): Seq[C45Model] =
     growFolds(stamped, foldCol, schema, params, LevelLoop.probe(stamped, schema, params,
-      "C45.fitFolds", Some((foldCol, k))).copy(fractional = fractional))
+      "C45.fitFolds", Some((foldCol, k))).copy(fractional = fractional), capacity)
 
   /** [[fitFolds]] from a finished probe. */
   private[fit] def growFolds(stamped: DataFrame, foldCol: String, schema: C45Schema,
-                             params: C45Params, probe: LevelLoop.Probe): Seq[C45Model] =
+                             params: C45Params, probe: LevelLoop.Probe,
+                             capacity: Long = LevelLoop.LocalCells): Seq[C45Model] =
     LevelLoop.grow(stamped, schema, params, LevelLoop.Models("fitFolds", probe,
-      f => (col(foldCol) =!= f).cast("long"), probe.mass, micros = probe.fractional)).map(_._1)
+      f => (col(foldCol) =!= f).cast("long"), probe.mass, micros = probe.fractional),
+      capacity = capacity).map(_._1)
 }

@@ -193,12 +193,15 @@ case class C45Boost(trees: Vector[C45Model], alphaMicros: Vector[Long],
   *   tree is discarded) both end the loop — Freund & Schapire's M1
   *   conditions.
   *
-  * Scale shape per round: one weighted histogram job per tree level +
+  * Scale shape per round: one weighted histogram per tree level +
   * one score/error/reweight pass that re-persists rows×(attrs+1)
   * (boosting is inherently sequential — each round's weights depend
   * on the previous round's predictions; that rewrite is the honest
   * algorithmic cost, there is no bagging-style fusion). Total:
-  * rounds × (levels + 2) bounded-shuffle jobs. */
+  * rounds × (levels + 2) bounded-shuffle jobs; below the level loop's
+  * local gate (the probe's row count, the same every round) a round's
+  * levels are one collect instead, which also materializes the
+  * round's frame. */
 object C45Boost {
 
   private val W1 = 1000000L
@@ -239,7 +242,14 @@ object C45Boost {
   }
 
   def fit(df: DataFrame, schema: C45Schema,
-          params: C45BoostParams = C45BoostParams()): C45Boost = {
+          params: C45BoostParams = C45BoostParams()): C45Boost =
+    fit(df, schema, params, LevelLoop.LocalCells)
+
+  /** [[fit]] with the level loop's local gate exposed, so specs can
+    * keep every level a Spark job (capacity 0). Every round trains on
+    * the same rows, so the probe's row count gates them all. */
+  private[fit] def fit(df: DataFrame, schema: C45Schema, params: C45BoostParams,
+                       capacity: Long): C45Boost = {
     val names = schema.attrNames
     val clsCol = schema.classCol
     // probed over the uncached projection; every round's weak fit
@@ -251,7 +261,7 @@ object C45Boost {
     // single-model LevelLoop whose starting mass is the boost weight
     def fitWeighted(base: DataFrame): C45Model =
       LevelLoop.grow(base, schema, params.base, LevelLoop.Models("fitBoost", probe,
-        _ => lit(1L), col("__w"), micros = true)).head._1
+        _ => lit(1L), col("__w"), micros = true), capacity = capacity).head._1
 
     val trees = Vector.newBuilder[C45Model]
     val alphas = Vector.newBuilder[Long]
@@ -268,7 +278,8 @@ object C45Boost {
       r
     }
     // the previous round's cache, freed only after the current round's
-    // first histogram job has materialized `cur` on top of it (lazy
+    // first level (its histogram job, or its collect below the local
+    // gate) has materialized `cur` on top of it (lazy
     // reweight materialization — see below), and by the finally when a
     // round throws before that
     var pendingFree: Option[DataFrame] = None
@@ -319,8 +330,8 @@ object C45Boost {
             .withColumn("__w", expr(s"__wn div $W1"))
             .drop("__pred", "__wn")
             .persist(StorageLevel.MEMORY_AND_DISK)
-          // LAZY materialization: the next round's first histogram job
-          // computes `next` straight through the still-cached parent —
+          // LAZY materialization: the next round's first level (histogram
+          // job or collect) computes `next` through the still-cached parent —
           // the per-round count() job is gone, and the final round's
           // reweight (whose output no job ever reads) never executes.
           // The parent cache is freed right after that job (pendingFree).

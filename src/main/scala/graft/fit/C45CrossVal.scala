@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE pass stamps and caches the fold column (no
   * shuffle) and carries the probe; then ALL k fits grow from ONE
-  * histogram job per tree level ([[C45.fitFolds]]: k models of the
+  * histogram per tree level ([[C45.fitFolds]]: k models of the
   * [[LevelLoop]], multiplicity `fold ≠ f`, null-bearing rows fanning
   * out when the mode is fractional), and ONE map-side aggregation
   * scores all k held-out folds. Each fold model is bit-identical to a

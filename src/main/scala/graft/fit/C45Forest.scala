@@ -177,7 +177,7 @@ case class C45Forest(trees: Vector[C45Model], seed: Int) {
 }
 
 /** Bagged C4.5: all `nTrees` bootstrap replicates grow side by side
-  * in the [[LevelLoop]], one histogram job per level for the whole
+  * in the [[LevelLoop]], one histogram per level for the whole
   * ensemble, with the per-(row, tree) bootstrap multiplicity as the
   * loop's multiplicity. Each tree is bit-identical to a sequential
   * [[C45.fit]] on its explicitly replicated sample, in either missing
@@ -296,7 +296,13 @@ object C45Forest {
     * per-attribute MEAN across trees. */
   def fitWithImportance(df: DataFrame, schema: C45Schema, key: Column,
       params: C45ForestParams = C45ForestParams())
-      : (C45Forest, Vector[Map[Int, Double]]) = {
+      : (C45Forest, Vector[Map[Int, Double]]) =
+    fitWithImportance(df, schema, key, params, LevelLoop.LocalCells)
+
+  /** [[fitWithImportance]] with the level loop's local gate exposed, so
+    * specs can keep every level a Spark job (capacity 0). */
+  private[fit] def fitWithImportance(df: DataFrame, schema: C45Schema, key: Column,
+      params: C45ForestParams, capacity: Long): (C45Forest, Vector[Map[Int, Double]]) = {
     val names = schema.attrNames
     val d = names.size
     val T = params.nTrees
@@ -315,7 +321,7 @@ object C45Forest {
         probe, t => col(wCols(t)), probe.mass, micros = probe.fractional,
         subspace = t => attrSubset(t, d, params.attrsPerTree),
         sample = if (params.mtry <= 0) None else Some((t, level, rid, live) =>
-          mtrySample(live, params.mtry, params.seed, t, level, rid))))
+          mtrySample(live, params.mtry, params.seed, t, level, rid))), capacity = capacity)
       (C45Forest(fits.map(_._1).toVector, params.seed), fits.map(_._2).toVector)
     }
   }

@@ -57,7 +57,7 @@ private[fit] trait C45ForestClassifierParams extends C45MlParams {
 }
 
 /** `spark.ml` Estimator over [[C45Forest.fit]]: the fused bagged
-  * ensemble (ONE weighted histogram job per level for ALL trees)
+  * ensemble (ONE weighted histogram per level for ALL trees)
   * inside a `Pipeline`/`CrossValidator`. The fitted model also exposes
   * [[C45ForestClassificationModel.oobEval]]; only per-tree inspection
   * still needs the wrapped [[C45ForestClassificationModel.forest]]. */

@@ -25,18 +25,8 @@ case class SortedCeilSnap(child: Expression, edges: Array[Double])
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_snap"
 
-  private def snap(v: Double): Double = {
-    var lo = if (v.isNaN) edges.length else 0 // NaN: above every edge
-    var hi = edges.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (edges(mid) < v) lo = mid + 1 else hi = mid
-    }
-    if (lo == edges.length) Double.PositiveInfinity else edges(lo)
-  }
-
   override protected def nullSafeEval(v: Any): Any =
-    snap(v.asInstanceOf[Double])
+    SortedCeilSnap.snap(edges, v.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
@@ -58,6 +48,17 @@ case class SortedCeilSnap(child: Expression, edges: Array[Double])
 }
 
 object SortedCeilSnap {
+  /** `v` snapped to `edges`, as the expression evaluates it. */
+  def snap(edges: Array[Double], v: Double): Double = {
+    var lo = if (v.isNaN) edges.length else 0 // NaN: above every edge
+    var hi = edges.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (edges(mid) < v) lo = mid + 1 else hi = mid
+    }
+    if (lo == edges.length) Double.PositiveInfinity else edges(lo)
+  }
+
   def snapTo(edges: Array[Double], c: Column): Column =
     ColumnBridge.column(SortedCeilSnap(ColumnBridge.expression(c), edges))
 }

@@ -34,7 +34,9 @@ import scala.jdk.CollectionConverters._
   * tree is a reference object, so each level generates the same code
   * and reuses the first level's compiled class. The same node arrays
   * also drive [[TreeWalk]]: every model's fractional vote, and every
-  * level of a fit whose null values fan out. */
+  * level of a fit whose null values fan out. A small fit's levels call
+  * [[TreeLeaf.Nodes.leafOf]] and [[TreeLeaf.Fans]] in the driver on
+  * collected rows (`graft.fit.LocalHistogram`). */
 case class TreeLeaf(children: Seq[Expression], tree: TreeLeaf.Nodes)
   extends Expression {
 

@@ -588,8 +588,11 @@ object Dedup {
       .join(sh.select(col("id").as("j"), col("sh").as("sh_j")), "j")
       .withColumn("common", graft.functions.SortedIntersectCount
         .sortedIntersectCount(col("sh_i"), col("sh_j")))
-      .withColumn("jaccard", col("common").cast("double") /
-        (size(col("sh_i")) + size(col("sh_j")) - col("common")))
+      // two empty verify sets have no Jaccard: the pair drops, under
+      // ANSI as outside it (a 0/0 division would fail the query)
+      .withColumn("union", size(col("sh_i")) + size(col("sh_j")) - col("common"))
+      .filter(col("union") =!= 0)
+      .withColumn("jaccard", col("common").cast("double") / col("union"))
       .filter(col("jaccard") >= threshold)
       .select(col("i"), col("j"), col("jaccard"))
   }

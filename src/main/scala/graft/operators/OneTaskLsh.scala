@@ -29,14 +29,12 @@ private[operators] object OneTaskLsh {
   def pairs(df: DataFrame, idCol: String, textCol: String, k: Int, rowsPerBand: Int,
             threshold: Double, n: Int, maxShingleDf: Long): DataFrame = {
     val idType = df.select(col(idCol)).schema.head.dataType
-    // a 0/0 Jaccard fails in the task as the relational division fails
-    val ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
     df.select(col(idCol).cast("long").as("id"),
         Dedup.shingles(col(textCol), n).cast("array<binary>").as("sh"))
       .repartition(1)
       .as(Encoders.product[Doc])
       .mapPartitions(docs =>
-        new OneTaskLsh(docs, k, maxShingleDf).pairs(rowsPerBand, threshold, ansi))(
+        new OneTaskLsh(docs, k, maxShingleDf).pairs(rowsPerBand, threshold))(
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
       .toDF("i", "j", "jaccard")
       .select(col("i").cast(idType).as("i"), col("j").cast(idType).as("j"), col("jaccard"))
@@ -84,7 +82,7 @@ private[operators] final class OneTaskLsh(docs: Iterator[OneTaskLsh.Doc], k: Int
 
   /** The verified pairs, lazily: groups sharing a `hash60` band hash
     * pair their members, and a group pairs its own members. */
-  def pairs(rowsPerBand: Int, threshold: Double, ansi: Boolean): Iterator[(Long, Long, Double)] = {
+  def pairs(rowsPerBand: Int, threshold: Double): Iterator[(Long, Long, Double)] = {
     val sigs = groups.keys.toArray
     val members = groups.values.toArray
     val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Int]]
@@ -100,12 +98,12 @@ private[operators] final class OneTaskLsh(docs: Iterator[OneTaskLsh.Doc], k: Int
       members.iterator.flatMap(ms =>
         for (x <- ms.indices.iterator; y <- (0 until x).iterator) yield pair(ms(y), ms(x)))
     for ((i, j) <- ids; a <- sets(i).iterator; b <- sets(j).iterator;
-         jac <- jaccard(a, b, ansi) if jac >= threshold) yield (i, j, jac)
+         jac <- jaccard(a, b) if jac >= threshold) yield (i, j, jac)
   }
 
-  /** |a ∩ b| / |a ∪ b| of two sorted sets; None for two empty sets (the
-    * relational division's null outside ANSI mode). */
-  private def jaccard(a: Array[Int], b: Array[Int], ansi: Boolean): Option[Double] = {
+  /** |a ∩ b| / |a ∪ b| of two sorted sets; None for two empty sets,
+    * whose pair the relational verify drops too. */
+  private def jaccard(a: Array[Int], b: Array[Int]): Option[Double] = {
     var x = 0
     var y = 0
     var common = 0
@@ -115,8 +113,6 @@ private[operators] final class OneTaskLsh(docs: Iterator[OneTaskLsh.Doc], k: Int
       else { common += 1; x += 1; y += 1 }
     }
     val union = a.length + b.length - common
-    if (union != 0) Some(common.toDouble / union)
-    else if (ansi) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero: a Jaccard of two empty sets")
-    else None
+    if (union != 0) Some(common.toDouble / union) else None
   }
 }

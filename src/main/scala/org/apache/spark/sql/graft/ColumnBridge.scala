@@ -91,3 +91,17 @@ object SessionBridge {
     else (s, identity)
   }
 }
+
+/** A frame's rows as Spark's own `InternalRow`s, collected in one job
+  * under one SQL execution as `Dataset.collect` does, but without the
+  * conversion to external `Row`s: a driver-side consumer reads the
+  * values (`UTF8String`s included) exactly as Spark's expressions
+  * produced them. */
+object CollectBridge {
+  def internalRows(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+}

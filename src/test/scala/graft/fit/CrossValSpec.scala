@@ -109,6 +109,7 @@ class CrossValSpec extends AnyFunSuite {
       // moves. One description per level == one histogram QUERY per
       // level, the SCALE.md fusion claim; a sequential 3-fold fit
       // would stamp 3 queries per level.
+      // capacity 0 keeps every level a Spark job, as on a large frame.
       // AQE decomposes one logical query into a job per materialized
       // stage — pin it off so the ABSOLUTE job bound below stays
       // meaningful (the distinct-description invariant holds either
@@ -118,7 +119,7 @@ class CrossValSpec extends AnyFunSuite {
       try {
         val (models, descs) = JobCount.described(spark.sparkContext)(
           C45.fitFolds(stamped, "__fold", 3, schema,
-            C45Params(maxDepth = 2, maxBins = 0), fractional = true))
+            C45Params(maxDepth = 2, maxBins = 0), fractional = true, capacity = 0))
         assert(models.size == 3)
         val levelDescs = descs.filter(_.startsWith("graft.fitFolds level=")).toSet
         // levels 0..2 → exactly 3 level-stamped histogram queries

@@ -29,7 +29,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are pinned to one exchange, no join, no union and no cache but the
   * training frame's. */
 class DeepFrontierSpec extends AnyFunSuite {
-  import DeepFrontierSpec.flatFit
+  import DeepFrontierSpec.{flatFit, sparkFit}
   lazy val spark = SparkTestSession.spark
 
   /** Walk-routed [[C45.fit]] and the flat-routed fit agree exactly:
@@ -250,7 +250,7 @@ class DeepFrontierSpec extends AnyFunSuite {
     // projection — no join against a route table, no per-level
     // persisted base.
     val (m, plans) = fitPlans(
-      C45.fit(edgeCorpus, edgeSchema, C45Params(maxDepth = 4, missingMode = "drop")))
+      sparkFit(edgeCorpus, edgeSchema, C45Params(maxDepth = 4, missingMode = "drop")))
     assert(frontier(m, 3) > 64)
     val histograms = plans.map(_.toString).filter(_.contains("__rid"))
     // levels 0-3 each run one histogram; every level-3 rule is pure
@@ -275,7 +275,7 @@ class DeepFrontierSpec extends AnyFunSuite {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (m, plans) =
-      try fitPlans(C45.fit(edgeCorpus, edgeSchema,
+      try fitPlans(sparkFit(edgeCorpus, edgeSchema,
         C45Params(maxDepth = 4, missingMode = "fractional")))
       finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert(frontier(m, 2) > 1, "the fit must grow past its first split")
@@ -306,13 +306,34 @@ class DeepFrontierSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val jobs =
       try (1 to 4).map { d =>
-        JobCount.of(sc)(C45.fit(df, edgeSchema,
+        JobCount.of(sc)(sparkFit(df, edgeSchema,
           C45Params(maxDepth = d, maxBins = 0, missingMode = "drop")))._2
       } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     // probe + class-label discovery + levels 0..d-1; level d derives
     assert(jobs.head == 3, s"jobs at maxDepth 1..4: $jobs")
     assert(jobs.sliding(2).forall { case Seq(d, d1) => d1 == d + 1 },
       s"jobs at maxDepth 1..4: $jobs")
+  }
+
+  test("a local drop fit runs a fixed job count whatever its depth") {
+    // below the local gate the training frame is collected once and
+    // every level's histogram is computed in the driver: the probe,
+    // class-label discovery and the collect, at any depth. Adaptive
+    // execution is off, as above.
+    val df = edgeCorpus
+    val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val runs =
+      try (1 to 4).map { d =>
+        JobCount.described(sc)(C45.fit(df, edgeSchema,
+          C45Params(maxDepth = d, maxBins = 0, missingMode = "drop")))
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val jobs = runs.map(_._2.size)
+    assert(jobs == Seq(3, 3, 3, 3), s"jobs at maxDepth 1..4: $jobs")
+    assert(runs.forall(_._2.count(_.startsWith("graft.fit local rows=")) == 1),
+      runs.map(_._2))
+    assert(runs.map(_._1.leaves.size).distinct.size >= 3, "the depths must grow different trees")
   }
 
   test("a wide fit leaves no cached blocks behind") {
@@ -326,8 +347,15 @@ class DeepFrontierSpec extends AnyFunSuite {
 
 object DeepFrontierSpec {
 
+  /** [[C45.fit]] with every level a Spark job (capacity 0), as on a
+    * frame above the local gate. */
+  def sparkFit(df: DataFrame, schema: C45Schema, params: C45Params): C45Model =
+    C45.fitRouted(df, schema, params, C45.frontierRidColumn, capacity = 0)._1
+
   /** The same fit routed by the flat first-match CASE WHEN
-    * ([[C45.flatRidColumn]]) instead of the tree walk. */
+    * ([[C45.flatRidColumn]]) instead of the tree walk, every level a
+    * Spark job (capacity 0), so the router is the one that runs. */
   def flatFit(df: DataFrame, schema: C45Schema, params: C45Params): C45Model =
-    C45.fitRouted(df, schema, params, (open, s) => C45.flatRidColumn(open, s.attrNames))._1
+    C45.fitRouted(df, schema, params, (open, s) => C45.flatRidColumn(open, s.attrNames),
+      capacity = 0)._1
 }

@@ -45,9 +45,10 @@ class DeriveFinalSpec extends AnyFunSuite {
       df.count() // materialize outside the counted window
       val aqe = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
+      // capacity 0: every level a Spark job, as on a large frame
       val (model, jobs) =
-        try JobCount.of(spark.sparkContext)(
-          C45.fit(df, schema, C45Params(maxDepth = 2, maxBins = 0)))
+        try JobCount.of(spark.sparkContext)(C45.fitRouted(df, schema,
+          C45Params(maxDepth = 2, maxBins = 0), C45.frontierRidColumn, capacity = 0)._1)
         finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
       // the frontier must actually reach maxDepth for the claim to bite
       assert(model.leaves.exists(_.depth == 2), model.leaves.map(_.encode))

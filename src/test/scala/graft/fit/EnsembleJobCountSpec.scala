@@ -49,13 +49,14 @@ class EnsembleJobCountSpec extends AnyFunSuite {
     }
   }
 
+  // capacity 0: every level a Spark job, as on a large frame
   private def forest(depth: Int, mode: String)(df: DataFrame): C45Forest =
-    C45Forest.fit(df, schema, col("k"), C45ForestParams(nTrees = 2, seed = 3,
-      base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)))
+    C45Forest.fitWithImportance(df, schema, col("k"), C45ForestParams(nTrees = 2, seed = 3,
+      base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)), capacity = 0)._1
 
   private def boost(depth: Int, mode: String = "drop")(df: DataFrame): C45Boost =
     C45Boost.fit(df, schema, C45BoostParams(rounds = 1,
-      base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)))
+      base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)), capacity = 0)
 
   test("a 2-tree drop-mode forest runs the probe plus one job per grown level") {
     // probe + levels 0..d-1; level d derives from level d-1's cells

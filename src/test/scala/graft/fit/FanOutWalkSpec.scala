@@ -99,7 +99,7 @@ class FanOutWalkSpec extends AnyFunSuite {
           .pureApply(Gen.Parameters.default, Seed(seed * 31 + m)).toVector).toMap
       }
       val ms = models(c, LevelLoop.Probe(fractional = true,
-        Vector.fill(c.k)(schema.classLabels), Vector.fill(c.k)(Map.empty)))
+        Vector.fill(c.k)(schema.classLabels), Vector.fill(c.k)(Map.empty), rows = 384))
       val chain = new FanOutChain
       tree.zipWithIndex.foreach { case (paths, level) =>
         // the last model runs out of open rules at the deepest level
@@ -133,8 +133,9 @@ class FanOutWalkSpec extends AnyFunSuite {
           assert(cells(w) == cells(reference(d, s, ms, f)), s"level ${f.level}")
           levels += 1
           w
-        })
-      val chained = LevelLoop.grow(df, schema, params, models(c, probe), fan = new FanOutChain)
+        }, capacity = 0)
+      val chained = LevelLoop.grow(df, schema, params, models(c, probe), fan = new FanOutChain,
+        capacity = 0)
       assert(levels >= 3, "the fit must grow past its second level")
       assert(walked == chained)
       assert(walked.exists(_._1.leaves.size > 2))

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.{Failure, Success, Try}
 import MessyGraphs.{scoped, typedRows}
 
 /** [[Dedup.minHashLshPairs]]: argument checks, id and text edge
@@ -79,6 +78,17 @@ class DedupLshSpec extends AnyFunSuite {
     }
   }
 
+  test("two empty verify sets drop their pair on both paths, under ANSI") {
+    // n = 2: "x" and "y" shingle to nothing, so ids 1 and 2 (one
+    // signature over "a b c") verify ("x", "y") as 0/0 besides the
+    // other three row pairs
+    val d = Seq((1L, "a b c"), (1L, "x"), (2L, "a b c"), (2L, "y")).toDF("doc_id", "text")
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    for (cap <- Paths)
+      assert(mined(d, 16, 2, 0.0, 2, 0L, cap) == Seq((1L, 2L, 0.0), (1L, 2L, 0.0), (1L, 2L, 1.0)),
+        s"capacity $cap")
+  }
+
   /** A messy corpus: ids from a small pool (repeats and nulls), texts
     * null, empty, blank or a few words in mixed case, non-ASCII and odd
     * spacing, and a share of texts copied from earlier rows. */
@@ -114,16 +124,12 @@ class DedupLshSpec extends AnyFunSuite {
       val d = if (x % 2 == 0) rows.toDF("doc_id", "text")
         else rows.map { case (i, t) => (i.map(_.toInt), t) }.toDF("doc_id", "text")
       val t = Seq(0.5, 0.3, 0.0)(x % 3)
-      // both paths fail alike on a 0/0 Jaccard (two empty verify sets)
-      def outcome(cap: Long) = Try(typedRows(s => Dedup.minHashLshPairs(
-          d, "doc_id", "text", k, r, t, n, maxDf, s, cap))) match {
-        case Success(v) => Right(v)
-        case Failure(e) if e.getMessage.contains("DIVIDE_BY_ZERO") => Left("DIVIDE_BY_ZERO")
-        case Failure(e) => throw e
-      }
+      def outcome(cap: Long) = typedRows(s => Dedup.minHashLshPairs(
+        d, "doc_id", "text", k, r, t, n, maxDf, s, cap))
       val one = outcome(Dedup.BucketEdges)
       assert(one == outcome(0L), s"n $n, maxShingleDf $maxDf, k $k, r $r, threshold $t")
-      one.foreach { v => compared += 1; pairs += v._2.size }
+      compared += 1
+      pairs += one._2.size
     }
     assert(compared >= 8 && pairs > 0, s"$compared corpora compared, $pairs pairs")
   }
