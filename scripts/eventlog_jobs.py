@@ -21,7 +21,10 @@ Kinds, from the stages a job ran and their RDDs:
   broadcast     result tasks over ParallelCollectionRDD roots only, under a
                 BroadcastExchange scope: a broadcast relation's build
   cache build   result tasks through an InMemoryTableScan with no shuffle
-                read or write: a persisted frame materialized on its own
+                read or write, whose stages hold a persisted RDD that no
+                earlier stage in the log held: a persisted frame
+                materialized on its own (a collect or count over a cache
+                built earlier is a result)
   shuffle map   every task a ShuffleMapTask (an adaptive-execution map stage)
   result        anything else
 
@@ -37,7 +40,9 @@ perfbench tags every span's jobs with a `perfbench:<span>#<n>` job group,
 and the C4.5 level loop describes each histogram job as
 `graft.<fitter> level=N models=M histogram`, so the table splits a fit
 into its levels; a small fit runs one `graft.<fitter> local rows=N
-models=K` collect instead. The first perfbench call also builds, and its
+models=K` collect instead. A boost round's eval aggregation is
+`graft.fitBoost round=N eval`, and cross-validation's is `graft.fitFolds
+eval`. The first perfbench call also builds, and its
 class-data-sharing dump writes an event log of its own; the newest
 application is the run.
 
@@ -75,7 +80,7 @@ def log_files(path):
 
 def jobs_of(files):
     """Job id -> dict(group, desc, wall_ms, tasks, kind), in job order."""
-    jobs, stage_job = {}, {}
+    jobs, stage_job, persisted = {}, {}, set()
     for name in files:
         with open(name) as f:
             for line in f:
@@ -88,7 +93,7 @@ def jobs_of(files):
                         desc=props.get("spark.job.description") or "",
                         start=e["Submission Time"], end=None, tasks=0,
                         types=collections.Counter(), roots=set(), scopes=set(),
-                        shuffle=False, site="", stage_tasks={})
+                        shuffle=False, builds=False, site="", stage_tasks={})
                     for s in e["Stage IDs"]:
                         stage_job[s] = e["Job ID"]
                     names = {i["Stage ID"]: i.get("Stage Name", "") for i in e.get("Stage Infos", [])}
@@ -106,6 +111,11 @@ def jobs_of(files):
                     for rdd in info.get("RDD Info", []):
                         if not rdd.get("Parent IDs"):
                             j["roots"].add(rdd["Name"])
+                        level = rdd.get("Storage Level") or {}
+                        if (level.get("Use Memory") or level.get("Use Disk")) \
+                                and rdd["RDD ID"] not in persisted:
+                            persisted.add(rdd["RDD ID"])
+                            j["builds"] = True
                         try:
                             j["scopes"].add(json.loads(rdd.get("Scope") or "{}").get("name"))
                         except ValueError:
@@ -136,7 +146,7 @@ def kind(j):
     result = not j["types"] or set(j["types"]) == {"ResultTask"}
     if result and j["roots"] == {"ParallelCollectionRDD"} and "BroadcastExchange" in j["scopes"]:
         return "broadcast"
-    if result and "InMemoryTableScan" in j["scopes"] and not j["shuffle"] \
+    if result and j["builds"] and "InMemoryTableScan" in j["scopes"] and not j["shuffle"] \
             and "Exchange" not in j["scopes"] and "AQEShuffleRead" not in j["scopes"]:
         return "cache build"
     if j["types"] and set(j["types"]) == {"ShuffleMapTask"}:

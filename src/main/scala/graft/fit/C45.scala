@@ -748,6 +748,7 @@ object C45 {
     val imp = Seq.newBuilder[(Int, Double)]
     var globalMajority = globalMajority0
     var nextIdx = 0
+    val candsOf = (st.cat.toSeq ++ st.num).groupMap(_._1._1) { case ((_, aid), c) => (aid, c) }
     open.zipWithIndex.foreach { case (rule, rid) =>
       val counts = st.clsCounts.getOrElse(rid, Map.empty)
       if (counts.isEmpty) {
@@ -760,9 +761,8 @@ object C45 {
         if (globalMajority.isEmpty && rid == 0 && level == 0)
           globalMajority = Some(majority)
         val pure = counts.size == 1
-        val cands = (st.cat ++ st.num).collect {
-          case ((r, aid), c)
-            if r == rid && !rule.usedAttrs.contains(aid) &&
+        val cands = candsOf.getOrElse(rid, Nil).collect {
+          case (aid, c) if !rule.usedAttrs.contains(aid) &&
               c.gain > 1e-12 && c.gainRatio > InfoStats.Epsilon => c
         }
         if (pure || cands.isEmpty || rule.depth >= params.maxDepth) {
@@ -861,7 +861,7 @@ object C45 {
     * records masses on the same 10⁶ scale whatever the mode
     * (MassScaleSpec).
     *
-    * Contract: `stamped` is persisted by the caller and holds `foldCol`
+    * Contract: `stamped` is cached or cache-backed and holds `foldCol`
     * (int in [0, k)), the schema's attributes and the class column;
     * `fractional` says whether null rows fan out. */
   private[fit] def fitFolds(stamped: DataFrame, foldCol: String, k: Int,

@@ -3,7 +3,6 @@ package graft.fit
 import graft.meta.C45Schema
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Tuning knobs for [[C45Boost.fit]] — AdaBoost.M1 (Freund & Schapire
   * 1996) with shallow C4.5 base learners, the pairing Quinlan studied
@@ -33,8 +32,9 @@ case class C45BoostParams(rounds: Int = 5,
   * reweight uses; alpha alone floors). Both exact longs so goldens pin
   * float-free. Serving is the weighted vote:
   * argmax over labels of Σ_t α_t·[h_t(x) = label], ties to the
-  * lexicographically smallest label — T flat CASE WHEN columns + one
-  * pure-Column argmax, zero joins, zero shuffles. */
+  * lexicographically smallest label — one prediction column per member
+  * ([[C45Model.transform]]) + one pure-Column argmax, zero joins, zero
+  * shuffles. */
 case class C45Boost(trees: Vector[C45Model], alphaMicros: Vector[Long],
                     errorMicros: Vector[Long]) {
 
@@ -176,7 +176,9 @@ case class C45Boost(trees: Vector[C45Model], alphaMicros: Vector[Long],
 /** AdaBoost.M1 over the engine's C4.5, all-integer where it counts:
   *
   * - **Weights are exact long micros** (1 row starts at 10⁶) and ride
-  *   as ONE column on the persisted training projection. Each round's
+  *   as ONE column over the fit's one training frame
+  *   ([[LevelLoop.withTrainingFrame]]): round t's weight is an
+  *   expression over rounds 0..t−1's hard predictions. Each round's
   *   weak learner is a single-model [[LevelLoop]] fit whose starting
   *   mass is that column, with cells in micros, so a weighted tree is
   *   bit-deterministic under any partitioning.
@@ -193,15 +195,15 @@ case class C45Boost(trees: Vector[C45Model], alphaMicros: Vector[Long],
   *   tree is discarded) both end the loop — Freund & Schapire's M1
   *   conditions.
   *
-  * Scale shape per round: one weighted histogram per tree level +
-  * one score/error/reweight pass that re-persists rows×(attrs+1)
-  * (boosting is inherently sequential — each round's weights depend
-  * on the previous round's predictions; that rewrite is the honest
-  * algorithmic cost, there is no bagging-style fusion). Total:
-  * rounds × (levels + 2) bounded-shuffle jobs; below the level loop's
-  * local gate (the probe's row count, the same every round) a round's
-  * levels are one collect instead, which also materializes the
-  * round's frame. */
+  * Scale shape per round: the weak fit's levels (one collect when the
+  * frame is below the level loop's local gate, which every round
+  * passes or fails alike; else one weighted histogram job per level)
+  * + one eval aggregation that scores the round and sums its error and
+  * total mass. Boosting is inherently sequential — each round's
+  * weights depend on the previous rounds' predictions — and no round
+  * persists anything: every scan of round t recomputes a row's weight
+  * from t member predictions, cheap next to a job for shallow weak
+  * learners. */
 object C45Boost {
 
   private val W1 = 1000000L
@@ -249,51 +251,30 @@ object C45Boost {
     * keep every level a Spark job (capacity 0). Every round trains on
     * the same rows, so the probe's row count gates them all. */
   private[fit] def fit(df: DataFrame, schema: C45Schema, params: C45BoostParams,
-                       capacity: Long): C45Boost = {
-    val names = schema.attrNames
-    val clsCol = schema.classCol
-    // probed over the uncached projection; every round's weak fit
-    // shares its labels and full-data bin edges (the forest's contract)
-    val proj0 = df.select((names :+ clsCol).map(col): _*)
-    val probe = LevelLoop.probe(proj0, schema, params.base, "C45Boost.fit")
-
-    // one weighted C4.5 fit over (attrs, __cls, __w micros): a
-    // single-model LevelLoop whose starting mass is the boost weight
-    def fitWeighted(base: DataFrame): C45Model =
-      LevelLoop.grow(base, schema, params.base, LevelLoop.Models("fitBoost", probe,
-        _ => lit(1L), col("__w"), micros = true), capacity = capacity).head._1
-
-    val trees = Vector.newBuilder[C45Model]
-    val alphas = Vector.newBuilder[Long]
-    val errors = Vector.newBuilder[Long]
-    var cur = graft.operators.Widen.toParallelism(
-        proj0.withColumn("__cls", col(clsCol).cast("string"))
-          .withColumn("__w", lit(W1)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val profile = LevelLoop.profile
-    def tick[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      if (profile)
-        println(f"[boost] $what: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    // the previous round's cache, freed only after the current round's
-    // first level (its histogram job, or its collect below the local
-    // gate) has materialized `cur` on top of it (lazy
-    // reweight materialization — see below), and by the finally when a
-    // round throws before that
-    var pendingFree: Option[DataFrame] = None
-    try {
+                       capacity: Long): C45Boost =
+    LevelLoop.withTrainingFrame(df, (schema.attrNames :+ schema.classCol).map(col)) { data =>
+      // every round's weak fit shares its labels and full-data bin
+      // edges (the forest's contract)
+      val probe = LevelLoop.probe(data, schema, params.base, "C45Boost.fit")
+      val sc = data.sparkSession.sparkContext
+      val trees = Vector.newBuilder[C45Model]
+      val alphas = Vector.newBuilder[Long]
+      val errors = Vector.newBuilder[Long]
+      // round t's frame: the training frame with each row's weight
+      // after rounds 0..t-1, recomputed from their predictions per scan
+      var cur = data.withColumn("__cls", col(schema.classCol).cast("string"))
+        .withColumn("__w", lit(W1))
       var round = 0
       var stop = false
       while (round < params.rounds && !stop) {
-        val model = tick(s"round $round fit")(fitWeighted(cur))
-        pendingFree.foreach(_.unpersist())
-        pendingFree = None
+        // one weighted C4.5 fit over (attrs, __cls, __w micros): a
+        // single-model LevelLoop whose starting mass is the boost weight
+        val model = LevelLoop.grow(cur, schema, params.base, LevelLoop.Models("fitBoost",
+          probe, _ => lit(1L), col("__w"), micros = true), capacity = capacity).head._1
         // score + error mass + total mass + max weight in ONE agg job
         val scored = model.transform(cur, "__pred")
         val wrong = col("__pred") =!= col("__cls")
-        val r = tick(s"round $round eval")(scored.agg(
+        val r = LevelLoop.described(sc, s"graft.fitBoost round=$round eval")(scored.agg(
           sum(when(wrong, col("__w")).otherwise(lit(0L))).as("e"),
           sum(col("__w")).as("w"),
           max(col("__w")).as("mx")).head())
@@ -323,28 +304,18 @@ object C45Boost {
           // integral `div` keeps the half-up rounding EXACT at any
           // magnitude (a double-backed `/` would round the >2^53
           // numerator before dividing)
-          val next = scored
+          cur = scored
             .withColumn("__wn",
               col("__w") * when(wrong, lit(fWrong.toLong))
                 .otherwise(lit(fRight.toLong)) + lit(W1 / 2))
             .withColumn("__w", expr(s"__wn div $W1"))
             .drop("__pred", "__wn")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          // LAZY materialization: the next round's first level (histogram
-          // job or collect) computes `next` through the still-cached parent —
-          // the per-round count() job is gone, and the final round's
-          // reweight (whose output no job ever reads) never executes.
-          // The parent cache is freed right after that job (pendingFree).
-          if (profile) println(s"[boost] round $round reweight: deferred")
-          pendingFree = Some(cur)
-          cur = next
         }
         round += 1
       }
-    } finally { pendingFree.foreach(_.unpersist()); cur.unpersist() }
-    val ts = trees.result()
-    require(ts.nonEmpty,
-      "C45Boost.fit produced no usable tree (first round error >= 0.5)")
-    C45Boost(ts, alphas.result(), errors.result())
-  }
+      val ts = trees.result()
+      require(ts.nonEmpty,
+        "C45Boost.fit produced no usable tree (first round error >= 0.5)")
+      C45Boost(ts, alphas.result(), errors.result())
+    }
 }

@@ -16,14 +16,16 @@ import org.apache.spark.sql.functions._
   * same way the split-assignment operator is — key by a GROUP (e.g. a
   * near-dup cluster id) and the whole group lands in one fold.
   *
-  * Scale shape: ONE pass stamps and caches the fold column (no
-  * shuffle) and carries the probe; then ALL k fits grow from ONE
-  * histogram per tree level ([[C45.fitFolds]]: k models of the
-  * [[LevelLoop]], multiplicity `fold ≠ f`, null-bearing rows fanning
-  * out when the mode is fractional), and ONE map-side aggregation
-  * scores all k held-out folds. Each fold model is bit-identical to a
-  * sequential fit on its training rows; counts are exact longs, so
-  * the result is bit-stable at every tier. */
+  * Scale shape: the fold column is one more column of the fit's
+  * training frame ([[LevelLoop.withTrainingFrame]]: cached once over
+  * an uncached input, hashed per scan over a caller's cache), and the
+  * probe's one scan carries the per-fold sketches; then ALL k fits
+  * grow from ONE histogram per tree level ([[C45.fitFolds]]: k models
+  * of the [[LevelLoop]], multiplicity `fold ≠ f`, null-bearing rows
+  * fanning out when the mode is fractional), and ONE map-side
+  * aggregation scores all k held-out folds. Each fold model is
+  * bit-identical to a sequential fit on its training rows; counts are
+  * exact longs, so the result is bit-stable at every tier. */
 object C45CrossVal {
 
   case class FoldResult(fold: Int, nTest: Long, nCorrect: Long)
@@ -36,30 +38,14 @@ object C45CrossVal {
     val clsCol = schema.classCol
     val names = schema.attrNames
     val fold = (Hashing.hash60(foldKey, salt) % k).cast("int")
-    // ONE materialization serves all k fits and all k eval passes: the
-    // per-level histograms and the eval scan both read through this
-    // cache
-    val stamped = graft.operators.Widen.toParallelism(df
-      .withColumn("__fold", fold) // stamp BEFORE projecting the key away
-      .select(("__fold" +: names :+ clsCol)
-        .map(org.apache.spark.sql.functions.col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val profile = LevelLoop.profile
-    def tick[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      if (profile)
-        println(f"[crossval] $what: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    try {
-      // the cache-building scan also carries the null probe and the
-      // per-fold binning sketches (LevelLoop.probe)
-      val probe = tick("probe + cache build")(LevelLoop.probe(stamped, schema, params,
-        "C45CrossVal.crossValidate", Some(("__fold", k))))
-      val models: Seq[C45Model] = tick("fits")(
-        C45.growFolds(stamped, "__fold", schema, params, probe))
+    // the fold is stamped before the key is projected away; ONE
+    // training frame serves all k fits and all k eval passes
+    LevelLoop.withTrainingFrame(df, fold.as("__fold") +: (names :+ clsCol).map(col)) { stamped =>
+      val probe = LevelLoop.probe(stamped, schema, params, "C45CrossVal.crossValidate",
+        Some(("__fold", k)))
+      val models = C45.growFolds(stamped, "__fold", schema, params, probe)
       // fused evaluation: k prediction columns (each a map-only CASE
-      // WHEN / one-expression tree walk), ONE aggregation over the cache
+      // WHEN / one-expression tree walk), ONE aggregation over the frame
       // with per-fold filtered counters — identical counts to scoring
       // each held-out fold separately
       val scored = models.zipWithIndex.foldLeft(stamped) {
@@ -70,10 +56,11 @@ object C45CrossVal {
           count(when(col("__fold") === f &&
             col(s"__pred_$f") === col(clsCol).cast("string"), 1)).as(s"c_$f"))
       }
-      val row = tick("eval")(scored.agg(aggs.head, aggs.tail: _*).head())
+      val row = LevelLoop.described(stamped.sparkSession.sparkContext, "graft.fitFolds eval")(
+        scored.agg(aggs.head, aggs.tail: _*).head())
       (0 until k).map(f =>
         FoldResult(f, row.getAs[Long](s"n_$f"), row.getAs[Long](s"c_$f")))
-    } finally stamped.unpersist()
+    }
   }
 
   /** SQL fragment mirroring the fold stamp for oracles/goldens. */

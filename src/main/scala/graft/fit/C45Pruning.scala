@@ -338,22 +338,18 @@ object C45Pruning {
       when(col("__rid") === armsByRid.head._1, armsByRid.head._2)) {
       case (acc, (rid, a)) => acc.when(col("__rid") === rid, a)
     } // rids no candidate touches fall to null → explode emits nothing
-    val sc = df.sparkSession.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(
-      s"graft.prune raise scan (${cands.size} candidates)")
-    val rows =
-      try {
-        df.withColumn("__rid", C45.flatRidColumn(leaves, names))
-          .filter(col("__rid") >= 0 && col(model.schema.classCol).isNotNull)
-          .select(col(model.schema.classCol).cast("string").as("cls"),
-            explode(armCol).as("__ct"))
-          .select(col("__ct.__cand").as("__cand"),
-            col("__ct.__tgt").as("__tgt"), col("cls"))
-          .groupBy("__cand", "__tgt", "cls")
-          .agg(count(lit(1)).as("n"))
-          .collect()
-      } finally sc.setJobDescription(prevDesc)
+    val rows = LevelLoop.described(df.sparkSession.sparkContext,
+        s"graft.prune raise scan (${cands.size} candidates)") {
+      df.withColumn("__rid", C45.flatRidColumn(leaves, names))
+        .filter(col("__rid") >= 0 && col(model.schema.classCol).isNotNull)
+        .select(col(model.schema.classCol).cast("string").as("cls"),
+          explode(armCol).as("__ct"))
+        .select(col("__ct.__cand").as("__cand"),
+          col("__ct.__tgt").as("__tgt"), col("cls"))
+        .groupBy("__cand", "__tgt", "cls")
+        .agg(count(lit(1)).as("n"))
+        .collect()
+    }
     rows.groupBy(r => cands(r.getInt(0)).id)
       .map { case (cid, rs) =>
         cid -> rs.groupBy(_.getInt(1)).map { case (tgt, g) =>
@@ -384,10 +380,7 @@ object C45Pruning {
     // serving uses
     val rid = (if (walk) model.treeLeafColumn else None)
       .getOrElse(C45.flatRidColumn(leaves, model.schema.attrNames))
-    val sc = df.sparkSession.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("graft.prune scan counts")
-    try {
+    LevelLoop.described(df.sparkSession.sparkContext, "graft.prune scan counts") {
       // null class labels (rejected by the fit, but held-out frames
       // are caller-supplied) have no class to count — dropped
       df.select(rid.as("rid"), col(model.schema.classCol).cast("string").as("cls"))
@@ -398,7 +391,7 @@ object C45Pruning {
         .map { case (k, rows) =>
           k -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap
         }
-    } finally sc.setJobDescription(prevDesc)
+    }
   }
 
   /** The driver-side bottom-up pass, shared by both counts sources.

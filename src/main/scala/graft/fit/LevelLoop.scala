@@ -3,6 +3,7 @@ package graft.fit
 import graft.functions.{SortedCeilSnap, TreeLeaf}
 import graft.meta.C45Schema
 import graft.model.{Rule, Split}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -87,10 +88,14 @@ private[graft] object LevelLoop {
     sys.env.get("GRAFT_FIT_PROFILE").contains("1")
 
   /** The projection `cols` of `df` as a fit's training frame, handed to
-    * `body`. A cache-backed `df` is read through (re-persisting would
-    * store the same bytes again); otherwise the projection is widened
-    * to the session parallelism and persisted for the fit's duration,
-    * since every level re-scans it (Widen scaladoc). */
+    * `body`: the one cache of every fitter ([[C45.fit]],
+    * [[C45CrossVal.crossValidate]], [[C45Forest.fit]] and every round
+    * of [[C45Boost.fit]], whose fold keys and per-round weights are
+    * columns computed over it). A cache-backed `df` is read through
+    * (re-persisting would store the same bytes again); otherwise the
+    * projection is widened to the session parallelism and persisted for
+    * the fit's duration, since every level re-scans it (Widen
+    * scaladoc). */
   def withTrainingFrame[T](df: DataFrame, cols: Seq[Column])(body: DataFrame => T): T = {
     val proj = df.select(cols: _*)
     if (df.storageLevel != StorageLevel.NONE || C45.inputCacheBacked(df)) body(proj)
@@ -98,6 +103,14 @@ private[graft] object LevelLoop {
       val data = graft.operators.Widen.toParallelism(proj).persist(StorageLevel.MEMORY_AND_DISK)
       try body(data) finally data.unpersist()
     }
+  }
+
+  /** `body`, its Spark jobs labelled `desc` in the UI and the event log
+    * (`graft.<fitter> ...`), the caller's description restored after. */
+  def described[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** What a fitter learns before its first level: whether null rows
@@ -236,8 +249,6 @@ private[graft] object LevelLoop {
                  router: (Vector[Rule], C45Schema) => Column,
                  fan: (DataFrame, C45Schema, Models, Frontier) => DataFrame)
                 (f: Frontier): Map[Int, Array[Cell]] = {
-    val sc = data.sparkSession.sparkContext
-
     // `rows` tagged with each active model's (__model, __rid, __m),
     // keeping only the copies that reach an open rule and train it; K
     // models compute each multiplicity once per row and walk a model's
@@ -284,17 +295,16 @@ private[graft] object LevelLoop {
     val (rows, mass) =
       if (ms.probe.fractional) (fan(data, schema, ms, f), col("__mass"))
       else (routed(data), ms.mass)
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft.${ms.caller} level=${f.level} models=${f.active.size} histogram")
-    val collected =
-      try rows.withColumn("__cls", col(schema.classCol).cast("string"))
+    val collected = described(data.sparkSession.sparkContext,
+        s"graft.${ms.caller} level=${f.level} models=${f.active.size} histogram") {
+      rows.withColumn("__cls", col(schema.classCol).cast("string"))
         .select(col("__model"), col("__rid"), col("__cls").as("cls"),
           (mass * col("__m")).as("__w"), explode(attrPairs).as(Seq("aid", "val")))
         .filter(col("val").isNotNull)
         .groupBy("__model", "__rid", "aid", "val", "cls")
         .agg(sum(col("__w")).as("cnt"))
         .collect()
-      finally sc.setJobDescription(prevDesc)
+    }
     collected.groupBy(_.getInt(0)).view.mapValues(_.map(r =>
       (r.getInt(1), r.getInt(2), r.getString(3), r.getString(4), r.getLong(5)))).toMap
   }

@@ -6,9 +6,12 @@ import graft.GraftSession
   * SparkEntry queries (default: q_fit_tree) with one warmup pass and
   * two timed passes — the same steady-state protocol as [[Bench]],
   * without paying for the full suite while iterating on one operator.
-  * Pass `--levels` to also enable the engine's per-level/phase
-  * wall-clock diagnostics (sets -Dgraft.fit.profile=1 — the fit,
-  * fused-crossval, and BPE loops print per-level timings). */
+  * Pass `--levels` to also enable the engine's per-level wall-clock
+  * diagnostics (sets -Dgraft.fit.profile=1 — every fitter's level loop
+  * and the BPE loop print per-level timings; the boost and
+  * cross-validation eval jobs are told apart by their job descriptions,
+  * `graft.fitBoost round=N eval` and `graft.fitFolds eval`, in the
+  * event log `scripts/eventlog_jobs.py` reads). */
 object FitProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

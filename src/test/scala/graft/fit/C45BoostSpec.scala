@@ -227,6 +227,21 @@ class C45BoostSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("a 20-round fit compiles every stage: round t's frame chains t " +
+    "predict-and-reweight projections") {
+    val df = fixture
+    val long = C45BoostParams(rounds = 20, base = C45Params(maxDepth = 2, missingMode = "drop"))
+    Seq(LevelLoop.LocalCells, 0L).foreach { capacity =>
+      val (fit, failures) = graft.CodegenLog.failures {
+        val b = C45Boost.fit(df, schema, long, capacity)
+        b.transform(df).filter(col("prediction") =!= col("cls")).count()
+        b
+      }
+      assert(fit.trees.size == 20, s"capacity $capacity: ${fit.trees.size} rounds kept")
+      assert(failures.isEmpty, failures.mkString("\n"))
+    }
+  }
+
   test("save -> load round-trips the boosted ensemble bit-exactly " +
     "(rules, α/ε micros, distributions, probabilities)") {
     val df = fixture

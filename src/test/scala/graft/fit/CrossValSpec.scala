@@ -135,6 +135,25 @@ class CrossValSpec extends AnyFunSuite {
     } finally stamped.unpersist()
   }
 
+  test("crossValidate scores all held-out folds in ONE described eval job") {
+    val s = spark
+    import s.implicits._
+    val df = (0 until 300).map { i =>
+      val q = (i % 50).toDouble
+      (if (i % 3 == 0) "A" else "R", q, (i % 11) / 100.0, if (q <= 25) "P" else "N", i)
+    }.toDF("l_returnflag", "l_quantity", "l_discount", "cls", "k")
+    // AQE off: the eval aggregation is one job, not one per stage
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (folds, descs) = JobCount.described(spark.sparkContext)(
+        C45CrossVal.crossValidate(df, schema, C45Params(maxDepth = 2), col("k"), 3, salt = 7))
+      assert(folds.map(_.nTest).sum == 300)
+      assert(descs.count(_ == "graft.fitFolds eval") == 1, descs)
+      assert(descs.last == "graft.fitFolds eval", descs)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("crossval golden: sf0.01 committed counts reproduce") {
     val got = graft.queries.C45Queries.qCrossVal(spark, "/root/testdata/sf0.01")
       .collect().map(r => s"${r.getInt(0)},${r.getLong(1)},${r.getLong(2)}").toVector

@@ -36,13 +36,17 @@ class EnsembleJobCountSpec extends AnyFunSuite {
     }).toDF("color", "size", "cls", "k")
   }
 
-  private def jobs(withNulls: Boolean)(fit: DataFrame => Any): Int = {
+  private def jobs(withNulls: Boolean)(fit: DataFrame => Any): Int =
+    described(withNulls)(fit)._2.size
+
+  // the fit with each counted job's description, in start order
+  private def described[T](withNulls: Boolean)(fit: DataFrame => T): (T, Seq[String]) = {
     val df = trainDf(withNulls).persist()
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       df.count()
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      JobCount.of(spark.sparkContext)(fit(df))._2
+      JobCount.described(spark.sparkContext)(fit(df))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       df.unpersist()
@@ -54,8 +58,8 @@ class EnsembleJobCountSpec extends AnyFunSuite {
     C45Forest.fitWithImportance(df, schema, col("k"), C45ForestParams(nTrees = 2, seed = 3,
       base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)), capacity = 0)._1
 
-  private def boost(depth: Int, mode: String = "drop")(df: DataFrame): C45Boost =
-    C45Boost.fit(df, schema, C45BoostParams(rounds = 1,
+  private def boost(depth: Int, mode: String = "drop", rounds: Int = 1)(df: DataFrame): C45Boost =
+    C45Boost.fit(df, schema, C45BoostParams(rounds = rounds,
       base = C45Params(maxDepth = depth, maxBins = 0, missingMode = mode)), capacity = 0)
 
   test("a 2-tree drop-mode forest runs the probe plus one job per grown level") {
@@ -74,6 +78,15 @@ class EnsembleJobCountSpec extends AnyFunSuite {
   test("a 1-round drop-mode boost: probe, one job per grown level, one eval") {
     assert(jobs(withNulls = false)(boost(1)) == 3)
     assert(jobs(withNulls = false)(boost(2)) == 4)
+  }
+
+  test("every boost round runs one described eval job") {
+    val (fitted, descs) = described(withNulls = false)(boost(1, rounds = 3))
+    assert(fitted.trees.size == 3)
+    assert(descs.filter(_.endsWith(" eval")) == (0 until 3).map(t => s"graft.fitBoost round=$t eval"))
+    // the probe, then per round its level-0 histogram (level 1 derives
+    // from its cells) and its eval
+    assert(descs.size == 1 + 3 * 2, descs)
   }
 
   test("a 1-round fractional boost on a null-bearing corpus: exact job count") {

@@ -2,13 +2,14 @@ package graft.fit
 
 import graft.SparkTestSession
 import graft.meta.{AttrMeta, C45Schema}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fit's persist-reuse contract: when the caller already persisted
   * the training frame (directly, or a filter over a cache — the
-  * cross-validation shape), `C45.fit` must NOT materialize a second
-  * copy, and the fitted model must be identical either way. */
+  * cross-validation shape), no fitter may materialize a second copy,
+  * and the fitted model must be identical either way. */
 class FitCacheReuseSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -73,5 +74,54 @@ class FitCacheReuseSpec extends AnyFunSuite {
       // caller's frame leaves the cache manager empty
     } finally cached.unpersist()
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  // x splits at 9 and a under it, a third of the rows noise: a depth-1
+  // boost keeps more than one round; k keys the bootstrap and the folds
+  private def noisy = {
+    val s = spark
+    import s.implicits._
+    (for (i <- 0 until 400) yield {
+      val a = if (i % 2 == 0) "t" else "u"
+      val x = (i % 20).toDouble
+      val cls =
+        if (x <= 9) { if (a == "t" || i % 3 != 0) "p" else "n" }
+        else { if (a == "u" || i % 3 != 0) "n" else "p" }
+      (a, x, cls, i.toString)
+    }).toDF("a", "x", "cls", "k")
+  }
+
+  test("no fitter caches a cached input again, at any point of its fit") {
+    val sc = spark.sparkContext
+    val cached = noisy.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      cached.count()
+      val baseline = sc.getPersistentRDDs.size
+      // the most persisted RDDs seen while `fit` runs, sampled at every
+      // attribute-kind lookup of the driver-side split math (each level
+      // of each model or round)
+      def peak(fit: C45Schema => Any): Int = {
+        var most = -1
+        fit(new C45Schema(schema.attrs, schema.classCol, schema.classLabels) {
+          override def isNumericAttr(i: Int): Boolean = {
+            most = most max sc.getPersistentRDDs.size
+            super.isNumericAttr(i)
+          }
+        })
+        assert(most >= 0, "the fit never reached its split math")
+        most
+      }
+      val base = C45Params(maxDepth = 2)
+      val fits: Seq[(String, C45Schema => Any)] = Seq(
+        "C45.fit" -> (s => C45.fit(cached, s, base)),
+        "C45Forest.fit" -> (s => C45Forest.fit(cached, s, col("k"),
+          C45ForestParams(nTrees = 2, seed = 3, base = base))),
+        "C45Boost.fit" -> (s => assert(C45Boost.fit(cached, s,
+          C45BoostParams(rounds = 3, base = base.copy(maxDepth = 1))).trees.size >= 2)),
+        "C45CrossVal.crossValidate" -> (s => C45CrossVal.crossValidate(cached, s, base,
+          col("k"), 3)))
+      val over = fits.collect { case (name, fit) if peak(fit) > baseline => name }
+      assert(over.isEmpty, s"persisted a copy of their cached input: ${over.mkString(", ")}")
+    } finally cached.unpersist()
   }
 }

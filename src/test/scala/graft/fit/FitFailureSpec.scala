@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * slice) throws once a budget runs out. The budget is what a shallower
   * run of the same fit spends — one level, or one boost round — so the
   * deeper run throws right after its next histogram job, with its
-  * caches live. */
+  * training cache live. */
 class FitFailureSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -83,13 +83,14 @@ class FitFailureSpec extends AnyFunSuite {
     releasesOnFailure(fit(1), fit(3))
   }
 
-  test("C45Boost.fit releases both round caches when a round's fit throws") {
+  test("C45Boost.fit releases its training cache when a round's fit throws") {
     val df = trainDf()
     def boost(rounds: Int)(s: C45Schema) =
       C45Boost.fit(df, s, C45BoostParams(rounds = rounds,
         base = C45Params(maxDepth = 1, maxBins = 0, missingMode = "drop")))
-    // the deep run throws in round 1's first level, after its histogram
-    // job materialized the reweighted cache over round 0's
+    // the deep run throws in round 1's first level, holding the
+    // training cache every round reads (a round persists nothing of
+    // its own)
     releasesOnFailure(boost(1), boost(3))
   }
 
